@@ -86,9 +86,11 @@ def range_join(
     # silently overwrite a caller's column), and date_col must be
     # coarse-grained (date-typed) for the distinct-decide proxy to stay
     # small — a raw timestamp would make the "tiny" date map fact-sized.
-    assert "__d" not in fact.columns, "range_join: fact must not have a __d column"
-    assert not any(c.startswith("__iv_") for c in fact.columns), \
-        "range_join: fact must not have __iv_* columns"
+    # ValueError, not assert: `python -O` strips asserts.
+    if "__d" in fact.columns:
+        raise ValueError("range_join: fact must not have a __d column")
+    if any(c.startswith("__iv_") for c in fact.columns):
+        raise ValueError("range_join: fact must not have __iv_* columns")
     p = periods
     if extra_dim_filter is not None:
         p = p.where(extra_dim_filter)

@@ -6,9 +6,17 @@ at 100 TB you never do all-pairs; you bucket by hyperplane signs and
 search only colliding buckets.
 
 Determinism for oracle parity: dot products are computed in fixed-point
-(each elementwise product rounded to 1e-12 and summed as longs), so the
-result is exact, order-independent, and byte-identical to the DuckDB
-oracle — summing IEEE doubles in different orders would not be.
+(each elementwise product scaled by 1e9, rounded HALF_UP and summed as
+longs), so the result is exact, order-independent, and byte-identical
+to the DuckDB oracle — summing IEEE doubles in different orders would
+not be. Cosines are then rounded to 6 places as the JVM rounds them.
+
+The arithmetic is written in two places only. The JVM expressions
+(`_fixed_point_dot`, `cosine_similarity`, `hyperplane_lsh_bucket`,
+`semantic_dedup`) are the reference the tests compare against. The
+numpy helpers (`_np_half_up`, `_np_round6`, `_np_stack64`, `_np_fp_dot`)
+are the path that runs: every k-NN, IVF probe, PQ-training and SemDeDup
+kernel calls them and rounds nothing on its own.
 """
 
 from __future__ import annotations
@@ -42,22 +50,29 @@ def cosine_similarity(a: Column, b: Column, *, round_to: int = 6) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Arrow/numpy twins of the fixed-point expressions (r13, guide §4.2):
-# the zip_with/aggregate higher-order functions run INTERPRETED on the
-# JVM (no whole-stage codegen), so each 64-dim dot costs ~three orders
-# of magnitude more than the same arithmetic on an Arrow batch in
-# numpy. The twins below reproduce the expressions bit-for-bit
-# (byte-identity pinned in tests/test_similarity_arrow_twins.py on the
-# REAL driver data at every SF, the codecs harness convention) and are
-# what the k-NN query paths execute; the expression forms stay as the
-# oracle-parity reference.
+# numpy fixed-point helpers — the path that runs. The expressions above
+# are the reference: the zip_with/aggregate higher-order functions run
+# INTERPRETED on the JVM (no whole-stage codegen), so each 64-dim dot
+# costs ~three orders of magnitude more than the same arithmetic on an
+# Arrow batch in numpy. These helpers reproduce the expressions
+# bit-for-bit (pinned in tests/test_similarity_arrow_twins.py against
+# the expressions and against the JVM's own F.round), and every numpy
+# kernel below is built from them.
 # ---------------------------------------------------------------------------
 
 
 def _np_half_up(x: np.ndarray) -> np.ndarray:
-    """Spark F.round(x, 0) for the magnitudes used here: HALF_UP (away
-    from zero). np.rint would be half-to-even."""
-    return np.sign(x) * np.floor(np.abs(x) + 0.5)
+    """Spark F.round(x, 0): HALF_UP (away from zero); np.rint would be
+    half-to-even. The JVM rounds the decimal string of x
+    (Double.toString), but at scale 0 every k+0.5 below 2^52 is an
+    exact double, so that string sits on the same side of the tie as
+    the binary value and HALF_UP on the binary value is exact. Taking
+    the fraction as |x| − floor(|x|) (exact) instead of flooring
+    |x| + 0.5 keeps 0.49999999999999994 from rounding up in that
+    addition. + 0.0 turns −0.0 into 0.0: BigDecimal has no −0."""
+    a = np.abs(x)
+    f = np.floor(a)
+    return np.sign(x) * (f + (a - f >= 0.5)) + 0.0
 
 
 def _np_round6(c: np.ndarray) -> np.ndarray:
@@ -68,7 +83,10 @@ def _np_round6(c: np.ndarray) -> np.ndarray:
     (the shortest repr can then end exactly in the rounding digit 5
     while the binary value is a hair below it). Fast-path everything,
     re-do boundary rows through decimal.Decimal(repr(x)), which is the
-    same shortest-repr HALF_UP the JVM computes."""
+    same shortest-repr HALF_UP the JVM computes. Pre-JDK19
+    Double.toString is not always shortest, so a tie-boundary sweep
+    through the running JVM's own F.round(x, 6) pins this in
+    tests/test_similarity_arrow_twins.py."""
     y = c * 1e6
     fast = _np_half_up(y) / 1e6
     frac = np.abs(y - np.floor(y) - 0.5)
@@ -80,7 +98,7 @@ def _np_round6(c: np.ndarray) -> np.ndarray:
         for i in risky:
             fast[i] = float(
                 Decimal(repr(float(c[i]))).quantize(exp, rounding=ROUND_HALF_UP)
-            )
+            ) + 0.0
     return fast
 
 
@@ -91,24 +109,29 @@ def _np_stack64(v: pd.Series) -> np.ndarray:
     return np.stack(v.to_numpy()).astype(np.float64)
 
 
+def _np_fp_dot(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """`_fixed_point_dot` over the last axis (A and B broadcast):
+    Σ HALF_UP(a·b·1e9), in the expression's multiplication order. The
+    sum is exact in float64 (≤ 64 terms of ≲1e12 ≪ 2^53)."""
+    return _np_half_up(A * B * _SCALE).sum(axis=-1)
+
+
 def _bucket_sq_pandas(hyperplanes: list[list[float]]):
     """pandas twin of `hyperplane_lsh_bucket` + `_fixed_point_sq_norm`
-    in one batch pass: struct(bucket, sq). Bit-identical: each
-    hyperplane dot is Σ HALF_UP(x·h·1e9) summed exactly in float64
-    (≤ 64 terms of ≲1e12 ≪ 2^53), bucket bit i set when dot ≥ 0 —
-    matching the when(dot >= 0, 2^i).otherwise(0) expression."""
+    in one batch pass: struct(bucket, sq). Bucket bit i is set when the
+    fixed-point dot with hyperplane i is ≥ 0 — matching the
+    when(dot >= 0, 2^i).otherwise(0) expression."""
     from pyspark.sql.functions import pandas_udf
 
     H = np.asarray(hyperplanes, dtype=np.float64)  # (h, dim)
     pows = (2 ** np.arange(len(hyperplanes))).astype(np.int64)
-    scale = _SCALE
 
     @pandas_udf("bucket long, sq long")
     def f(v: pd.Series) -> pd.DataFrame:
         m = _np_stack64(v)
-        dots = _np_half_up(m[:, None, :] * H[None, :, :] * scale).sum(axis=2)
+        dots = _np_fp_dot(m[:, None, :], H[None, :, :])
         bucket = ((dots >= 0) * pows).sum(axis=1)
-        sq = _np_half_up(m * m * scale).sum(axis=1)
+        sq = _np_fp_dot(m, m)
         return pd.DataFrame({
             "bucket": bucket.astype(np.int64),
             "sq": sq.astype(np.int64),
@@ -126,12 +149,10 @@ def _sq_norm_pandas():
     """pandas twin of `_fixed_point_sq_norm` alone."""
     from pyspark.sql.functions import pandas_udf
 
-    scale = _SCALE
-
     @pandas_udf("long")
     def f(v: pd.Series) -> pd.Series:
         m = _np_stack64(v)
-        return pd.Series(_np_half_up(m * m * scale).sum(axis=1).astype(np.int64))
+        return pd.Series(_np_fp_dot(m, m).astype(np.int64))
 
     return f
 
@@ -141,13 +162,9 @@ def _pair_cosine_pandas():
     round(fp_dot(a, b) / (√sqa · √sqb), 6) with exact JVM rounding."""
     from pyspark.sql.functions import pandas_udf
 
-    scale = _SCALE
-
     @pandas_udf("double")
     def f(va: pd.Series, vb: pd.Series, sqa: pd.Series, sqb: pd.Series) -> pd.Series:
-        A, B = _np_stack64(va), _np_stack64(vb)
-        dot = _np_half_up(A * B * scale).sum(axis=1)
-        c = dot / (
+        c = _np_fp_dot(_np_stack64(va), _np_stack64(vb)) / (
             np.sqrt(sqa.to_numpy().astype(np.float64))
             * np.sqrt(sqb.to_numpy().astype(np.float64))
         )
@@ -157,23 +174,23 @@ def _pair_cosine_pandas():
 
 
 def _const_cosine_pandas(query_vec: list[float]):
-    """pandas twin of the knn_brute_force per-row cosine against a
-    CONSTANT query vector: computes the corpus row's sq norm, the dot,
-    and the exact-rounded cosine in one batch pass (was two interpreted
-    HOF dots per row)."""
+    """pandas twin of `cosine_similarity` against a CONSTANT query
+    vector: the corpus row's sq norm, the dot, and the exact-rounded
+    cosine in one batch pass. NULL embeddings score NaN, which Arrow
+    hands back as NULL — the expression path's result for them."""
     from pyspark.sql.functions import pandas_udf
 
     q = np.asarray(query_vec, dtype=np.float64)
-    scale = _SCALE
-    sqq = float(_np_half_up(q * q * scale).sum())
+    nq = np.sqrt(_np_fp_dot(q, q))
 
     @pandas_udf("double")
     def f(v: pd.Series) -> pd.Series:
-        m = _np_stack64(v)
-        dot = _np_half_up(m * q * scale).sum(axis=1)
-        na = _np_half_up(m * m * scale).sum(axis=1)
-        c = dot / (np.sqrt(na) * np.sqrt(sqq))
-        return pd.Series(_np_round6(c))
+        ok = v.notna().to_numpy()
+        c = np.full(len(v), np.nan)
+        if ok.any():
+            m = _np_stack64(v[ok])
+            c[ok] = _np_round6(_np_fp_dot(m, q) / (np.sqrt(_np_fp_dot(m, m)) * nq))
+        return pd.Series(c)
 
     return f
 
@@ -188,13 +205,13 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k against a constant query vector.
 
-    One scan + one TakeOrdered (no shuffle of the full table). Ties
-    broken by id for determinism.
+    One scan scored in Arrow batches (`_const_cosine_pandas`) + one
+    TakeOrdered (no shuffle of the full table). Ties broken by id for
+    determinism; NULL embeddings score NULL and sort last.
     """
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
     scored = embeddings.select(
         F.col(id_col),
-        cosine_similarity(F.col(vec_col), q).alias("cosine"),
+        _const_cosine_pandas(query_vec)(F.col(vec_col)).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
@@ -265,6 +282,28 @@ def ivf_assign(
     return embeddings.withColumn(cluster_col, (-best["neg_idx"]).cast("int"))
 
 
+def _ivf_probe(
+    embeddings: DataFrame,
+    query_vec: list[float],
+    centroids: list[list[float]],
+    *,
+    vec_col: str,
+    nprobe: int,
+) -> DataFrame:
+    """Rows of `embeddings` whose nearest centroid (`ivf_assign`) is
+    one of the `nprobe` centroids with the highest `cosine_similarity`
+    to the query, ties to the lower index. The ranking is computed on
+    the driver with the numpy helpers, so it is the order the
+    expression (and the SQL oracle) gives; a NaN cosine (zero-norm
+    centroid) ranks last, like the expression's NULL."""
+    q = np.asarray(query_vec, dtype=np.float64)
+    C = np.asarray(centroids, dtype=np.float64)
+    sims = _np_round6(_np_fp_dot(q, C) / (np.sqrt(_np_fp_dot(q, q)) * np.sqrt(_np_fp_dot(C, C))))
+    probe = np.lexsort((np.arange(len(C)), -sims))[:nprobe].tolist()
+    assigned = ivf_assign(embeddings, centroids, vec_col=vec_col)
+    return assigned.where(F.col("ivf_cluster").isin(probe)).drop("ivf_cluster")
+
+
 def ivf_topk(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -277,20 +316,7 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF search: score only vectors in the `nprobe` centroids nearest
     to the query (approximate; recall grows with nprobe)."""
-    import math
-
-    def fp_dot(a: list[float], b: list[float]) -> int:
-        return sum(int(round(x * y * _SCALE)) for x, y in zip(a, b))
-
-    def cos(a: list[float], b: list[float]) -> float:
-        # round like cosine_similarity so probe ranking ties match the
-        # SQL oracle's rounded ordering
-        return round(fp_dot(a, b) / math.sqrt(float(fp_dot(a, a)) * float(fp_dot(b, b))), 6)
-
-    ranked = sorted(range(len(centroids)), key=lambda i: (-cos(query_vec, centroids[i]), i))
-    probe = ranked[:nprobe]
-    assigned = ivf_assign(embeddings, centroids, vec_col=vec_col)
-    candidates = assigned.where(F.col("ivf_cluster").isin(probe))
+    candidates = _ivf_probe(embeddings, query_vec, centroids, vec_col=vec_col, nprobe=nprobe)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
         candidates.select(F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("cosine"))
@@ -325,18 +351,7 @@ def ivf_pq_topk(
     codes are precomputed columns, so the whole query is a partition-
     pruned scan + codegen lookups + one TakeOrdered.
     """
-    import math
-
-    def fp_dot(a: list[float], b: list[float]) -> int:
-        return sum(int(round(x * y * _SCALE)) for x, y in zip(a, b))
-
-    def cos(a: list[float], b: list[float]) -> float:
-        return round(fp_dot(a, b) / math.sqrt(float(fp_dot(a, a)) * float(fp_dot(b, b))), 6)
-
-    ranked = sorted(range(len(centroids)), key=lambda i: (-cos(query_vec, centroids[i]), i))
-    probe = ranked[:nprobe]
-    assigned = ivf_assign(embeddings, centroids, vec_col=vec_col)
-    candidates = assigned.where(F.col("ivf_cluster").isin(probe)).drop("ivf_cluster")
+    candidates = _ivf_probe(embeddings, query_vec, centroids, vec_col=vec_col, nprobe=nprobe)
     return pq_adc_topk(
         candidates, query_vec, code_vecs,
         num_subspaces=num_subspaces, id_col=id_col, vec_col=vec_col,
@@ -465,27 +480,23 @@ def pq_train_codebook(
     centroid's final round(·, 6) stays a JVM expression on the same
     exact sums.
     """
-    import numpy as np
-    import pandas as pd
-
     dim = len(code_vecs[0])
     sub = dim // num_subspaces
     C = np.asarray(code_vecs, dtype=np.float64)  # (K, dim)
-    scale = _SCALE
     n_sub = num_subspaces
 
     def _assign_batches(it):
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)  # (n, dim)
+            mat = _np_stack64(pdf[vec_col])                 # (n, dim)
             out_m, out_cw, out_pos, out_s, out_n = [], [], [], [], []
             for m in range(n_sub):
                 sv = mat[:, m * sub:(m + 1) * sub]            # (n, sub)
                 cm = C[:, m * sub:(m + 1) * sub]              # (K, sub)
-                dots = _np_half_up(sv[:, None, :] * cm[None, :, :] * scale).sum(axis=2)
+                dots = _np_fp_dot(sv[:, None, :], cm[None, :, :])
                 cw = np.argmax(dots, axis=1)                  # ties → lowest j
-                xs = _np_half_up(sv * scale).astype(np.int64)  # (n, sub)
+                xs = _np_half_up(sv * _SCALE).astype(np.int64)  # (n, sub)
                 for j in range(len(C)):
                     mask = cw == j
                     nj = int(mask.sum())
@@ -789,9 +800,8 @@ def semantic_dedup_pandas(
 ) -> DataFrame:
     """`semantic_dedup`'s production twin: per-cluster Arrow batches
     scored with vectorized numpy instead of interpreted `zip_with`/
-    `aggregate` expressions (same ~100× story as `pandas_cosine_topk`;
-    the expression path stays as the oracle-parity reference and the
-    two are agreement-tested).
+    `aggregate` expressions (the expression path stays as the
+    oracle-parity reference and the two are agreement-tested).
 
     `applyInPandas` groups by the cluster id, so each Python worker
     sees exactly one cluster's vectors — the SemDeDup contract that
@@ -800,27 +810,19 @@ def semantic_dedup_pandas(
     decisions are identical to the expression path.
     """
     assigned = ivf_assign(embeddings, centroids, vec_col=vec_col, cluster_col=cluster_col)
-    scale = _SCALE
-    thr = threshold
-
-    def _half_up(x):
-        return np.sign(x) * np.floor(np.abs(x) + 0.5)
 
     def dedup_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        m = _np_stack64(pdf[vec_col])
         n = len(pdf)
-        sq = _half_up(m * m * scale).sum(axis=1)
-        norms = np.sqrt(sq)
+        norms = np.sqrt(_np_fp_dot(m, m))
         keep = np.ones(n, dtype=np.int64)
-        p10 = 1e6
         for i in range(n - 1):
             # one vectorized row-sweep per vector: exact per-element
             # fixed-point rounding (matmul can't express it), O(n²·d)
             # bounded by cluster size — the SemDeDup contract
-            dots = _half_up(m[i] * m[i + 1:] * scale).sum(axis=1)
-            cos = _half_up(dots / (norms[i] * norms[i + 1:]) * p10) / p10
-            keep[i + 1:] &= ~(cos >= thr)
+            sims = _np_round6(_np_fp_dot(m[i], m[i + 1:]) / (norms[i] * norms[i + 1:]))
+            keep[i + 1:] &= ~(sims >= threshold)
         return pd.DataFrame(
             {
                 id_col: pdf[id_col],
@@ -832,50 +834,3 @@ def semantic_dedup_pandas(
     out_schema = f"{id_col} long, {cluster_col} long, keep long"
     return assigned.groupBy(cluster_col).applyInPandas(dedup_group, out_schema)
 
-
-def pandas_cosine_topk(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    round_to: int = 6,
-) -> DataFrame:
-    """Brute-force cosine top-k with an Arrow-batched vectorized Pandas
-    UDF — the throughput alternative to the `zip_with`/`aggregate`
-    column expression.
-
-    Higher-order array functions run interpreted on the JVM; this path
-    ships each Arrow batch to numpy once and scores the whole batch with
-    one matrix multiply, which wins as dim × k grows. The fixed-point
-    rounding matches `cosine_similarity`, so both implementations return
-    identical scores (asserted in tests) and either can back the oracle
-    query.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    scale = _SCALE
-
-    def _half_up(x):
-        # Spark F.round is HALF_UP (away from zero); np.rint is
-        # half-to-even — parity with cosine_similarity needs the former
-        return np.sign(x) * np.floor(np.abs(x) + 0.5)
-
-    @pandas_udf("double")
-    def cos(batch: pd.Series) -> pd.Series:
-        m = np.stack(batch.to_numpy())  # (batch, dim) float64
-        dot = _half_up(m * q * scale).sum(axis=1)
-        na = np.sqrt(_half_up(m * m * scale).sum(axis=1))
-        nb = np.sqrt(_half_up(q * q * scale).sum())
-        p10 = 10.0 ** round_to
-        return pd.Series(_half_up(dot / (na * nb) * p10) / p10)
-
-    # NULL embeddings: the expression path scores them NULL (sorts
-    # last); np.stack would crash on None, so exclude them up front —
-    # same top-k whenever ≥ k rows are non-null.
-    scored = embeddings.where(F.col(vec_col).isNotNull()).select(
-        F.col(id_col), cos(F.col(vec_col).cast("array<double>")).alias("cosine")
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..operators.multimodal import extract_features
 from ..operators.similarity import (
+    _SCALE,
     brute_force_topk,
     cosine_similarity,
     embedding_cosine_dup_pairs,
@@ -23,8 +24,7 @@ from .registry import register
 
 _TOPK = 10
 
-# fixed-point scale must match operators/similarity._SCALE
-_S = "1000000000"
+_S = str(int(_SCALE))  # the fixed-point scale as an SQL literal
 
 # Seed vectors are chosen by RANK over vec_id, not by literal id —
 # a testdata regeneration that renumbers ids can't crash the collect
@@ -74,24 +74,12 @@ LIMIT {_TOPK}
 @register("knn_brute_force", oracle=_KNN_ORACLE, bench=True,
           description="exact cosine top-k against a query vector (ANN baseline)")
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import _const_cosine_pandas
-
-    t = load_tables(spark, sf_dir)
-    emb = t["embeddings"]
+    emb = load_tables(spark, sf_dir)["embeddings"]
     # the seed row already carries the query VECTOR, so the query side
-    # is a plain literal — no broadcast join at all (r13; the r12 form
-    # cross-joined a 1-row broadcast relation to ship the same values)
+    # is a plain literal — no broadcast join at all
     seed = _seed_rows(emb, 1)[0]
-    qid = seed["vec_id"]
     qvec = [float(x) for x in seed["embedding"]]
-    # r13 (guide §4.2): corpus sq norm + dot + exact-rounded cosine in
-    # ONE Arrow batch pass (was 2 interpreted HOF dots per corpus row) —
-    # byte-identity pinned against the expression path in tests.
-    scored = emb.where(F.col("vec_id") != qid).select(
-        "vec_id",
-        _const_cosine_pandas(qvec)(F.col("embedding")).alias("cosine"),
-    )
-    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(_TOPK)
+    return brute_force_topk(emb.where(F.col("vec_id") != seed["vec_id"]), qvec, k=_TOPK)
 
 
 _DUP_THRESHOLD = 0.40

@@ -47,36 +47,19 @@ WINDOW_SIZE = 50
 
 # Hand-maintained: queries whose implementation changed since their
 # last driver-green row. Emptied each round once the change is green.
-# Round 13 start: all 17 round-12 forced rows landed hash-green in
-# CORRECTNESS_r12 (verified row-by-row), so they were removed per this
-# tuple's convention — the generated window rotates the r5 backlog.
-# Entries added below as round-13 optimization work touches
-# expression trees.
 FORCE_RECHECK: tuple[str, ...] = (
-    # VERDICT r12 "What's wrong" #2: this bitset-construction rewrite
-    # (3-way unionAll → persisted keys + inline explode, r12 commit
-    # 5fe8aa8) was misclassified as a pure persist addition and skipped
-    # the r12 recheck; its last driver-green row is round 7. Forced now
-    # so CORRECTNESS_r13 re-greens the current tree. (Audit of the
-    # other r12 persist-only classifications — doremi/dsir/bm25/
-    # domain_rollup/bm25's rrf consumer — confirmed those really are
-    # bare persist_tracked() wraps with unchanged expression trees.)
-    "join_bloom_prefilter",
-    # r13 optimization rewrites whose EXPRESSION TREE changed
-    # (parity-verified 0-diff at both SFs in-session):
-    "events_dedup_state_census",      # chain rounds → per-key sorted fold
-    "events_stream_state_census",     # fused peak-of-prefix-sum sweep
-    "events_watermark_tradeoff",      # consumes state_census's fused sweep
-    "quality_classifier_train",       # doc-vector numpy sufficient stats
-    "quality_classifier_train_auc",   # shares _qt_fit's rewritten passes
-    "q2_min_cost_supplier",           # part-filter semi-join prefilter
-    "knn_brute_force",                # Arrow const-query cosine twin
-    "knn_graph_brute",                # Arrow pair cosine twin (knn_join_topk)
-    "knn_graph_lsh",                  # Arrow bucket/norm/cosine twins
-    "pq_codebook_train",              # Arrow assign+partial-sum pass
-    "j1_period_range_join",           # period dim from the shared date pass
-    "text_winnowing_fingerprints",    # least(element_at) window minima
-    "text_winnowing_overlap_pairs",   # consumes the same operator
+    # similarity kernels folded onto one set of numpy fixed-point
+    # helpers (exact HALF_UP, JVM round-6); IVF probe ranking now
+    # rounds HALF_UP like the expression instead of half-to-even
+    "knn_brute_force",
+    "knn_ivf",
+    "knn_ivf_pq",
+    "knn_ivf_recall",
+    "knn_ivf_recall_curve",
+    "dedup_semantic_clusters",
+    "pq_codebook_train",
+    "knn_graph_brute",
+    "knn_graph_lsh",
 )
 
 _ROUND_RE = re.compile(r"CORRECTNESS_r(\d+)\.json$")

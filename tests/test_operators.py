@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from sm_etl_cloud_run_spark.functions.text import token_count, word_shingles
@@ -74,6 +75,18 @@ def test_range_join_attaches_period(spark):
         fact, periods, F.col("d"), attach={"codigo": "periodo"}
     ).orderBy("d").collect()
     assert [r["periodo"] for r in out] == ["2024.M8", "2024.M9"]
+
+
+def test_range_join_rejects_reserved_d_column(spark):
+    # a ValueError, not an assert, so `python -O` cannot strip the check
+    # and let withColumn("__d") overwrite the caller's column
+    fact = spark.createDataFrame([(dt.date(2024, 8, 15), "x")], "d date, __d string")
+    periods = spark.createDataFrame(
+        [(dt.date(2024, 8, 1), dt.date(2024, 8, 31), "2024.M8")],
+        "data_inicio date, data_fim date, codigo string",
+    )
+    with pytest.raises(ValueError, match="__d"):
+        joins.range_join(fact, periods, F.col("d"), attach={"codigo": "periodo"})
 
 
 def test_broadcast_lookup(spark):
@@ -210,20 +223,32 @@ def test_lsh_components_long_chain_converges(spark):
     assert comp == {i: 1 for i in range(1, 7)}
 
 
-def test_pandas_cosine_topk_matches_expression_path(spark):
-    """The Arrow-batched numpy scorer returns byte-identical cosines and
-    the same top-k order as the zip_with/aggregate column expression."""
+def test_brute_force_topk_matches_expression_path(spark):
+    """The Arrow-batched numpy scorer behind brute_force_topk returns
+    byte-identical cosines and the same order as an orderBy/limit over
+    the cosine_similarity expression — a NULL embedding included, which
+    scores NULL and sorts last on both paths."""
     import random
 
-    from sm_etl_cloud_run_spark.operators.similarity import pandas_cosine_topk
+    from sm_etl_cloud_run_spark.operators.similarity import cosine_similarity
 
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(50)]
+    rows.append((50, None))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     qv = [rng.uniform(-1, 1) for _ in range(16)]
-    expr = [(r["vec_id"], r["cosine"]) for r in brute_force_topk(df, qv, k=10).collect()]
-    vec = [(r["vec_id"], r["cosine"]) for r in pandas_cosine_topk(df, qv, k=10).collect()]
-    assert expr == vec
+    q = F.array(*[F.lit(v) for v in qv])
+    for k in (10, len(rows)):
+        expr = [
+            (r["vec_id"], r["cosine"])
+            for r in df.select("vec_id", cosine_similarity(F.col("embedding"), q).alias("cosine"))
+            .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+            .limit(k)
+            .collect()
+        ]
+        fast = [(r["vec_id"], r["cosine"]) for r in brute_force_topk(df, qv, k=k).collect()]
+        assert fast == expr
+    assert expr[-1] == (50, None)
 
 
 def test_semantic_dedup_pandas_matches_expression_path(spark):
@@ -369,6 +394,34 @@ def test_ivf_topk_probe_recall(spark):
     ids = [r["vec_id"] for r in out.collect()]
     assert ids[:2] == [1, 2]
     assert 3 not in ids  # y-cluster not probed
+
+
+def test_ivf_topk_probe_order_matches_expression(spark):
+    """ivf_topk probes centroids in the order the cosine_similarity
+    expression ranks them. The dyadic values put fixed-point products
+    on exact .5 ties (0.03125²·1e9 = 976562.5) where half-to-even and
+    HALF_UP differ by one unit, which moves these small-norm cosines
+    across a 6th-decimal boundary (0.707106 vs 0.707107)."""
+    from sm_etl_cloud_run_spark.operators.similarity import cosine_similarity, ivf_topk
+
+    q = [0.046875, 0.015625]
+    cents = [[0.015625, 0.03125], [0.0625, -0.03125], [-0.01953125, 0.03125]]
+    # the corpus is the centroids themselves, each its own nearest
+    # centroid, so nprobe=p returns exactly the first p probed clusters
+    df = spark.createDataFrame(list(enumerate(cents)), "vec_id long, embedding array<float>")
+    qcol = F.array(*[F.lit(v) for v in q])
+    expected = [
+        r["vec_id"]
+        for r in df.select("vec_id", cosine_similarity(qcol, F.col("embedding")).alias("c"))
+        .orderBy(F.col("c").desc(), F.col("vec_id").asc())
+        .collect()
+    ]
+    probed: list[int] = []
+    for p in range(1, len(cents) + 1):
+        got = {r["vec_id"] for r in ivf_topk(df, q, cents, k=len(cents), nprobe=p).collect()}
+        (new,) = got - set(probed)
+        probed.append(new)
+    assert probed == expected == [1, 0, 2]
 
 
 def test_sessionize_gap(spark):

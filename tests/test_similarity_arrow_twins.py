@@ -1,19 +1,23 @@
-"""Byte-identity pins for the r13 Arrow/numpy similarity twins.
+"""Byte-identity pins for the Arrow/numpy similarity kernels.
 
-The k-NN query paths now run the fixed-point bucket/norm/cosine
-arithmetic as numpy over Arrow batches (guide §4.2) instead of
-interpreted zip_with/aggregate expressions. The known risk is rounding
-divergence (HALF_UP on the decimal shortest repr vs binary + 0.5 — see
-`_np_round6`), so these tests pin the twins against the expression
-forms on the REAL driver data, every row, exact equality — the codecs
-byte-identity harness convention. sf0.01 and sf0.1 are covered by
-tools/check_parity.py sweeps plus an in-session pin at round time; the
+The k-NN query paths run the fixed-point bucket/norm/cosine arithmetic
+as numpy over Arrow batches (guide §4.2) instead of interpreted
+zip_with/aggregate expressions. The known risk is rounding divergence
+(HALF_UP on the decimal string the JVM rounds vs the binary value — see
+`_np_half_up` / `_np_round6`), so these tests pin the two rounding
+helpers against the JVM's own F.round on tie-boundary doubles, and the
+kernels against the expression forms on the REAL driver data, every
+row, exact equality — the codecs byte-identity harness convention.
+sf0.01 and sf0.1 are covered by tools/check_parity.py sweeps; the
 committed test runs at the suite's sf0.001 fixture plus hostile
 literals (exact .5 products, negatives, zero vectors).
 """
 
 from __future__ import annotations
 
+import random
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -22,6 +26,8 @@ from sm_etl_cloud_run_spark.operators.similarity import (
     _const_cosine_pandas,
     _fixed_point_dot,
     _fixed_point_sq_norm,
+    _np_half_up,
+    _np_round6,
     _pair_cosine_pandas,
     _sq_norm_pandas,
     cosine_similarity,
@@ -139,3 +145,61 @@ def test_round6_hostile_values(spark):
             assert r["np"] is None or r["np"] != r["np"], r["pid"]
         else:
             assert r["np"] == r["jv"], (r["pid"], r["np"], r["jv"])
+
+
+def _ulp_neighbours(xs, steps=2):
+    """Each x plus the doubles up to `steps` ulps below and above it."""
+    out = []
+    for x in xs:
+        lo = hi = x
+        out.append(x)
+        for _ in range(steps):
+            lo, hi = np.nextafter(lo, -np.inf), np.nextafter(hi, np.inf)
+            out += [lo, hi]
+    return [float(v) for v in out]
+
+
+def _jvm_round(spark, xs, scale):
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i long, x double")
+    rows = df.select("i", F.round("x", scale).alias("r")).orderBy("i").collect()
+    return [r["r"] for r in rows]
+
+
+def _assert_same_doubles(got, want, xs):
+    # repr, not ==, so a -0.0 where the JVM gives 0.0 also fails
+    bad = [(x, g, w) for x, g, w in zip(xs, got, want) if repr(float(g)) != repr(w)]
+    assert not bad, bad[:5]
+
+
+def test_half_up_matches_jvm_round0(spark):
+    """_np_half_up == F.round(x, 0) on .5 ties and their ulp neighbours
+    at every magnitude the products reach, on both signs —
+    0.49999999999999994 included, which |x| + 0.5 used to round to 1."""
+    rng = random.Random(3)
+    ties = [k + 0.5 for k in range(0, 20)]
+    ties += [rng.randrange(0, 2**52) + 0.5 for _ in range(300)]
+    ties += [0.015625 * 0.0625 * 1e9, 2.0**52 - 0.5, 2.0**52, 2.0**53]
+    xs = _ulp_neighbours(ties + [0.0, 0.3, 1e-300])
+    xs += [-x for x in xs]
+    # realistic products: float32 components widened, times the scale
+    xs += [
+        float(np.float32(rng.uniform(-1, 1))) * float(np.float32(rng.uniform(-1, 1))) * 1e9
+        for _ in range(2000)
+    ]
+    assert np.nextafter(0.5, 0) in xs
+    _assert_same_doubles(_np_half_up(np.asarray(xs)), _jvm_round(spark, xs, 0), xs)
+
+
+def test_round6_matches_jvm_round6_on_tie_boundaries(spark):
+    """_np_round6 == this JVM's F.round(x, 6) (BigDecimal.valueOf, i.e.
+    Double.toString, then HALF_UP) on a sweep of 6-decimal ties: the
+    double nearest each (k + 0.5)·1e-6 and its ulp neighbours, for
+    cosine-range k on both signs plus larger magnitudes."""
+    rng = random.Random(5)
+    ks = list(range(0, 200)) + [rng.randrange(0, 10**6) for _ in range(3000)]
+    ks += [rng.randrange(0, 10**8) for _ in range(500)]
+    ties = [float(f"{k}.5e-6") for k in ks]
+    xs = _ulp_neighbours(ties, steps=3)
+    xs += [-x for x in xs]
+    _assert_same_doubles(_np_round6(np.asarray(xs)), _jvm_round(spark, xs, 6), xs)
+
