@@ -10,31 +10,34 @@ themselves don't change.
 - **EP3** (`refresh_control`): FTP LIST scan (S3) → filename parse
   (P8) → watermark-preserving control-table upsert — the reference's
   `/ftp_metadados` refresh (etl/datasus_ftp_metadados.py:252-382).
-- **EP1** (`ep1_baixar_pa`): gate-selected file → executor-side
+- **EP1** (`ep1_baixar_pa_lote`): gate-selected files → executor-side
   download + DBC decode (S1) → `transform_fact` (the full F/P/C/J
-  chain) → bronze CSV (K1) → `timestamp_etl_gcs` watermark (K7) —
+  chain) → bronze CSV (K1), all files concurrently → one
+  `timestamp_etl_gcs` watermark rewrite for the batch (K7) —
   etl/siasus_procedimentos_ambulatoriais.py:117-464.
-- **EP2** (`ep2_inserir_pa`): bronze all-string CSV (S6) → typed cast
-  (C20) → staged transactional JDBC load: delete-conflicts + insert +
-  single commit (K2/K3) → `timestamp_load_bd` watermark —
+- **EP2** (`ep2_inserir_pa_lote`): bronze all-string CSV (S6) → typed
+  cast (C20) → concurrent staging → per-file transactional JDBC commit:
+  delete-conflicts + insert + single commit (K2/K3) →
+  `timestamp_load_bd` watermark per committed file —
   load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:146-215.
 
-`runner.py` passes only (spark, control-row) to a job, mirroring the
-reference's route-dispatch contract, so deployment parameters (paths,
-transport, warehouse URL, dims) are module configuration set once per
-process via :func:`configure` — the analog of the reference's
-environment-variable config surface.
+`runner.py` calls a job once as `job(spark, rows)` with every pending
+control row, so deployment parameters (paths, transport, warehouse URL,
+dims) are module configuration set once per process via
+:func:`configure` — the analog of the reference's environment-variable
+config surface.
 """
 
 from __future__ import annotations
 
 import re
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sinks.jdbc import commit_staged_load, stage_jdbc_load, staged_transactional_load
+from ..sinks.jdbc import commit_staged_load, stage_jdbc_load, write_jdbc_append
 from ..sinks.merge import _atomic_replace
 from ..sinks.partitioned import write_bronze_csv
 from ..sinks.watermark import touch_watermark
@@ -134,7 +137,7 @@ def refresh_control(spark: SparkSession) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# EP1 — stage-1 ETL for one pending control row
+# EP1 — stage-1 ETL for the pending control rows
 # ---------------------------------------------------------------------------
 
 def _validated_arquivo(row: dict) -> str:
@@ -155,8 +158,8 @@ def _validated_arquivo(row: dict) -> str:
 def _ep1_body(spark: SparkSession, arquivo: str) -> None:
     """EP1 minus the watermark: download + decode + transform one PA
     file to its bronze directory. Thread-safe — everything here builds
-    an isolated plan and writes an isolated path, so the batch form can
-    run many bodies concurrently on one session."""
+    an isolated plan and writes an isolated path, so many bodies run
+    concurrently on one session."""
     raw = read_datasus_ftp(
         spark, _cfg("host"), _cfg("directory"),
         re.compile(re.escape(arquivo)), PA_SPEC.raw_columns,
@@ -175,86 +178,47 @@ def _ep1_body(spark: SparkSession, arquivo: str) -> None:
     write_bronze_csv(out, f"{_cfg('bronze_root')}/{arquivo}")
 
 
-def ep1_baixar_pa(spark: SparkSession, row: dict) -> None:
-    """Download + decode + transform one PA file to bronze, then
-    watermark. `row` is a pending control row from the runner gate."""
-    arquivo = _validated_arquivo(row)
-    _ep1_body(spark, arquivo)
-    touch_watermark(
-        spark, _cfg("control_path"),
-        {"tipo": "PA", "arquivo": arquivo}, "timestamp_etl_gcs",
-    )
-
-
 def ep1_baixar_pa_lote(spark: SparkSession, rows: list[dict]) -> None:
-    """Batched EP1 — ALL pending files at once (runner `--batch`).
+    """EP1 for every pending file: download + decode + transform each to
+    bronze, then watermark the whole batch.
 
-    The per-row dispatch mirrors the reference's job-per-file routes,
-    but it serializes the one stage with no JVM parallelism: each
-    file's pure-Python DBC decode runs in a single task, so N pending
-    shards cost N × decode wall even on 32 idle cores (measured:
-    4 shards 88 s, 8 shards 188 s — flat ~4.3k rows/s). Here the
-    per-file bodies are submitted CONCURRENTLY from a thread pool —
-    Spark schedules concurrent actions on one session, each body's
-    single decode task lands on its own core, and the bronze layout
-    stays byte-identical to the sequential form (one directory per
-    file). Watermarks are touched strictly AFTER every body succeeds,
-    and sequentially: the control-table upsert is read-modify-swap, so
-    concurrent touches would race (lost updates) — and late watermarks
-    keep re-run semantics identical to the per-row form (a crashed
-    batch re-runs every unwatermarked file; re-runs are idempotent
-    because bronze writes are per-file overwrites).
+    Each file's pure-Python DBC decode is a single task, so running the
+    files one after another leaves every other core idle (measured:
+    4 shards 88 s, 8 shards 188 s — flat ~4.3k rows/s). The per-file
+    bodies are therefore submitted CONCURRENTLY from a thread pool:
+    Spark schedules concurrent actions on one session and each body's
+    decode task lands on its own core. Every filename is validated
+    before any body runs, and the watermark is touched ONCE, after every
+    body succeeds, in one atomic control rewrite: a crashed batch leaves
+    no file watermarked, and its re-run is idempotent because bronze
+    writes are per-file overwrites.
 
     At cluster scale the same shape holds: a year × 27 UFs is one
     324-body batch = one wave of 324 concurrent single-task jobs, not
     324 sequential chunk loops (the reference's model).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     arquivos = [_validated_arquivo(row) for row in rows]
     if not arquivos:
         return
     with ThreadPoolExecutor(max_workers=min(len(arquivos), 32)) as pool:
-        # list() re-raises the first body failure before any watermark
+        # list() re-raises the first body failure before the watermark
         list(pool.map(lambda a: _ep1_body(spark, a), arquivos))
-    for arquivo in arquivos:
-        touch_watermark(
-            spark, _cfg("control_path"),
-            {"tipo": "PA", "arquivo": arquivo}, "timestamp_etl_gcs",
-        )
-
-
-# ---------------------------------------------------------------------------
-# EP2 — stage-2 warehouse load for one pending control row
-# ---------------------------------------------------------------------------
-
-def ep2_inserir_pa(spark: SparkSession, row: dict) -> None:
-    """Bronze → typed → staged transactional JDBC load (delete the
-    file's previous rows + insert + commit as ONE transaction), then
-    watermark. Re-runs are idempotent: the delete clears any earlier
-    load of the same file before the insert lands (K3), and a crash
-    before commit leaves the target untouched."""
-    arquivo = _validated_arquivo(row)
-    raw = read_csv_allstring(spark, f"{_cfg('bronze_root')}/{arquivo}")
-    typed = cast_allstring_typed(raw, PA_SPEC)
-    staged_transactional_load(
-        spark, typed,
-        _cfg("jdbc_url"), CONFIG.get("jdbc_table", "pa_fato"),
-        delete_where=f"\"ftp_arquivo_nome\" = '{arquivo}'",
-        column_types=CONFIG.get("jdbc_column_types"),
-    )
     touch_watermark(
         spark, _cfg("control_path"),
-        {"tipo": "PA", "arquivo": arquivo}, "timestamp_load_bd",
+        {"tipo": ["PA"], "arquivo": arquivos}, "timestamp_etl_gcs",
     )
 
 
-def ep2_inserir_pa_lote(spark: SparkSession, rows: list[dict]) -> None:
-    """Batched EP2 — ALL pending files at once (runner `--batch`), the
-    stage-2 twin of `ep1_baixar_pa_lote` (ROUND_NOTES round-12
-    candidate 2).
+# ---------------------------------------------------------------------------
+# EP2 — stage-2 warehouse load for the pending control rows
+# ---------------------------------------------------------------------------
 
-    The expensive half of EP2 — bronze read, typed cast, and the
+def ep2_inserir_pa_lote(spark: SparkSession, rows: list[dict]) -> None:
+    """EP2 for every pending file: bronze → typed → staged transactional
+    JDBC load (delete the file's previous rows + insert + commit as ONE
+    transaction per file), then watermark each committed file.
+
+    The expensive half — bronze read, typed cast, and the
     executor-parallel JDBC transfer — has no cross-file dependency, so
     each file stages CONCURRENTLY into its OWN staging table
     (`<target>_stg_<n>`; disjoint tables, so even a single-writer
@@ -262,18 +226,16 @@ def ep2_inserir_pa_lote(spark: SparkSession, rows: list[dict]) -> None:
     locks). The commit sections — delete-conflicts + INSERT..SELECT +
     commit against the SHARED target — then run strictly SEQUENTIALLY:
     the target is the single-writer resource, and serialized commits
-    keep the reference's one-transaction-per-file atomicity (K2/K3)
-    bit-for-bit. Watermarks touch after each file's commit, in the
-    same order, so a crash mid-batch leaves exactly the uncommitted
-    files pending — identical re-run semantics to the per-row form
-    (re-runs are idempotent: the delete clears any earlier load).
+    keep the reference's one-transaction-per-file atomicity (K2/K3).
+    Each file's watermark is touched right after its commit, in commit
+    order: that is the recovery state, so a crash mid-batch leaves
+    exactly the uncommitted files pending. Re-runs are idempotent: the
+    delete clears any earlier load of the same file.
 
     Against a concurrent-writer warehouse (Postgres), the same shape
     holds and the commit loop is the only serial section — ~ms per
     file, so wall time converges to max(stage) instead of Σ(file).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     arquivos = [_validated_arquivo(row) for row in rows]
     if not arquivos:
         return
@@ -281,38 +243,26 @@ def ep2_inserir_pa_lote(spark: SparkSession, rows: list[dict]) -> None:
     url = _cfg("jdbc_url")
     coltypes = CONFIG.get("jdbc_column_types")
 
-    def typed_for(arquivo: str) -> DataFrame:
-        raw = read_csv_allstring(spark, f"{_cfg('bronze_root')}/{arquivo}")
-        return cast_allstring_typed(raw, PA_SPEC)
-
-    # bootstrap the SHARED target once, OUTSIDE the pool — concurrent
-    # CREATE TABLE bootstraps race on every engine
-    from ..sinks.jdbc import write_jdbc_append
-
-    write_jdbc_append(
-        typed_for(arquivos[0]).limit(0), url, target, column_types=coltypes
-    )
-
-    def stage(i_arquivo: tuple[int, str]) -> tuple[str, str, list[str]]:
+    def stage(i_arquivo: tuple[int, str]) -> tuple[str, str, DataFrame]:
         i, arquivo = i_arquivo
-        typed = typed_for(arquivo)
+        raw = read_csv_allstring(spark, f"{_cfg('bronze_root')}/{arquivo}")
+        typed = cast_allstring_typed(raw, PA_SPEC)
         staging = f"{target}_stg_{i}"
-        stage_jdbc_load(
-            spark, typed, url, target, staging, column_types=coltypes,
-            ensure_target=False,
-        )
-        return arquivo, staging, typed.columns
+        stage_jdbc_load(spark, typed, url, staging, column_types=coltypes)
+        return arquivo, staging, typed
 
     with ThreadPoolExecutor(max_workers=min(len(arquivos), 32)) as pool:
         # list() re-raises the first staging failure before any commit
         staged = list(pool.map(stage, enumerate(arquivos)))
-    for arquivo, staging, columns in staged:
+    # bootstrap the SHARED target once, OUTSIDE the pool — concurrent
+    # CREATE TABLE bootstraps race on every engine
+    write_jdbc_append(staged[0][2].limit(0), url, target, column_types=coltypes)
+    for arquivo, staging, typed in staged:
         commit_staged_load(
-            spark, url, target, staging, columns,
+            spark, url, target, staging, typed.columns,
             delete_where=f"\"ftp_arquivo_nome\" = '{arquivo}'",
-            drop_staging=True,  # per-file tables would otherwise pile up
         )
         touch_watermark(
             spark, _cfg("control_path"),
-            {"tipo": "PA", "arquivo": arquivo}, "timestamp_load_bd",
+            {"tipo": ["PA"], "arquivo": [arquivo]}, "timestamp_load_bd",
         )

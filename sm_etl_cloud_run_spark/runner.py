@@ -7,6 +7,10 @@ idempotent to re-runs. Instead of Flask routes, jobs are plain callables
 resolved from a `module:function` path — schedulable by any orchestrator
 (Airflow task, cron, spark-submit).
 
+A job is `job(spark, rows)`, called ONCE with every pending control row,
+so a job can run its per-file bodies concurrently and touch the
+watermark table in as few rewrites as its recovery contract allows.
+
 Usage:
     python -m sm_etl_cloud_run_spark.runner \\
         --control /path/sm_metadados_ftp --tipo PA --acao baixar \\
@@ -32,7 +36,13 @@ def _resolve(path: str) -> Callable:
     mod_name, _, fn_name = path.partition(":")
     if not fn_name:
         raise SystemExit(f"--job must be module:function, got {path!r}")
-    return getattr(importlib.import_module(mod_name), fn_name)
+    try:
+        mod = importlib.import_module(mod_name)
+    except ModuleNotFoundError as e:
+        raise SystemExit(f"--job {path!r}: {e}") from e
+    if not hasattr(mod, fn_name):
+        raise SystemExit(f"--job {path!r}: module {mod_name!r} has no {fn_name!r}")
+    return getattr(mod, fn_name)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -40,14 +50,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--control", required=True, help="parquet path of the watermark control table")
     ap.add_argument("--tipo", required=True, help="source type key (PA, BI, PS, RD, HB, PF, ...)")
     ap.add_argument("--acao", required=True, choices=["baixar", "inserir"], help="pipeline stage")
-    ap.add_argument("--job", help="module:function run per pending control row")
-    ap.add_argument(
-        "--batch", action="store_true",
-        help="call --job ONCE with (spark, all_pending_rows) instead of "
-             "once per row — for jobs that parallelize across files "
-             "internally (e.g. rehearsal:ep1_baixar_pa_lote, whose "
-             "per-file decode tasks run concurrently)",
-    )
+    ap.add_argument("--job", help="module:function called once with (spark, pending_rows)")
+    # no-op, still accepted because existing callers (perfbench/etl.py) pass it
+    ap.add_argument("--batch", action="store_true", help=argparse.SUPPRESS)
     ap.add_argument("--dry-run", action="store_true", help="gate only; never execute")
     args = ap.parse_args(argv)
 
@@ -59,12 +64,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if not rows or args.dry_run or not args.job:
         return 0
-    job = _resolve(args.job)
-    if args.batch:
-        job(spark, rows)
-    else:
-        for row in rows:
-            job(spark, row)
+    _resolve(args.job)(spark, rows)
     return 0
 
 

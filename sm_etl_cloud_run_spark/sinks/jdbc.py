@@ -16,8 +16,11 @@ connection). `staged_transactional_load` re-expresses it Spark-first:
 the cluster appends in parallel to a STAGING table (unbounded
 parallelism, no transactional requirement), then ONE driver-side
 transaction does delete-scope → INSERT..SELECT from staging → watermark
-update → commit. The heavy bytes move in parallel; only the cheap
-set-shuffling is serialized, and it is atomic.
+update → commit, and the staging table is dropped afterwards. The heavy
+bytes move in parallel; only the cheap set-shuffling is serialized, and
+it is atomic. The two phases are also public (`stage_jdbc_load`,
+`commit_staged_load`) so a batch of files can stage concurrently into
+disjoint staging tables and commit one at a time.
 
 Verified live against the embedded Derby database whose driver ships in
 Spark's own classpath (tests/test_jdbc_live.py), including the
@@ -107,11 +110,13 @@ def staged_transactional_load(
 ) -> None:
     """K2+K3/K4+K7 for a JDBC warehouse: idempotent reload, atomically.
 
-    1. Executor-parallel overwrite of a staging table (cluster-speed
-       transfer; crashes here leave the target untouched).
+    1. Create the target if missing (an empty append), then an
+       executor-parallel overwrite of a staging table (cluster-speed
+       transfer; crashes here leave the target's rows untouched).
     2. One driver transaction: `DELETE FROM target WHERE delete_where`,
        `INSERT INTO target (cols) SELECT cols FROM staging`, then the
-       optional `watermark_sql` — commit, or roll everything back.
+       optional `watermark_sql` — commit, or roll everything back; the
+       staging table is dropped after the commit.
 
     Mirrors the reference's delete+COPY+watermark single-commit
     (bd_utilitarios.py:160-251) with the bulk transfer parallelized.
@@ -120,8 +125,14 @@ def staged_transactional_load(
     (e.g. ``\"periodo\" = '2024.08'``).
     """
     staging = staging or f"{target}_stg"
+    # target must exist before INSERT..SELECT; an empty append creates
+    # it with the same dialect-generated DDL as the staging table.
+    write_jdbc_append(
+        df.limit(0), url, target, user=user, password=password,
+        column_types=column_types,
+    )
     stage_jdbc_load(
-        spark, df, url, target, staging=staging,
+        spark, df, url, staging,
         user=user, password=password, column_types=column_types,
         batch_size=batch_size, num_partitions=num_partitions,
     )
@@ -136,7 +147,6 @@ def stage_jdbc_load(
     spark: SparkSession,
     df: DataFrame,
     url: str,
-    target: str,
     staging: str,
     *,
     user: str | None = None,
@@ -144,24 +154,15 @@ def stage_jdbc_load(
     batch_size: int = DEFAULT_BATCH_SIZE,
     num_partitions: int | None = None,
     column_types: str | None = None,
-    ensure_target: bool = True,
 ) -> None:
     """Phase 1 of `staged_transactional_load`: the executor-parallel
-    staging write (plus target DDL bootstrap). Safe to run CONCURRENTLY
-    for different `staging` tables — staging writes touch disjoint
-    tables and crashes leave the target untouched — which is what the
-    batched EP2 (`rehearsal.ep2_inserir_pa_lote`) exploits against a
-    single-writer warehouse: stage N files in parallel, then serialize
-    only the cheap commit sections. Concurrent callers must bootstrap
-    the SHARED target once up front (``ensure_target=False`` here) —
-    racing CREATE TABLEs are not atomic on any engine."""
-    if ensure_target:
-        # target must exist before INSERT..SELECT; an empty append creates
-        # it with the same dialect-generated DDL as the staging table.
-        write_jdbc_append(
-            df.limit(0), url, target, user=user, password=password,
-            column_types=column_types,
-        )
+    overwrite of `staging`. Safe to run CONCURRENTLY for different
+    `staging` tables — staging writes touch disjoint tables and crashes
+    leave the target untouched — which is what
+    `rehearsal.ep2_inserir_pa_lote` exploits against a single-writer
+    warehouse: stage N files in parallel, then serialize only the cheap
+    commit sections. The caller bootstraps the shared target once, up
+    front: racing CREATE TABLEs are not atomic on any engine."""
     write_jdbc_append(
         df, url, staging,
         user=user, password=password, column_types=column_types,
@@ -180,17 +181,15 @@ def commit_staged_load(
     watermark_sql: str | None = None,
     user: str | None = None,
     password: str | None = None,
-    drop_staging: bool = False,
 ) -> None:
     """Phase 2 of `staged_transactional_load`: ONE driver transaction —
     delete the reload scope, INSERT..SELECT from staging, optional
     watermark update, commit or roll everything back.
 
-    ``drop_staging`` drops the staging table AFTER the commit (its own
-    statement — a failed drop never rolls back the committed load).
-    The single-staging sequential path keeps the table (reused via
-    overwrite); the batched path's per-file tables would otherwise
-    accumulate stale staged rows sized by the largest batch ever run.
+    The staging table is then dropped in its own statement, so a failed
+    drop never rolls back the committed load. Keeping it would save
+    nothing (the next stage's JDBC overwrite recreates it) and would
+    leave stale staged rows behind.
     """
     cols = _qcols(columns)
     with _driver_connection(spark, url, user, password) as conn:
@@ -207,6 +206,5 @@ def commit_staged_load(
         except Exception:
             conn.rollback()
             raise
-        if drop_staging:
-            stmt.executeUpdate(f"DROP TABLE {staging}")
-            conn.commit()
+        stmt.executeUpdate(f"DROP TABLE {staging}")
+        conn.commit()

@@ -2,8 +2,7 @@
 
 Reference: `inserir_timestamp_ftp_metadados` updates one timestamp
 column for the (tipo, UF, período) rows just processed
-(utilitarios/bd_utilitarios.py:286-338); the SISAB variant also stores
-the processed municipality list (:341-389).
+(utilitarios/bd_utilitarios.py:286-338).
 
 Spark-native: a small parquet control table updated via the merge
 machinery — conditional column rewrite on matching keys, atomic swap.
@@ -12,9 +11,9 @@ machinery — conditional column rewrite on matching keys, atomic swap.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Collection
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .merge import _atomic_replace
@@ -23,23 +22,21 @@ from .merge import _atomic_replace
 def touch_watermark(
     spark: SparkSession,
     control_path: str,
-    match: dict[str, object],
+    match: dict[str, Collection[object]],
     timestamp_col: str,
-    *,
-    extra_updates: dict[str, object] | None = None,
 ) -> None:
-    """Set `timestamp_col = current_timestamp()` (+ extra payload columns)
-    on control rows matching all `match` key→value pairs."""
+    """Set `timestamp_col = current_timestamp()` on control rows whose
+    every `match` column holds one of its listed values — one atomic
+    control rewrite for a whole batch of files."""
     if not os.path.exists(control_path):
         raise FileNotFoundError(control_path)
-    control = spark.read.parquet(control_path)
     cond = F.lit(True)
-    for k, v in match.items():
-        cond = cond & (F.col(k) == F.lit(v))
-    updates: dict[str, object] = {timestamp_col: F.current_timestamp()}
-    for k, v in (extra_updates or {}).items():
-        updates[k] = F.lit(v)
-    updated = control.withColumns(
-        {c: F.when(cond, v).otherwise(F.col(c)) for c, v in updates.items()}
+    for k, values in match.items():
+        if isinstance(values, str):
+            raise TypeError(f"match[{k!r}] must be a collection of values, got {values!r}")
+        cond = cond & F.col(k).isin(list(values))
+    control = spark.read.parquet(control_path)
+    updated = control.withColumn(
+        timestamp_col, F.when(cond, F.current_timestamp()).otherwise(F.col(timestamp_col))
     )
     _atomic_replace(spark, updated, control_path)

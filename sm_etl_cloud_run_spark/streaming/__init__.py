@@ -7,4 +7,4 @@ continuous processing (the scale-path upgrade) lives in
 their batch twins.
 """
 
-from .incremental import gate_pending_runs, IncrementalJob  # noqa: F401
+from .incremental import gate_pending_runs  # noqa: F401

@@ -18,10 +18,7 @@ because the gate touches only the tiny control table.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 STAGE_CONDITIONS: dict[str, tuple[str, str]] = {
@@ -31,43 +28,19 @@ STAGE_CONDITIONS: dict[str, tuple[str, str]] = {
 }
 
 
+def _stale(stage: str) -> Column:
+    """`stage` has never run for the row, or its upstream is newer."""
+    source_ts, sink_ts = STAGE_CONDITIONS[stage]
+    return F.col(sink_ts).isNull() | (F.col(source_ts) > F.col(sink_ts))
+
+
 def gate_pending_runs(control: DataFrame, stage: str, **match: object) -> DataFrame:
     """Rows of the control table that need (re-)processing for `stage`,
     optionally scoped by key columns (tipo/sigla_uf/período)."""
-    source_ts, sink_ts = STAGE_CONDITIONS[stage]
-    cond = F.col(sink_ts).isNull() | (F.col(source_ts) > F.col(sink_ts))
+    cond = _stale(stage)
     for k, v in match.items():
         cond = cond & (F.col(k) == F.lit(v))
     return control.where(cond)
-
-
-@dataclass
-class IncrementalJob:
-    """One dispatchable pipeline, keyed like the reference's route table
-    (scripts/verificar_e_executar.py:67-135): (tipo, ação) → callable."""
-
-    tipo: str
-    acao: str
-    run: Callable[[SparkSession, dict], None]
-
-
-class JobRunner:
-    """The Spark analog of the reference's Flask route + dispatch layer:
-    look up pending control rows, run the matching job per row, let the
-    job's sink update the watermark (K7)."""
-
-    def __init__(self, jobs: list[IncrementalJob]):
-        self._jobs = {(j.tipo, j.acao): j for j in jobs}
-
-    def run_pending(self, spark: SparkSession, control: DataFrame, tipo: str, acao: str) -> int:
-        job = self._jobs.get((tipo, acao))
-        if job is None:
-            raise KeyError(f"no job registered for ({tipo!r}, {acao!r})")
-        pending = gate_pending_runs(control, acao, tipo=tipo)
-        rows = pending.collect()  # control table: tiny by construction
-        for row in rows:
-            job.run(spark, row.asDict())
-        return len(rows)
 
 
 def plan_backfill(
@@ -92,16 +65,13 @@ def plan_backfill(
     repeatedly; `max_partitions` caps one wave (ordered oldest-first so
     repeated waves drain the backlog deterministically).
     """
-    source_ts, sink_ts = STAGE_CONDITIONS[stage]
     scoped = control
     if start is not None:
         scoped = scoped.where(F.col(period_col) >= F.lit(start))
     if end is not None:
         scoped = scoped.where(F.col(period_col) <= F.lit(end))
     if not force:
-        scoped = scoped.where(
-            F.col(sink_ts).isNull() | (F.col(source_ts) > F.col(sink_ts))
-        )
+        scoped = scoped.where(_stale(stage))
     planned = scoped.orderBy(F.col(period_col).asc())
     if max_partitions is not None:
         planned = planned.limit(max_partitions)

@@ -101,7 +101,7 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     t0 = time.perf_counter()
     rc = runner.main([
         "--control", control, "--tipo", "PA", "--acao", "baixar",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
     ])
     ep1_sec = time.perf_counter() - t0
     assert rc == 0
@@ -112,7 +112,7 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     t0 = time.perf_counter()
     rc = runner.main([
         "--control", control, "--tipo", "PA", "--acao", "inserir",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
     ])
     ep2_sec = time.perf_counter() - t0
     assert rc == 0
@@ -152,14 +152,40 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     t0 = time.perf_counter()
     runner.main([
         "--control", control, "--tipo", "PA", "--acao", "baixar",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
     ])
     runner.main([
         "--control", control, "--tipo", "PA", "--acao", "inserir",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
     ])
     rerun_sec = time.perf_counter() - t0
     assert read_jdbc_table(spark, derby, "pa_fato").count() == expected
+
+    # EP2 re-run is idempotent FOR REAL: clear one file's load watermark
+    # so the gate re-selects it, re-run EP2, and the warehouse row set is
+    # unchanged (delete-then-insert) — a --dry-run would prove only that
+    # the gate is drained. Audit timestamps are now(): drop them.
+    drop = ["criacao_data", "atualizacao_data"]
+    before = sorted(map(tuple, read_jdbc_table(spark, derby, "pa_fato").drop(*drop).collect()))
+    ctl = spark.read.parquet(control)
+    redo = ctl.withColumn(
+        "timestamp_load_bd",
+        F.when(F.col("arquivo") == _SHARDS[1], F.lit(None).cast("timestamp"))
+        .otherwise(F.col("timestamp_load_bd")),
+    )
+    from sm_etl_cloud_run_spark.sinks.merge import _atomic_replace
+
+    _atomic_replace(spark, redo, control)
+    assert gate_pending_runs(
+        spark.read.parquet(control), "inserir", tipo="PA"
+    ).count() == 1
+    rc = runner.main([
+        "--control", control, "--tipo", "PA", "--acao", "inserir",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
+    ])
+    assert rc == 0
+    again = read_jdbc_table(spark, derby, "pa_fato").drop(*drop).collect()
+    assert sorted(map(tuple, again)) == before
 
     total_raw = len(_SHARDS) * _ROWS_PER_SHARD
     print(
@@ -187,9 +213,9 @@ def test_refresh_control_survives_partial_listing(spark, tmp_path):
 
     # mark 2407 as fully processed
     from sm_etl_cloud_run_spark.sinks.watermark import touch_watermark
-    touch_watermark(spark, control, {"tipo": "PA", "arquivo": "PASP2407.dbc"},
+    touch_watermark(spark, control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
                     "timestamp_etl_gcs")
-    touch_watermark(spark, control, {"tipo": "PA", "arquivo": "PASP2407.dbc"},
+    touch_watermark(spark, control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
                     "timestamp_load_bd")
 
     # transient listing omits 2407 entirely
@@ -208,142 +234,29 @@ def test_refresh_control_survives_partial_listing(spark, tmp_path):
 def test_lifecycle_jobs_reject_unsafe_filenames(spark, tmp_path):
     """ep1/ep2 re-validate the control-row filename at the point of use:
     a hand-edited row can't reach the JDBC delete predicate or the
-    bronze path with SQL/path metacharacters."""
+    bronze path with SQL/path metacharacters — and one bad name fails
+    the whole batch before any file is landed or watermarked."""
+    import os
+
     import pytest
 
+    control = str(tmp_path / "ctl")
+    bronze = str(tmp_path / "bronze")
+    good = "PASP2407.dbc"
+    rehearsal.configure(
+        host="ftp.fake", directory=_DIR,
+        transport_factory=lambda: FakeFtpSession({_DIR: {good: b"x"}}),
+        control_path=control, bronze_root=bronze,
+        panel_ids=["355030"], periods=None, geo=None,
+    )
+    rehearsal.refresh_control(spark)
     for bad in ("PA'; DROP TABLE pa_fato; --", "../../etc/passwd",
                 "PASP24.dbc/../x", "PASP9999.dbc.exe"):
-        with pytest.raises(ValueError):
-            rehearsal.ep1_baixar_pa(spark, {"arquivo": bad})
-        with pytest.raises(ValueError):
-            rehearsal.ep2_inserir_pa(spark, {"arquivo": bad})
-
-
-def test_ep1_batch_matches_sequential(spark, tmp_path):
-    """ep1_baixar_pa_lote (runner --batch: concurrent per-file decode
-    bodies, watermarks after the fact) lands byte-identical bronze and
-    the same drained gate as the sequential per-row dispatch — the
-    parallel form is a scheduling change, never a semantic one."""
-    tree = {_DIR: {name: _shard_bytes(i) for i, name in enumerate(_SHARDS[:3])}}
-    periods = spark.createDataFrame(
-        [(dt.date(2024, 8, 1), "p-2024-08-M")], "data_inicio date, id string"
-    )
-    geo = spark.createDataFrame(
-        [("355030", "m-sp"), ("330455", "m-rj")], "id_sus string, id string"
-    )
-
-    def run(job_args, control, bronze):
-        rehearsal.configure(
-            host="ftp.fake", directory=_DIR,
-            transport_factory=lambda: FakeFtpSession(tree),
-            control_path=control, bronze_root=bronze,
-            panel_ids=["355030", "330455"], periods=periods, geo=geo,
-        )
-        rehearsal.refresh_control(spark)
-        rc = runner.main(
-            ["--control", control, "--tipo", "PA", "--acao", "baixar", *job_args]
-        )
-        assert rc == 0
-        ctl = spark.read.parquet(control)
-        assert ctl.where(F.col("timestamp_etl_gcs").isNull()).count() == 0
-
-    run(["--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa"],
-        str(tmp_path / "ctl_seq"), str(tmp_path / "bronze_seq"))
-    run(["--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
-         "--batch"],
-        str(tmp_path / "ctl_lote"), str(tmp_path / "bronze_lote"))
-
-    from sm_etl_cloud_run_spark.sources.csv_allstring import read_csv_allstring
-
-    for name in _SHARDS[:3]:
-        seq = read_csv_allstring(spark, str(tmp_path / "bronze_seq" / name))
-        lote = read_csv_allstring(spark, str(tmp_path / "bronze_lote" / name))
-        # audit timestamps are now(): drop them; everything else —
-        # deterministic row ids included — must match exactly
-        drop = ["criacao_data", "atualizacao_data"]
-        a = sorted(map(tuple, seq.drop(*drop).collect()))
-        b = sorted(map(tuple, lote.drop(*drop).collect()))
-        assert a == b, name
-
-
-def test_ep2_batch_matches_sequential(spark, tmp_path):
-    """ep2_inserir_pa_lote (runner --batch: concurrent per-file staging
-    into disjoint staging tables, strictly sequential commits against
-    the shared target) loads the identical warehouse state and drains
-    the same gate as the sequential per-row dispatch — the parallel
-    form is a scheduling change, never a semantic one."""
-    tree = {_DIR: {name: _shard_bytes(i) for i, name in enumerate(_SHARDS[:3])}}
-    periods = spark.createDataFrame(
-        [(dt.date(2024, 8, 1), "p-2024-08-M")], "data_inicio date, id string"
-    )
-    geo = spark.createDataFrame(
-        [("355030", "m-sp"), ("330455", "m-rj")], "id_sus string, id string"
-    )
-
-    def run(job_args, control, bronze, derby):
-        rehearsal.configure(
-            host="ftp.fake", directory=_DIR,
-            transport_factory=lambda: FakeFtpSession(tree),
-            control_path=control, bronze_root=bronze,
-            panel_ids=["355030", "330455"], periods=periods, geo=geo,
-            jdbc_url=derby, jdbc_table="pa_fato",
-            jdbc_column_types="ftp_arquivo_nome VARCHAR(64)",
-        )
-        rehearsal.refresh_control(spark)
-        rc = runner.main(
-            ["--control", control, "--tipo", "PA", "--acao", "baixar",
-             "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
-             "--batch"]
-        )
-        assert rc == 0
-        rc = runner.main(
-            ["--control", control, "--tipo", "PA", "--acao", "inserir", *job_args]
-        )
-        assert rc == 0
-        ctl = spark.read.parquet(control)
-        assert ctl.where(F.col("timestamp_load_bd").isNull()).count() == 0
-        return read_jdbc_table(spark, derby, "pa_fato")
-
-    seq = run(
-        ["--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa"],
-        str(tmp_path / "ctl_seq"), str(tmp_path / "bronze_seq"),
-        f"jdbc:derby:{tmp_path}/wh_seq;create=true",
-    )
-    lote = run(
-        ["--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
-         "--batch"],
-        str(tmp_path / "ctl_lote"), str(tmp_path / "bronze_lote"),
-        f"jdbc:derby:{tmp_path}/wh_lote;create=true",
-    )
-    # audit timestamps are now(): drop them; everything else — the
-    # deterministic row ids included — must match exactly
-    drop = ["criacao_data", "atualizacao_data"]
-    a = sorted(map(tuple, seq.drop(*drop).collect()))
-    b = sorted(map(tuple, lote.drop(*drop).collect()))
-    assert len(a) == 3 * (_ROWS_PER_SHARD // 2)
-    assert a == b
-
-    # batch re-run is idempotent FOR REAL: clear one file's load
-    # watermark so the gate re-selects it, re-run the batch job, and
-    # assert the warehouse row set is unchanged (delete-then-insert) —
-    # a --dry-run would prove only that the gate is drained.
-    ctl_path = str(tmp_path / "ctl_lote")
-    ctl = spark.read.parquet(ctl_path)
-    redo = ctl.withColumn(
-        "timestamp_load_bd",
-        F.when(F.col("arquivo") == _SHARDS[0], F.lit(None).cast("timestamp"))
-        .otherwise(F.col("timestamp_load_bd")),
-    )
-    from sm_etl_cloud_run_spark.sinks.merge import _atomic_replace
-
-    _atomic_replace(spark, redo, ctl_path)
-    rc = runner.main(
-        ["--control", ctl_path, "--tipo", "PA", "--acao", "inserir",
-         "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
-         "--batch"]
-    )
-    assert rc == 0
-    again = read_jdbc_table(
-        spark, f"jdbc:derby:{tmp_path}/wh_lote;create=true", "pa_fato"
-    )
-    assert sorted(map(tuple, again.drop(*drop).collect())) == b
+        for job in (rehearsal.ep1_baixar_pa_lote, rehearsal.ep2_inserir_pa_lote):
+            with pytest.raises(ValueError):
+                job(spark, [{"arquivo": bad}])
+            with pytest.raises(ValueError):
+                job(spark, [{"arquivo": good}, {"arquivo": bad}])
+    assert not os.path.exists(bronze)
+    row = spark.read.parquet(control).collect()[0]
+    assert row["timestamp_etl_gcs"] is None and row["timestamp_load_bd"] is None

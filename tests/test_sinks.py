@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from sm_etl_cloud_run_spark.sinks import (
@@ -99,9 +100,22 @@ def test_touch_watermark_k7(spark, tmp_path):
         "tipo string, uf string, timestamp_etl_gcs timestamp",
     )
     control.write.parquet(path)
-    touch_watermark(spark, path, {"tipo": "PA", "uf": "SP"}, "timestamp_etl_gcs")
+    touch_watermark(spark, path, {"tipo": ["PA"], "uf": ["SP"]}, "timestamp_etl_gcs")
     rows = {r["uf"]: r["timestamp_etl_gcs"] for r in spark.read.parquet(path).collect()}
     assert rows["SP"] is not None and rows["RJ"] is None
+
+    # a batch: one rewrite stamps exactly the rows whose key is listed
+    path = str(tmp_path / "control_batch")
+    spark.createDataFrame(
+        [("PA", "SP", None), ("PA", "RJ", None), ("PA", "MG", None)],
+        "tipo string, uf string, timestamp_etl_gcs timestamp",
+    ).write.parquet(path)
+    touch_watermark(spark, path, {"uf": ["SP", "MG"]}, "timestamp_etl_gcs")
+    rows = {r["uf"]: r["timestamp_etl_gcs"] for r in spark.read.parquet(path).collect()}
+    assert rows["SP"] is not None and rows["SP"] == rows["MG"] and rows["RJ"] is None
+    # a bare string is a collection of characters: rejected, not matched
+    with pytest.raises(TypeError):
+        touch_watermark(spark, path, {"uf": "SP"}, "timestamp_etl_gcs")
 
 
 def test_merge_upsert_null_condition_keeps_target_row(spark, tmp_path):

@@ -7,7 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from sm_etl_cloud_run_spark.streaming.incremental import IncrementalJob, JobRunner, gate_pending_runs
+from sm_etl_cloud_run_spark.streaming.incremental import gate_pending_runs
 from sm_etl_cloud_run_spark.streaming.stream_ops import (
     read_events_stream,
     run_stream_to_memory,
@@ -74,22 +74,18 @@ def test_gate_pending_runs(spark):
     assert pend.count() == 2
 
 
-def test_job_runner_dispatch(spark):
-    seen = []
-    runner = JobRunner([IncrementalJob("PA", "baixar", lambda s, row: seen.append(row["tipo"]))])
-    # only the PA row with NULL etl_gcs is stale for 'baixar'
-    n = runner.run_pending(spark, _control(spark), "PA", "baixar")
-    assert n == 1 and seen == ["PA"]
-
-
 _RUNNER_LOG = os.environ.get("RUNNER_LOG_PATH", "/tmp/runner_calls.log")
 
 
-def _recording_job(spark, row):
+def _recording_job(spark, rows):
     # the runner imports this module by path (fresh instance), so record
-    # through the filesystem rather than module state
+    # through the filesystem rather than module state: one line per call
     with open(_RUNNER_LOG, "a") as f:
-        f.write(row["tipo"] + "\n")
+        f.write(" ".join(r["tipo"] for r in rows) + "\n")
+
+
+def _calls() -> list[str]:
+    return open(_RUNNER_LOG).read().splitlines()
 
 
 def test_runner_cli(spark, tmp_path):
@@ -100,12 +96,41 @@ def test_runner_cli(spark, tmp_path):
     open(_RUNNER_LOG, "w").close()
     rc = runner.main(["--control", path, "--tipo", "PA", "--acao", "baixar",
                       "--job", "tests.test_streaming:_recording_job"])
-    assert rc == 0 and open(_RUNNER_LOG).read().split() == ["PA"]
+    assert rc == 0 and _calls() == ["PA"]
     # dry-run gates but never executes
     open(_RUNNER_LOG, "w").close()
     rc = runner.main(["--control", path, "--tipo", "BI", "--acao", "baixar", "--dry-run",
                       "--job", "tests.test_streaming:_recording_job"])
-    assert rc == 0 and open(_RUNNER_LOG).read() == ""
+    assert rc == 0 and _calls() == []
+
+
+def test_runner_calls_job_once_with_all_pending_rows(spark, tmp_path):
+    """Both PA rows are pending for 'inserir' (NULL load_bd): the job is
+    called ONCE with the list of both rows, with or without the
+    ignored --batch flag."""
+    from sm_etl_cloud_run_spark import runner
+
+    path = str(tmp_path / "control")
+    _control(spark).write.parquet(path)
+    for extra in ([], ["--batch"]):
+        open(_RUNNER_LOG, "w").close()
+        rc = runner.main(["--control", path, "--tipo", "PA", "--acao", "inserir",
+                          "--job", "tests.test_streaming:_recording_job", *extra])
+        assert rc == 0 and _calls() == ["PA PA"]
+
+
+def test_runner_missing_job_exits_with_message(spark, tmp_path):
+    import pytest
+
+    from sm_etl_cloud_run_spark import runner
+
+    path = str(tmp_path / "control")
+    _control(spark).write.parquet(path)
+    for job, msg in (("tests.no_such_module:job", "no_such_module"),
+                     ("tests.test_streaming:no_such_job", "no_such_job")):
+        with pytest.raises(SystemExit, match=msg):
+            runner.main(["--control", path, "--tipo", "PA", "--acao", "baixar",
+                         "--job", job])
 
 
 def test_windowed_counts_stream_matches_batch(spark, tmp_path):

@@ -6,10 +6,8 @@ run 10^5-10^6 rows per monthly file (SURVEY §3). This probe is the
 one-command version at that envelope: same canned FTP, same DBC
 shards, same runner dispatch, same staged Derby load — just more rows.
 
-Usage: python tools/rehearsal_probe.py [rows_per_shard] [n_shards] [--ep2-batch]
+Usage: python tools/rehearsal_probe.py [rows_per_shard] [n_shards]
        (default 100000 x 4 = 400k raw rows)
---ep2-batch dispatches ep2_inserir_pa_lote (concurrent per-file staging,
-serialized commits) instead of the sequential per-row EP2.
 --uf-year replaces the shard-letter naming with the 27-UF × 12-month
 grid (324 files, PA{UF}24{MM}.dbc) — the reference's real year-of-PA
 envelope; [n_shards] is ignored. Fixture bytes are generated in a
@@ -18,7 +16,7 @@ fork process pool (serial generation alone would dominate the probe).
 row count instead — the mode for measuring EP1 batch parallelism at
 shard counts where the Derby load would dwarf the signal.
 Prints one JSON line {"rows_raw": N, "loaded_rows": N, "ep3_sec": ...,
-"ep1_sec": ..., "ep2_sec": ..., "ep2_mode": ..., "rows_per_sec_ep1": ...}.
+"ep1_sec": ..., "ep2_sec": ..., "rows_per_sec_ep1": ...}.
 """
 
 from __future__ import annotations
@@ -134,9 +132,8 @@ class DiskFtpSession:
 
 
 def main() -> None:
-    flags = {"--ep2-batch", "--uf-year", "--ep1-only"}
+    flags = {"--uf-year", "--ep1-only"}
     args = [a for a in sys.argv[1:] if a not in flags]
-    ep2_batch = "--ep2-batch" in sys.argv[1:]
     uf_year = "--uf-year" in sys.argv[1:]
     ep1_only = "--ep1-only" in sys.argv[1:]
     rows = int(args[0]) if len(args) > 0 else 100_000
@@ -200,15 +197,9 @@ def main() -> None:
         ep3_sec = time.perf_counter() - t0
 
         t0 = time.perf_counter()
-        # batched EP1 (--batch): per-file decode bodies run concurrently
-        # — the sequential per-row dispatch measured flat ~4.3k rows/s
-        # (88 s at 4 shards, 188 s at 8) because each file's pure-Python
-        # DBC decode held one core while the other 31 idled. Run with
-        # ep1_baixar_pa (no --batch) to reproduce the sequential row.
         rc = runner.main([
             "--control", control, "--tipo", "PA", "--acao", "baixar",
             "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
-            "--batch",
         ])
         assert rc == 0
         ep1_sec = time.perf_counter() - t0
@@ -226,24 +217,16 @@ def main() -> None:
                 "rows_raw": raw, "bronze_rows": loaded,
                 "n_shards": n_shards,
                 "gen_sec": round(gen_sec, 1), "ep3_sec": round(ep3_sec, 1),
-                "ep1_sec": round(ep1_sec, 1), "ep2_mode": "skipped",
+                "ep1_sec": round(ep1_sec, 1),
                 "rows_per_sec_ep1": int(raw / ep1_sec),
             }))
             return
 
         t0 = time.perf_counter()
-        if ep2_batch:
-            rc = runner.main([
-                "--control", control, "--tipo", "PA", "--acao", "inserir",
-                "--job",
-                "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
-                "--batch",
-            ])
-        else:
-            rc = runner.main([
-                "--control", control, "--tipo", "PA", "--acao", "inserir",
-                "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa",
-            ])
+        rc = runner.main([
+            "--control", control, "--tipo", "PA", "--acao", "inserir",
+            "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
+        ])
         assert rc == 0
         ep2_sec = time.perf_counter() - t0
 
@@ -254,7 +237,6 @@ def main() -> None:
             "rows_raw": raw, "loaded_rows": loaded,
             "gen_sec": round(gen_sec, 1), "ep3_sec": round(ep3_sec, 1),
             "ep1_sec": round(ep1_sec, 1), "ep2_sec": round(ep2_sec, 1),
-            "ep2_mode": "batch" if ep2_batch else "sequential",
             "rows_per_sec_ep1": int(raw / ep1_sec),
         }))
     finally:
