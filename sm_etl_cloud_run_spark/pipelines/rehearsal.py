@@ -8,7 +8,8 @@ test, the real DATASUS FTP plus Postgres in production — the jobs
 themselves don't change.
 
 - **EP3** (`refresh_control`): FTP LIST scan (S3) → filename parse
-  (P8) → watermark-preserving control-table upsert — the reference's
+  (P8) → watermark-preserving upsert of the driver-side ledger
+  (`sinks/watermark.py`), no Spark job — the reference's
   `/ftp_metadados` refresh (etl/datasus_ftp_metadados.py:252-382).
 - **EP1** (`ep1_baixar_pa_lote`): gate-selected files → executor-side
   download + DBC decode (S1) → `transform_fact` (the full F/P/C/J
@@ -30,19 +31,19 @@ config surface.
 
 from __future__ import annotations
 
+import os
 import re
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..sinks.jdbc import commit_staged_load, stage_jdbc_load, write_jdbc_append
-from ..sinks.merge import _atomic_replace
 from ..sinks.partitioned import write_bronze_csv
-from ..sinks.watermark import touch_watermark
+from ..sinks.watermark import read_control, touch_watermark, write_control
 from ..sources.csv_allstring import read_csv_allstring
-from ..sources.datasus_ftp import ftp_metadata_scan, read_datasus_ftp
+from ..sources.datasus_ftp import DatasusFtpClient, read_datasus_ftp
+from ..sources.ftp_list import parse_list_lines
 from .base import cast_allstring_typed, transform_fact
 from .siasus_pa import PA_SPEC, condicao_saude_mental
 
@@ -75,11 +76,14 @@ def _cfg(key: str) -> Any:
 # EP3 — control-table refresh from the FTP listing
 # ---------------------------------------------------------------------------
 
-_PA_NAME_RE = r"^PA([A-Z]{2})(\d{2})(\d{2})[a-z]?\.(?i:dbc)$"
+# ASCII: `\d` must not accept non-ASCII digits in a name that ends up
+# in a bronze path and a JDBC predicate
+_PA_NAME = re.compile(r"PA([A-Z]{2})(\d{2})(\d{2})[a-z]?\.(?i:dbc)", re.ASCII)
 
 
-def refresh_control(spark: SparkSession) -> DataFrame:
-    """Scan the FTP directory and upsert the watermark control table.
+def refresh_control(spark: SparkSession) -> list[dict]:
+    """Scan the FTP directory, upsert the watermark ledger and return
+    its rows.
 
     New files appear with NULL stage watermarks (so both stages are
     pending); files already tracked keep their `timestamp_etl_gcs` /
@@ -95,45 +99,32 @@ def refresh_control(spark: SparkSession) -> DataFrame:
     deletes rows merely missing from a listing; it prunes solely by
     age (>13 months), which callers do explicitly if desired.
     """
-    scan = ftp_metadata_scan(
-        spark, _cfg("host"), _cfg("directory"),
-        transport_factory=_cfg("transport_factory"), prefixes=("PA",),
-    )
-    fresh = scan.where(F.col("nome").rlike(_PA_NAME_RE)).select(
-        F.lit("PA").alias("tipo"),
-        F.col("nome").alias("arquivo"),
-        F.regexp_extract("nome", _PA_NAME_RE, 1).alias("sigla_uf"),
-        F.concat(F.lit("20"), F.regexp_extract("nome", _PA_NAME_RE, 2),
-                 F.lit("-"), F.regexp_extract("nome", _PA_NAME_RE, 3)).alias("periodo"),
-        "timestamp_modificacao_ftp",
-        F.lit(None).cast("timestamp").alias("timestamp_etl_gcs"),
-        F.lit(None).cast("timestamp").alias("timestamp_load_bd"),
-    )
-    import os
-
+    # `spark` is unused; it stays because callers (perfbench/etl.py) pass it
+    client = DatasusFtpClient(_cfg("host"), transport_factory=_cfg("transport_factory"))
+    listed = parse_list_lines(client.list_metadata_lines(_cfg("directory")), ("PA",))
     path = _cfg("control_path")
-    if os.path.exists(path):
-        old = spark.read.parquet(path)
-        merged = (
-            fresh.alias("f")
-            .join(old.alias("o"), ["tipo", "arquivo"], "full_outer")
-            .select(
-                "tipo", "arquivo",
-                F.coalesce("f.sigla_uf", "o.sigla_uf").alias("sigla_uf"),
-                F.coalesce("f.periodo", "o.periodo").alias("periodo"),
-                # listing present → take its mtime; listing omitted the
-                # file → keep the last-seen mtime (no state is lost).
-                F.coalesce(
-                    "f.timestamp_modificacao_ftp", "o.timestamp_modificacao_ftp"
-                ).alias("timestamp_modificacao_ftp"),
-                F.col("o.timestamp_etl_gcs").alias("timestamp_etl_gcs"),
-                F.col("o.timestamp_load_bd").alias("timestamp_load_bd"),
-            )
-        )
-    else:
-        merged = fresh
-    _atomic_replace(spark, merged, path)
-    return spark.read.parquet(path)
+    old = read_control(path) if os.path.exists(path) else []
+    ledger = {(r["tipo"], r["arquivo"]): r for r in old}
+    for entry in listed:
+        m = _PA_NAME.fullmatch(entry["nome"])
+        if m is None:
+            continue
+        prev = ledger.get(("PA", entry["nome"]), {})
+        ledger[("PA", entry["nome"])] = {
+            "tipo": "PA",
+            "arquivo": entry["nome"],
+            "sigla_uf": m[1],
+            "periodo": f"20{m[2]}-{m[3]}",
+            # listing present → take its mtime; a NULL (unparseable)
+            # stamp keeps the last-seen one
+            "timestamp_modificacao_ftp": (entry["timestamp_modificacao_ftp"]
+                                          or prev.get("timestamp_modificacao_ftp")),
+            "timestamp_etl_gcs": prev.get("timestamp_etl_gcs"),
+            "timestamp_load_bd": prev.get("timestamp_load_bd"),
+        }
+    rows = list(ledger.values())
+    write_control(path, rows)
+    return rows
 
 
 # ---------------------------------------------------------------------------
@@ -147,7 +138,7 @@ def _validated_arquivo(row: dict) -> str:
     never inject SQL or traverse paths — defense does not rely on the
     upstream refresh_control filter alone."""
     arquivo = row["arquivo"]
-    if not re.fullmatch(_PA_NAME_RE, arquivo):
+    if not _PA_NAME.fullmatch(arquivo):
         raise ValueError(
             f"control row filename {arquivo!r} does not match the PA "
             "naming contract; refusing to use it in SQL/path contexts"
@@ -204,8 +195,7 @@ def ep1_baixar_pa_lote(spark: SparkSession, rows: list[dict]) -> None:
         # list() re-raises the first body failure before the watermark
         list(pool.map(lambda a: _ep1_body(spark, a), arquivos))
     touch_watermark(
-        spark, _cfg("control_path"),
-        {"tipo": ["PA"], "arquivo": arquivos}, "timestamp_etl_gcs",
+        _cfg("control_path"), {"tipo": ["PA"], "arquivo": arquivos}, "timestamp_etl_gcs",
     )
 
 
@@ -263,6 +253,5 @@ def ep2_inserir_pa_lote(spark: SparkSession, rows: list[dict]) -> None:
             delete_where=f"\"ftp_arquivo_nome\" = '{arquivo}'",
         )
         touch_watermark(
-            spark, _cfg("control_path"),
-            {"tipo": ["PA"], "arquivo": [arquivo]}, "timestamp_load_bd",
+            _cfg("control_path"), {"tipo": ["PA"], "arquivo": [arquivo]}, "timestamp_load_bd",
         )

@@ -16,7 +16,11 @@ Usage:
         --control /path/sm_metadados_ftp --tipo PA --acao baixar \\
         [--job mypkg.jobs:baixar_pa] [--dry-run]
 
-Without --job, prints the pending control rows (the gate decision) and
+The gate reads the driver-side watermark ledger (`sinks/watermark.py`)
+and runs no Spark job; the Spark session starts only when a job runs.
+The first stdout line is the gate decision:
+`{"tipo", "acao", "pending", "arquivos"}`, with the pending files sorted.
+Without --job, or with --dry-run, that line is all it does, and it
 exits 0 if nothing is pending — the reference's "skip-if-fresh" reply.
 """
 
@@ -29,6 +33,7 @@ import sys
 from collections.abc import Callable
 
 from .session import get_spark
+from .sinks.watermark import read_control
 from .streaming.incremental import gate_pending_runs
 
 
@@ -47,7 +52,7 @@ def _resolve(path: str) -> Callable:
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description="watermark-gated incremental job runner")
-    ap.add_argument("--control", required=True, help="parquet path of the watermark control table")
+    ap.add_argument("--control", required=True, help="parquet file of the watermark ledger")
     ap.add_argument("--tipo", required=True, help="source type key (PA, BI, PS, RD, HB, PF, ...)")
     ap.add_argument("--acao", required=True, choices=["baixar", "inserir"], help="pipeline stage")
     ap.add_argument("--job", help="module:function called once with (spark, pending_rows)")
@@ -56,15 +61,16 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--dry-run", action="store_true", help="gate only; never execute")
     args = ap.parse_args(argv)
 
-    spark = get_spark("runner")
-    control = spark.read.parquet(args.control)
-    pending = gate_pending_runs(control, args.acao, tipo=args.tipo)
-    rows = [r.asDict() for r in pending.collect()]
-    print(json.dumps({"tipo": args.tipo, "acao": args.acao, "pending": len(rows)}, default=str))
+    rows = gate_pending_runs(read_control(args.control), args.acao, tipo=args.tipo)
+    print(json.dumps({
+        "tipo": args.tipo, "acao": args.acao, "pending": len(rows),
+        "arquivos": sorted(r["arquivo"] for r in rows),
+    }))
 
     if not rows or args.dry_run or not args.job:
         return 0
-    _resolve(args.job)(spark, rows)
+    job = _resolve(args.job)
+    job(get_spark("runner"), rows)
     return 0
 
 

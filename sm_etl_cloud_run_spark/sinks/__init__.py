@@ -9,7 +9,7 @@ semantics over plain Parquet:
 - K3/K4 delete-then-insert   → dynamic partition overwrite
 - K5 keyed upsert (MERGE)    → anti-join + union + staged atomic swap
 - K6 retention delete        → per-group threshold anti-filter rewrite
-- K7 watermark update        → control-table merge
+- K7 watermark update        → driver-side parquet ledger, one-rename swap
 
 Beyond the reference surface: `bucketed` writes hash-clustered catalog
 tables so repeated joins/aggregations on the cluster key run with no

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .dbf import decode_datasus_bytes
-from .ftp_list import parse_ftp_list_lines, prefer_partitioned
+from .ftp_list import prefer_partitioned
 
 TransportFactory = Callable[[], object]
 
@@ -143,20 +143,6 @@ class DatasusFtpClient:
             yield name, self.download(directory, name)
 
 
-def ftp_metadata_scan(
-    spark: SparkSession,
-    host: str,
-    directory: str,
-    *,
-    transport_factory: TransportFactory | None = None,
-    prefixes: tuple[str, ...] = (),
-) -> DataFrame:
-    """S3 end-to-end: LIST a live directory → parsed metadata DataFrame."""
-    client = DatasusFtpClient(host, transport_factory=transport_factory)
-    lines = client.list_metadata_lines(directory)
-    return parse_ftp_list_lines(spark, lines, prefixes=prefixes)
-
-
 def read_datasus_ftp(
     spark: SparkSession,
     host: str,
@@ -180,13 +166,15 @@ def read_datasus_ftp(
     decode = decoder or decode_datasus_bytes
     factory = transport_factory
     schema = T.StructType([T.StructField(c, T.StringType(), True) for c in columns])
-    files = spark.createDataFrame([(n,) for n in names], "nome string").repartition(len(names))
+    # task i fetches names[i]: a range with one partition per file needs
+    # no shuffle to spread the files over tasks
+    files = spark.range(0, len(names), 1, len(names))
 
     def fetch_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         task_client = DatasusFtpClient(host, transport_factory=factory)
         for pdf in batches:
-            for name in pdf["nome"]:
-                content = task_client.download(directory, str(name))
+            for i in pdf["id"]:
+                content = task_client.download(directory, names[i])
                 rows: list[dict] = []
                 for rec in decode(content):
                     rows.append(

@@ -13,13 +13,12 @@ only when its upstream is newer than its downstream:
 Retroactive source updates simply re-trigger the partition, and the
 idempotent sinks (partition overwrite / merge) make the re-run safe —
 that's the reference's late-data story, and it survives at 100 TB
-because the gate touches only the tiny control table.
+because the gate touches only the tiny control table. That table is
+the driver-side ledger of `sinks/watermark.py`, so the gate works on
+its rows in plain Python and launches no Spark job.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 STAGE_CONDITIONS: dict[str, tuple[str, str]] = {
     # stage name → (source_ts_col, sink_ts_col)
@@ -28,23 +27,25 @@ STAGE_CONDITIONS: dict[str, tuple[str, str]] = {
 }
 
 
-def _stale(stage: str) -> Column:
-    """`stage` has never run for the row, or its upstream is newer."""
+def _stale(row: dict, stage: str) -> bool:
+    """`stage` has never run for the row, or its upstream is newer.
+    A NULL upstream never compares newer, as in SQL."""
     source_ts, sink_ts = STAGE_CONDITIONS[stage]
-    return F.col(sink_ts).isNull() | (F.col(source_ts) > F.col(sink_ts))
+    source, sink = row[source_ts], row[sink_ts]
+    return sink is None or (source is not None and source > sink)
 
 
-def gate_pending_runs(control: DataFrame, stage: str, **match: object) -> DataFrame:
-    """Rows of the control table that need (re-)processing for `stage`,
-    optionally scoped by key columns (tipo/sigla_uf/período)."""
-    cond = _stale(stage)
-    for k, v in match.items():
-        cond = cond & (F.col(k) == F.lit(v))
-    return control.where(cond)
+def gate_pending_runs(rows: list[dict], stage: str, **match: object) -> list[dict]:
+    """Ledger rows that need (re-)processing for `stage`, optionally
+    scoped by key columns (tipo/sigla_uf/período)."""
+    return [
+        r for r in rows
+        if _stale(r, stage) and all(r[k] == v for k, v in match.items())
+    ]
 
 
 def plan_backfill(
-    control: DataFrame,
+    rows: list[dict],
     stage: str,
     *,
     period_col: str = "periodo",
@@ -52,8 +53,8 @@ def plan_backfill(
     end: str | None = None,
     force: bool = False,
     max_partitions: int | None = None,
-) -> DataFrame:
-    """Plan an idempotent backfill: the control-table rows to re-run for
+) -> list[dict]:
+    """Plan an idempotent backfill: the ledger rows to re-run for
     `stage` within an optional [start, end] period range.
 
     `force=False` (default) re-runs only genuinely stale rows (the
@@ -63,16 +64,15 @@ def plan_backfill(
     Because all sinks are idempotent (partition overwrite / keyed
     merge), replans and overlapping backfills are safe to dispatch
     repeatedly; `max_partitions` caps one wave (ordered oldest-first so
-    repeated waves drain the backlog deterministically).
+    repeated waves drain the backlog deterministically). A row with a
+    NULL period falls outside any range and sorts first, as in SQL.
     """
-    scoped = control
-    if start is not None:
-        scoped = scoped.where(F.col(period_col) >= F.lit(start))
-    if end is not None:
-        scoped = scoped.where(F.col(period_col) <= F.lit(end))
-    if not force:
-        scoped = scoped.where(_stale(stage))
-    planned = scoped.orderBy(F.col(period_col).asc())
-    if max_partitions is not None:
-        planned = planned.limit(max_partitions)
-    return planned
+    def in_range(r: dict) -> bool:
+        p = r[period_col]
+        if start is not None and (p is None or p < start):
+            return False
+        return end is None or (p is not None and p <= end)
+
+    scoped = [r for r in rows if in_range(r) and (force or _stale(r, stage))]
+    planned = sorted(scoped, key=lambda r: (r[period_col] is not None, r[period_col]))
+    return planned if max_partitions is None else planned[:max_partitions]

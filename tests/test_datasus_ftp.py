@@ -22,9 +22,9 @@ cloudpickle.register_pickle_by_value(sys.modules[__name__])
 from sm_etl_cloud_run_spark.sources.datasus_ftp import (
     CorruptDownloadError,
     DatasusFtpClient,
-    ftp_metadata_scan,
     read_datasus_ftp,
 )
+from sm_etl_cloud_run_spark.sources.ftp_list import parse_list_lines
 
 _FIELDS = [("PA_CODUNI", "C", 7), ("PA_QTDAPR", "N", 6)]
 
@@ -118,15 +118,8 @@ def test_fetch_decodes_dbc_driver_side():
     assert got["PAAC2408.dbc"][:1] == b"\x03"  # dbf version byte survives in dbc pre-header
 
 
-def test_ftp_metadata_scan(spark):
-    df = ftp_metadata_scan(
-        spark,
-        "ftp.datasus.gov.br",
-        _DIR,
-        transport_factory=lambda: FakeFtpSession(_tree()),
-        prefixes=("PASP",),
-    )
-    rows = {r["nome"]: r for r in df.collect()}
+def test_list_metadata_lines_parse():
+    rows = {r["nome"]: r for r in parse_list_lines(_client().list_metadata_lines(_DIR), ("PASP",))}
     assert set(rows) == {"PASP2408.dbc", "PASP2408_1.dbc", "PASP2408_2.dbc"}
     r = rows["PASP2408_1.dbc"]
     assert r["tamanho"] > 0 and r["timestamp_modificacao_ftp"] is not None
@@ -145,6 +138,9 @@ def test_read_datasus_ftp_end_to_end(spark):
     got = sorted((r["PA_CODUNI"], r["PA_QTDAPR"]) for r in df.collect())
     # shards only — the monolith row 9999999 must NOT appear
     assert got == [("1234567", "3"), ("2077485", "12"), ("7654321", "8")]
+    # one task per file with no shuffle to spread the files
+    assert df.rdd.getNumPartitions() == 2
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_read_datasus_ftp_plain_dbf_payload(spark):

@@ -16,6 +16,9 @@ import re
 import sys
 import time
 
+import os
+
+import pytest
 from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
@@ -24,7 +27,10 @@ from test_datasus_ftp import FakeFtpSession
 
 from sm_etl_cloud_run_spark import runner
 from sm_etl_cloud_run_spark.pipelines import PA_SPEC, rehearsal
+from sm_etl_cloud_run_spark.sinks import watermark
+from sm_etl_cloud_run_spark.sinks.watermark import read_control, touch_watermark, write_control
 from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
+from sm_etl_cloud_run_spark.streaming.incremental import gate_pending_runs
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -93,9 +99,9 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     t0 = time.perf_counter()
     ctl = rehearsal.refresh_control(spark)
     ep3_sec = time.perf_counter() - t0
-    assert ctl.count() == 4
-    assert ctl.where(F.col("timestamp_etl_gcs").isNull()).count() == 4
-    assert set(r["periodo"] for r in ctl.collect()) == {"2024-08"}
+    assert len(ctl) == 4 and ctl == read_control(control)
+    assert all(r["timestamp_etl_gcs"] is None for r in ctl)
+    assert set(r["periodo"] for r in ctl) == {"2024-08"}
 
     # EP1 via the runner CLI: gate selects all 4, job lands bronze + watermark
     t0 = time.perf_counter()
@@ -105,8 +111,7 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     ])
     ep1_sec = time.perf_counter() - t0
     assert rc == 0
-    ctl = spark.read.parquet(control)
-    assert ctl.where(F.col("timestamp_etl_gcs").isNull()).count() == 0
+    assert all(r["timestamp_etl_gcs"] is not None for r in read_control(control))
 
     # EP2 via the runner CLI: gate selects all 4, staged Derby load
     t0 = time.perf_counter()
@@ -127,10 +132,7 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
 
     # both gates drained: a re-run finds nothing pending
     for acao in ("baixar", "inserir"):
-        from sm_etl_cloud_run_spark.streaming.incremental import gate_pending_runs
-        assert gate_pending_runs(
-            spark.read.parquet(control), acao, tipo="PA"
-        ).count() == 0
+        assert gate_pending_runs(read_control(control), acao, tipo="PA") == []
 
     # retroactive re-publish: bump ONE file's FTP timestamp via a fresh
     # LIST (EP3 keeps the other watermarks) → exactly one file re-pends,
@@ -145,10 +147,8 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
 
     rehearsal.configure(transport_factory=lambda: BumpedFtp(tree))
     rehearsal.refresh_control(spark)
-    from sm_etl_cloud_run_spark.streaming.incremental import gate_pending_runs
-    assert gate_pending_runs(
-        spark.read.parquet(control), "baixar", tipo="PA"
-    ).count() == 1  # exactly the re-published shard
+    pending = gate_pending_runs(read_control(control), "baixar", tipo="PA")
+    assert [r["arquivo"] for r in pending] == [_SHARDS[0]]  # exactly the re-published shard
     t0 = time.perf_counter()
     runner.main([
         "--control", control, "--tipo", "PA", "--acao", "baixar",
@@ -167,18 +167,12 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     # the gate is drained. Audit timestamps are now(): drop them.
     drop = ["criacao_data", "atualizacao_data"]
     before = sorted(map(tuple, read_jdbc_table(spark, derby, "pa_fato").drop(*drop).collect()))
-    ctl = spark.read.parquet(control)
-    redo = ctl.withColumn(
-        "timestamp_load_bd",
-        F.when(F.col("arquivo") == _SHARDS[1], F.lit(None).cast("timestamp"))
-        .otherwise(F.col("timestamp_load_bd")),
-    )
-    from sm_etl_cloud_run_spark.sinks.merge import _atomic_replace
-
-    _atomic_replace(spark, redo, control)
-    assert gate_pending_runs(
-        spark.read.parquet(control), "inserir", tipo="PA"
-    ).count() == 1
+    redo = read_control(control)
+    for r in redo:
+        if r["arquivo"] == _SHARDS[1]:
+            r["timestamp_load_bd"] = None
+    write_control(control, redo)
+    assert len(gate_pending_runs(read_control(control), "inserir", tipo="PA")) == 1
     rc = runner.main([
         "--control", control, "--tipo", "PA", "--acao", "inserir",
         "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
@@ -209,20 +203,19 @@ def test_refresh_control_survives_partial_listing(spark, tmp_path):
         panel_ids=["355030"], periods=None, geo=None,
     )
     ctl = rehearsal.refresh_control(spark)
-    assert ctl.count() == 2
+    assert len(ctl) == 2
 
     # mark 2407 as fully processed
-    from sm_etl_cloud_run_spark.sinks.watermark import touch_watermark
-    touch_watermark(spark, control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
+    touch_watermark(control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
                     "timestamp_etl_gcs")
-    touch_watermark(spark, control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
+    touch_watermark(control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
                     "timestamp_load_bd")
 
     # transient listing omits 2407 entirely
     partial_tree = {_DIR: {"PASP2408.dbc": b"yy"}}
     rehearsal.configure(transport_factory=lambda: FakeFtpSession(partial_tree))
     ctl = rehearsal.refresh_control(spark)
-    rows = {r["arquivo"]: r for r in ctl.collect()}
+    rows = {r["arquivo"]: r for r in ctl}
     assert set(rows) == {"PASP2407.dbc", "PASP2408.dbc"}
     kept = rows["PASP2407.dbc"]
     assert kept["timestamp_etl_gcs"] is not None
@@ -236,10 +229,6 @@ def test_lifecycle_jobs_reject_unsafe_filenames(spark, tmp_path):
     a hand-edited row can't reach the JDBC delete predicate or the
     bronze path with SQL/path metacharacters — and one bad name fails
     the whole batch before any file is landed or watermarked."""
-    import os
-
-    import pytest
-
     control = str(tmp_path / "ctl")
     bronze = str(tmp_path / "bronze")
     good = "PASP2407.dbc"
@@ -258,5 +247,112 @@ def test_lifecycle_jobs_reject_unsafe_filenames(spark, tmp_path):
             with pytest.raises(ValueError):
                 job(spark, [{"arquivo": good}, {"arquivo": bad}])
     assert not os.path.exists(bronze)
-    row = spark.read.parquet(control).collect()[0]
+    row = read_control(control)[0]
     assert row["timestamp_etl_gcs"] is None and row["timestamp_load_bd"] is None
+
+
+def _configure_listing(control: str, files: dict[str, bytes], tmp_path) -> None:
+    rehearsal.configure(
+        host="ftp.fake", directory=_DIR,
+        transport_factory=lambda: FakeFtpSession({_DIR: files}),
+        control_path=control, bronze_root=str(tmp_path / "bronze"),
+        panel_ids=["355030"], periods=None, geo=None,
+    )
+
+
+def test_control_plane_launches_no_spark_job(spark, tmp_path):
+    """EP3, the runner's gate and a watermark touch read and write the
+    driver-side ledger only: no Spark job starts."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    control = str(tmp_path / "ctl")
+    _configure_listing(control, {"PASP2407.dbc": b"x", "PASP2408.dbc": b"yy"}, tmp_path)
+    # a job group on this thread tags any job the calls below start
+    sc.setJobGroup("control-plane", "control plane only")
+    try:
+        rehearsal.refresh_control(spark)
+        assert runner.main([
+            "--control", control, "--tipo", "PA", "--acao", "baixar", "--dry-run",
+            "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
+        ]) == 0
+        touch_watermark(control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
+                        "timestamp_etl_gcs")
+        # a later job in another group: once the status store lists it,
+        # it has seen every job started before it
+        sc.setJobGroup("control-plane-probe", "probe")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup("control-plane-probe") and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("control-plane-probe")
+    assert tracker.getJobIdsForGroup("control-plane") == []
+    assert len(gate_pending_runs(read_control(control), "baixar", tipo="PA")) == 1
+
+
+def _ledger_state(control: str) -> list[tuple]:
+    """Ledger rows with the stage watermarks reduced to set/unset (their
+    values are the wall clock of the touch)."""
+    return sorted(
+        (r["arquivo"], r["sigla_uf"], r["periodo"], r["timestamp_modificacao_ftp"],
+         r["timestamp_etl_gcs"] is not None, r["timestamp_load_bd"] is not None)
+        for r in read_control(control)
+    )
+
+
+def test_ledger_crash_before_swap_keeps_previous_ledger(spark, tmp_path, monkeypatch):
+    """A crash inside `write_control`'s rename, during EP3 or a watermark
+    touch, leaves the previous ledger readable and unchanged, and the
+    rerun reaches the state of a run that never crashed."""
+    crashed, clean = str(tmp_path / "crashed"), str(tmp_path / "clean")
+    one = {"PASP2407.dbc": b"x"}
+    two = {"PASP2407.dbc": b"x", "PASP2408.dbc": b"yy"}
+
+    def refresh(files):
+        def step(control):
+            _configure_listing(control, files, tmp_path)
+            rehearsal.refresh_control(spark)
+        return step
+
+    def touch(arquivos, col):
+        return lambda control: touch_watermark(control, {"tipo": ["PA"], "arquivo": arquivos}, col)
+
+    steps = [
+        refresh(two),
+        touch(["PASP2407.dbc", "PASP2408.dbc"], "timestamp_etl_gcs"),
+        touch(["PASP2407.dbc"], "timestamp_load_bd"),
+        refresh(one),  # a partial listing keeps 2408
+        touch(["PASP2408.dbc"], "timestamp_load_bd"),
+    ]
+    real_replace = os.replace
+
+    def crash(src, dst):
+        if dst == crashed:
+            raise OSError("crash before the ledger swap")
+        return real_replace(src, dst)
+
+    def gates():
+        rows = read_control(crashed)
+        return {acao: gate_pending_runs(rows, acao, tipo="PA") for acao in ("baixar", "inserir")}
+
+    for step in steps:
+        step(clean)
+        before = (tmp_path / "crashed").read_bytes() if os.path.exists(crashed) else None
+        gated = gates() if before else None
+        with monkeypatch.context() as m:
+            m.setattr(watermark.os, "replace", crash)
+            with pytest.raises(OSError, match="crash before"):
+                step(crashed)
+        if before is None:
+            assert not os.path.exists(crashed)
+        else:
+            assert (tmp_path / "crashed").read_bytes() == before
+            assert gates() == gated
+        # the failed write left no temp file behind
+        assert sorted(os.listdir(tmp_path)) == sorted(
+            n for n in ("clean", "crashed") if os.path.exists(tmp_path / n))
+        step(crashed)  # the rerun
+        assert _ledger_state(crashed) == _ledger_state(clean)
+    assert all(s[4] and s[5] for s in _ledger_state(crashed))

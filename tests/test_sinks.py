@@ -4,9 +4,11 @@ delete, watermark touch (SURVEY §2.2 K1–K7)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sm_etl_cloud_run_spark.sinks import (
     merge_upsert,
@@ -15,6 +17,7 @@ from sm_etl_cloud_run_spark.sinks import (
     write_partition_overwrite,
 )
 from sm_etl_cloud_run_spark.sinks.merge import dedupe_last_write
+from sm_etl_cloud_run_spark.sinks.watermark import read_control, write_control
 
 
 def test_partition_overwrite_idempotent(spark, tmp_path):
@@ -95,27 +98,32 @@ def test_retention_delete_k6(spark, tmp_path):
 
 def test_touch_watermark_k7(spark, tmp_path):
     path = str(tmp_path / "control")
-    control = spark.createDataFrame(
-        [("PA", "SP", None), ("PA", "RJ", None)],
-        "tipo string, uf string, timestamp_etl_gcs timestamp",
-    )
-    control.write.parquet(path)
-    touch_watermark(spark, path, {"tipo": ["PA"], "uf": ["SP"]}, "timestamp_etl_gcs")
-    rows = {r["uf"]: r["timestamp_etl_gcs"] for r in spark.read.parquet(path).collect()}
+    write_control(path, [
+        {"tipo": "PA", "uf": "SP", "timestamp_etl_gcs": None},
+        {"tipo": "PA", "uf": "RJ", "timestamp_etl_gcs": None},
+    ])
+    touch_watermark(path, {"tipo": ["PA"], "uf": ["SP"]}, "timestamp_etl_gcs")
+    rows = {r["uf"]: r["timestamp_etl_gcs"] for r in read_control(path)}
     assert rows["SP"] is not None and rows["RJ"] is None
+    # the ledger is one parquet file Spark reads with a TimestampType watermark
+    assert os.path.isfile(path)
+    ctl = spark.read.parquet(path)
+    assert ctl.schema["timestamp_etl_gcs"].dataType == T.TimestampType()
+    assert ctl.where(F.col("timestamp_etl_gcs").isNotNull()).count() == 1
 
     # a batch: one rewrite stamps exactly the rows whose key is listed
     path = str(tmp_path / "control_batch")
-    spark.createDataFrame(
-        [("PA", "SP", None), ("PA", "RJ", None), ("PA", "MG", None)],
-        "tipo string, uf string, timestamp_etl_gcs timestamp",
-    ).write.parquet(path)
-    touch_watermark(spark, path, {"uf": ["SP", "MG"]}, "timestamp_etl_gcs")
-    rows = {r["uf"]: r["timestamp_etl_gcs"] for r in spark.read.parquet(path).collect()}
+    write_control(path, [
+        {"tipo": "PA", "uf": uf, "timestamp_etl_gcs": None} for uf in ("SP", "RJ", "MG")
+    ])
+    touch_watermark(path, {"uf": ["SP", "MG"]}, "timestamp_etl_gcs")
+    rows = {r["uf"]: r["timestamp_etl_gcs"] for r in read_control(path)}
     assert rows["SP"] is not None and rows["SP"] == rows["MG"] and rows["RJ"] is None
     # a bare string is a collection of characters: rejected, not matched
     with pytest.raises(TypeError):
-        touch_watermark(spark, path, {"uf": "SP"}, "timestamp_etl_gcs")
+        touch_watermark(path, {"uf": "SP"}, "timestamp_etl_gcs")
+    with pytest.raises(FileNotFoundError):
+        touch_watermark(str(tmp_path / "missing"), {"uf": ["SP"]}, "timestamp_etl_gcs")
 
 
 def test_merge_upsert_null_condition_keeps_target_row(spark, tmp_path):

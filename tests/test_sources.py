@@ -11,6 +11,7 @@ from sm_etl_cloud_run_spark.sources import (
     read_csv_allstring,
 )
 from sm_etl_cloud_run_spark.sources.csv_allstring import cast_columns
+from sm_etl_cloud_run_spark.sources.ftp_list import parse_list_lines
 from sm_etl_cloud_run_spark.sources.dbf import read_dbf_files
 
 _REPORT = (
@@ -40,6 +41,26 @@ def test_parse_ftp_list_lines(spark):
     assert out["PASP2408.dbc"]["tamanho"] == 123456
     assert out["PASP2408.dbc"]["timestamp_modificacao_ftp"] == dt.datetime(2024, 9, 3, 15, 45)
     assert len(out) == 2
+
+
+def test_parse_list_lines_driver_side():
+    utc = dt.timezone.utc
+    lines = [
+        "08-20-99  03:45PM           12 PASP2408a.dbc",  # yy 99 is 2099, as in Spark
+        "02-30-24  03:45PM           12 PASP2402.dbc",   # no such date
+        "09-03-24  00:45AM           12 PASP2409.dbc",   # hh is 01-12
+        "total 4 files",
+        "\u0660\u0669-03-24  03:45PM   12 PASP2410.dbc",   # Arabic-Indic digits
+        "09-03-24  03:45PM           12 BISP2408.dbc",
+    ]
+    out = {r["nome"]: r for r in parse_list_lines(lines, ("PA",))}
+    assert set(out) == {"PASP2408a.dbc", "PASP2402.dbc", "PASP2409.dbc"}
+    assert out["PASP2408a.dbc"]["timestamp_modificacao_ftp"] == dt.datetime(
+        2099, 8, 20, 15, 45, tzinfo=utc)
+    assert out["PASP2408a.dbc"]["tamanho"] == 12
+    assert out["PASP2402.dbc"]["timestamp_modificacao_ftp"] is None
+    assert out["PASP2409.dbc"]["timestamp_modificacao_ftp"] is None
+    assert len(parse_list_lines(lines)) == 4
 
 
 def test_prefer_partitioned():

@@ -3,10 +3,12 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 
 from pyspark.sql import functions as F
 
+from sm_etl_cloud_run_spark.sinks.watermark import read_control, write_control
 from sm_etl_cloud_run_spark.streaming.incremental import gate_pending_runs
 from sm_etl_cloud_run_spark.streaming.stream_ops import (
     read_events_stream,
@@ -49,7 +51,7 @@ def test_windowed_sketch_profile_stream_matches_batch(spark, tmp_path):
         q.stop()
 
 
-def _control(spark):
+def _control_rows():
     t = dt.datetime(2024, 8, 1, 12, 0)
     rows = [
         # (tipo, mod_ftp, etl_gcs, load_bd)
@@ -58,20 +60,32 @@ def _control(spark):
         ("BI", t, t - dt.timedelta(hours=1), None),    # ftp newer → baixar pending
         ("BI", t, t + dt.timedelta(hours=1), t + dt.timedelta(hours=2)),  # all fresh
     ]
-    return spark.createDataFrame(
-        rows,
-        "tipo string, timestamp_modificacao_ftp timestamp, "
-        "timestamp_etl_gcs timestamp, timestamp_load_bd timestamp",
-    )
+    cols = ("tipo", "timestamp_modificacao_ftp", "timestamp_etl_gcs", "timestamp_load_bd")
+    return [{"arquivo": f"{r[0]}SP2408{'abcd'[i]}.dbc", **dict(zip(cols, r))}
+            for i, r in enumerate(rows)]
 
 
-def test_gate_pending_runs(spark):
-    c = _control(spark)
-    assert gate_pending_runs(c, "baixar").count() == 2
-    assert gate_pending_runs(c, "baixar", tipo="BI").count() == 1
+def _ledger(tmp_path) -> str:
+    path = str(tmp_path / "control")
+    write_control(path, _control_rows())
+    return path
+
+
+def test_gate_pending_runs(tmp_path):
+    c = read_control(_ledger(tmp_path))
+    assert len(gate_pending_runs(c, "baixar")) == 2
+    assert len(gate_pending_runs(c, "baixar", tipo="BI")) == 1
     # inserir: etl_gcs newer than load_bd (or load null, but etl must exist to compare)
-    pend = gate_pending_runs(c, "inserir").where(F.col("timestamp_etl_gcs").isNotNull())
-    assert pend.count() == 2
+    pend = [r for r in gate_pending_runs(c, "inserir") if r["timestamp_etl_gcs"] is not None]
+    assert len(pend) == 2
+    # SQL's NULL rule: a NULL upstream is never newer; a NULL downstream always pends
+    t = dt.datetime(2024, 8, 1, tzinfo=dt.timezone.utc)
+    rows = [
+        {"timestamp_modificacao_ftp": None, "timestamp_etl_gcs": t},     # NULL > t → not stale
+        {"timestamp_modificacao_ftp": None, "timestamp_etl_gcs": None},  # never ran → stale
+        {"timestamp_modificacao_ftp": t, "timestamp_etl_gcs": t},        # equal → fresh
+    ]
+    assert gate_pending_runs(rows, "baixar") == [rows[1]]
 
 
 _RUNNER_LOG = os.environ.get("RUNNER_LOG_PATH", "/tmp/runner_calls.log")
@@ -88,20 +102,43 @@ def _calls() -> list[str]:
     return open(_RUNNER_LOG).read().splitlines()
 
 
-def test_runner_cli(spark, tmp_path):
+def test_runner_cli(spark, tmp_path, capsys):
     from sm_etl_cloud_run_spark import runner
 
-    path = str(tmp_path / "control")
-    _control(spark).write.parquet(path)
+    path = _ledger(tmp_path)
     open(_RUNNER_LOG, "w").close()
     rc = runner.main(["--control", path, "--tipo", "PA", "--acao", "baixar",
                       "--job", "tests.test_streaming:_recording_job"])
     assert rc == 0 and _calls() == ["PA"]
+    # the first stdout line is the gate decision, with the pending files
+    first = json.loads(capsys.readouterr().out.splitlines()[0])
+    assert first == {"tipo": "PA", "acao": "baixar", "pending": 1,
+                     "arquivos": ["PASP2408a.dbc"]}
     # dry-run gates but never executes
     open(_RUNNER_LOG, "w").close()
     rc = runner.main(["--control", path, "--tipo", "BI", "--acao", "baixar", "--dry-run",
                       "--job", "tests.test_streaming:_recording_job"])
     assert rc == 0 and _calls() == []
+
+
+def test_runner_starts_spark_only_to_run_a_job(tmp_path, monkeypatch, capsys):
+    """A gate-only call (--dry-run, no --job, nothing pending) never
+    starts a Spark session."""
+    from sm_etl_cloud_run_spark import runner
+
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called for a gate-only run")
+
+    monkeypatch.setattr(runner, "get_spark", no_spark)
+    path = _ledger(tmp_path)
+    job = ["--job", "tests.test_streaming:_recording_job"]
+    for argv in (["--tipo", "PA", "--acao", "inserir", "--dry-run", *job],
+                 ["--tipo", "PA", "--acao", "inserir"],
+                 ["--tipo", "XX", "--acao", "baixar", *job]):
+        assert runner.main(["--control", path, *argv]) == 0
+    lines = [json.loads(ln) for ln in capsys.readouterr().out.splitlines()]
+    assert [ln["arquivos"] for ln in lines] == [
+        ["PASP2408a.dbc", "PASP2408b.dbc"], ["PASP2408a.dbc", "PASP2408b.dbc"], []]
 
 
 def test_runner_calls_job_once_with_all_pending_rows(spark, tmp_path):
@@ -110,8 +147,7 @@ def test_runner_calls_job_once_with_all_pending_rows(spark, tmp_path):
     ignored --batch flag."""
     from sm_etl_cloud_run_spark import runner
 
-    path = str(tmp_path / "control")
-    _control(spark).write.parquet(path)
+    path = _ledger(tmp_path)
     for extra in ([], ["--batch"]):
         open(_RUNNER_LOG, "w").close()
         rc = runner.main(["--control", path, "--tipo", "PA", "--acao", "inserir",
@@ -119,13 +155,12 @@ def test_runner_calls_job_once_with_all_pending_rows(spark, tmp_path):
         assert rc == 0 and _calls() == ["PA PA"]
 
 
-def test_runner_missing_job_exits_with_message(spark, tmp_path):
+def test_runner_missing_job_exits_with_message(tmp_path):
     import pytest
 
     from sm_etl_cloud_run_spark import runner
 
-    path = str(tmp_path / "control")
-    _control(spark).write.parquet(path)
+    path = _ledger(tmp_path)
     for job, msg in (("tests.no_such_module:job", "no_such_module"),
                      ("tests.test_streaming:no_such_job", "no_such_job")):
         with pytest.raises(SystemExit, match=msg):
@@ -602,7 +637,7 @@ def test_metrics_recorder_captures_progress(spark, tmp_path):
     assert any(r["state_rows"] > 0 for r in prog)
 
 
-def test_plan_backfill_scoped_forced_and_capped(spark):
+def test_plan_backfill_scoped_forced_and_capped(tmp_path):
     rows = [
         # periodo, mod_ftp, etl_gcs (stale if ftp > gcs or gcs null)
         ("2024-01", dt.datetime(2024, 2, 1), dt.datetime(2024, 2, 2)),   # fresh
@@ -610,26 +645,29 @@ def test_plan_backfill_scoped_forced_and_capped(spark):
         ("2024-03", dt.datetime(2024, 4, 1), None),                      # never ran
         ("2024-04", dt.datetime(2024, 5, 1), dt.datetime(2024, 5, 2)),   # fresh
     ]
-    control = spark.createDataFrame(
-        rows,
-        "periodo string, timestamp_modificacao_ftp timestamp, timestamp_etl_gcs timestamp",
-    )
+    path = str(tmp_path / "control")
+    # written out of period order: the plan sorts oldest-first itself
+    write_control(path, [
+        dict(zip(("periodo", "timestamp_modificacao_ftp", "timestamp_etl_gcs"), r))
+        for r in reversed(rows)
+    ])
+    control = read_control(path)
     from sm_etl_cloud_run_spark.streaming.incremental import plan_backfill
 
-    stale = [r["periodo"] for r in plan_backfill(control, "baixar").collect()]
+    stale = [r["periodo"] for r in plan_backfill(control, "baixar")]
     assert stale == ["2024-02", "2024-03"]
 
     scoped = [r["periodo"] for r in
-              plan_backfill(control, "baixar", start="2024-03", end="2024-04").collect()]
+              plan_backfill(control, "baixar", start="2024-03", end="2024-04")]
     assert scoped == ["2024-03"]
 
     forced = [r["periodo"] for r in
               plan_backfill(control, "baixar", start="2024-01", end="2024-04",
-                            force=True).collect()]
+                            force=True)]
     assert forced == ["2024-01", "2024-02", "2024-03", "2024-04"]
 
     capped = [r["periodo"] for r in
-              plan_backfill(control, "baixar", force=True, max_partitions=2).collect()]
+              plan_backfill(control, "baixar", force=True, max_partitions=2)]
     assert capped == ["2024-01", "2024-02"]  # oldest-first wave
 
 

@@ -34,7 +34,6 @@ sys.path.insert(0, _REPO)
 sys.path.insert(0, os.path.join(_REPO, "tests"))
 
 from pyspark import cloudpickle  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
 
 from dbc_fixtures import make_dbc, make_dbf  # noqa: E402
 from test_datasus_ftp import FakeFtpSession  # noqa: E402
@@ -193,7 +192,7 @@ def main() -> None:
 
         t0 = time.perf_counter()
         ctl = rehearsal.refresh_control(spark)
-        assert ctl.count() == n_shards
+        assert len(ctl) == n_shards
         ep3_sec = time.perf_counter() - t0
 
         t0 = time.perf_counter()
