@@ -32,11 +32,8 @@ from .dates import (  # noqa: F401
 )
 from .ids import uuid7_column, deterministic_row_id  # noqa: F401
 from .text import (  # noqa: F401
-    char_ngrams,
     doc_fingerprint,
     normalized_text,
-    punct_ratio,
-    stopword_hits,
     token_count,
     tokens,
     word_shingles,

@@ -46,21 +46,6 @@ def doc_fingerprint(col: Column) -> Column:
     return F.md5(normalized_text(col))
 
 
-def punct_ratio(col: Column) -> Column:
-    """Fraction of characters that are not [a-zA-Z0-9 ] (quality signal)."""
-    n = F.length(col)
-    alnum = F.length(F.regexp_replace(col, r"[a-zA-Z0-9 ]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(alnum.cast("double") / n.cast("double"))
-
-
-def stopword_hits(col: Column, stopwords: list[str]) -> Column:
-    """How many tokens of `col` are in `stopwords` (array_intersect-free:
-    counts every occurrence, not distinct)."""
-    toks = tokens(F.lower(col))
-    sw = F.array(*[F.lit(w) for w in stopwords])
-    return F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).cast("long")
-
-
 def word_shingles(col: Column, k: int = 3) -> Column:
     """k-word shingles as array<string> (space-joined windows).
 
@@ -113,16 +98,6 @@ def exploded_shingles(
     return docs.select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     ).select(F.col(id_col), F.explode(arr).alias(alias))
-
-
-def char_ngrams(col: Column, n: int = 5) -> Column:
-    """Character n-grams of the normalized text as array<string>."""
-    norm = normalized_text(col)
-    ln = F.length(norm)
-    idx = F.when(ln >= n, F.sequence(F.lit(1), ln - (n - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(idx, lambda i: norm.substr(i, F.lit(n)))
 
 
 def strip_html(col: Column) -> Column:

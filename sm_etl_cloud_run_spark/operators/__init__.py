@@ -7,7 +7,8 @@ Each module exposes DataFrame → DataFrame combinators:
                    retention windows (F6)
 - ``joins``      — broadcast dimension lookups (J2/J3), the date→period
                    range join (J1), next-period lead (J4)
-- ``aggregates`` — multi-agg rollups (A1–A3), null-count validators (A4)
+- ``aggregates`` — deterministic list aggregation (A1), null-count
+                   validators (A4), Count-Min heavy hitters
 - ``reshape``    — unpivot/melt (R1), schema-harmonized unions (R2)
 - ``dedup``      — exact, MinHash-LSH, SimHash, n-gram Jaccard near-dup
 - ``similarity`` — brute-force + LSH-bucketed cosine top-k over embeddings

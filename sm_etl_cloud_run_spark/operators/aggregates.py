@@ -1,6 +1,6 @@
 """Aggregation operators (SURVEY §2.6).
 
-- A1 group-by multi-agg incl. list aggregation
+- A1 deterministic list aggregation
   (etl/datasus_ftp_metadados.py:129-161 — `particao=list, tamanho=sum,
   ts=max/min/first`)
 - A4 null-count validators (etl/siasus_procedimentos_ambulatoriais.py:366-378)
@@ -19,11 +19,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def sorted_list_agg(col: str | Column) -> Column:
-    """Deterministic `collect_list`: sorted array (A1's `tolist`)."""
-    return F.array_sort(F.collect_list(col))
 
 
 def sorted_set_agg(col: str | Column) -> Column:
@@ -47,15 +42,6 @@ def assert_no_nulls(df: DataFrame, columns: Sequence[str]) -> None:
     bad = {c: row[f"nulls_{c}"] for c in columns if row[f"nulls_{c}"]}
     if bad:
         raise RuntimeError(f"null values in guarded columns: {bad}")
-
-
-def group_rollup(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    aggs: dict[str, Column],
-) -> DataFrame:
-    """A1 generic: groupBy + named aggregate map."""
-    return df.groupBy(*group_cols).agg(*[expr.alias(name) for name, expr in aggs.items()])
 
 
 def cms_heavy_hitters(

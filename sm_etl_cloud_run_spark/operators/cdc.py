@@ -2,9 +2,8 @@
 
 The standard CDC materialization (Debezium/Delta-CDF-style public
 pattern): each key's latest change wins by a monotonic sequence, and a
-terminal delete removes the key from the snapshot. Complements
-`sinks/scd2.py` (which keeps history) — this produces the CURRENT
-state only.
+terminal delete removes the key from the snapshot. It produces the
+CURRENT state only, not a history of versions.
 
 Scale shape: one shuffle on the key columns (row_number window), then
 a codegen filter. At 100 TB the change log is typically date-partitioned,

@@ -4,7 +4,8 @@ Not present in the reference (whose dedup is partition-grain
 delete-then-insert, SURVEY §2.2 K3/K4); mandated by the engine's
 100 TB pipeline scope. Four families:
 
-- **exact**       — hash-groupBy on content (or md5 fingerprint)
+- **exact**       — hash-groupBy on content (or md5 fingerprint), or
+                    last-write-wins per key
 - **MinHash+LSH** — shingles → per-seed min-hash signature → banded
                     bucket join → candidate pairs; the scalable
                     near-dup path (no all-pairs comparison)
@@ -30,6 +31,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..functions.text import (
     doc_fingerprint,
@@ -42,6 +44,13 @@ from ..functions.text import (
 def exact_dedup(df: DataFrame, subset: Sequence[str]) -> DataFrame:
     """Exact dedup on `subset` (hash aggregate; map-side partial combine)."""
     return df.dropDuplicates(list(subset))
+
+
+def dedupe_last_write(source: DataFrame, keys: Sequence[str], order_col: str) -> DataFrame:
+    """Deterministic last-write-wins per key (SURVEY §7.3: a distributed
+    upsert needs a deduped source)."""
+    w = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    return source.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
 def exact_dedup_by_fingerprint(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

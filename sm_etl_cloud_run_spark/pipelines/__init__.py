@@ -3,11 +3,12 @@ reference's eight pandas ETL chains.
 
 ``base`` holds the generic two-stage machinery (transform → bronze →
 typed load); each sibling module contributes a :class:`FactSpec` plus
-its source-specific condition predicate.
+its source-specific condition predicate. ``rehearsal`` wires the
+watermark-gated lifecycle jobs: EP3 (the control-table refresh), EP1
+and EP2.
 """
 
 from .base import FactSpec, load_typed, spark_type_map, transform_fact  # noqa: F401
-from .ftp_metadados import atualizar_controle, transformar_metadados  # noqa: F401
 from .scnes import HABILITACOES_SPEC, VINCULOS_SPEC  # noqa: F401
 from .siasus_bpa_i import BPA_I_SPEC, condicao_saude_mental_bpa_i  # noqa: F401
 from .siasus_pa import PA_SPEC, condicao_saude_mental  # noqa: F401

@@ -8,9 +8,10 @@ test, the real DATASUS FTP plus Postgres in production — the jobs
 themselves don't change.
 
 - **EP3** (`refresh_control`): FTP LIST scan (S3) → filename parse
-  (P8) → watermark-preserving upsert of the driver-side ledger
-  (`sinks/watermark.py`), no Spark job — the reference's
-  `/ftp_metadados` refresh (etl/datasus_ftp_metadados.py:252-382).
+  (P8) → 13-month retention (F6) → watermark-preserving upsert of the
+  driver-side ledger (`sinks/watermark.py`), no Spark job — the
+  reference's `/ftp_metadados` refresh
+  (etl/datasus_ftp_metadados.py:164-382).
 - **EP1** (`ep1_baixar_pa_lote`): gate-selected files → executor-side
   download + DBC decode (S1) → `transform_fact` (the full F/P/C/J
   chain) → bronze CSV (K1), all files concurrently → one
@@ -80,6 +81,20 @@ def _cfg(key: str) -> Any:
 # in a bronze path and a JDBC predicate
 _PA_NAME = re.compile(r"PA([A-Z]{2})(\d{2})(\d{2})[a-z]?\.(?i:dbc)", re.ASCII)
 
+# every ledger row carries every column, in this order
+_COLUMNS = (
+    "tipo", "arquivo", "sigla_uf", "periodo", "tamanho",
+    "timestamp_modificacao_ftp", "timestamp_etl_gcs", "timestamp_load_bd",
+)
+# F6: a file is kept while its period is at most this many months older
+# than the newest listed period of its tipo
+RETENTION_MONTHS = 13
+
+
+def _month(periodo: str) -> int:
+    """`YYYY-MM` as a month count, so periods subtract."""
+    return int(periodo[:4]) * 12 + int(periodo[5:7]) - 1
+
 
 def refresh_control(spark: SparkSession) -> list[dict]:
     """Scan the FTP directory, upsert the watermark ledger and return
@@ -87,34 +102,47 @@ def refresh_control(spark: SparkSession) -> list[dict]:
 
     New files appear with NULL stage watermarks (so both stages are
     pending); files already tracked keep their `timestamp_etl_gcs` /
-    `timestamp_load_bd` — only the FTP modification timestamp is
-    refreshed, which is exactly what re-triggers a retroactively
-    re-published period (the reference's "new or updated" condition,
-    verificar_e_executar.py:36-41).
+    `timestamp_load_bd` — only the FTP modification timestamp and the
+    size (`tamanho`) are refreshed, which is exactly what re-triggers a
+    retroactively re-published period (the reference's "new or
+    updated" condition, verificar_e_executar.py:36-41). A tracked file
+    the listing omits keeps its last-seen size.
 
     True UPSERT, never a rebuild: a tracked file absent from one LIST
     scan (transient/partial FTP listing) survives with all its
     watermarks — the reference's upsert
     (datasus_ftp_metadados.py upsert_dados_no_postgres) likewise never
-    deletes rows merely missing from a listing; it prunes solely by
-    age (>13 months), which callers do explicitly if desired.
+    deletes rows merely missing from a listing. Rows are pruned by age
+    only (F6): a file whose period is more than `RETENTION_MONTHS`
+    before the newest LISTED period of its tipo is dropped, listed or
+    tracked, so an old file never enters the ledger. A tipo with no
+    listed file prunes nothing, so an empty or failed listing deletes
+    no row. The reference's second rule (K6: per (tipo, UF), delete
+    rows older than the oldest incoming file) is not applied: a partial
+    listing would then delete the tracked files it omits (PASP2407 when
+    only PASP2408 is listed).
     """
     # `spark` is unused; it stays because callers (perfbench/etl.py) pass it
     client = DatasusFtpClient(_cfg("host"), transport_factory=_cfg("transport_factory"))
     listed = parse_list_lines(client.list_metadata_lines(_cfg("directory")), ("PA",))
     path = _cfg("control_path")
     old = read_control(path) if os.path.exists(path) else []
-    ledger = {(r["tipo"], r["arquivo"]): r for r in old}
+    # a ledger written before `tamanho` existed reads back without it
+    ledger = {(r["tipo"], r["arquivo"]): {c: r.get(c) for c in _COLUMNS} for r in old}
+    newest: dict[str, int] = {}
     for entry in listed:
         m = _PA_NAME.fullmatch(entry["nome"])
         if m is None:
             continue
+        periodo = f"20{m[2]}-{m[3]}"
+        newest["PA"] = max(newest.get("PA", 0), _month(periodo))
         prev = ledger.get(("PA", entry["nome"]), {})
         ledger[("PA", entry["nome"])] = {
             "tipo": "PA",
             "arquivo": entry["nome"],
             "sigla_uf": m[1],
-            "periodo": f"20{m[2]}-{m[3]}",
+            "periodo": periodo,
+            "tamanho": entry["tamanho"],
             # listing present → take its mtime; a NULL (unparseable)
             # stamp keeps the last-seen one
             "timestamp_modificacao_ftp": (entry["timestamp_modificacao_ftp"]
@@ -122,7 +150,10 @@ def refresh_control(spark: SparkSession) -> list[dict]:
             "timestamp_etl_gcs": prev.get("timestamp_etl_gcs"),
             "timestamp_load_bd": prev.get("timestamp_load_bd"),
         }
-    rows = list(ledger.values())
+    rows = [
+        r for r in ledger.values()
+        if r["tipo"] not in newest or _month(r["periodo"]) >= newest[r["tipo"]] - RETENTION_MONTHS
+    ]
     write_control(path, rows)
     return rows
 

@@ -631,11 +631,11 @@ WHERE rn = 1
 @register("dedup_last_write", oracle=_LASTWRITE_ORACLE,
           description="last-write-wins dedup: keep each user's latest event (K5 source-dedupe shape)")
 def dedup_last_write(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MERGE-source dedupe (sinks/merge.dedupe_last_write) as a
+    """The MERGE-source dedupe (operators/dedup.dedupe_last_write) as a
     standalone query: one window pass keyed on the id, deterministic
     tiebreak on (ts, event_id) — SURVEY §7.3's requirement that a
     distributed upsert dedupe its source first."""
-    from ..sinks.merge import dedupe_last_write
+    from ..operators.dedup import dedupe_last_write
 
     t = load_tables(spark, sf_dir)
     ev = t["events"].select(

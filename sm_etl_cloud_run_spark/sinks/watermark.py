@@ -38,16 +38,27 @@ def read_control(path: str) -> list[dict]:
 
 
 def write_control(path: str, rows: list[dict]) -> None:
-    """Replace the ledger at `path` with `rows` (all with the same keys).
+    """Replace the ledger at `path` with `rows`, which must all have the
+    same keys: the columns come from the first row, so a key the others
+    lack or add would be dropped or filled with NULL without a word.
 
-    Column types come from the values. A column with no value yet is a
-    stage watermark no run has set, so it is typed as a timestamp like
-    every other datetime column."""
+    Column types come from the values. `tamanho` (a file size) is
+    int64 even with no value yet, as in a ledger migrated from the
+    format without it; any other column with no value yet is a stage
+    watermark no run has set, so it is typed as a timestamp like every
+    other datetime column."""
+    if any(r.keys() != rows[0].keys() for r in rows):
+        raise ValueError("ledger rows must all have the same columns")
     table = pa.Table.from_pylist(rows)
     for i, field in enumerate(table.schema):
-        if pa.types.is_null(field.type) or pa.types.is_timestamp(field.type):
+        if field.name == "tamanho":
+            to = pa.int64()
+        elif pa.types.is_null(field.type) or pa.types.is_timestamp(field.type):
             # naive datetimes are taken as UTC, like the Spark session
-            table = table.set_column(i, field.name, table.column(i).cast(_TS))
+            to = _TS
+        else:
+            continue
+        table = table.set_column(i, field.name, table.column(i).cast(to))
     _replace(path, table)
 
 

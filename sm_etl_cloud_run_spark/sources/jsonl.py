@@ -105,8 +105,8 @@ def read_jsonl_stream(
 ) -> DataFrame:
     """Streaming JSONL ingestion over a drop directory — the continuous
     twin of `read_jsonl` (same schema contract and corrupt capture), for
-    the corpus-ingestion pipeline (fingerprint dedup → idempotent
-    upsert, see tests/test_streaming.py)."""
+    the corpus-ingestion pipeline (fingerprint dedup with
+    `streaming.stream_ops.streaming_dedup`)."""
     return (
         spark.readStream.schema(_with_corrupt(schema))
         .option("mode", "PERMISSIVE")

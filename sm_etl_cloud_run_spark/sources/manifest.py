@@ -12,9 +12,9 @@ predicate before `spark.read.parquet(*files)`.
 Scale shape: footer reads distribute over executors (mapInPandas over
 the file list — each footer is a few KB regardless of file size); the
 manifest is file-count-sized and is itself a DataFrame, so pruning is
-a filter on metadata, never a data scan. Pairs with
-`sinks/compact.py`: range-sorted or Z-ordered compaction is what makes
-the per-file ranges disjoint enough to prune.
+a filter on metadata, never a data scan. Files written range-sorted on
+the filter column (`repartitionByRange` + `sortWithinPartitions`) have
+disjoint enough per-file ranges to prune.
 """
 
 from __future__ import annotations

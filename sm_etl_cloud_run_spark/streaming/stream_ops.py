@@ -185,53 +185,9 @@ def running_totals_stateful(
 
 def run_stream_to_memory(df: DataFrame, query_name: str, *, output_mode: str = "append"):
     """Drive a streaming DataFrame to completion against the memory sink
-    (local smoke testing; production uses `stream_upsert_sink`)."""
+    (local smoke testing)."""
     q = df.writeStream.outputMode(output_mode).format("memory").queryName(query_name).start()
     q.processAllAvailable()
-    return q
-
-
-def stream_upsert_sink(
-    df: DataFrame,
-    target_path: str,
-    keys: tuple[str, ...],
-    *,
-    order_col: str,
-    checkpoint_dir: str,
-    update_condition=None,
-    output_mode: str = "update",
-    query_name: str = "upsert_sink",
-):
-    """Stream → idempotent MERGE sink via `foreachBatch`.
-
-    Each micro-batch is last-write-wins deduped on `keys` and upserted
-    into the parquet table with `sinks.merge.merge_upsert` — the same
-    operator the batch path uses, so replays and at-least-once delivery
-    converge to the same table state (foreachBatch re-delivers a batch
-    after a crash; the upsert absorbs it). This is the Structured
-    Streaming analog of the reference's keyed change-detection load
-    (etl/datasus_ftp_metadados.py:252-382).
-
-    Keep `output_mode="update"` for aggregated inputs so each trigger
-    emits only changed keys — the merge then touches just those rows.
-    """
-    from ..sinks.merge import dedupe_last_write, merge_upsert
-
-    def upsert_batch(batch: DataFrame, _batch_id: int) -> None:
-        if not batch.isEmpty():
-            deduped = dedupe_last_write(batch, list(keys), order_col)
-            merge_upsert(
-                batch.sparkSession, deduped, target_path, list(keys),
-                update_condition=update_condition,
-            )
-
-    q = (
-        df.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .foreachBatch(upsert_batch)
-        .start()
-    )
     return q
 
 
@@ -332,85 +288,6 @@ def streaming_dedup(
     if events.isStreaming:
         return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(list(keys))
     return events.dropDuplicates(list(keys))
-
-
-def stream_cdc_apply(
-    changes: DataFrame,
-    target_path: str,
-    keys: tuple[str, ...],
-    *,
-    seq_col: str,
-    op_col: str = "op",
-    delete_ops: tuple[str, ...] = ("D",),
-    checkpoint_dir: str,
-    query_name: str = "cdc_apply",
-):
-    """Stream of CDC changes → maintained snapshot table (foreachBatch).
-
-    The streaming twin of `operators.cdc.apply_cdc`: each micro-batch is
-    collapsed to its latest change per key (tombstones included), then
-    merged into the parquet snapshot with SEQUENCE-GUARDED semantics —
-    a change touches the target only if its `seq_col` is strictly newer
-    than the stored row's.
-
-    Deletes are stored as TOMBSTONE rows (`__tombstone = true`), not
-    removed: a physically deleted key would be resurrected by an
-    at-least-once redelivery of an older batch (the stale upsert finds
-    no row to lose the seq comparison against). With tombstones, any
-    prefix-interleaving or replay of batches converges to the same
-    snapshot as one batch-mode `apply_cdc` over the full log (tested in
-    tests/test_streaming.py). Read through `read_cdc_snapshot`, which
-    filters tombstones; purge tombstones older than the source's
-    max-lateness horizon with `sinks.merge.retention_delete`.
-    """
-    from pyspark.sql import functions as F
-
-    from ..sinks.merge import _atomic_replace, dedupe_last_write
-
-    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        import os
-
-        spark = batch.sparkSession
-        latest = (
-            dedupe_last_write(batch, list(keys), seq_col)
-            .withColumn("__tombstone", F.col(op_col).isin(*delete_ops))
-            .drop(op_col)
-        )
-        if not os.path.exists(target_path):
-            _atomic_replace(spark, latest, target_path)
-            return
-        tgt = spark.read.parquet(target_path).alias("tgt")
-        src = latest.alias("src")
-        key_cond = None
-        for k in keys:
-            term = F.col(f"src.{k}") == F.col(f"tgt.{k}")
-            key_cond = term if key_cond is None else (key_cond & term)
-        newer = F.coalesce(F.col(f"src.{seq_col}") > F.col(f"tgt.{seq_col}"), F.lit(True))
-
-        untouched = tgt.join(src, key_cond, "left_anti").select("tgt.*")
-        matched = tgt.join(src, key_cond, "inner")
-        kept = matched.where(~newer).select("tgt.*")
-        updated = matched.where(newer).select("src.*")
-        inserts = src.join(tgt, key_cond, "left_anti").select("src.*")
-        merged = untouched.unionByName(kept).unionByName(updated).unionByName(inserts)
-        _atomic_replace(spark, merged, target_path)
-
-    return (
-        changes.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .foreachBatch(apply_batch)
-        .start()
-    )
-
-
-def read_cdc_snapshot(spark, target_path: str) -> DataFrame:
-    """Visible rows of a `stream_cdc_apply` snapshot (tombstones hidden)."""
-    from pyspark.sql import functions as F
-
-    return spark.read.parquet(target_path).where(~F.col("__tombstone")).drop("__tombstone")
 
 
 def stream_drift_monitor(

@@ -1,5 +1,5 @@
-"""Pipeline tests for BPA-i, RAAS, AIH-RD (vintages), SCNES (surgery),
-SISAB (melt shape) and the EP3 metadata refresh."""
+"""Pipeline tests for BPA-i, RAAS, AIH-RD (vintages), SCNES (surgery)
+and SISAB (melt shape)."""
 
 from __future__ import annotations
 
@@ -13,7 +13,6 @@ from sm_etl_cloud_run_spark.pipelines import (
     HABILITACOES_SPEC,
     RAAS_PS_SPEC,
     VINCULOS_SPEC,
-    atualizar_controle,
     condicao_saude_mental_bpa_i,
     transform_fact,
     transform_sisab_producao,
@@ -285,32 +284,6 @@ def test_sisab_pipeline_end_to_end(spark):
     assert rows[("0355030", "eAP")]["periodo_id"] == "p-2024-08-M"
     assert rows[("0355030", "eAP")]["unidade_geografica_id"] == "m-sp"
     assert out.columns[0] == "id" and out.columns[-1] == "atualizacao_data"  # P6 order
-
-
-def test_ftp_metadados_refresh_ep3(spark, tmp_path):
-    control = str(tmp_path / "sm_metadados_ftp")
-    lines_v1 = [
-        "09-03-24  03:45PM       100 PASP2408_1.dbc",
-        "09-03-24  03:46PM       200 PASP2408_2.dbc",
-        "08-01-24  01:00PM       300 PASP2407.dbc",
-        "01-01-20  01:00PM       400 PASP2001.dbc",  # older than 13 months → dropped (F6)
-    ]
-    atualizar_controle(spark, lines_v1, control, prefixes=("PA",))
-    rows = {r["nome"]: r for r in spark.read.parquet(control).collect()}
-    assert set(rows) == {"PASP2408", "PASP2407"}
-    assert rows["PASP2408"]["tamanho"] == 300            # A1 shard rollup
-    assert rows["PASP2408"]["particoes"] == "_1.dbc,_2.dbc"
-
-    # second refresh: one file re-uploaded with new mtime (K5 update path)
-    lines_v2 = [
-        "09-04-24  09:00AM       150 PASP2408_1.dbc",
-        "09-03-24  03:46PM       200 PASP2408_2.dbc",
-        "08-01-24  01:00PM       300 PASP2407.dbc",
-    ]
-    atualizar_controle(spark, lines_v2, control, prefixes=("PA",))
-    rows2 = {r["nome"]: r for r in spark.read.parquet(control).collect()}
-    assert rows2["PASP2408"]["tamanho"] == 350           # updated (mtime changed)
-    assert rows2["PASP2407"]["tamanho"] == 300           # untouched
 
 
 def test_bpa_i_two_stage_roundtrip(spark, tmp_path):

@@ -107,77 +107,6 @@ def test_winnowing_guarantee(spark, seed):
 @given(
     st.lists(
         st.tuples(
-            st.integers(min_value=0, max_value=9),          # key
-            st.integers(min_value=0, max_value=3),          # version value
-        ),
-        min_size=1, max_size=25,
-    ),
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=12),
-            st.integers(min_value=0, max_value=3),
-        ),
-        min_size=1, max_size=15, unique_by=lambda t: t[0],
-    ),
-)
-def test_scd2_apply_properties(spark, current_pairs, snapshot_pairs):
-    """SCD2 invariants over random histories/snapshots: exactly one
-    open version per key, idempotent re-apply, and no history loss."""
-    import datetime as dt
-
-    from sm_etl_cloud_run_spark.sinks.scd2 import scd2_apply
-
-    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 2, 1)
-    # one open version per key (dedupe generated keys, keep first value)
-    seen = {}
-    for k, v in current_pairs:
-        seen.setdefault(k, v)
-    history = spark.createDataFrame(
-        [(k, v, d1, None, True) for k, v in seen.items()],
-        "id long, val long, valid_from date, valid_to date, is_current boolean",
-    )
-    snapshot = spark.createDataFrame(
-        [(k, v, d2) for k, v in snapshot_pairs],
-        "id long, val long, effective_date date",
-    )
-    kw = dict(key_cols=["id"], compare_cols=["val"])
-    v1 = scd2_apply(history, snapshot, **kw)
-    rows = v1.collect()
-    open_per_key = {}
-    for r in rows:
-        if r["is_current"]:
-            open_per_key[r["id"]] = open_per_key.get(r["id"], 0) + 1
-    all_keys = set(seen) | {k for k, _ in snapshot_pairs}
-    assert open_per_key == {k: 1 for k in all_keys}          # one open version/key
-    assert len(rows) >= len(seen)                            # history never shrinks
-    v2 = scd2_apply(v1, snapshot, **kw)
-    assert sorted(map(tuple, v2.collect())) == sorted(map(tuple, rows))  # idempotent
-
-
-@settings(**_SETTINGS)
-@given(st.lists(st.integers(min_value=0, max_value=2**15 - 1), min_size=2, max_size=40))
-def test_morton_code_locality_property(spark, values):
-    """Morton key equality ⇔ same (a, b) pair (bijective on the masked
-    domain), and the key of (a, b) ≤ key of (a | m, b | m)."""
-    from sm_etl_cloud_run_spark.sinks.compact import morton_code
-
-    pairs = [(values[i], values[(i + 1) % len(values)]) for i in range(len(values))]
-    df = spark.createDataFrame(pairs, "a long, b long")
-    got = df.select("a", "b", morton_code("a", "b").alias("z")).collect()
-    def interleave(a, b):
-        z = 0
-        for i in range(16):
-            z |= ((a >> i) & 1) << (2 * i)
-            z |= ((b >> i) & 1) << (2 * i + 1)
-        return z
-    for r in got:
-        assert r["z"] == interleave(r["a"], r["b"])
-
-
-@settings(**_SETTINGS)
-@given(
-    st.lists(
-        st.tuples(
             st.integers(min_value=0, max_value=5),            # key
             st.sampled_from(["U", "U", "U", "D"]),            # op (deletes rarer)
             st.integers(min_value=0, max_value=99),           # payload

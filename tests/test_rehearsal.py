@@ -21,6 +21,7 @@ import os
 import pytest
 from pyspark import cloudpickle
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from dbc_fixtures import make_dbc, make_dbf
 from test_datasus_ftp import FakeFtpSession
@@ -222,6 +223,102 @@ def test_refresh_control_survives_partial_listing(spark, tmp_path):
     assert kept["timestamp_load_bd"] is not None
     assert kept["timestamp_modificacao_ftp"] is not None  # last-seen mtime
     assert kept["sigla_uf"] == "SP" and kept["periodo"] == "2024-07"
+
+
+class _ListingFtp(FakeFtpSession):
+    """LIST with a chosen size and stamp per file:
+    {name: (size, "MM-DD-YY  hh:mmAM")}."""
+
+    def __init__(self, listing: dict[str, tuple[int, str]]):
+        super().__init__({_DIR: dict.fromkeys(listing, b"")})
+        self._listing = listing
+
+    def retrlines(self, cmd, callback):
+        assert cmd == "LIST"
+        for name, (size, stamp) in sorted(self._listing.items()):
+            callback(f"{stamp}      {size} {name}")
+
+
+def test_refresh_control_retention_and_size(spark, tmp_path):
+    """EP3's 13-month window (F6) and file size over the ledger: a file
+    more than 13 months older than the newest listed file of its tipo
+    never enters the ledger and a tracked one is pruned; `tamanho` is
+    the LIST size; a re-upload refreshes size and mtime but keeps both
+    stage watermarks; an unlisted file inside the window keeps its
+    size."""
+    control = str(tmp_path / "ctl")
+    _configure_listing(control, {}, tmp_path)
+
+    def refresh(listing):
+        rehearsal.configure(transport_factory=lambda: _ListingFtp(listing))
+        return {r["arquivo"]: r for r in rehearsal.refresh_control(spark)}
+
+    rows = refresh({
+        "PASP2408.dbc": (100, "09-03-24  03:45PM"),
+        "PASP2407.dbc": (300, "08-01-24  01:00PM"),
+        "PASP2307.dbc": (50, "08-01-23  01:00PM"),   # 13 months before 2408: kept
+        "PASP2306.dbc": (400, "07-01-23  01:00PM"),  # 14 months: never added
+    })
+    assert set(rows) == {"PASP2408.dbc", "PASP2407.dbc", "PASP2307.dbc"}
+    assert {a: r["tamanho"] for a, r in rows.items()} == {
+        "PASP2408.dbc": 100, "PASP2407.dbc": 300, "PASP2307.dbc": 50,
+    }
+    for col in ("timestamp_etl_gcs", "timestamp_load_bd"):
+        touch_watermark(control, {"tipo": ["PA"], "arquivo": ["PASP2408.dbc", "PASP2407.dbc"]}, col)
+    stamped = {r["arquivo"]: r for r in read_control(control)}
+
+    # 2409 moves the window to 2023-08: the tracked 2307 is pruned;
+    # 2408 is re-uploaded; 2407 is missing from this listing
+    rows = refresh({
+        "PASP2409.dbc": (10, "10-01-24  01:00PM"),
+        "PASP2408.dbc": (150, "09-04-24  09:00AM"),
+        "PASP2306.dbc": (400, "07-01-23  01:00PM"),
+    })
+    assert set(rows) == {"PASP2409.dbc", "PASP2408.dbc", "PASP2407.dbc"}
+    assert rows == {r["arquivo"]: r for r in read_control(control)}
+    bumped = rows["PASP2408.dbc"]
+    assert bumped["tamanho"] == 150
+    assert bumped["timestamp_modificacao_ftp"] == dt.datetime(2024, 9, 4, 9, 0, tzinfo=dt.timezone.utc)
+    for arquivo in ("PASP2408.dbc", "PASP2407.dbc"):
+        for col in ("timestamp_etl_gcs", "timestamp_load_bd"):
+            assert rows[arquivo][col] is not None
+            assert rows[arquivo][col] == stamped[arquivo][col]
+    assert rows["PASP2407.dbc"]["tamanho"] == 300
+    assert rows["PASP2407.dbc"]["timestamp_modificacao_ftp"] == stamped["PASP2407.dbc"]["timestamp_modificacao_ftp"]
+    assert rows["PASP2409.dbc"]["timestamp_etl_gcs"] is None
+
+    # an empty listing prunes nothing
+    assert set(refresh({})) == set(rows)
+
+
+def test_refresh_control_migrates_ledger_without_tamanho(spark, tmp_path):
+    """A ledger written before `tamanho` existed gains the column on the
+    first refresh, even when its first row is a file the listing omits:
+    that row's size is NULL, the listed file's is its LIST size, the
+    watermarks survive and the column is int64."""
+    control = str(tmp_path / "ctl")
+    t = dt.datetime(2024, 9, 3, 15, 45, tzinfo=dt.timezone.utc)
+    write_control(control, [
+        {"tipo": "PA", "arquivo": arquivo, "sigla_uf": "SP", "periodo": periodo,
+         "timestamp_modificacao_ftp": t, "timestamp_etl_gcs": t, "timestamp_load_bd": None}
+        for arquivo, periodo in (("PASP2407.dbc", "2024-07"), ("PASP2408.dbc", "2024-08"))
+    ])
+    _configure_listing(control, {"PASP2408.dbc": b"yy"}, tmp_path)
+    rehearsal.refresh_control(spark)
+    rows = {r["arquivo"]: r for r in read_control(control)}
+    assert rows["PASP2407.dbc"]["tamanho"] is None
+    assert rows["PASP2408.dbc"]["tamanho"] == 2
+    assert all(r["timestamp_etl_gcs"] == t for r in rows.values())
+    assert spark.read.parquet(control).schema["tamanho"].dataType == T.LongType()
+
+    # rows with different keys are refused, and the ledger is untouched
+    before = (tmp_path / "ctl").read_bytes()
+    with pytest.raises(ValueError):
+        write_control(control, [{"a": 1}, {"a": 2, "tamanho": 5}])
+    assert (tmp_path / "ctl").read_bytes() == before
+    # a size column with no value yet stays int64
+    write_control(control, [{"arquivo": "PASP2407.dbc", "tamanho": None}])
+    assert spark.read.parquet(control).schema["tamanho"].dataType == T.LongType()
 
 
 def test_lifecycle_jobs_reject_unsafe_filenames(spark, tmp_path):

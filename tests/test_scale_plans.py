@@ -184,107 +184,3 @@ def test_fact_rank_plans_are_range_partitioned(spark, sf_dir):
                     # parameter-sized (<= |groups| + partitions rows)
                     or "lag(__dl_last" in line
                 ), (name, line)
-
-
-def test_zorder_layout_tightens_both_column_envelopes(spark, tmp_path):
-    """Z-order clustering vs single-column sort, measured on the
-    property file skipping actually uses: how many files a predicate
-    on the SECOND column alone must touch. Sorted-by-a files each span
-    b's full range (a b-filter prunes nothing); Z-ordered files carry
-    bounded b-envelopes, so the same filter skips most files — while
-    reads stay exactly correct. (Mean envelope area is NOT the right
-    metric: area × file-count is ~invariant under any space-filling
-    split; the win is per-dimension boundedness.)"""
-    import glob
-
-    import pyarrow.parquet as apq
-
-    from sm_etl_cloud_run_spark.functions.zorder import write_zordered
-
-    n = 40_000
-    df = spark.range(n).select(
-        (F.col("id") % 200).alias("a"),
-        ((F.col("id") * 7919) % 1000).alias("b"),
-        F.col("id").alias("payload"),
-    )
-    flat = str(tmp_path / "flat")
-    zord = str(tmp_path / "zord")
-    df.repartitionByRange(8, "a").sortWithinPartitions("a") \
-        .write.mode("overwrite").parquet(flat)
-    write_zordered(df, zord, "a", "b", bits=10, num_files=8)
-
-    def b_envelopes(path):
-        envs = []
-        for f in glob.glob(path + "/part-*.parquet"):
-            md = apq.read_metadata(f)
-            bmin = bmax = None
-            for rg in range(md.num_row_groups):
-                row = md.row_group(rg)
-                cols = {row.column(i).path_in_schema: row.column(i).statistics
-                        for i in range(row.num_columns)}
-                sb = cols["b"]
-                bmin = sb.min if bmin is None else min(bmin, sb.min)
-                bmax = sb.max if bmax is None else max(bmax, sb.max)
-            envs.append((bmin, bmax))
-        return envs
-
-    def files_hit(envs, lo, hi):
-        return sum(1 for (bmin, bmax) in envs if bmax >= lo and bmin <= hi)
-
-    flat_envs = b_envelopes(flat)
-    z_envs = b_envelopes(zord)
-    assert len(flat_envs) >= 8 and len(z_envs) >= 8
-    # the b-only filter must touch every single-column-sorted file but
-    # at most half of the z-ordered ones
-    hit_flat = files_hit(flat_envs, 800, 999)
-    hit_z = files_hit(z_envs, 800, 999)
-    assert hit_flat == len(flat_envs), (hit_flat, flat_envs)
-    assert hit_z * 2 <= hit_flat, (hit_z, hit_flat, z_envs)
-
-    # correctness: the layout is invisible to query results
-    want = sorted(
-        (r["a"], r["b"], r["payload"])
-        for r in df.where((F.col("a") < 37) & (F.col("b") >= 800)).collect()
-    )
-    got = sorted(
-        (r["a"], r["b"], r["payload"])
-        for r in spark.read.parquet(zord)
-        .where((F.col("a") < 37) & (F.col("b") >= 800)).collect()
-    )
-    assert got == want and len(want) > 0
-
-
-def test_normalize_to_bits_exact_on_wide_spans(spark):
-    """The quantizer must be bit-identical to integer reference math at
-    spans where a double-precision divide would round differently
-    (span*top above 2^53) or a naive (v-min)*top multiply would
-    overflow BIGINT (span above ~2^47). Pure shift/multiply arithmetic
-    makes both regimes exact; this pins it against a Python big-int
-    reference."""
-    from sm_etl_cloud_run_spark.functions.zorder import normalize_to_bits
-
-    bits = 16
-    vmin, vmax = -(1 << 60), (1 << 60)  # span = 2^61: k + bits > 62
-    span = vmax - vmin
-    k = span.bit_length()
-    s = max(0, k + bits - 62)
-    top = (1 << bits) - 1
-    vals = [vmin, vmax, 0, 1, -1, (1 << 53) + 1, -(1 << 53) - 7,
-            vmax - 1, vmin + 12345, 987654321987654321]
-    df = spark.createDataFrame([(v,) for v in vals], "v long")
-    got = {r["v"]: r["n"] for r in df.select(
-        "v", normalize_to_bits(F.col("v"), vmin, vmax, bits).alias("n")
-    ).collect()}
-    for v in vals:
-        ref = (((v - vmin) >> s) * top) >> (k - s)
-        assert got[v] == ref, (v, got[v], ref)
-        assert 0 <= got[v] <= top
-    # monotone: order of inputs survives quantization
-    ordered = sorted(vals)
-    quant = [got[v] for v in ordered]
-    assert quant == sorted(quant)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        normalize_to_bits(F.col("v"), 0, 1 << 62, bits)

@@ -179,18 +179,15 @@ def test_jsonl_stream_matches_batch(spark, tmp_path):
 
 def test_manifest_prunes_range_sorted_files(spark, tmp_path):
     """Footer-stats manifest + data skipping on plain parquet: after a
-    range-sorted compaction, a narrow id predicate must open only a
+    range-sorted write, a narrow id predicate must open only a
     fraction of the files and still return exactly the full-scan answer."""
-    from sm_etl_cloud_run_spark.sinks.compact import compact_parquet_dir, dir_stats
     from sm_etl_cloud_run_spark.sources.manifest import (
         build_manifest, prune_files, read_pruned,
     )
 
     path = str(tmp_path / "skipme")
-    spark.range(40000).selectExpr("id", "id % 13 as v").repartition(16).write.parquet(path)
-    _, nbytes = dir_stats(path)
-    compact_parquet_dir(spark, path, target_file_bytes=max(1, nbytes // 8),
-                        sort_cols=["id"])
+    (spark.range(40000).selectExpr("id", "id % 13 as v")
+     .repartitionByRange(8, "id").sortWithinPartitions("id").write.parquet(path))
     files_total = len(
         [f for f in __import__("glob").glob(path + "/*.parquet")]
     )

@@ -288,107 +288,6 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
     assert streaming_dedup(df).count() == 3
 
 
-def test_stream_upsert_sink_idempotent(spark, tmp_path):
-    from sm_etl_cloud_run_spark.streaming.stream_ops import stream_upsert_sink
-
-    base = dt.datetime(2024, 1, 1, 10, 15)
-    rows = [
-        (base, "click", 1.0),
-        (base + dt.timedelta(minutes=20), "click", 2.0),
-        (base + dt.timedelta(hours=2), "view", 5.0),
-    ]
-    df = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
-    src = str(tmp_path / "events")
-    df.coalesce(1).write.parquet(src)
-    target = str(tmp_path / "rollup_table")
-
-    def run_once(tag: str) -> None:
-        stream = windowed_counts(read_events_stream(spark, src, df.schema), window="1 hour")
-        q = stream_upsert_sink(
-            stream, target, ("window_start", "event_type"),
-            order_col="n", checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
-            output_mode="complete", query_name=f"upsert_{tag}",
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_once("a")
-    expected = {
-        (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in windowed_counts(spark.read.parquet(src), window="1 hour").collect()
-    }
-    got = {
-        (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == expected and len(got) == 2
-
-    # replay from a FRESH checkpoint (at-least-once redelivery of every
-    # batch): the keyed upsert must converge to the same table, no dupes
-    run_once("b")
-    again = {
-        (r["window_start"], r["event_type"]): (r["n"], r["total_value"])
-        for r in spark.read.parquet(target).collect()
-    }
-    assert again == expected
-
-
-def test_streaming_corpus_ingestion_dedup_upsert(spark, tmp_path):
-    """The LLM-corpus ingestion loop on a stream: documents arrive,
-    exact-dedup on content fingerprint within the watermark horizon,
-    keyed upsert into the corpus table. Replaying the entire source
-    from a FRESH checkpoint (at-least-once redelivery) must leave the
-    table unchanged — ingestion is idempotent end-to-end."""
-    from sm_etl_cloud_run_spark.functions.text import doc_fingerprint
-    from sm_etl_cloud_run_spark.streaming.stream_ops import (
-        stream_upsert_sink,
-        streaming_dedup,
-    )
-
-    base = dt.datetime(2024, 8, 1, 12, 0)
-    rows = [
-        (1, "alpha beta gamma", base),
-        (2, "delta epsilon zeta", base + dt.timedelta(minutes=1)),
-        (2, "delta epsilon zeta", base + dt.timedelta(minutes=2)),   # replayed doc
-        (4, "ALPHA, beta. gamma!", base + dt.timedelta(minutes=3)),  # same normalized content as 1
-        (5, "eta theta iota", base + dt.timedelta(minutes=4)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, ingest_ts timestamp")
-    src = str(tmp_path / "docs")
-    df.repartition(2).write.parquet(src)
-    target = str(tmp_path / "corpus")
-
-    def run_once(tag: str) -> None:
-        stream = (
-            read_events_stream(spark, src, df.schema)
-            .withColumn("fingerprint", doc_fingerprint(F.col("text")))
-        )
-        deduped = streaming_dedup(
-            stream, keys=("fingerprint",), ts_col="ingest_ts", watermark="1 hour"
-        )
-        q = stream_upsert_sink(
-            deduped, target, ("fingerprint",),
-            order_col="doc_id", checkpoint_dir=str(tmp_path / f"ckpt_{tag}"),
-            output_mode="append", query_name=f"corpus_{tag}",
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_once("a")
-    got = {r["fingerprint"]: r["doc_id"] for r in spark.read.parquet(target).collect()}
-    # 3 distinct contents: {1,4} share a normalized fingerprint, 2's replay collapses
-    assert len(got) == 3
-
-    run_once("b")  # full replay, fresh checkpoint
-    again = {r["fingerprint"]: r["doc_id"] for r in spark.read.parquet(target).collect()}
-    assert set(again) == set(got)
-    assert all(v in (got[k], max(got[k], v)) for k, v in again.items())
-
-
 def test_stream_stream_attribution_join_matches_batch(spark, tmp_path):
     """Watermarked stream-stream inner join with a time-range bound:
     the streaming answer must equal the batch twin exactly."""
@@ -551,57 +450,6 @@ def test_stream_static_dim_enrichment(spark, tmp_path):
         assert got == {1: "gold", 2: "silver", 9: "unknown"}
     finally:
         q.stop()
-
-
-def test_stream_cdc_apply_converges_and_never_regresses(spark, tmp_path):
-    from sm_etl_cloud_run_spark.operators.cdc import apply_cdc
-    from sm_etl_cloud_run_spark.streaming.stream_ops import (
-        read_cdc_snapshot,
-        stream_cdc_apply,
-    )
-
-    schema = "k long, seq long, op string, v string"
-    batch1 = [(1, 1, "U", "a"), (2, 1, "U", "x"), (3, 1, "U", "m")]
-    batch2 = [(1, 2, "U", "b"), (2, 2, "D", None), (4, 2, "U", "new")]
-    src = tmp_path / "changes"
-    src.mkdir()
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(str(src / "b1"))
-    spark.createDataFrame(batch2, schema).coalesce(1).write.parquet(str(src / "b2"))
-    target = str(tmp_path / "snapshot")
-
-    def run(tag: str, glob: str) -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src / glob))
-        )
-        q = stream_cdc_apply(
-            stream, target, ("k",), seq_col="seq",
-            checkpoint_dir=str(tmp_path / f"ckpt_{tag}"), query_name=f"cdc_{tag}",
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run("a", "*/*.parquet")
-    full_log = spark.createDataFrame(batch1 + batch2, schema)
-    expected = {
-        r["k"]: r["v"] for r in apply_cdc(full_log, ["k"], ["seq"]).collect()
-    }
-    got = {r["k"]: r["v"] for r in read_cdc_snapshot(spark, target).collect()}
-    assert got == expected == {1: "b", 3: "m", 4: "new"}
-
-    # at-least-once redelivery of a STALE batch (fresh checkpoint, only
-    # batch1): the seq guard must keep every newer row and the delete
-    run("replay_stale", "b1/*.parquet")
-    again = {r["k"]: r["v"] for r in read_cdc_snapshot(spark, target).collect()}
-    assert again == expected
-
-    # full replay from scratch also converges (idempotency)
-    run("replay_all", "*/*.parquet")
-    final = {r["k"]: r["v"] for r in read_cdc_snapshot(spark, target).collect()}
-    assert final == expected
 
 
 def test_metrics_recorder_captures_progress(spark, tmp_path):

@@ -5,8 +5,8 @@ range-sorted-by-ship-date), then measures on-disk size and a
 date-filtered aggregate's scan time. The point at 100 TB: zstd trades
 CPU for ~25-40% smaller scans, and range-sorting by the dominant
 filter column gives every file a tight min/max footer so the filter
-prunes row groups — the same levers `sinks/compact.py` applies
-(clustering) and `sources/manifest.py` exploits (file skipping).
+prunes row groups — the lever `sources/manifest.py` exploits (file
+skipping).
 
 Usage: python tools/storage_probe.py    # one JSON line per layout
 """
