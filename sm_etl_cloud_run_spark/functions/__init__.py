@@ -22,7 +22,6 @@ from .cleaning import (  # noqa: F401
 from .dates import (  # noqa: F401
     days_to_interval_text,
     from_month_abbrev_pt,
-    from_us_ftp_timestamp,
     from_yyyymm,
     from_yyyymmdd,
     from_ddmmyyyy,

@@ -53,20 +53,6 @@ def decode_bool_flag(col: Column, truthy: str) -> Column:
     return F.when(col.isNull(), F.lit(None).cast("boolean")).otherwise(col == truthy)
 
 
-_ROMAN_VALUES = {"I": 1, "V": 5, "X": 10, "L": 50, "C": 100, "D": 500, "M": 1000}
-
-
-def _roman_to_int(s: str) -> int | None:
-    total, prev = 0, 0
-    for ch in reversed(s):
-        v = _ROMAN_VALUES.get(ch)
-        if v is None:
-            return None
-        total += v if v >= prev else -v
-        prev = max(prev, v)
-    return total
-
-
 def roman_to_int_string(col: Column, max_value: int = 50) -> Column:
     """C6: roman numeral → decimal string; non-roman input passes through.
 

@@ -10,8 +10,9 @@ one audio codec end-to-end; formats whose compression is not in the
 stdlib (JPEG/MP3/video) raise `UnsupportedMediaError` with a clear
 message.
 
-Encoders exist so pipelines (and tests) can synthesize valid payloads;
-decoders return numpy arrays, and `media_feature_decoder` maps any
+BMP and WAV have encoders so pipelines can synthesize valid payloads
+(the PNG test encoder lives in tests/media_fixtures.py); decoders
+return numpy arrays, and `media_feature_decoder` maps any
 supported payload to a fixed 8-float feature vector for
 `operators.multimodal.extract_features`.
 """
@@ -208,34 +209,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int, int]:
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
-def _png_chunk(tag: bytes, body: bytes) -> bytes:
-    import zlib
-
-    return (
-        struct.pack(">I", len(body)) + tag + body
-        + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(pixels: np.ndarray) -> bytes:
-    """(h, w, 3) uint8 RGB array → PNG bytes (8-bit truecolor,
-    filter 0 rows, zlib-compressed, non-interlaced)."""
-    import zlib
-
-    arr = np.asarray(pixels, dtype=np.uint8)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("encode_png expects an (h, w, 3) RGB array")
-    h, w, _ = arr.shape
-    raw = b"".join(b"\x00" + arr[r].tobytes() for r in range(h))
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw, 6))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
 def _paeth(a: int, b: int, c: int) -> int:
     p = a + b - c
     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
@@ -319,8 +292,6 @@ def decode_png(payload: bytes) -> np.ndarray:
 # Unified feature decode
 # ---------------------------------------------------------------------------
 
-FEATURE_DIM = 8
-
 
 def media_feature_decoder(payload: bytes) -> list[float]:
     """Sniff the payload magic and decode to a fixed 8-float vector.
@@ -352,45 +323,3 @@ def media_feature_decoder(payload: bytes) -> list[float]:
         "BMP, 8-bit PNG, and PCM-16 WAV; JPEG/MP3/video require "
         "PIL/librosa/ffmpeg)"
     )
-
-
-# ---------------------------------------------------------------------------
-# audio DSP features (numpy FFT; no external audio libs)
-# ---------------------------------------------------------------------------
-
-def audio_spectral_features(payload: bytes, *, n_bands: int = 8) -> list[float]:
-    """PCM-16 WAV → fixed-width spectral feature vector.
-
-    [rms, zero_crossing_rate, spectral_centroid_hz, rolloff85_hz,
-     band_0..band_{n-1}] where the bands are energy FRACTIONS over
-    `n_bands` equal slices of [0, Nyquist]. Pure numpy rFFT — the
-    Arrow-batched kernel for `operators.multimodal.extract_features`
-    when audio rows need real DSP features rather than envelope stats.
-    Deterministic for a given payload (no windows, no dither).
-    """
-    samples, rate, channels = decode_wav(payload)
-    if channels > 1:
-        n = len(samples) // channels
-        mono = samples[: n * channels].astype(np.float64).reshape(n, channels).mean(axis=1)
-    else:
-        mono = samples.astype(np.float64)
-    if len(mono) == 0:
-        return [0.0, 0.0, 0.0, 0.0] + [0.0] * n_bands
-    rms = float(np.sqrt(np.mean(mono * mono)))
-    signs = np.signbit(mono)
-    zcr = float(np.count_nonzero(signs[1:] != signs[:-1])) / max(len(mono) - 1, 1)
-    spec = np.abs(np.fft.rfft(mono))
-    power = spec * spec
-    freqs = np.fft.rfftfreq(len(mono), d=1.0 / rate)
-    total = float(power.sum())
-    if total <= 0.0:
-        return [rms, zcr, 0.0, 0.0] + [0.0] * n_bands
-    centroid = float((freqs * power).sum() / total)
-    cumulative = np.cumsum(power)
-    rolloff = float(freqs[int(np.searchsorted(cumulative, 0.85 * total))])
-    nyquist = rate / 2.0
-    edges = np.linspace(0.0, nyquist, n_bands + 1)
-    idx = np.clip(np.digitize(freqs, edges[1:-1]), 0, n_bands - 1)
-    bands = np.zeros(n_bands)
-    np.add.at(bands, idx, power)
-    return [rms, zcr, centroid, rolloff] + [float(b / total) for b in bands]

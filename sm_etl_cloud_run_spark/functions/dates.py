@@ -7,6 +7,7 @@ Reference behaviors (file:line cites into /root/reference/):
 - C11 `DD/MM/YYYY → date`               — etl/scnes_habilitacoes.py:203-210
 - C12 (year, month) int cols → date     — etl/sihsus_aih_rd.py:246-260
 - C13 US FTP `MM-DD-YY HH:MMAM` parse   — etl/datasus_ftp_metadados.py:188-198
+      (parsed driver-side with the listing, in `sources/ftp_list.py`)
 - C14 pt-BR month abbrev `ABR/2024`     — utilitarios/sisab_relatorio_producao_utilitarios.py:29-42
 - C15 now() in GMT−3                    — utilitarios/datas.py:23-25
 - C16 days-int → `'N days'` text        — etl/siasus_raas_ps.py:219-225
@@ -42,11 +43,6 @@ def from_ddmmyyyy(col: Column) -> Column:
 def make_date_from_year_month(ano: Column, mes: Column) -> Column:
     """C12: integer (or numeric-string) year + month → first-of-month date."""
     return F.make_date(ano.cast("int"), mes.cast("int"), F.lit(1))
-
-
-def from_us_ftp_timestamp(date_col: Column, time_col: Column) -> Column:
-    """C13: `('09-03-24', '03:45PM') → timestamp 2024-09-03 15:45:00`."""
-    return F.to_timestamp(F.concat_ws(" ", date_col, time_col), "MM-dd-yy hh:mma")
 
 
 _PT_MONTHS = {

@@ -98,19 +98,3 @@ def exploded_shingles(
     return docs.select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     ).select(F.col(id_col), F.explode(arr).alias(alias))
-
-
-def strip_html(col: Column) -> Column:
-    """Remove HTML markup for text-quality pipelines: script/style
-    blocks dropped whole, remaining tags stripped, the five standard
-    entities decoded, whitespace collapsed. Pure regexp expressions —
-    stays in whole-stage codegen (a real DOM parse belongs in a Pandas
-    UDF only when attribute-aware extraction is required)."""
-    c = F.regexp_replace(col, r"(?is)<(script|style)[^>]*>.*?</\1>", " ")
-    c = F.regexp_replace(c, r"(?s)<[^>]+>", " ")
-    # &amp; decodes LAST (standard unescape ordering): decoding it
-    # first turns double-escaped '&amp;lt;' into '<' instead of '&lt;'
-    for ent, ch in (("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
-                    ("&#39;", "'"), ("&nbsp;", " "), ("&amp;", "&")):
-        c = F.replace(c, F.lit(ent), F.lit(ch))
-    return F.trim(F.regexp_replace(c, r"\s+", " "))

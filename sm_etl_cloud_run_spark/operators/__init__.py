@@ -8,9 +8,9 @@ Each module exposes DataFrame → DataFrame combinators:
 - ``joins``      — broadcast dimension lookups (J2/J3), the date→period
                    range join (J1), next-period lead (J4)
 - ``aggregates`` — deterministic list aggregation (A1), null-count
-                   validators (A4), Count-Min heavy hitters
+                   validators (A4)
 - ``reshape``    — unpivot/melt (R1), schema-harmonized unions (R2)
 - ``dedup``      — exact, MinHash-LSH, SimHash, n-gram Jaccard near-dup
 - ``similarity`` — brute-force + LSH-bucketed cosine top-k over embeddings
-- ``windows``    — top-k per group, sessionization
+- ``windows``    — top-k per group, sessionization, tumbling windows
 """

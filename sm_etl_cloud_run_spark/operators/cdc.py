@@ -44,58 +44,3 @@ def apply_cdc(
         .drop("__rn")
     )
     return latest.where(~F.col(op_col).isin(*delete_ops))
-
-
-def cdc_diff(
-    old: DataFrame,
-    new: DataFrame,
-    keys: Sequence[str],
-    *,
-    op_col: str = "op",
-) -> DataFrame:
-    """Diff two snapshots into a minimal change log (the inverse of
-    `apply_cdc`): keys only in `new` → I, only in `old` → D, present in
-    both with any non-key column changed → U; unchanged keys emit
-    nothing. Null-safe comparison throughout (NULL == NULL is a match,
-    SQL MERGE-style).
-
-    Roundtrip contract (tested): applying the diff to `old` with
-    last-writer-wins semantics reproduces `new` exactly. Shape: one
-    full outer join on the keys — at warehouse scale both sides are
-    typically partition-pruned to the compared snapshot slices.
-
-    Delete rows carry the key with non-key columns NULLed (the
-    Debezium convention for tombstone payloads).
-    """
-    value_cols = [c for c in new.columns if c not in keys]
-    # explicit presence markers, NOT key-null probes: the join is
-    # null-safe, so a legitimately NULL key row exists on a side even
-    # though its key column is NULL there
-    o = old.withColumn("__in_old", F.lit(True)).alias("o")
-    n = new.withColumn("__in_new", F.lit(True)).alias("n")
-    key_cond = None
-    for k in keys:
-        term = F.col(f"o.{k}").eqNullSafe(F.col(f"n.{k}"))
-        key_cond = term if key_cond is None else (key_cond & term)
-    joined = o.join(n, key_cond, "full_outer")
-    in_old = F.col("o.__in_old").isNotNull()
-    in_new = F.col("n.__in_new").isNotNull()
-    changed = None
-    for c in value_cols:
-        term = ~F.col(f"o.{c}").eqNullSafe(F.col(f"n.{c}"))
-        changed = term if changed is None else (changed | term)
-    if changed is None:
-        changed = F.lit(False)
-    op = (
-        F.when(~in_old, F.lit("I"))
-        .when(~in_new, F.lit("D"))
-        .when(changed, F.lit("U"))
-    )
-    out_key_cols = [
-        F.coalesce(F.col(f"n.{k}"), F.col(f"o.{k}")).alias(k) for k in keys
-    ]
-    out_val_cols = [F.col(f"n.{c}").alias(c) for c in value_cols]
-    return (
-        joined.select(*out_key_cols, *out_val_cols, op.alias(op_col))
-        .where(F.col(op_col).isNotNull())
-    )

@@ -4,7 +4,7 @@ Not present in the reference (whose dedup is partition-grain
 delete-then-insert, SURVEY §2.2 K3/K4); mandated by the engine's
 100 TB pipeline scope. Four families:
 
-- **exact**       — hash-groupBy on content (or md5 fingerprint), or
+- **exact**       — md5-fingerprint groupBy on content, or
                     last-write-wins per key
 - **MinHash+LSH** — shingles → per-seed min-hash signature → banded
                     bucket join → candidate pairs; the scalable
@@ -29,21 +29,15 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import (
     doc_fingerprint,
     tokens,
-    word_shingles,
     word_shingles_from_tokens,
 )
-
-
-def exact_dedup(df: DataFrame, subset: Sequence[str]) -> DataFrame:
-    """Exact dedup on `subset` (hash aggregate; map-side partial combine)."""
-    return df.dropDuplicates(list(subset))
 
 
 def dedupe_last_write(source: DataFrame, keys: Sequence[str], order_col: str) -> DataFrame:
@@ -547,100 +541,4 @@ def winnowing_fingerprints(
     )
     return hashed.select(
         F.col(id_col), F.explode(F.array_distinct(wmins)).alias("fingerprint")
-    )
-
-
-def plan_lsh_bands(
-    threshold: float,
-    num_hashes: int,
-    *,
-    resolution: int = 1000,
-) -> tuple[int, int]:
-    """Choose (bands, rows_per_band) for a target Jaccard threshold.
-
-    Standard MinHash-LSH planning (Mining of Massive Datasets §3.4):
-    the probability a pair of similarity s collides in ≥1 band is
-    p(s) = 1 − (1 − s^r)^b with b·r = num_hashes. Pick the divisor
-    pair minimizing total error ∫₀^t p(s) ds + ∫ₜ¹ (1 − p(s)) ds —
-    false positives below the threshold plus false negatives above —
-    by trapezoidal sum at `resolution` points (the same objective
-    Spark MLlib's MinHashLSH docs describe; computed exactly enough
-    that the argmin is stable).
-
-    Returns (bands, rows_per_band) with bands·rows == num_hashes.
-    """
-    if not (0.0 < threshold < 1.0):
-        raise ValueError(f"threshold must be in (0,1), got {threshold}")
-    if num_hashes < 1:
-        raise ValueError("num_hashes must be >= 1")
-    best: tuple[float, int, int] | None = None
-    for b in range(1, num_hashes + 1):
-        if num_hashes % b:
-            continue
-        r = num_hashes // b
-        fp = fn = 0.0
-        step = 1.0 / resolution
-        for i in range(resolution):
-            s = (i + 0.5) * step
-            p = 1.0 - (1.0 - s**r) ** b
-            if s < threshold:
-                fp += p * step
-            else:
-                fn += (1.0 - p) * step
-        err = fp + fn
-        if best is None or err < best[0]:
-            best = (err, b, r)
-    assert best is not None
-    return best[1], best[2]
-
-
-def remove_boilerplate_lines(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_df: int = 3,
-    min_line_chars: int = 10,
-    out_col: str = "clean_text",
-) -> DataFrame:
-    """Corpus-level boilerplate removal (the jusText/CCNet line-dedup
-    idea): a LINE that repeats verbatim across ≥ `min_df` documents is
-    chrome (nav bars, cookie banners, footers), not content — delete
-    every occurrence and reassemble the document.
-
-    Shape: explode lines with position → md5-line hash aggregate for
-    document frequency (vocabulary-of-lines sized, heavy hitters only
-    after the df filter → broadcastable) → anti-join occurrences
-    against the boilerplate set → order-explicit reassembly via
-    sort_array(collect_list(struct(pos, line))). Short lines are
-    exempt (min_line_chars) so common short utterances survive.
-    One doc-keyed shuffle for reassembly. A document whose every line
-    is boilerplate still surfaces — as an empty clean_text, not a
-    dropped row (left join from the distinct doc ids).
-    """
-    lines = docs.select(
-        id_col,
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
-    )
-    boiler = (
-        lines.where(F.length("line") >= min_line_chars)
-        .groupBy("line")
-        .agg(F.count_distinct(id_col).alias("df"))
-        .where(F.col("df") >= min_df)
-        .select("line")
-    )
-    kept = lines.join(F.broadcast(boiler), "line", "left_anti")
-    reassembled = kept.groupBy(id_col).agg(
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s["line"],
-            ),
-        ).alias(out_col)
-    )
-    return (
-        docs.select(id_col).distinct()
-        .join(reassembled, id_col, "left")
-        .select(id_col, F.coalesce(F.col(out_col), F.lit("")).alias(out_col))
     )

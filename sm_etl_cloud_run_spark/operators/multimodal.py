@@ -2,7 +2,7 @@
 
 Scale-layer operators (not in the reference): media travel as
 `binary` payload + typed metadata struct; decode / feature-extract /
-resize / frame-sample run as Arrow-batched pandas transforms over
+resize run as Arrow-batched pandas transforms over
 `mapInPandas` — the payload never leaves the executors, and each batch
 is a bounded Arrow chunk, so 100 TB of media streams through without
 driver involvement.
@@ -13,48 +13,18 @@ the public file layouts with struct+numpy. `decode_fn=None` /
 `resize_fn=None` default to those codecs; compressed formats
 (JPEG/PNG/MP3/video) raise `UnsupportedMediaError` because the
 libraries they need (PIL/librosa/ffmpeg) are absent from this
-container. `deterministic_fake_decoder` remains for plumbing tests
-that don't care about pixel math.
+container.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 FEATURE_SCHEMA = "media_id long, kind string, feature array<float>, n_bytes long"
-
-
-def deterministic_fake_decoder(payload: bytes, dim: int = 8) -> list[float]:
-    """Content-derived fake feature vector (sha256-seeded), so tests are
-    deterministic without codec libraries."""
-    h = hashlib.sha256(payload or b"").digest()
-    return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
 
 
 def extract_features(
@@ -67,8 +37,7 @@ def extract_features(
 
     `decode_fn=None` uses the real dependency-free codecs
     (`functions.codecs.media_feature_decoder`: BMP + WAV; other formats
-    raise `UnsupportedMediaError`). Pass `deterministic_fake_decoder`
-    for codec-agnostic plumbing tests.
+    raise `UnsupportedMediaError`).
     """
 
     if decode_fn is None:
@@ -93,21 +62,6 @@ def extract_features(
                 )
 
     return media.mapInPandas(kernel, FEATURE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, *, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plan for video rows: explode timestamps derived from
-    metadata duration — the decode of each frame is the stubbed kernel.
-
-    Pure plan logic (sequence + explode), fully testable without codecs.
-    """
-    frames = media.where(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("meta.duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )
-    return frames
 
 
 RESIZED_SCHEMA = (
@@ -160,11 +114,3 @@ def resize_images(
                 )
 
     return media.where(F.col("kind") == "image").mapInPandas(kernel, RESIZED_SCHEMA)
-
-
-def deterministic_fake_resizer(payload: bytes, w: int, h: int) -> bytes:
-    """Content-derived fake resized payload (w*h bytes from a sha256
-    stream) so the plumbing is testable without PIL."""
-    seed = hashlib.sha256((payload or b"") + f"{w}x{h}".encode()).digest()
-    reps = (w * h) // len(seed) + 1
-    return (seed * reps)[: w * h]

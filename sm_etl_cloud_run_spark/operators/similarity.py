@@ -681,59 +681,6 @@ def embedding_cosine_dup_pairs(
     return pairs.where(F.col("cosine") >= threshold)
 
 
-def kmeans_train(
-    embeddings: DataFrame,
-    init_centroids: list[list[float]],
-    *,
-    vec_col: str = "embedding",
-    max_iters: int = 10,
-    tol: float = 1e-6,
-) -> tuple[list[list[float]], int]:
-    """Lloyd's k-means to CONVERGENCE (the open-loop twin of the
-    unrolled `kmeans_embedding_clusters` query): assign → scaled-
-    integer centroid recompute → repeat until the max centroid shift
-    drops below `tol` or `max_iters` is hit. Returns (centroids,
-    iterations_run).
-
-    The per-round driver sync is parameter-sized (k·d scaled-long
-    sums — Lloyd's barrier, same class as the components query's
-    convergence counter); each round is one codegen assignment pass +
-    one map-side-combined aggregate over the corpus, so the cost is
-    iterations × (scan + agg) with NO growing lineage: centroids
-    re-enter as literals, so every round's plan is flat and
-    checkpoint-free. Empty clusters keep their previous centroid (the
-    standard restart-free choice, deterministic).
-    """
-    centroids = [list(map(float, c)) for c in init_centroids]
-    dim = len(centroids[0])
-    iters = 0
-    for _ in range(max_iters):
-        iters += 1
-        assigned = ivf_assign(embeddings, centroids, vec_col=vec_col, cluster_col="__c")
-        rows = (
-            assigned.select("__c", F.posexplode(vec_col).alias("i", "x"))
-            .groupBy("__c", "i")
-            .agg(
-                F.sum(F.round(F.col("x").cast("double") * F.lit(_SCALE), 0).cast("long")).alias("s"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        sums: dict[int, list[float]] = {}
-        for r in rows:
-            sums.setdefault(r["__c"], [0.0] * dim)[r["i"]] = r["s"] / _SCALE / r["n"]
-        shift = 0.0
-        nxt = []
-        for ci, old in enumerate(centroids):
-            new = sums.get(ci, old)
-            shift = max(shift, max(abs(a - b) for a, b in zip(new, old)))
-            nxt.append(new)
-        centroids = nxt
-        if shift < tol:
-            break
-    return centroids, iters
-
-
 def semantic_dedup(
     embeddings: DataFrame,
     centroids: list[list[float]],

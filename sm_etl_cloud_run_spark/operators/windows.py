@@ -1,4 +1,5 @@
-"""Window-function operators: top-k per group, sessionization.
+"""Window-function operators: top-k per group, sessionization,
+tumbling-window rollups.
 
 Common OLAP patterns the engine exposes as combinators; both are single
 shuffles on the partition key.
@@ -380,8 +381,7 @@ def sessionize(
     """Assign session ids: a new session starts when the gap from the
     previous event (per user) exceeds `gap_minutes`.
 
-    lag + conditional cumsum — one shuffle on the user key. The
-    streaming analog is `session_window` (see streaming/stream_ops.py).
+    lag + conditional cumsum — one shuffle on the user key.
 
     The bare ``Window.partitionBy(user_col)`` is the PLAIN per-group
     form on purpose (see the module-docstring policy): user cardinality
@@ -403,6 +403,23 @@ def sessionize(
     return df.withColumn("__new", is_new).withColumn(
         session_col, F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("__new")
+
+
+def windowed_counts(
+    events: DataFrame,
+    *,
+    ts_col: str = "ts",
+    key_col: str = "event_type",
+    window: str = "1 hour",
+) -> DataFrame:
+    """Tumbling-window count and sum of `value` per key: one hash
+    aggregate on (window, key). Backs the `events_hourly_rollup`
+    oracle query."""
+    return (
+        events.groupBy(F.window(ts_col, window).alias("w"), F.col(key_col))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
+        .select(F.col("w.start").alias("window_start"), key_col, "n", "total_value")
+    )
 
 
 def distributed_cumsum(

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..sinks.jdbc import commit_staged_load, stage_jdbc_load, write_jdbc_append
 from ..sinks.partitioned import write_bronze_csv
-from ..sinks.watermark import read_control, touch_watermark, write_control
+from ..sinks.watermark import LEDGER_SCHEMA, read_control, touch_watermark, write_control
 from ..sources.csv_allstring import read_csv_allstring
 from ..sources.datasus_ftp import DatasusFtpClient, read_datasus_ftp
 from ..sources.ftp_list import parse_list_lines
@@ -81,11 +81,6 @@ def _cfg(key: str) -> Any:
 # in a bronze path and a JDBC predicate
 _PA_NAME = re.compile(r"PA([A-Z]{2})(\d{2})(\d{2})[a-z]?\.(?i:dbc)", re.ASCII)
 
-# every ledger row carries every column, in this order
-_COLUMNS = (
-    "tipo", "arquivo", "sigla_uf", "periodo", "tamanho",
-    "timestamp_modificacao_ftp", "timestamp_etl_gcs", "timestamp_load_bd",
-)
 # F6: a file is kept while its period is at most this many months older
 # than the newest listed period of its tipo
 RETENTION_MONTHS = 13
@@ -128,7 +123,7 @@ def refresh_control(spark: SparkSession) -> list[dict]:
     path = _cfg("control_path")
     old = read_control(path) if os.path.exists(path) else []
     # a ledger written before `tamanho` existed reads back without it
-    ledger = {(r["tipo"], r["arquivo"]): {c: r.get(c) for c in _COLUMNS} for r in old}
+    ledger = {(r["tipo"], r["arquivo"]): {c: r.get(c) for c in LEDGER_SCHEMA.names} for r in old}
     newest: dict[str, int] = {}
     for entry in listed:
         m = _PA_NAME.fullmatch(entry["nome"])

@@ -1,8 +1,5 @@
 """Event-stream queries: windowed rollups, sessionization, JSON props,
 top-k per group, and the incremental watermark gate (F4).
-
-The rollup shares its expression with the Structured Streaming twin
-(streaming/stream_ops.windowed_counts) — same logic, batch or stream.
 """
 
 from __future__ import annotations
@@ -11,8 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.filters import watermark_gate
-from ..operators.windows import sessionize, topk_per_group
-from ..streaming.stream_ops import windowed_counts
+from ..operators.windows import sessionize, topk_per_group, windowed_counts
 from ..tables import load_tables
 from .registry import register
 
@@ -26,7 +22,7 @@ GROUP BY 1, 2
 
 
 @register("events_hourly_rollup", oracle=_HOURLY_ORACLE, bench=True,
-          description="tumbling-window rollup (batch twin of the streaming op)")
+          description="tumbling-window rollup")
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     ev = t["events"].select(
@@ -1336,8 +1332,8 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# heavy hitters: exact top-k users by event volume (+ CMS twin in
-# operators/aggregates.cms_heavy_hitters, error-bounded in pytest)
+# heavy hitters: exact top-k users by event volume (the Count-Min
+# estimate is `events_cms_heavy_hitters`)
 # ---------------------------------------------------------------------------
 
 _HH_TOPK = 20
@@ -1366,11 +1362,7 @@ def events_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One map-side-combined hash aggregate to |users| rows, a 1-row total
     broadcast (whitelisted scalar), TakeOrdered(k). At 100 TB the
-    aggregate is the only corpus-sized work; the sketch twin
-    (`operators/aggregates.cms_heavy_hitters`, Count-Min over the raw
-    stream, pytest-bounded vs this exact form) answers the same
-    question in one pass with O(eps^-1 log delta^-1) state when even
-    the per-user aggregate is too hot to materialize.
+    aggregate is the only corpus-sized work.
     """
     t = load_tables(spark, sf_dir)
     u = t["events"].groupBy("user_id").agg(
@@ -3242,8 +3234,8 @@ def events_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     the incremental total and the full-batch recompute, and `match`
     asserts they are equal — the associativity property that lets a
     100 TB sessionization run day-by-day against a state table instead
-    of re-scanning history (the same contract
-    streaming/incremental.py's watermark pipelines rely on).
+    of re-scanning history (the same contract the watermark-gated
+    incremental runs of streaming/incremental.py rely on).
 
     Epochs are truncated to whole seconds on BOTH engines (Spark's
     long cast; floor(epoch()) in the oracle — a bare DuckDB cast
@@ -3328,7 +3320,7 @@ def events_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
 # timestamp is. This is exactly the quantity a Structured Streaming
 # watermark bounds: `withWatermark(ts, D)` drops/finalizes events whose
 # lateness exceeds D, so the histogram below IS the design table for
-# choosing D (streaming/stream_ops.py windowed aggs + velocity alerts):
+# choosing D for a windowed aggregation or a velocity alert:
 # the '<=1m' share is state the 1-minute watermark keeps, the '>1h'
 # share is data a 1-hour watermark would still lose.
 _LATE_BUCKETS_US = (
@@ -3387,9 +3379,9 @@ def events_late_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-time), clamped at 0 — `event_id` is the ingest sequence, and
     the EXCLUSIVE prefix-max means an event is never late against
     itself. Bucketed into the candidate watermark delays, this is the
-    table that picks `withWatermark`'s D for every streaming op in
-    streaming/stream_ops.py: each bucket's share is the fraction of
-    events a watermark of that delay would have handled in-state.
+    table that picks `withWatermark`'s D for a streaming operator: each
+    bucket's share is the fraction of events a watermark of that delay
+    would have handled in-state.
 
     Scale shape: the global running max rides
     :func:`~..operators.windows.distributed_running_max` (range
@@ -3564,22 +3556,12 @@ def events_stream_state_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 def state_census(
     ev: DataFrame,
     delays_us: tuple[tuple[str, int], ...] = _CENSUS_DELAYS_US,
-    *,
-    close_pad_us: int = 0,
 ) -> DataFrame:
     """Core of `events_stream_state_census` over a (user_id, tsu)
     relation — split out so tests can feed hostile fixtures (nested /
     back-to-back intervals, simultaneous endpoints across users) with
-    hand-computable peaks.
-
-    ``close_pad_us`` separates the MERGE gap from the EVICTION horizon:
-    intervals merge events ``d`` apart but close at ``last + d + pad``.
-    The default 0 is the registered query's model (a per-user aggregate
-    with watermark delay d). A gap-G sessionizer run with watermark
-    delay W holds state until the event-time high-water mark passes
-    ``last + G + W`` while merging by G — i.e. rungs ``(label, G)`` with
-    ``close_pad_us=W`` price it exactly (the streaming integration test
-    pins evicted counts against this)."""
+    hand-computable peaks. Intervals merge events ``d`` apart and close
+    at ``last + d``: a per-user aggregate with watermark delay d."""
     from ..operators.windows import distributed_groupwise_peak
 
     delays = F.array(*[
@@ -3605,7 +3587,7 @@ def state_census(
         sess.groupBy("delay", "user_id", "sid")
         .agg(
             F.min("tsu").alias("t_open"),
-            (F.max("tsu") + F.max("d") + F.lit(close_pad_us)).alias("t_close"),
+            (F.max("tsu") + F.max("d")).alias("t_close"),
         )
     )
     from ..cache import persist_tracked
@@ -3708,11 +3690,8 @@ def watermark_tradeoff_table(
     delays_us: tuple[tuple[str, int], ...] = _CENSUS_DELAYS_US,
 ) -> DataFrame:
     """Core of `events_watermark_tradeoff` over an (event_id, user_id,
-    tsu) relation — split out so the STREAMING paths can compute the
-    decision table on any batch history slice and act on it
-    (`streaming.stream_ops.plan_watermark_delay`, VERDICT r9 item 5),
-    and so tests can feed hostile fixtures with hand-computable
-    drop/peak numbers."""
+    tsu) relation, so the decision table can be computed on any batch
+    history slice."""
     from ..operators.windows import distributed_running_max
 
     pm = distributed_running_max(
@@ -3980,9 +3959,9 @@ def dedup_state_census(
     delays_us: tuple[tuple[str, int], ...] = _CENSUS_DELAYS_US,
 ) -> DataFrame:
     """Core of `events_dedup_state_census` over a (k, tsu) relation —
-    split out (the :func:`state_census` pattern) so the streaming
-    integration test can price an arbitrary fixture and pin the REAL
-    `streaming_dedup` run's emitted/evicted counts against it."""
+    split out (the :func:`state_census` pattern) so a test can price an
+    arbitrary fixture and pin a real `dropDuplicatesWithinWatermark`
+    stream's emitted/evicted counts against it."""
     from ..cache import persist_tracked
     from ..operators.windows import distributed_groupwise_peak
 

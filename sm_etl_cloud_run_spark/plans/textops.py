@@ -1498,9 +1498,7 @@ FROM scored
 def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured accuracy of the MinHash estimator on the pairs the LSH
     pipeline actually surfaces — the number that decides whether 8
-    hashes suffice or the banding plan needs more rows (pair with
-    operators/dedup.plan_lsh_bands, which predicts this tradeoff from
-    the S-curve; this query measures it).
+    hashes suffice or the banding plan needs more rows.
 
     Candidates and signatures reuse the production operators. The
     exact side is the verify pass of a two-stage dedup at scale:
@@ -3316,18 +3314,17 @@ def dedup_lsh_banding_tuner(spark: SparkSession, sf_dir: str) -> DataFrame:
           description="near-dup candidate pairs at the banding the tuner "
                       "chose: the decision table acted on, not just printed")
 def dedup_lsh_pairs_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Acts on the tuner's verdict — the batch twin of what
-    `plan_watermark_delay` does for the streaming operators: run
-    :func:`_banding_tuner_core`, read the `chosen` row (ladder-sized,
-    collected driver-side like every planner in this repo), and
-    enumerate LSH candidate pairs over the clone-collapsed reps at
-    THAT banding via the production `lsh_candidate_pairs` path. Every
+    """Acts on the tuner's verdict: run :func:`_banding_tuner_core`,
+    read the `chosen` row (ladder-sized, collected driver-side like
+    every planner in this repo), and enumerate LSH candidate pairs
+    over the clone-collapsed reps at THAT banding via the production
+    `lsh_candidate_pairs` path. Every
     row carries the winning banding label so downstream exact-verify
     stages know which operating point produced their candidates.
 
     Refusal semantics: when NO banding clears the measured-recall
     floor the result is EMPTY (the planner refuses to pick a least-bad
-    rung — the plan_watermark_delay contract), and the oracle's
+    rung), and the oracle's
     chosen-row join yields the same empty relation.
 
     Shape at 100 TB: the tuner's fixed-budget sample plus ONE banded
@@ -3397,8 +3394,8 @@ def dedup_lsh_groups_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     chose, labelling every row with the winning banding.
 
     Refusal semantics: identical to `dedup_lsh_pairs_tuned` — when NO
-    banding clears the measured-recall floor the result is EMPTY (the
-    plan_watermark_delay contract), mirrored by the oracle's
+    banding clears the measured-recall floor the result is EMPTY,
+    mirrored by the oracle's
     chosen-row join.
 
     Shape at 100 TB: the tuner's fixed-budget sample (64 docs forever)
@@ -3725,8 +3722,7 @@ def curation_pipeline_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
                        measured recall; keep group reps; docs too short
                        to shingle carry no near-dup evidence and pass.
                        On tuner refusal the stage is a no-op on BOTH
-                       engines (the plan_watermark_delay contract:
-                       refuse, don't guess);
+                       engines (refuse, don't guess);
     6. decontaminate — drop the eval holdout (doc_id < 10) and any
                        survivor sharing >= _CONTAM_MIN_OVERLAP distinct
                        shingles with it (`text_contamination_check`).

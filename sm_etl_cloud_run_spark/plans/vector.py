@@ -2345,10 +2345,8 @@ def knn_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nprobe dial `knn_ivf_recall` measures one point of, swept:
     recall@k at probe budgets 1, 2 and 4 (= all centroids, so the top
     row must read 10000 bp — the curve's built-in sanity anchor,
-    pinned by test). This is the ANN counterpart of the LSH S-curve
-    planner (`plan_lsh_bands`): pick the cheapest nprobe whose recall
-    clears the product bar, knowing scan cost ≈ nprobe/k_coarse of the
-    index.
+    pinned by test): pick the cheapest nprobe whose recall clears the
+    product bar, knowing scan cost ≈ nprobe/k_coarse of the index.
 
     Shape: ONE brute-force ground-truth pass (persisted k-row frame —
     the expensive calibration side is paid once for the whole curve),

@@ -11,17 +11,7 @@ against Postgres; the engine keeps those semantics:
 The control table's keyed upsert with change detection (K5) and its
 13-month retention (K6) are plain Python over that ledger, in
 `pipelines/rehearsal.refresh_control`.
-
-Beyond the reference surface: `bucketed` writes hash-clustered catalog
-tables so repeated joins/aggregations on the cluster key run with no
-exchange (the 100 TB co-location primitive).
 """
 
-from .bucketed import (  # noqa: F401
-    enable_sorted_bucket_scan,
-    plan_has_exchange,
-    read_bucketed,
-    write_bucketed,
-)
 from .partitioned import write_partition_overwrite, write_bronze_csv  # noqa: F401
 from .watermark import touch_watermark  # noqa: F401

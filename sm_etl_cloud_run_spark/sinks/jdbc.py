@@ -12,15 +12,15 @@ the fresh rows, touch the watermark, all-or-nothing
 (bd_utilitarios.py:160-251 savepoint + rollback;
 load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:205-215) — cannot
 span executor-parallel JDBC writes (each partition is its own
-connection). `staged_transactional_load` re-expresses it Spark-first:
-the cluster appends in parallel to a STAGING table (unbounded
-parallelism, no transactional requirement), then ONE driver-side
-transaction does delete-scope → INSERT..SELECT from staging → watermark
-update → commit, and the staging table is dropped afterwards. The heavy
-bytes move in parallel; only the cheap set-shuffling is serialized, and
-it is atomic. The two phases are also public (`stage_jdbc_load`,
-`commit_staged_load`) so a batch of files can stage concurrently into
-disjoint staging tables and commit one at a time.
+connection). The staged load re-expresses it Spark-first, in two
+phases: `stage_jdbc_load` appends in parallel to a STAGING table
+(unbounded parallelism, no transactional requirement), then
+`commit_staged_load` runs ONE driver-side transaction: delete-scope →
+INSERT..SELECT from staging → watermark update → commit, and the
+staging table is dropped afterwards. The heavy bytes move in parallel;
+only the cheap set-shuffling is serialized, and it is atomic. A batch
+of files stages concurrently into disjoint staging tables and commits
+one at a time (`pipelines/rehearsal.ep2_inserir_pa_lote`).
 
 Verified live against the embedded Derby database whose driver ships in
 Spark's own classpath (tests/test_jdbc_live.py), including the
@@ -93,56 +93,6 @@ def _qcols(columns: list[str]) -> str:
     return ", ".join('"' + c.replace('"', '""') + '"' for c in columns)
 
 
-def staged_transactional_load(
-    spark: SparkSession,
-    df: DataFrame,
-    url: str,
-    target: str,
-    *,
-    delete_where: str | None = None,
-    watermark_sql: str | None = None,
-    user: str | None = None,
-    password: str | None = None,
-    staging: str | None = None,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    num_partitions: int | None = None,
-    column_types: str | None = None,
-) -> None:
-    """K2+K3/K4+K7 for a JDBC warehouse: idempotent reload, atomically.
-
-    1. Create the target if missing (an empty append), then an
-       executor-parallel overwrite of a staging table (cluster-speed
-       transfer; crashes here leave the target's rows untouched).
-    2. One driver transaction: `DELETE FROM target WHERE delete_where`,
-       `INSERT INTO target (cols) SELECT cols FROM staging`, then the
-       optional `watermark_sql` — commit, or roll everything back; the
-       staging table is dropped after the commit.
-
-    Mirrors the reference's delete+COPY+watermark single-commit
-    (bd_utilitarios.py:160-251) with the bulk transfer parallelized.
-    Identifier note: Spark's JDBC writer creates case-sensitive quoted
-    columns, so `delete_where`/`watermark_sql` must quote column names
-    (e.g. ``\"periodo\" = '2024.08'``).
-    """
-    staging = staging or f"{target}_stg"
-    # target must exist before INSERT..SELECT; an empty append creates
-    # it with the same dialect-generated DDL as the staging table.
-    write_jdbc_append(
-        df.limit(0), url, target, user=user, password=password,
-        column_types=column_types,
-    )
-    stage_jdbc_load(
-        spark, df, url, staging,
-        user=user, password=password, column_types=column_types,
-        batch_size=batch_size, num_partitions=num_partitions,
-    )
-    commit_staged_load(
-        spark, url, target, staging, df.columns,
-        delete_where=delete_where, watermark_sql=watermark_sql,
-        user=user, password=password,
-    )
-
-
 def stage_jdbc_load(
     spark: SparkSession,
     df: DataFrame,
@@ -155,7 +105,7 @@ def stage_jdbc_load(
     num_partitions: int | None = None,
     column_types: str | None = None,
 ) -> None:
-    """Phase 1 of `staged_transactional_load`: the executor-parallel
+    """Phase 1 of the staged load: the executor-parallel
     overwrite of `staging`. Safe to run CONCURRENTLY for different
     `staging` tables — staging writes touch disjoint tables and crashes
     leave the target untouched — which is what
@@ -182,7 +132,7 @@ def commit_staged_load(
     user: str | None = None,
     password: str | None = None,
 ) -> None:
-    """Phase 2 of `staged_transactional_load`: ONE driver transaction —
+    """Phase 2 of the staged load: ONE driver transaction —
     delete the reload scope, INSERT..SELECT from staging, optional
     watermark update, commit or roll everything back.
 

@@ -31,6 +31,18 @@ import pyarrow.parquet as pq
 
 _TS = pa.timestamp("us", tz="UTC")
 
+# every ledger row carries every column, in this order
+LEDGER_SCHEMA = pa.schema([
+    ("tipo", pa.string()),
+    ("arquivo", pa.string()),
+    ("sigla_uf", pa.string()),
+    ("periodo", pa.string()),
+    ("tamanho", pa.int64()),
+    ("timestamp_modificacao_ftp", _TS),
+    ("timestamp_etl_gcs", _TS),
+    ("timestamp_load_bd", _TS),
+])
+
 
 def read_control(path: str) -> list[dict]:
     """All ledger rows, as dicts; timestamps are UTC-aware datetimes."""
@@ -42,23 +54,19 @@ def write_control(path: str, rows: list[dict]) -> None:
     same keys: the columns come from the first row, so a key the others
     lack or add would be dropped or filled with NULL without a word.
 
-    Column types come from the values. `tamanho` (a file size) is
-    int64 even with no value yet, as in a ledger migrated from the
-    format without it; any other column with no value yet is a stage
-    watermark no run has set, so it is typed as a timestamp like every
-    other datetime column."""
+    Each `LEDGER_SCHEMA` column takes its type from there, even with no
+    value yet: a stage watermark no run has set, or `tamanho` in a
+    ledger migrated from the format without it. Naive datetimes are
+    taken as UTC, like the Spark session. No rows write an empty ledger
+    with every `LEDGER_SCHEMA` column, so the first EP3 over an empty
+    listing leaves a ledger that watermark touches can read."""
     if any(r.keys() != rows[0].keys() for r in rows):
         raise ValueError("ledger rows must all have the same columns")
-    table = pa.Table.from_pylist(rows)
-    for i, field in enumerate(table.schema):
-        if field.name == "tamanho":
-            to = pa.int64()
-        elif pa.types.is_null(field.type) or pa.types.is_timestamp(field.type):
-            # naive datetimes are taken as UTC, like the Spark session
-            to = _TS
-        else:
-            continue
-        table = table.set_column(i, field.name, table.column(i).cast(to))
+    table = pa.Table.from_pylist(rows) if rows else LEDGER_SCHEMA.empty_table()
+    for i, name in enumerate(table.column_names):
+        if name in LEDGER_SCHEMA.names:
+            to = LEDGER_SCHEMA.field(name).type
+            table = table.set_column(i, name, table.column(i).cast(to))
     _replace(path, table)
 
 
@@ -97,7 +105,7 @@ def touch_watermark(
     if not os.path.exists(control_path):
         raise FileNotFoundError(control_path)
     table = pq.read_table(control_path)
-    mask = pa.array([True] * table.num_rows)
+    mask = pa.array([True] * table.num_rows, pa.bool_())
     for k, values in match.items():
         if isinstance(values, str):
             raise TypeError(f"match[{k!r}] must be a collection of values, got {values!r}")

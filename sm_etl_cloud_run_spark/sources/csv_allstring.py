@@ -35,26 +35,3 @@ def read_csv_allstring(
         columns = head.columns
     schema = T.StructType([T.StructField(c, T.StringType(), True) for c in columns])
     return reader.schema(schema).csv(path)
-
-
-def cast_columns(df: DataFrame, type_map: dict[str, str]) -> DataFrame:
-    """C20: the load-stage str→typed coercion pipeline.
-
-    `type_map` maps column → Spark type DDL ("long", "double", "boolean",
-    "date", "timestamp"). Booleans follow the reference's `'True'`-string
-    decode (load_bd/*:128-131); invalid numerics/dates → NULL (pandas
-    `coerce` semantics, session runs ANSI-off).
-    """
-    from pyspark.sql import functions as F
-
-    exprs = {}
-    for col, typ in type_map.items():
-        c = F.col(col)
-        if typ == "boolean":
-            exprs[col] = F.when(c.isNull(), None).otherwise(c == "True")
-        elif typ in ("long", "bigint", "int"):
-            # two-phase via double to survive "1.0"-style strings (pandas issue 25472 parity)
-            exprs[col] = c.cast("double").cast("long")
-        else:
-            exprs[col] = c.cast(typ)
-    return df.withColumns(exprs)

@@ -43,36 +43,3 @@ def gate_pending_runs(rows: list[dict], stage: str, **match: object) -> list[dic
         if _stale(r, stage) and all(r[k] == v for k, v in match.items())
     ]
 
-
-def plan_backfill(
-    rows: list[dict],
-    stage: str,
-    *,
-    period_col: str = "periodo",
-    start: str | None = None,
-    end: str | None = None,
-    force: bool = False,
-    max_partitions: int | None = None,
-) -> list[dict]:
-    """Plan an idempotent backfill: the ledger rows to re-run for
-    `stage` within an optional [start, end] period range.
-
-    `force=False` (default) re-runs only genuinely stale rows (the
-    normal watermark gate scoped to the range — "heal this window");
-    `force=True` re-runs EVERY row in the range regardless of
-    watermarks — the "upstream logic changed, rebuild the window" case.
-    Because all sinks are idempotent (partition overwrite / keyed
-    merge), replans and overlapping backfills are safe to dispatch
-    repeatedly; `max_partitions` caps one wave (ordered oldest-first so
-    repeated waves drain the backlog deterministically). A row with a
-    NULL period falls outside any range and sorts first, as in SQL.
-    """
-    def in_range(r: dict) -> bool:
-        p = r[period_col]
-        if start is not None and (p is None or p < start):
-            return False
-        return end is None or (p is not None and p <= end)
-
-    scoped = [r for r in rows if in_range(r) and (force or _stale(r, stage))]
-    planned = sorted(scoped, key=lambda r: (r[period_col] is not None, r[period_col]))
-    return planned if max_partitions is None else planned[:max_partitions]

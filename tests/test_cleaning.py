@@ -74,69 +74,3 @@ def test_fill_zero_long(spark):
     df = spark.createDataFrame([(1,), (None,)], "x long")
     out = [r["y"] for r in df.select(cleaning.fill_zero_long(F.col("x")).alias("y")).collect()]
     assert out == [1, 0]
-
-
-def test_plan_lsh_bands_tracks_threshold():
-    """MMDS §3.4: (1/b)^(1/r) ≈ the S-curve midpoint — low thresholds
-    want many bands (high recall), high thresholds want long bands
-    (high precision); the planner must recover that monotonicity."""
-    import pytest
-
-    from sm_etl_cloud_run_spark.operators.dedup import plan_lsh_bands
-
-    b_low, r_low = plan_lsh_bands(0.2, 64)
-    b_mid, r_mid = plan_lsh_bands(0.5, 64)
-    b_high, r_high = plan_lsh_bands(0.9, 64)
-    assert b_low * r_low == b_mid * r_mid == b_high * r_high == 64
-    assert b_low >= b_mid >= b_high and r_low <= r_mid <= r_high
-    # the chosen midpoint brackets the target threshold reasonably
-    for t, (b, r) in ((0.2, (b_low, r_low)), (0.5, (b_mid, r_mid)), (0.9, (b_high, r_high))):
-        mid = (1.0 / b) ** (1.0 / r)
-        assert abs(mid - t) < 0.25
-    with pytest.raises(ValueError):
-        plan_lsh_bands(1.5, 64)
-
-
-def test_strip_html_tags_entities_whitespace(spark):
-    from sm_etl_cloud_run_spark.functions.text import strip_html
-
-    rows = [
-        ("<html><head><style>p{color:red}</style></head>"
-         "<body><p>Hello &amp; welcome</p><script>alert('x')</script>"
-         "<div>a &lt;b&gt;   c</div></body></html>",),
-        ("no markup at all",),
-        ("<br/><br/>&nbsp;",),
-        # double-escaped entities decode ONE level: &amp;lt; is the
-        # TEXT '&lt;', not a '<' (requires &amp; to decode last)
-        ("&amp;lt;tag&amp;gt; and &amp;amp;",),
-    ]
-    df = spark.createDataFrame(rows, "raw string")
-    got = [r["t"] for r in df.select(strip_html(F.col("raw")).alias("t")).collect()]
-    assert got == ["Hello & welcome a <b> c", "no markup at all", "",
-                   "&lt;tag&gt; and &amp;"]
-
-
-def test_remove_boilerplate_lines_corpus_level(spark):
-    from sm_etl_cloud_run_spark.operators.dedup import remove_boilerplate_lines
-
-    footer = "Copyright 2024 Example Corp All Rights Reserved"
-    nav = "Home | Products | About Us | Contact"
-    docs = spark.createDataFrame(
-        [
-            (1, f"{nav}\nunique article one\nok\n{footer}"),
-            (2, f"{nav}\nanother unique text\n{footer}"),
-            (3, f"{nav}\nthird body line here\n{footer}"),
-            (4, "standalone document with no chrome"),
-            (5, f"{nav}\n{footer}"),  # every line is chrome
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r["clean_text"]
-           for r in remove_boilerplate_lines(docs, min_df=3).collect()}
-    assert out[1] == "unique article one\nok"       # 'ok' too short to be chrome
-    assert out[2] == "another unique text"
-    assert out[3] == "third body line here"
-    assert out[4] == "standalone document with no chrome"
-    # a fully-boilerplate doc surfaces as EMPTY, it does not vanish
-    assert out[5] == ""
-    assert set(out) == {1, 2, 3, 4, 5}

@@ -1,9 +1,10 @@
-"""Unit tests for the dependency-free BMP/WAV codecs (functions/codecs.py)."""
+"""Unit tests for the dependency-free BMP/PNG/WAV codecs (functions/codecs.py)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from media_fixtures import encode_png, png_chunk
 
 from sm_etl_cloud_run_spark.functions.codecs import (
     UnsupportedMediaError,
@@ -79,7 +80,7 @@ def test_media_feature_decoder_dispatch():
 def test_png_roundtrip_rgb():
     import numpy as np
 
-    from sm_etl_cloud_run_spark.functions.codecs import decode_png, encode_png
+    from sm_etl_cloud_run_spark.functions.codecs import decode_png
 
     rng = np.random.default_rng(7)
     px = rng.integers(0, 256, (13, 17, 3), dtype=np.uint8)
@@ -96,9 +97,7 @@ def test_png_filter_reconstruction_all_types():
 
     import numpy as np
 
-    from sm_etl_cloud_run_spark.functions.codecs import (
-        _paeth, _png_chunk, _PNG_SIG, decode_png,
-    )
+    from sm_etl_cloud_run_spark.functions.codecs import _paeth, _PNG_SIG, decode_png
 
     rng = np.random.default_rng(11)
     h, w, ch = 5, 7, 3
@@ -126,9 +125,9 @@ def test_png_filter_reconstruction_all_types():
         raw += bytes([f]) + bytes(line.astype(np.uint8))
     ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
     payload = (
-        _PNG_SIG + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(raw))
-        + _png_chunk(b"IEND", b"")
+        _PNG_SIG + png_chunk(b"IHDR", ihdr)
+        + png_chunk(b"IDAT", zlib.compress(raw))
+        + png_chunk(b"IEND", b"")
     )
     got = decode_png(payload)
     assert (got == px).all()
@@ -140,17 +139,15 @@ def test_png_grayscale_and_rgba_variants():
 
     import numpy as np
 
-    from sm_etl_cloud_run_spark.functions.codecs import (
-        _png_chunk, _PNG_SIG, decode_png,
-    )
+    from sm_etl_cloud_run_spark.functions.codecs import _PNG_SIG, decode_png
 
     def build(color_type, channels, arr):
         h, w = arr.shape[:2]
         raw = b"".join(b"\x00" + arr[r].tobytes() for r in range(h))
         ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
         return (
-            _PNG_SIG + _png_chunk(b"IHDR", ihdr)
-            + _png_chunk(b"IDAT", zlib.compress(raw)) + _png_chunk(b"IEND", b"")
+            _PNG_SIG + png_chunk(b"IHDR", ihdr)
+            + png_chunk(b"IDAT", zlib.compress(raw)) + png_chunk(b"IEND", b"")
         )
 
     gray = np.arange(12, dtype=np.uint8).reshape(3, 4)
@@ -167,9 +164,7 @@ def test_png_feature_decoder_and_unsupported():
     import numpy as np
     import pytest
 
-    from sm_etl_cloud_run_spark.functions.codecs import (
-        UnsupportedMediaError, encode_png, media_feature_decoder,
-    )
+    from sm_etl_cloud_run_spark.functions.codecs import UnsupportedMediaError, media_feature_decoder
 
     px = np.zeros((4, 6, 3), np.uint8)
     px[..., 0] = 10; px[..., 1] = 20; px[..., 2] = 30
@@ -178,55 +173,6 @@ def test_png_feature_decoder_and_unsupported():
 
     with pytest.raises(UnsupportedMediaError, match="JPEG"):
         media_feature_decoder(b"\xff\xd8\xff\xe0 not decodable jpeg")
-
-
-def test_audio_spectral_features_pure_tone():
-    """A 1 kHz sine at 16 kHz: centroid ≈ 1 kHz, its band holds ~all the
-    energy, ZCR = 2·f/rate, rolloff at the tone."""
-    import numpy as np
-
-    from sm_etl_cloud_run_spark.functions.codecs import (
-        audio_spectral_features,
-        encode_wav_pcm16,
-    )
-
-    rate, f0, dur = 16000, 1000.0, 0.5
-    t = np.arange(int(rate * dur)) / rate
-    samples = (0.6 * 32767 * np.sin(2 * np.pi * f0 * t)).astype(np.int16)
-    payload = encode_wav_pcm16(samples, rate)
-    feats = audio_spectral_features(payload, n_bands=8)
-    rms, zcr, centroid, rolloff = feats[:4]
-    bands = feats[4:]
-    assert abs(rms - 0.6 * 32767 / np.sqrt(2)) / (0.6 * 32767) < 0.01
-    assert abs(zcr - 2 * f0 / rate) < 0.01
-    assert abs(centroid - f0) < 25.0
-    assert abs(rolloff - f0) < 40.0
-    # 1 kHz lives in band 1 of [0,8k) split into 8 × 1 kHz slices
-    assert bands[1] > 0.99 and abs(sum(bands) - 1.0) < 1e-9
-
-
-def test_audio_spectral_features_stereo_and_silence():
-    import numpy as np
-
-    from sm_etl_cloud_run_spark.functions.codecs import (
-        audio_spectral_features,
-        encode_wav_pcm16,
-    )
-
-    silent = encode_wav_pcm16(np.zeros(256, dtype=np.int16), 8000)
-    feats = audio_spectral_features(silent)
-    assert feats == [0.0, 0.0, 0.0, 0.0] + [0.0] * 8
-
-    # stereo: L=tone, R=-tone → mono mean cancels to silence
-    rate = 8000
-    t = np.arange(1024) / rate
-    tone = (10000 * np.sin(2 * np.pi * 500 * t)).astype(np.int16)
-    inter = np.empty(2048, dtype=np.int16)
-    inter[0::2] = tone
-    inter[1::2] = -tone
-    payload = encode_wav_pcm16(inter, rate, channels=2)
-    feats = audio_spectral_features(payload)
-    assert feats[0] <= 1.0  # rms ~0 (int16 rounding noise)
 
 
 def test_bmp_batch_twins_are_byte_identical():

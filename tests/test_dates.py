@@ -43,15 +43,6 @@ def test_make_date_from_year_month(spark):
     assert out == [dt.date(2024, 8, 1), None]
 
 
-def test_from_us_ftp_timestamp(spark):
-    df = spark.createDataFrame([("09-03-24", "03:45PM"), ("01-31-24", "12:00AM")], "d string, h string")
-    out = [
-        r["y"]
-        for r in df.select(dates.from_us_ftp_timestamp(F.col("d"), F.col("h")).alias("y")).collect()
-    ]
-    assert out == [dt.datetime(2024, 9, 3, 15, 45), dt.datetime(2024, 1, 31, 0, 0)]
-
-
 def test_from_month_abbrev_pt(spark):
     vals = ["AGO/2024", "JAN/2023", "XXX/2024"]
     out = _col(spark, vals, dates.from_month_abbrev_pt)

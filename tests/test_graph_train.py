@@ -4,9 +4,6 @@ pin the operator semantics on hand-computed inputs)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from sm_etl_cloud_run_spark.operators.graph import pagerank_undirected
 from sm_etl_cloud_run_spark.operators.similarity import pq_train_codebook
 
@@ -82,34 +79,6 @@ def test_pagerank_disconnected_components_independent(spark):
     pairs = spark.createDataFrame([(1, 2), (3, 4)], "id_a long, id_b long")
     prs = {r["pr_micro"] for r in pagerank_undirected(pairs, iterations=2).collect()}
     assert len(prs) == 1
-
-
-def test_kmeans_train_converges_on_blobs(spark):
-    """Convergent Lloyd's: three tight synthetic blobs → centroids land
-    on the blob means within a few iterations, and a converged run is a
-    fixpoint (re-running from the result changes nothing)."""
-    from sm_etl_cloud_run_spark.operators.similarity import kmeans_train
-
-    blobs = {0: [10.0, 0.0, 0.0], 1: [0.0, 10.0, 0.0], 2: [0.0, 0.0, 10.0]}
-    rows = []
-    for c, center in blobs.items():
-        for j in range(20):
-            eps = ((j % 5) - 2) * 0.01
-            rows.append(([center[0] + eps, center[1], center[2]],))
-    emb = spark.createDataFrame(rows, "embedding array<float>")
-    # deliberately bad init: all three near blob 0's direction but
-    # slightly tilted toward each true blob so assignment can split
-    init = [[1.0, 0.1, 0.0], [0.1, 1.0, 0.0], [0.0, 0.1, 1.0]]
-    centroids, iters = kmeans_train(emb, init, max_iters=10, tol=1e-9)
-    assert iters <= 10
-    for ci, center in blobs.items():
-        got = centroids[ci]
-        assert abs(got[ci % 3] - center[ci % 3]) < 0.1, (ci, got)
-    # fixpoint: restarting from the converged centroids stops in 1 iter
-    c2, it2 = kmeans_train(emb, centroids, max_iters=5, tol=1e-9)
-    assert it2 == 1 and all(
-        abs(a - b) < 1e-9 for ca, cb in zip(c2, centroids) for a, b in zip(ca, cb)
-    )
 
 
 def test_min_label_components_chain_and_singleton(spark):

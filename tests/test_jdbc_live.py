@@ -14,7 +14,8 @@ from __future__ import annotations
 import pytest
 
 from sm_etl_cloud_run_spark.sinks.jdbc import (
-    staged_transactional_load,
+    commit_staged_load,
+    stage_jdbc_load,
     write_jdbc_append,
 )
 from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
@@ -32,6 +33,17 @@ def _facts(spark, periodo: str, start: int, n: int):
     return spark.createDataFrame(
         [(start + i, periodo, (start + i) * 10) for i in range(n)],
         "id bigint, periodo string, qty bigint",
+    )
+
+
+def _staged_load(spark, df, url, target, *, delete_where,
+                 column_types, watermark_sql=None):
+    """One file's EP2 load: bootstrap the target, stage, commit."""
+    write_jdbc_append(df.limit(0), url, target, column_types=column_types)
+    stage_jdbc_load(spark, df, url, f"{target}_stg", column_types=column_types)
+    commit_staged_load(
+        spark, url, target, f"{target}_stg", df.columns,
+        delete_where=delete_where, watermark_sql=watermark_sql,
     )
 
 
@@ -55,13 +67,13 @@ def test_append_and_partitioned_read(spark, derby_url):
 def test_staged_load_is_idempotent(spark, derby_url):
     df = _facts(spark, "2024.08", 0, 25)
     for _ in range(2):  # re-run reloads the scope without duplicating
-        staged_transactional_load(
+        _staged_load(
             spark, df, derby_url, "facts", delete_where="\"periodo\" = '2024.08'",
             column_types=_TYPES,
         )
     assert len(_read_all(spark, derby_url)) == 25
     # a different period appends alongside, untouched by the first scope
-    staged_transactional_load(
+    _staged_load(
         spark, _facts(spark, "2024.09", 100, 5), derby_url, "facts",
         delete_where="\"periodo\" = '2024.09'", column_types=_TYPES,
     )
@@ -73,7 +85,7 @@ def test_staged_load_watermark_same_commit(spark, derby_url):
         spark.createDataFrame([("facts", "2024.07")], "tabela string, periodo string"),
         derby_url, "watermarks", column_types="tabela VARCHAR(32), periodo VARCHAR(16)",
     )
-    staged_transactional_load(
+    _staged_load(
         spark, _facts(spark, "2024.08", 0, 10), derby_url, "facts",
         delete_where="\"periodo\" = '2024.08'", column_types=_TYPES,
         watermark_sql="UPDATE watermarks SET \"periodo\" = '2024.08' WHERE \"tabela\" = 'facts'",
@@ -83,7 +95,7 @@ def test_staged_load_watermark_same_commit(spark, derby_url):
 
 
 def test_staged_load_rolls_back_atomically(spark, derby_url):
-    staged_transactional_load(
+    _staged_load(
         spark, _facts(spark, "2024.08", 0, 10), derby_url, "facts",
         delete_where="\"periodo\" = '2024.08'", column_types=_TYPES,
     )
@@ -91,7 +103,7 @@ def test_staged_load_rolls_back_atomically(spark, derby_url):
     # watermark statement is invalid SQL → the WHOLE transaction (including
     # the delete and the insert of the new rows) must roll back
     with pytest.raises(Exception, match="NOSUCHTABLE|Py4JJavaError|does not exist"):
-        staged_transactional_load(
+        _staged_load(
             spark, _facts(spark, "2024.08", 500, 7), derby_url, "facts",
             delete_where="\"periodo\" = '2024.08'", column_types=_TYPES,
             watermark_sql="UPDATE nosuchtable SET x = 1",

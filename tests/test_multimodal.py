@@ -1,16 +1,11 @@
-"""Multimodal plumbing tests: schema, batching, stubbed decode, frame plan."""
+"""Multimodal plumbing tests: schema, batching, stubbed and real decode."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
+from media_fixtures import MEDIA_SCHEMA, deterministic_fake_decoder, deterministic_fake_resizer
 
-from sm_etl_cloud_run_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    deterministic_fake_decoder,
-    extract_features,
-    sample_frames,
-)
+from sm_etl_cloud_run_spark.operators.multimodal import extract_features
 
 
 def _media(spark):
@@ -59,18 +54,8 @@ def test_extract_features_real_codecs(spark):
     assert rows[2][4] == 5000.0  # rms of a full-scale square wave = amplitude
 
 
-def test_sample_frames_plan(spark):
-    frames = sample_frames(_media(spark), every_ms=1000).collect()
-    # only the video row explodes; 3500ms at 1s cadence → ts 0,1000,2000,3000
-    assert [r["media_id"] for r in frames] == [2, 2, 2, 2]
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
-
-
 def test_resize_images_fake_resizer(spark):
-    from sm_etl_cloud_run_spark.operators.multimodal import (
-        deterministic_fake_resizer,
-        resize_images,
-    )
+    from sm_etl_cloud_run_spark.operators.multimodal import resize_images
 
     out = resize_images(
         _media(spark), target=(8, 4), resize_fn=deterministic_fake_resizer
@@ -112,31 +97,3 @@ def test_resize_images_real_bmp(spark):
     assert resized.shape == (4, 4, 3)
     assert (resized[:2, :2] == [255, 0, 0]).all()
     assert (resized[2:, 2:] == [255, 255, 0]).all()
-
-
-def test_extract_features_audio_spectral_kernel(spark):
-    """The DSP kernel plugs into the same mapInPandas plumbing: one
-    WAV tone per row, feature = [rms, zcr, centroid, rolloff, 8 bands]."""
-    import numpy as np
-
-    from sm_etl_cloud_run_spark.functions.codecs import (
-        audio_spectral_features,
-        encode_wav_pcm16,
-    )
-    from sm_etl_cloud_run_spark.operators.multimodal import extract_features
-
-    rate = 16000
-    rows = []
-    for media_id, f0 in ((1, 1000.0), (2, 3000.0)):
-        t = np.arange(rate // 2) / rate
-        tone = (20000 * np.sin(2 * np.pi * f0 * t)).astype(np.int16)
-        rows.append((media_id, "audio", bytearray(encode_wav_pcm16(tone, rate))))
-    media = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-    out = {
-        r["media_id"]: list(r["feature"])
-        for r in extract_features(media, decode_fn=audio_spectral_features).collect()
-    }
-    assert len(out) == 2 and all(len(v) == 12 for v in out.values())
-    # centroid (feature[2]) tracks the tone; band fraction peaks at f0's slice
-    assert abs(out[1][2] - 1000.0) < 25 and abs(out[2][2] - 3000.0) < 25
-    assert out[1][4 + 1] > 0.99 and out[2][4 + 3] > 0.99

@@ -9,9 +9,8 @@ from pyspark.sql import functions as F
 
 from sm_etl_cloud_run_spark.functions.text import token_count, word_shingles
 from sm_etl_cloud_run_spark.operators import filters, joins
-from sm_etl_cloud_run_spark.operators.aggregates import assert_no_nulls, null_counts
+from sm_etl_cloud_run_spark.operators.aggregates import null_counts
 from sm_etl_cloud_run_spark.operators.dedup import (
-    exact_dedup,
     lsh_candidate_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
@@ -102,11 +101,6 @@ def test_null_counts_and_validator(spark):
     df = spark.createDataFrame([(1, None), (None, "x")], "a int, b string")
     row = null_counts(df).collect()[0]
     assert row["n_rows"] == 2 and row["nulls_a"] == 1 and row["nulls_b"] == 1
-    try:
-        assert_no_nulls(df, ["a"])
-        raise AssertionError("expected RuntimeError")
-    except RuntimeError as exc:
-        assert "a" in str(exc)
 
 
 def test_harmonize_and_union(spark):
@@ -115,11 +109,6 @@ def test_harmonize_and_union(spark):
     b2 = harmonize_columns(b, ["k", "v"])
     out = union_harmonized(a, b2).orderBy("k").collect()
     assert [r["v"] for r in out] == ["x", None]
-
-
-def test_exact_dedup(spark):
-    df = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], "id int, t string")
-    assert exact_dedup(df, ["t"]).count() == 2
 
 
 def test_minhash_identical_docs_share_signature(spark):
@@ -581,31 +570,6 @@ def test_apply_cdc_single_shuffle_plan(spark):
         out.explain("simple")
     plan = buf.getvalue().split("Initial Plan")[0]
     assert plan.count("Exchange") <= 1 and "BatchEvalPython" not in plan
-
-
-def test_cdc_diff_apply_roundtrip(spark):
-    from sm_etl_cloud_run_spark.operators.cdc import apply_cdc, cdc_diff
-
-    old = spark.createDataFrame(
-        [(1, "a", 10), (2, "b", 20), (3, "c", None), (4, "d", 40)],
-        "k long, v string, m long",
-    )
-    new = spark.createDataFrame(
-        [(1, "a", 10),          # unchanged -> no change row
-         (2, "B", 20),          # updated
-         (3, "c", 30),          # NULL -> value counts as a change
-         (5, "e", None)],       # inserted (4 deleted)
-        "k long, v string, m long",
-    )
-    diff = cdc_diff(old, new, ["k"])
-    ops = {r["k"]: r["op"] for r in diff.collect()}
-    assert ops == {2: "U", 3: "U", 4: "D", 5: "I"}
-
-    # roundtrip: old + diff (diff rows win) == new
-    log = old.withColumn("op", F.lit("U")).withColumn("seq", F.lit(0)) \
-        .unionByName(diff.withColumn("seq", F.lit(1)))
-    applied = apply_cdc(log, ["k"], ["seq"]).drop("op", "seq")
-    assert sorted(map(tuple, applied.collect())) == sorted(map(tuple, new.collect()))
 
 
 def test_distributed_rank_matches_global_row_number(spark):

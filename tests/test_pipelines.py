@@ -6,10 +6,8 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from sm_etl_cloud_run_spark.pipelines import PA_SPEC, condicao_saude_mental, load_typed, transform_fact
-from sm_etl_cloud_run_spark.operators.aggregates import assert_no_nulls
+from sm_etl_cloud_run_spark.operators.aggregates import null_counts
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
 
 _PANEL = ["355030", "330455"]
@@ -124,7 +122,9 @@ def test_pa_stage1_semantics(spark):
     assert r2["estabelecimento_mantido"] is False
 
     # A4 validation passes on the guarded columns
-    assert_no_nulls(out, ["quantidade_apresentada", "quantidade_aprovada", "realizacao_periodo_data_inicio"])
+    guarded = ["quantidade_apresentada", "quantidade_aprovada", "realizacao_periodo_data_inicio"]
+    nulls = null_counts(out, guarded).collect()[0]
+    assert [nulls[f"nulls_{c}"] for c in guarded] == [0, 0, 0]
 
 
 def test_pa_two_stage_roundtrip(spark, tmp_path):

@@ -443,33 +443,6 @@ def test_rolling_wau_hll_accuracy_vs_exact(spark):
         assert abs(approx[day] - wau) <= max(2, 0.05 * wau), (day, wau, approx[day])
 
 
-def test_cms_heavy_hitters_bounds_vs_exact(spark, sf_dir):
-    """The Count-Min twin of events_heavy_hitters_exact obeys the CMS
-    guarantee: true <= est <= true + eps*N, at both a tight and a
-    deliberately coarse eps (the coarse one proves the bound is doing
-    work, not that the sketch is secretly exact)."""
-    from pyspark.sql import functions as F
-
-    from sm_etl_cloud_run_spark.operators.aggregates import cms_heavy_hitters
-    from sm_etl_cloud_run_spark.tables import load_tables
-
-    ev = load_tables(spark, sf_dir)["events"].where(F.col("ts").isNotNull())
-    exact = {
-        r["user_id"]: r["n"]
-        for r in ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .orderBy(F.col("n").desc(), "user_id").limit(20).collect()
-    }
-    total = ev.count()
-    for eps in (0.0001, 0.05):
-        est = dict(cms_heavy_hitters(ev, "user_id", list(exact), eps=eps))
-        for k, true_n in exact.items():
-            assert true_n <= est[k] <= true_n + eps * total + 1, (eps, k)
-    # determinism: same seed, same estimates
-    again = dict(cms_heavy_hitters(ev, "user_id", list(exact)))
-    assert again == dict(cms_heavy_hitters(ev, "user_id", list(exact)))
-
-
 def test_minhash_accuracy_sampled_subset(spark, sf_dir):
     """sample_rate < 1 must yield a deterministic, engine-stable SUBSET
     of the exhaustive rows (identical values per kept pair — the md5
@@ -885,8 +858,7 @@ def test_tuner_refusal_empties_all_three_tuned_plans(spark, sf_dir, monkeypatch)
     can clear it — the decision table must flag nothing chosen, and
     BOTH downstream consumers (pair enumeration and the linear group
     assignment) must return EMPTY relations with their non-refusal
-    schemas rather than picking a least-bad banding (the
-    plan_watermark_delay contract)."""
+    schemas rather than picking a least-bad banding."""
     from sm_etl_cloud_run_spark.plans import textops
 
     monkeypatch.setattr(textops, "_TUNE_RECALL_FLOOR_BP", 10001)

@@ -134,29 +134,6 @@ def test_cdc_apply_matches_sequential_fold(spark, log_rows):
     assert got == state
 
 
-@settings(**_SETTINGS)
-@given(
-    st.lists(st.tuples(st.integers(0, 6), st.integers(0, 9)), max_size=12),
-    st.lists(st.tuples(st.integers(0, 6), st.integers(0, 9)), max_size=12),
-)
-def test_cdc_diff_apply_roundtrip_property(spark, old_rows, new_rows):
-    """For ANY pair of snapshots (dedup'd on key), applying diff(old,new)
-    over old reproduces new exactly."""
-    from sm_etl_cloud_run_spark.operators.cdc import apply_cdc, cdc_diff
-
-    old_d = dict(old_rows)
-    new_d = dict(new_rows)
-    old = spark.createDataFrame(list(old_d.items()) or [(None, None)], "k long, v long") \
-        .where(F.col("k").isNotNull())
-    new = spark.createDataFrame(list(new_d.items()) or [(None, None)], "k long, v long") \
-        .where(F.col("k").isNotNull())
-    diff = cdc_diff(old, new, ["k"])
-    log = old.withColumn("op", F.lit("U")).withColumn("seq", F.lit(0)) \
-        .unionByName(diff.withColumn("seq", F.lit(1)))
-    applied = {r["k"]: r["v"] for r in apply_cdc(log, ["k"], ["seq"]).collect()}
-    assert applied == new_d
-
-
 @settings(max_examples=4, deadline=None)
 @given(
     st.lists(

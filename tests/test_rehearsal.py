@@ -321,6 +321,32 @@ def test_refresh_control_migrates_ledger_without_tamanho(spark, tmp_path):
     assert spark.read.parquet(control).schema["tamanho"].dataType == T.LongType()
 
 
+def test_refresh_control_empty_first_listing_writes_typed_ledger(spark, tmp_path):
+    """The first EP3 over a directory with no PA file writes an empty
+    ledger that still has all eight columns, typed: a watermark touch
+    reads it, and a later refresh that lists files upserts into it."""
+    control = str(tmp_path / "ctl")
+    _configure_listing(control, {}, tmp_path)
+    assert rehearsal.refresh_control(spark) == []
+    touch_watermark(control, {"tipo": ["PA"]}, "timestamp_etl_gcs")
+    assert read_control(control) == []
+    schema = spark.read.parquet(control).schema
+    assert schema.fieldNames() == [
+        "tipo", "arquivo", "sigla_uf", "periodo", "tamanho",
+        "timestamp_modificacao_ftp", "timestamp_etl_gcs", "timestamp_load_bd",
+    ]
+    assert schema["tamanho"].dataType == T.LongType()
+    for c in ("timestamp_modificacao_ftp", "timestamp_etl_gcs", "timestamp_load_bd"):
+        assert schema[c].dataType == T.TimestampType(), c
+
+    _configure_listing(control, {"PASP2408.dbc": b"yy"}, tmp_path)
+    rehearsal.refresh_control(spark)
+    rows = read_control(control)
+    assert [(r["arquivo"], r["tamanho"], r["timestamp_etl_gcs"]) for r in rows] == [
+        ("PASP2408.dbc", 2, None)
+    ]
+
+
 def test_lifecycle_jobs_reject_unsafe_filenames(spark, tmp_path):
     """ep1/ep2 re-validate the control-row filename at the point of use:
     a hand-edited row can't reach the JDBC delete predicate or the
