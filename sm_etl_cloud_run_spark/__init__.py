@@ -10,8 +10,8 @@ idempotent watermark-gated warehouse loads), re-expressed Spark-first:
 - dimension lookups are broadcast joins, the date→period lookup is a
   broadcast range join (``operators/joins.py``);
 - chunked-generator extraction becomes partitioned DataFrame scans
-  (``sources/``), delete-then-insert loads become dynamic partition
-  overwrite / emulated MERGE (``sinks/``);
+  (``sources/``), delete-then-insert loads become staged transactional
+  JDBC loads (``sinks/``);
 - watermark gating becomes a control-table predicate driving incremental
   batch runs (``streaming/incremental.py``);
 - plus large-scale pipeline operators the reference lacks: dedup

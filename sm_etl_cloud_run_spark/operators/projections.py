@@ -17,7 +17,6 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 def normalize_headers(df: DataFrame, *, case: str = "upper") -> DataFrame:

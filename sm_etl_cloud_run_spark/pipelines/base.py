@@ -23,15 +23,13 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cleaning, dates
 from ..functions.ids import deterministic_row_id, uuid7_column
 from ..operators import filters, joins
 from ..operators.projections import normalize_headers, rename_map
-from ..sources.csv_allstring import read_csv_allstring
-from ..sinks.partitioned import write_partition_overwrite
 
 # pandas dtype (reference TIPOS_* maps) → Spark DDL type
 _PANDAS_TO_SPARK = {
@@ -229,38 +227,13 @@ def spark_type_map(spec: FactSpec) -> dict[str, str]:
     return {c: _PANDAS_TO_SPARK[t] for c, t in spec.type_map.items()}
 
 
-def load_typed(
-    spark: SparkSession,
-    bronze_path: str,
-    spec: FactSpec,
-    target_path: str,
-    *,
-    partition_by: Sequence[str] = ("ftp_arquivo_nome",),
-) -> DataFrame:
-    """Stage-2 (EP2): all-string bronze CSV → typed table, idempotent.
-
-    Reproduces the reference's load semantics exactly
-    (load_bd/*_load_bd.py:112-134): numerics cast via double (pandas
-    issue-25472 parity), booleans decode `'True' → True else False`
-    (NULL becomes False at THIS stage, unlike stage 1 — SURVEY §7.3),
-    then a dynamic partition overwrite replaces exactly the partitions
-    of the incoming file (K3's delete-conflicts-then-insert).
-    """
-    from ..session import apply_session_conventions
-
-    apply_session_conventions(spark)  # coercing casts need ANSI off
-    raw = read_csv_allstring(spark, bronze_path)
-    typed = cast_allstring_typed(raw, spec)
-    write_partition_overwrite(typed, target_path, partition_by)
-    return spark.read.parquet(target_path)
-
-
 def cast_allstring_typed(raw: DataFrame, spec: FactSpec) -> DataFrame:
-    """The EP2 cast block alone (all-string bronze → typed columns),
-    shared by the parquet loader above and the JDBC warehouse path
-    (pipelines/rehearsal.py): numerics via double (pandas issue-25472
-    parity), booleans `'True' → True else False` (NULL collapses to
-    False at THIS stage — SURVEY §7.3), everything else a direct cast.
+    """Stage-2 (EP2) cast: all-string bronze → typed columns, as the
+    reference's load (load_bd/*_load_bd.py:112-134) does before its
+    delete-then-insert (`pipelines/rehearsal.ep2_inserir_lote`):
+    numerics via double (pandas issue-25472 parity), booleans
+    `'True' → True else False` (NULL collapses to False at THIS stage —
+    SURVEY §7.3), everything else a direct cast.
     """
     types = spark_type_map(spec)
     exprs: dict[str, Column] = {}

@@ -2,18 +2,15 @@
 
 Schema/behavior re-expressed from the reference
 (etl/siasus_bpa_individualizado.py:36-85 map, :160-260 chain;
-load_bd/siasus_bpa_individualizado_load_bd.py:28-73 types;
-condition: utilitarios/config_painel_sm.py:69).
+load_bd/siasus_bpa_individualizado_load_bd.py:28-73 types). The
+condition (utilitarios/config_painel_sm.py:69) is
+`siasus_pa.condicao_saude_mental` over the BPA-i raw names; the
+lifecycle's tipo table (`rehearsal.TIPOS["BI"]`) binds them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from ..operators.filters import composite_condition
 from .base import FactSpec
-from .siasus_pa import CBO_SAUDE_MENTAL
 
 _RENAME = {
     "CODUNI": "estabelecimento_id_scnes",
@@ -53,20 +50,6 @@ _RENAME = {
     "ETNIA": "usuario_etnia_id_sus",
     "NAT_JUR": "estabelecimento_natureza_juridica_id_scnes",
 }
-
-
-def condicao_saude_mental_bpa_i() -> Column:
-    """F2 variant over BPA-i raw names (config_painel_sm.py:69)."""
-    return composite_condition(
-        equals=[(F.col("TPUPS"), "70"), (F.col("CIDPRI"), "Y870"), (F.col("CATEND"), "02")],
-        prefixes=[
-            (F.col("PROC_ID"), ["030106", "030107", "030108"]),
-            (F.col("CIDPRI"), ["F", "X6", "X7", "R78", "T40", "Y90", "Y91"]),
-            (F.col("CBOPROF"), ["2515"]),
-        ],
-        rlikes=[(F.col("CIDPRI"), "^X8[0-4][0-9]*")],
-        isin=[(F.col("CBOPROF"), list(CBO_SAUDE_MENTAL))],
-    )
 
 
 def _types() -> dict[str, str]:

@@ -16,7 +16,6 @@ from ..functions import cleaning, dates
 from ..operators import filters, joins
 from ..operators.aggregates import null_counts, sorted_set_agg
 from ..operators.reshape import melt, union_harmonized
-from ..operators.windows import topk_per_group
 from ..tables import load_tables
 from .registry import register
 

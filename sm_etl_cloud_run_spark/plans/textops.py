@@ -2542,7 +2542,8 @@ def dedup_clone_collapse_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_component_size_histogram's heavy-tail signal) or when raw
     enumeration at least doubles the collapsed cost. Measured on the
     clone-pathology fixture (64 clones × 5k docs), this is the 332 s →
-    8.7 s routing decision (tools/lsh_probe.py --clone-pathology).
+    8.7 s routing decision (ARCHITECTURE.md, "LSH dedup probe"; the
+    probe script is deleted).
 
     Shape at 100 TB: signatures/bands are computed over clone
     REPRESENTATIVES only (one groupBy on the content hash, then the

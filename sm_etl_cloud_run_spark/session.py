@@ -28,9 +28,6 @@ _RUNTIME_CONVENTIONS = {
     "spark.sql.session.timeZone": "UTC",
     # MapType/ArrayType results and pandas interchange go through Arrow.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Idempotent re-loads overwrite only the partitions present in the
-    # incoming batch (reference's delete-conflicts-then-insert, K3/K4).
-    "spark.sql.sources.partitionOverwriteMode": "dynamic",
     # The driver testdata stores some timestamps as TIMESTAMP(NANOS),
     # which Spark's parquet reader rejects; read them as nano-longs and
     # convert in tables.load_tables.

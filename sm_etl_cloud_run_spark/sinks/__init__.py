@@ -3,9 +3,8 @@
 The reference's warehouse loads are transactional delete-then-insert
 against Postgres; the engine keeps those semantics:
 
-- K1 bronze write            → partitioned parquet/csv writes
-- K2/K3 delete-then-insert   → staged transactional JDBC load (`jdbc`),
-                               dynamic partition overwrite for parquet
+- K1 bronze write            → per-file bronze CSV (`partitioned`)
+- K2/K3 delete-then-insert   → staged transactional JDBC load (`jdbc`)
 - K7 watermark update        → driver-side parquet ledger, one-rename swap
 
 The control table's keyed upsert with change detection (K5) and its
@@ -13,5 +12,5 @@ The control table's keyed upsert with change detection (K5) and its
 `pipelines/rehearsal.refresh_control`.
 """
 
-from .partitioned import write_partition_overwrite, write_bronze_csv  # noqa: F401
+from .partitioned import write_bronze_csv  # noqa: F401
 from .watermark import touch_watermark  # noqa: F401

@@ -20,7 +20,7 @@ INSERT..SELECT from staging → watermark update → commit, and the
 staging table is dropped afterwards. The heavy bytes move in parallel;
 only the cheap set-shuffling is serialized, and it is atomic. A batch
 of files stages concurrently into disjoint staging tables and commits
-one at a time (`pipelines/rehearsal.ep2_inserir_pa_lote`).
+one at a time (`pipelines/rehearsal.ep2_inserir_lote`).
 
 Verified live against the embedded Derby database whose driver ships in
 Spark's own classpath (tests/test_jdbc_live.py), including the
@@ -109,7 +109,7 @@ def stage_jdbc_load(
     overwrite of `staging`. Safe to run CONCURRENTLY for different
     `staging` tables — staging writes touch disjoint tables and crashes
     leave the target untouched — which is what
-    `rehearsal.ep2_inserir_pa_lote` exploits against a single-writer
+    `rehearsal.ep2_inserir_lote` exploits against a single-writer
     warehouse: stage N files in parallel, then serialize only the cheap
     commit sections. The caller bootstraps the shared target once, up
     front: racing CREATE TABLEs are not atomic on any engine."""

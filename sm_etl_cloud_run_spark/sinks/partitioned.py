@@ -1,61 +1,16 @@
-"""Partitioned writes with delete-then-insert idempotency (K1, K3, K4).
+"""Bronze landing (K1): the stage-1 all-string CSV of each source file.
 
-Reference semantics: re-processing a source file first deletes all rows
-previously loaded from it (`DELETE WHERE ftp_arquivo_nome = :f`,
-utilitarios/bd_utilitarios.py:262-283) then appends — file-grain
-idempotency. The period-grain variant (K4) deletes by
-`periodo_data_inicio` (load_bd/sisab_*_load_bd.py:125-159).
-
-Spark-native: partition the table by the idempotency key and write with
-`partitionOverwriteMode=dynamic` — only partitions present in the
-incoming batch are replaced; the write is atomic per partition directory.
+Each file lands in its own directory, overwritten whole on a re-run,
+so EP1 is idempotent per file. The warehouse side of the reference's
+delete-then-insert idempotency (K2/K3) is the staged JDBC load in
+`sinks/jdbc.py`.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def write_partition_overwrite(
-    df: DataFrame,
-    path: str,
-    partition_by: Sequence[str],
-    *,
-    fmt: str = "parquet",
-    files_per_partition: int = 1,
-) -> None:
-    """K3/K4: overwrite exactly the partitions present in `df`.
-
-    Requires `spark.sql.sources.partitionOverwriteMode=dynamic` (set by
-    the session factory). Running the same batch twice yields identical
-    table state — the idempotency property the reference enforces with
-    DELETE-then-INSERT.
-
-    The input is clustered on the partition key first: without it every
-    task writes a file into every partition directory (tasks × partitions
-    small files — metadata death at scale); with it each directory gets
-    `files_per_partition` files. Raise `files_per_partition` when single
-    partitions are too large for one task (the salt is a deterministic
-    hash of the row, so re-runs stay idempotent).
-    """
-    keys = [F.col(c) for c in partition_by]
-    if not keys:
-        clustered = df  # unpartitioned table: nothing to cluster on
-    elif files_per_partition > 1:
-        salt = F.pmod(F.xxhash64(*df.columns), F.lit(files_per_partition))
-        clustered = df.repartition(*keys, salt)
-    else:
-        clustered = df.repartition(*keys)
-    (
-        clustered.write.mode("overwrite")
-        .partitionBy(*partition_by)
-        .format(fmt)
-        .option("partitionOverwriteMode", "dynamic")
-        .save(path)
-    )
+from pyspark.sql import types as T
 
 
 def write_bronze_csv(df: DataFrame, path: str, *, encoding: str = "UTF-8", coalesce: int | None = None) -> None:
@@ -69,9 +24,6 @@ def write_bronze_csv(df: DataFrame, path: str, *, encoding: str = "UTF-8", coale
     `coalesce` caps output files for small batches; leave None at scale
     so every task writes its own file.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
     bool_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.BooleanType)]
     out = df.withColumns(
         {c: F.when(F.col(c), "True").when(~F.col(c), "False") for c in bool_cols}

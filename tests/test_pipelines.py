@@ -1,14 +1,16 @@
 """End-to-end PA pipeline test (EP1 transform → bronze CSV → EP2 typed
-load), on a FIXTURES.md §2.1-style synthetic chunk with the edge rows
+cast), on a FIXTURES.md §2.1-style synthetic chunk with the edge rows
 the cleaning operators must handle."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, condicao_saude_mental, load_typed, transform_fact
+from sm_etl_cloud_run_spark.pipelines import PA_SPEC, condicao_saude_mental, transform_fact
+from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed
 from sm_etl_cloud_run_spark.operators.aggregates import null_counts
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
+from sm_etl_cloud_run_spark.sources.csv_allstring import read_csv_allstring
 
 _PANEL = ["355030", "330455"]
 
@@ -130,11 +132,10 @@ def test_pa_stage1_semantics(spark):
 def test_pa_two_stage_roundtrip(spark, tmp_path):
     out = _transform(spark)
     bronze = str(tmp_path / "bronze")
-    target = str(tmp_path / "typed")
     # K1: bronze CSV landing (all values serialized as text)
     write_bronze_csv(out, bronze, coalesce=1)
 
-    typed = load_typed(spark, bronze, PA_SPEC, target)
+    typed = cast_allstring_typed(read_csv_allstring(spark, bronze), PA_SPEC)
     assert typed.count() == 2
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     assert sch["quantidade_apresentada"] == "bigint"
@@ -150,10 +151,6 @@ def test_pa_two_stage_roundtrip(spark, tmp_path):
     assert rows["355030"]["estabelecimento_mantido"] is True
     # stage-2 semantics: tri-state NULLs collapse to False (SURVEY §7.3)
     assert rows["999998"]["obito"] is False
-
-    # K3 idempotency: re-running the load yields identical state
-    load_typed(spark, bronze, PA_SPEC, target)
-    assert spark.read.parquet(target).count() == 2
 
 
 def test_pa_stage1_from_real_dbc_file(spark, tmp_path):

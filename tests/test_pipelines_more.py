@@ -1,11 +1,11 @@
-"""Pipeline tests for BPA-i, RAAS, AIH-RD (vintages), SCNES (surgery)
-and SISAB (melt shape)."""
+"""Pipeline tests for BPA-i, RAAS, AIH-RD (vintages) and SCNES (surgery).
+
+Each two-stage test lands a bronze CSV and reads it back through the
+production EP2 cast (`cast_allstring_typed`)."""
 
 from __future__ import annotations
 
 import datetime as dt
-
-from pyspark.sql import functions as F
 
 from sm_etl_cloud_run_spark.pipelines import (
     AIH_RD_SPEC,
@@ -13,11 +13,22 @@ from sm_etl_cloud_run_spark.pipelines import (
     HABILITACOES_SPEC,
     RAAS_PS_SPEC,
     VINCULOS_SPEC,
-    condicao_saude_mental_bpa_i,
+    condicao_saude_mental,
     transform_fact,
-    transform_sisab_producao,
 )
-from sm_etl_cloud_run_spark.sources import parse_sisab_report
+from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed
+from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
+from sm_etl_cloud_run_spark.sources.csv_allstring import read_csv_allstring
+
+
+def _bpa_i_condition():
+    return condicao_saude_mental(
+        tpups="TPUPS", proc="PROC_ID", cid="CIDPRI", cbo="CBOPROF", catend="CATEND",
+    )
+
+
+def _typed(spark, bronze, spec):
+    return cast_allstring_typed(read_csv_allstring(spark, bronze), spec)
 
 
 def _row_df(spark, spec, overrides, default="X"):
@@ -45,7 +56,7 @@ def test_bpa_i_flags_and_condition(spark):
     out = transform_fact(
         raw, BPA_I_SPEC,
         panel_ids=["355030"], panel_raw_cols=("UFMUN", "MUNPAC"),
-        condition=condicao_saude_mental_bpa_i(),
+        condition=_bpa_i_condition(),
         ftp_arquivo_nome="BISP2408.dbc", deterministic_ids=True,
     ).collect()
     assert len(out) == 1
@@ -172,9 +183,6 @@ def test_scnes_habilitacoes_dates(spark):
 
 
 def test_raas_two_stage_roundtrip(spark, tmp_path):
-    from sm_etl_cloud_run_spark.pipelines import load_typed
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-
     raw = _row_df(
         spark, RAAS_PS_SPEC,
         {"UFMUN": "355030", "DT_PROCESS": "202408", "DT_ATEND": "202408",
@@ -187,7 +195,7 @@ def test_raas_two_stage_roundtrip(spark, tmp_path):
     out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc", deterministic_ids=True)
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze, coalesce=1)
-    typed = load_typed(spark, bronze, RAAS_PS_SPEC, str(tmp_path / "typed"))
+    typed = _typed(spark, bronze, RAAS_PS_SPEC)
     r = typed.collect()[0]
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     assert sch["quantidade_apresentada"] == "bigint" and r["quantidade_apresentada"] == 3
@@ -197,102 +205,10 @@ def test_raas_two_stage_roundtrip(spark, tmp_path):
     assert r["quantidade_atendimentos"] == 7
 
 
-def _minimal_overrides(spec):
-    """Valid-string defaults for every date/flag column of a spec so the
-    generic roundtrip works for any source."""
-    ov = {}
-    for c in spec.rename:
-        canon = spec.rename[c]
-        if canon in spec.yyyymm_dates:
-            ov[c] = "202408"
-        elif canon in spec.yyyymmdd_dates:
-            ov[c] = "20240815"
-        elif canon in spec.ddmmyyyy_dates:
-            ov[c] = "15/08/2024"
-        elif canon in spec.bool01:
-            ov[c] = "1"
-        elif canon in spec.flag_true:
-            ov[c] = spec.flag_true[canon]
-        elif canon in spec.interval_text_cols:
-            ov[c] = "3"
-    if spec.make_date_from:
-        for raw, canon in spec.rename.items():
-            if canon == spec.make_date_from[0]:
-                ov[raw] = "2024"
-            if canon == spec.make_date_from[1]:
-                ov[raw] = "8"
-    return ov
-
-
-def test_all_specs_two_stage_roundtrip(spark, tmp_path):
-    """Every fact spec survives transform → bronze CSV → typed load with
-    its declared schema, and True booleans round-trip."""
-    from sm_etl_cloud_run_spark.pipelines import ALL_FACT_SPECS, load_typed
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-
-    for spec in ALL_FACT_SPECS:
-        raw = _row_df(spark, spec, _minimal_overrides(spec), default="7")
-        out = transform_fact(raw, spec, ftp_arquivo_nome=f"{spec.name}.dbc", deterministic_ids=True)
-        bronze = str(tmp_path / spec.name / "bronze")
-        write_bronze_csv(out, bronze, coalesce=1)
-        typed = load_typed(spark, bronze, spec, str(tmp_path / spec.name / "typed"))
-        assert typed.count() == 1, spec.name
-        sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
-        r = typed.collect()[0]
-        for canon, pdtype in spec.type_map.items():
-            if canon not in sch:
-                # enrichment columns only exist when dims were provided
-                assert canon in ("periodo_id", "unidade_geografica_id"), (spec.name, canon)
-                continue
-            expected = {"object": "string", "Int64": "bigint", "int64": "bigint",
-                        "Float64": "double", "float64": "double", "bool": "boolean",
-                        "datetime64[ns]": "timestamp"}[pdtype]
-            assert sch.get(canon) == expected, (spec.name, canon)
-        for canon in spec.bool01:
-            assert r[canon] is True, (spec.name, canon)  # '1' → True survives bronze
-
-
-_REPORT = (
-    "header junk\n\n\n"
-    "Uf;Ibge;Municipio;eAP;eSF;Unnamed: 5\n"
-    "SP;0355030;São Paulo;1.234;7;\n"
-    "SP;0355031;Outro;;3;\n"
-    "RJ;330455;Rio;5;0;\n"
-    "\n\n\nFonte: SISAB"
-)
-
-
-def test_sisab_pipeline_end_to_end(spark):
-    wide = parse_sisab_report(spark, _REPORT)
-    periods = spark.createDataFrame([(dt.date(2024, 8, 1), "p-2024-08-M")], "data_inicio date, id string")
-    geo = spark.createDataFrame([("0355030", "m-sp"), ("330455", "m-rj")], "id_sus string, id string")
-    out = transform_sisab_producao(
-        wide,
-        variavel_coluna="Tipo de Equipe",
-        variavel_saida="tipo_equipe",
-        competencia=dt.date(2024, 8, 1),
-        panel_ids=["0355030", "330455"],
-        periods=periods,
-        geo=geo,
-        deterministic_ids=True,
-    )
-    rows = {(r["unidade_geografica_id_sus"], r["tipo_equipe"]): r for r in out.collect()}
-    assert len(rows) == 4  # 2 panel municipalities × 2 team types
-    # C19-adjacent: '1.234' thousands-dot parses via double cast? value kept textual here:
-    assert rows[("0355030", "eSF")]["quantidade_registrada"] == 7
-    assert rows[("330455", "eAP")]["quantidade_registrada"] == 5
-    assert rows[("0355030", "eAP")]["periodo_id"] == "p-2024-08-M"
-    assert rows[("0355030", "eAP")]["unidade_geografica_id"] == "m-sp"
-    assert out.columns[0] == "id" and out.columns[-1] == "atualizacao_data"  # P6 order
-
-
 def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
     """EP1→EP2 for BPA-i: values, Int64/Float64 casts and `== '1'` flag
-    semantics survive the bronze CSV round-trip; re-load is idempotent
+    semantics survive the bronze CSV round-trip
     (reference: load_bd/siasus_bpa_individualizado_load_bd.py:28-73)."""
-    from sm_etl_cloud_run_spark.pipelines import load_typed
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-
     raw = _row_df(
         spark, BPA_I_SPEC,
         {"UFMUN": "355030", "MUNPAC": "355030", "CBOPROF": "251510",
@@ -305,13 +221,12 @@ def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
     )
     out = transform_fact(
         raw, BPA_I_SPEC,
-        condition=condicao_saude_mental_bpa_i(),
+        condition=_bpa_i_condition(),
         ftp_arquivo_nome="BISP2408.dbc", deterministic_ids=True,
     )
     bronze = str(tmp_path / "bronze")
-    target = str(tmp_path / "typed")
     write_bronze_csv(out, bronze, coalesce=1)
-    typed = load_typed(spark, bronze, BPA_I_SPEC, target)
+    typed = _typed(spark, bronze, BPA_I_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert sch["quantidade_apresentada"] == "bigint" and r["quantidade_apresentada"] == 5
@@ -322,17 +237,12 @@ def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
     assert r["atendimento_residencia_municipios_distintos"] is False
     assert r["mantenedora_id_cnpj"] is None               # C3 NULL survives as empty
     assert sch["realizacao_periodo_data_inicio"] == "timestamp"
-    load_typed(spark, bronze, BPA_I_SPEC, target)         # K3 idempotency
-    assert spark.read.parquet(target).count() == 1
 
 
 def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
     """EP1→EP2 for AIH-RD (new vintage, adicionais present): money stays
     double, NUM_FILHOS Int64, and stage-2 collapses the tri-state NULL
     boolean to False (SURVEY §7.3; load_bd/sihsus_aih_rd_load_bd.py)."""
-    from sm_etl_cloud_run_spark.pipelines import load_typed
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-
     raw = _row_df(
         spark, AIH_RD_SPEC,
         {"ANO_CMPT": "2024", "MES_CMPT": "8",
@@ -346,9 +256,8 @@ def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
     )
     out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc", deterministic_ids=True)
     bronze = str(tmp_path / "bronze")
-    target = str(tmp_path / "typed")
     write_bronze_csv(out, bronze, coalesce=1)
-    typed = load_typed(spark, bronze, AIH_RD_SPEC, target)
+    typed = _typed(spark, bronze, AIH_RD_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert sch["valor_total"] == "double" and r["valor_total"] == 1234.56
@@ -359,17 +268,12 @@ def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
     assert r["usuario_homonimo"] is False                 # NULL → False at stage 2
     assert r["periodo_data_inicio"] == dt.datetime(2024, 8, 1)  # C12 date through bronze
     assert r["condicao_secundaria_1_id_cid10"] == "F20"   # adicionais value kept
-    load_typed(spark, bronze, AIH_RD_SPEC, target)        # K3 idempotency
-    assert spark.read.parquet(target).count() == 1
 
 
 def test_scnes_vinculos_two_stage_roundtrip(spark, tmp_path):
     """EP1→EP2 for SCNES vinculos: string-surgery outputs (roman→zfill,
     strip-nondigits), Int64 workload hours and tri-state flag collapse
     survive the bronze round-trip (load_bd/scnes_vinculos_load_bd.py)."""
-    from sm_etl_cloud_run_spark.pipelines import load_typed
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-
     raw = _row_df(
         spark, VINCULOS_SPEC,
         {"COMPETEN": "202408", "REGSAUDE": "XII", "DISTRSAN": "7",
@@ -382,9 +286,8 @@ def test_scnes_vinculos_two_stage_roundtrip(spark, tmp_path):
     )
     out = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc", deterministic_ids=True)
     bronze = str(tmp_path / "bronze")
-    target = str(tmp_path / "typed")
     write_bronze_csv(out, bronze, coalesce=1)
-    typed = load_typed(spark, bronze, VINCULOS_SPEC, target)
+    typed = _typed(spark, bronze, VINCULOS_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert r["estabelecimento_regiao_saude_id_sus"] == "0012"      # roman+zfill kept text
@@ -393,16 +296,11 @@ def test_scnes_vinculos_two_stage_roundtrip(spark, tmp_path):
     assert r["contratado"] is True and r["sem_vinculo_definido"] is False
     assert r["autonomo"] is False                                  # NULL tri-state → False at stage 2
     assert sch["periodo_data_inicio"] == "timestamp"
-    load_typed(spark, bronze, VINCULOS_SPEC, target)               # K3 idempotency
-    assert spark.read.parquet(target).count() == 1
 
 
 def test_scnes_habilitacoes_two_stage_roundtrip(spark, tmp_path):
     """EP1→EP2 for SCNES habilitações: the three date dialects (yyyyMM
     vigência, dd/MM/yyyy portaria) and Int64 leitos survive bronze."""
-    from sm_etl_cloud_run_spark.pipelines import load_typed
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-
     raw = _row_df(
         spark, HABILITACOES_SPEC,
         {"COMPETEN": "202408", "CMPT_INI": "202401", "CMPT_FIM": "202412",
@@ -412,9 +310,8 @@ def test_scnes_habilitacoes_two_stage_roundtrip(spark, tmp_path):
     )
     out = transform_fact(raw, HABILITACOES_SPEC, ftp_arquivo_nome="HBSP2408.dbc", deterministic_ids=True)
     bronze = str(tmp_path / "bronze")
-    target = str(tmp_path / "typed")
     write_bronze_csv(out, bronze, coalesce=1)
-    typed = load_typed(spark, bronze, HABILITACOES_SPEC, target)
+    typed = _typed(spark, bronze, HABILITACOES_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert sch["leitos_quantidade"] == "bigint" and r["leitos_quantidade"] == 12
@@ -423,79 +320,3 @@ def test_scnes_habilitacoes_two_stage_roundtrip(spark, tmp_path):
     assert r["vigencia_data_fim"] == dt.datetime(2024, 12, 1)
     assert r["atendimento_sus"] is True
     assert r["estabelecimento_regiao_saude_id_sus"] == "0004"
-    load_typed(spark, bronze, HABILITACOES_SPEC, target)           # K3 idempotency
-    assert spark.read.parquet(target).count() == 1
-
-
-def test_sisab_resolutividade_two_axis_shape(spark):
-    """The resolutividade flavor: melt covers Conduta; the condition
-    axis and tipo_producao are per-request constants placed in the
-    reference's fixed column order
-    (etl/sisab_resolutividade_por_condicao.py:99-111,135-143)."""
-    wide = parse_sisab_report(spark, _REPORT)  # columns eAP/eSF play the Conduta role
-    out = transform_sisab_producao(
-        wide,
-        variavel_coluna="Conduta",
-        variavel_saida="conduta",
-        competencia=dt.date(2024, 8, 1),
-        panel_ids=["0355030"],
-        constants={
-            "tipo_producao": "Atendimento Individual",
-            "problema_condicao_avaliada": "Saúde Mental",
-        },
-        deterministic_ids=True,
-    )
-    assert out.columns == [
-        "id",
-        "unidade_geografica_id_sus",
-        "periodo_data_inicio",
-        "tipo_producao",
-        "problema_condicao_avaliada",
-        "conduta",
-        "quantidade_registrada",
-        "atualizacao_data",
-    ]
-    rows = out.collect()
-    assert all(r["tipo_producao"] == "Atendimento Individual" for r in rows)
-    assert all(r["problema_condicao_avaliada"] == "Saúde Mental" for r in rows)
-    assert {r["conduta"] for r in rows} == {"eAP", "eSF"}
-
-
-def test_sisab_k4_delete_by_period_load(spark, tmp_path):
-    """SISAB stage 2 (load_bd/sisab_*_load_bd.py:125-159): retroactive
-    updates re-land one competência; partition overwrite on
-    periodo_data_inicio replaces exactly that month, other months
-    untouched - run twice for idempotency."""
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_partition_overwrite
-
-    def month(competencia, values):
-        wide = parse_sisab_report(spark, _REPORT)
-        out = transform_sisab_producao(
-            wide, variavel_coluna="Tipo de Equipe", variavel_saida="tipo_equipe",
-            competencia=competencia, deterministic_ids=True,
-        )
-        return out.withColumn("quantidade_registrada", F.col("quantidade_registrada") * values)
-
-    target = str(tmp_path / "sisab_fact")
-    aug, sep = dt.date(2024, 8, 1), dt.date(2024, 9, 1)
-    write_partition_overwrite(month(aug, 1), target, ["periodo_data_inicio"])
-    write_partition_overwrite(month(sep, 1), target, ["periodo_data_inicio"])
-    before = spark.read.parquet(target)
-    n_total = before.count()
-    sep_sum0 = before.where(F.col("periodo_data_inicio") == sep).agg(
-        F.sum("quantidade_registrada")
-    ).collect()[0][0]
-
-    # retroactive SISAB revision: August re-published with doubled values
-    write_partition_overwrite(month(aug, 2), target, ["periodo_data_inicio"])
-    write_partition_overwrite(month(aug, 2), target, ["periodo_data_inicio"])  # idempotent
-    after = spark.read.parquet(target)
-    assert after.count() == n_total                    # row grain unchanged
-    aug_sum = after.where(F.col("periodo_data_inicio") == aug).agg(
-        F.sum("quantidade_registrada")
-    ).collect()[0][0]
-    sep_sum = after.where(F.col("periodo_data_inicio") == sep).agg(
-        F.sum("quantidade_registrada")
-    ).collect()[0][0]
-    assert sep_sum == sep_sum0                         # September untouched
-    assert aug_sum == 2 * sep_sum                      # August replaced with revision

@@ -12,7 +12,6 @@ recorded in ROUND_NOTES.md.
 from __future__ import annotations
 
 import datetime as dt
-import re
 import sys
 import time
 
@@ -74,6 +73,19 @@ def _shard_bytes(shard_idx: int) -> bytes:
     return make_dbc(make_dbf(fields, data))
 
 
+class _StampedFtp(FakeFtpSession):
+    """LIST with a chosen MM-DD-YY stamp per file (default 09-03-24)."""
+
+    def __init__(self, tree, stamps):
+        super().__init__(tree)
+        self._stamps = stamps
+
+    def retrlines(self, cmd, callback):
+        assert cmd == "LIST"
+        for name, content in sorted(self._tree[self._cwd].items()):
+            callback(f"{self._stamps.get(name, '09-03-24')}  03:45PM      {len(content)} {name}")
+
+
 def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     t0 = time.perf_counter()
     tree = {_DIR: {name: _shard_bytes(i) for i, name in enumerate(_SHARDS)}}
@@ -108,7 +120,7 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     t0 = time.perf_counter()
     rc = runner.main([
         "--control", control, "--tipo", "PA", "--acao", "baixar",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_lote",
     ])
     ep1_sec = time.perf_counter() - t0
     assert rc == 0
@@ -118,7 +130,7 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     t0 = time.perf_counter()
     rc = runner.main([
         "--control", control, "--tipo", "PA", "--acao", "inserir",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_lote",
     ])
     ep2_sec = time.perf_counter() - t0
     assert rc == 0
@@ -137,27 +149,20 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
 
     # retroactive re-publish: bump ONE file's FTP timestamp via a fresh
     # LIST (EP3 keeps the other watermarks) → exactly one file re-pends,
-    # and the re-run's delete-then-insert keeps the warehouse exact
-    class BumpedFtp(FakeFtpSession):
-        def retrlines(self, cmd, callback):
-            assert cmd == "LIST"
-            for name, content in sorted(self._tree[self._cwd].items()):
-                # far-future stamp so it beats the wall-clock watermark
-                stamp = "09-03-99" if name == _SHARDS[0] else "09-03-24"
-                callback(f"{stamp}  03:45PM      {len(content)} {name}")
-
-    rehearsal.configure(transport_factory=lambda: BumpedFtp(tree))
+    # and the re-run's delete-then-insert keeps the warehouse exact; the
+    # far-future stamp beats the wall-clock watermark
+    rehearsal.configure(transport_factory=lambda: _StampedFtp(tree, {_SHARDS[0]: "09-03-99"}))
     rehearsal.refresh_control(spark)
     pending = gate_pending_runs(read_control(control), "baixar", tipo="PA")
     assert [r["arquivo"] for r in pending] == [_SHARDS[0]]  # exactly the re-published shard
     t0 = time.perf_counter()
     runner.main([
         "--control", control, "--tipo", "PA", "--acao", "baixar",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_lote",
     ])
     runner.main([
         "--control", control, "--tipo", "PA", "--acao", "inserir",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_lote",
     ])
     rerun_sec = time.perf_counter() - t0
     assert read_jdbc_table(spark, derby, "pa_fato").count() == expected
@@ -176,7 +181,7 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     assert len(gate_pending_runs(read_control(control), "inserir", tipo="PA")) == 1
     rc = runner.main([
         "--control", control, "--tipo", "PA", "--acao", "inserir",
-        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_pa_lote",
+        "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep2_inserir_lote",
     ])
     assert rc == 0
     again = read_jdbc_table(spark, derby, "pa_fato").drop(*drop).collect()
@@ -188,6 +193,131 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
         f"gen={gen_sec:.1f}s ep3={ep3_sec:.1f}s ep1={ep1_sec:.1f}s "
         f"ep2={ep2_sec:.1f}s retro_rerun={rerun_sec:.1f}s"
     )
+
+
+_SPARK_TYPE = {"object": "string", "Int64": "bigint", "int64": "bigint",
+               "Float64": "double", "float64": "double", "bool": "boolean",
+               "datetime64[ns]": "timestamp"}
+
+
+def _minimal_overrides(spec):
+    """Valid-string defaults for every date/flag column of a spec so the
+    generic round trip works for any source."""
+    ov = {}
+    for c in spec.rename:
+        canon = spec.rename[c]
+        if canon in spec.yyyymm_dates:
+            ov[c] = "202408"
+        elif canon in spec.yyyymmdd_dates:
+            ov[c] = "20240815"
+        elif canon in spec.ddmmyyyy_dates:
+            ov[c] = "15/08/2024"
+        elif canon in spec.bool01:
+            ov[c] = "1"
+        elif canon in spec.flag_true:
+            ov[c] = spec.flag_true[canon]
+        elif canon in spec.interval_text_cols:
+            ov[c] = "3"
+    if spec.make_date_from:
+        for raw, canon in spec.rename.items():
+            if canon == spec.make_date_from[0]:
+                ov[raw] = "2024"
+            if canon == spec.make_date_from[1]:
+                ov[raw] = "8"
+    return ov
+
+
+# The sources the reference filters on the panel, and on which raw
+# columns (SURVEY F1); stated here, apart from `rehearsal.TIPOS`, so the
+# lifecycle test fails if an entry loses its panel filter
+_PANEL_COLS = {
+    "PA": ("PA_UFMUN", "PA_MUNPCN"), "BI": ("UFMUN", "MUNPAC"),
+    "PF": ("CODUFMUN",), "HB": ("CODUFMUN",),
+}
+
+
+def _tipo_dbc(tipo: str, keep: int) -> bytes:
+    """One `.dbc` of `tipo`: `keep` rows its panel and condition keep
+    (CAPS units in São Paulo), plus, for a tipo the reference filters on
+    the panel, two rows outside the panel that EP1 drops."""
+    spec = rehearsal.TIPOS[tipo].spec
+    cols = spec.raw_columns
+    row = {c: "7" for c in cols}
+    row.update(_minimal_overrides(spec))
+    row[{v: k for k, v in spec.rename.items()}[spec.geo_key_col]] = "355030"
+    row.update({c: "70" for c in ("PA_TPUPS", "TPUPS") if c in row})
+    data = [[row[c] for c in cols]] * keep
+    if tipo in _PANEL_COLS:
+        data += [[("111111" if c in _PANEL_COLS[tipo] else row[c]) for c in cols]] * 2
+    return make_dbc(make_dbf([(c, "C", max(1, *(len(r[i]) for r in data))) for i, c in enumerate(cols)], data))
+
+
+def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
+    """All six `.dbc` tipos go through the one lifecycle from one
+    directory: EP3 ledgers a file per tipo, the runner's EP1 and EP2 load
+    each into `<tipo>_fato` with its own spec, every typed column reads
+    back from the warehouse as its spec's type map says, and a BPA-i
+    re-delivery re-pends that file only and replaces its rows."""
+    files = {tipo: f"{tipo}SP2408.dbc" for tipo in rehearsal.TIPOS}
+    keep = {tipo: 2 for tipo in rehearsal.TIPOS}
+    tree = {_DIR: {files[t]: _tipo_dbc(t, keep[t]) for t in files}}
+    control = str(tmp_path / "sm_metadados_ftp")
+    derby = f"jdbc:derby:{tmp_path}/wh;create=true"
+    rehearsal.CONFIG.pop("jdbc_table", None)  # each tipo loads <tipo>_fato
+    rehearsal.configure(
+        host="ftp.fake", directory=_DIR,
+        transport_factory=lambda: FakeFtpSession(tree),
+        control_path=control, bronze_root=str(tmp_path / "bronze"),
+        panel_ids=["355030", "330455"],
+        periods=spark.createDataFrame(
+            [(dt.date(2024, 8, 1), "p-2024-08-M")], "data_inicio date, id string"),
+        geo=spark.createDataFrame(
+            [("355030", "m-sp"), ("330455", "m-rj")], "id_sus string, id string"),
+        jdbc_url=derby, jdbc_column_types="ftp_arquivo_nome VARCHAR(64)",
+    )
+
+    def run(tipo):
+        for acao, job in (("baixar", "ep1_baixar_lote"), ("inserir", "ep2_inserir_lote")):
+            assert runner.main([
+                "--control", control, "--tipo", tipo, "--acao", acao,
+                "--job", f"sm_etl_cloud_run_spark.pipelines.rehearsal:{job}",
+            ]) == 0
+
+    def loaded(tipo):
+        return read_jdbc_table(spark, derby, f"{tipo.lower()}_fato")
+
+    def per_file(tipo):
+        return {r[0]: r[1] for r in loaded(tipo).groupBy("ftp_arquivo_nome").count().collect()}
+
+    ctl = rehearsal.refresh_control(spark)
+    assert sorted((r["tipo"], r["arquivo"]) for r in ctl) == sorted(files.items())
+    for tipo in files:
+        run(tipo)
+    rows = read_control(control)
+    assert all(r["timestamp_etl_gcs"] and r["timestamp_load_bd"] for r in rows)
+    for tipo, entry in rehearsal.TIPOS.items():
+        spec = entry.spec
+        assert per_file(tipo) == {files[tipo]: keep[tipo]}, tipo
+        typed = loaded(tipo)
+        sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
+        for canon, pdtype in spec.type_map.items():
+            assert sch.get(canon) == _SPARK_TYPE[pdtype], (tipo, canon)
+        r = typed.collect()[0]
+        for canon in spec.bool01:
+            assert r[canon] is True, (tipo, canon)  # '1' → True survives bronze
+        assert r["periodo_id"] == "p-2024-08-M" and r["unidade_geografica_id"] == "m-sp", tipo
+
+    # BPA-i re-delivery: new bytes and a newer FTP stamp
+    keep["BI"] = 3
+    tree[_DIR][files["BI"]] = _tipo_dbc("BI", keep["BI"])
+    rehearsal.configure(transport_factory=lambda: _StampedFtp(tree, {files["BI"]: "09-03-99"}))
+    rehearsal.refresh_control(spark)
+    for acao in ("baixar", "inserir"):
+        pending = gate_pending_runs(read_control(control), acao)
+        assert [r["arquivo"] for r in pending] == ([files["BI"]] if acao == "baixar" else [])
+    run("BI")
+    for tipo in files:
+        assert per_file(tipo) == {files[tipo]: keep[tipo]}, tipo
 
 
 def test_refresh_control_survives_partial_listing(spark, tmp_path):
@@ -347,31 +477,51 @@ def test_refresh_control_empty_first_listing_writes_typed_ledger(spark, tmp_path
     ]
 
 
-def test_lifecycle_jobs_reject_unsafe_filenames(spark, tmp_path):
-    """ep1/ep2 re-validate the control-row filename at the point of use:
-    a hand-edited row can't reach the JDBC delete predicate or the
-    bronze path with SQL/path metacharacters — and one bad name fails
-    the whole batch before any file is landed or watermarked."""
+def test_lifecycle_jobs_reject_unsafe_filenames(spark, tmp_path, monkeypatch):
+    """ep1/ep2 re-validate each control row at the point of use: a
+    hand-edited row can't reach the JDBC delete predicate or the bronze
+    path with SQL/path metacharacters, nor have its file read with
+    another tipo's spec, and a batch holds one tipo — one bad row fails
+    the whole batch before any file is landed or watermarked. EP3 never
+    ledgers a listed name that matches no tipo, and EP2 never loads a
+    batch into a `jdbc_table` named for another tipo."""
     control = str(tmp_path / "ctl")
     bronze = str(tmp_path / "bronze")
     good = "PASP2407.dbc"
+    listing = {good: b"x", "BISP2407.dbc": b"x", "XXSP2408.dbc": b"x",
+               "PASP2408.dbc.exe": b"x", "BIXX24.dbc": b"x"}
     rehearsal.configure(
         host="ftp.fake", directory=_DIR,
-        transport_factory=lambda: FakeFtpSession({_DIR: {good: b"x"}}),
+        transport_factory=lambda: FakeFtpSession({_DIR: listing}),
         control_path=control, bronze_root=bronze,
         panel_ids=["355030"], periods=None, geo=None,
     )
-    rehearsal.refresh_control(spark)
+    assert sorted(r["arquivo"] for r in rehearsal.refresh_control(spark)) == [
+        "BISP2407.dbc", good]
+    ok = {"tipo": "PA", "arquivo": good}
+    batches = []
     for bad in ("PA'; DROP TABLE pa_fato; --", "../../etc/passwd",
-                "PASP24.dbc/../x", "PASP9999.dbc.exe"):
-        for job in (rehearsal.ep1_baixar_pa_lote, rehearsal.ep2_inserir_pa_lote):
+                "PASP24.dbc/../x", "PASP9999.dbc.exe", "XXSP2408.dbc"):
+        batches += [[{"tipo": "PA", "arquivo": bad}], [ok, {"tipo": "PA", "arquivo": bad}]]
+    batches += [
+        [{"tipo": "BI", "arquivo": good}],              # tipo disagrees with the name
+        [{"tipo": "XX", "arquivo": "XXSP2408.dbc"}],    # no such tipo
+        [{"arquivo": good}],                            # no tipo
+        [ok, {"tipo": "BI", "arquivo": "BISP2407.dbc"}],  # two tipos in one batch
+    ]
+    for job in (rehearsal.ep1_baixar_lote, rehearsal.ep2_inserir_lote):
+        for batch in batches:
             with pytest.raises(ValueError):
-                job(spark, [{"arquivo": bad}])
-            with pytest.raises(ValueError):
-                job(spark, [{"arquivo": good}, {"arquivo": bad}])
+                job(spark, batch)
+    # a valid BI batch against a PA override is refused before staging
+    monkeypatch.setitem(rehearsal.CONFIG, "jdbc_table", "pa_fato")
+    monkeypatch.setitem(rehearsal.CONFIG, "jdbc_url", f"jdbc:derby:{tmp_path}/wh;create=true")
+    with pytest.raises(ValueError, match="not a BI table"):
+        rehearsal.ep2_inserir_lote(spark, [{"tipo": "BI", "arquivo": "BISP2407.dbc"}])
+    assert not os.path.exists(tmp_path / "wh")
     assert not os.path.exists(bronze)
-    row = read_control(control)[0]
-    assert row["timestamp_etl_gcs"] is None and row["timestamp_load_bd"] is None
+    for row in read_control(control):
+        assert row["timestamp_etl_gcs"] is None and row["timestamp_load_bd"] is None
 
 
 def _configure_listing(control: str, files: dict[str, bytes], tmp_path) -> None:
@@ -396,7 +546,7 @@ def test_control_plane_launches_no_spark_job(spark, tmp_path):
         rehearsal.refresh_control(spark)
         assert runner.main([
             "--control", control, "--tipo", "PA", "--acao", "baixar", "--dry-run",
-            "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_pa_lote",
+            "--job", "sm_etl_cloud_run_spark.pipelines.rehearsal:ep1_baixar_lote",
         ]) == 0
         touch_watermark(control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
                         "timestamp_etl_gcs")

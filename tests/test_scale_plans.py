@@ -66,14 +66,13 @@ def test_partitioned_layout_prunes_at_scan(spark, sf_dir, tmp_path):
     pruning in the scan node (PartitionFilters) and reads only the
     matching directory — the property that makes K3/K4 re-processing
     and day-scoped queries O(partition), not O(table)."""
-    from sm_etl_cloud_run_spark.sinks.partitioned import write_partition_overwrite
     from sm_etl_cloud_run_spark.tables import load_tables
 
     events = load_tables(spark, sf_dir)["events"].withColumn(
         "event_date", F.to_date("ts")
     )
     path = str(tmp_path / "events_part")
-    write_partition_overwrite(events, path, ["event_date"])
+    events.write.partitionBy("event_date").parquet(path)
     one_day = events.agg(F.min("event_date")).collect()[0][0]
     scoped = spark.read.parquet(path).where(F.col("event_date") == F.lit(one_day))
     plan = _explain(scoped)

@@ -1,5 +1,5 @@
-"""Sink semantics: idempotent partition overwrite, last-write-wins
-source dedupe, watermark touch (SURVEY §2.2 K1–K7)."""
+"""Sink semantics: last-write-wins source dedupe, watermark touch
+(SURVEY §2.2 K1–K7)."""
 
 from __future__ import annotations
 
@@ -10,26 +10,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sm_etl_cloud_run_spark.operators.dedup import dedupe_last_write
-from sm_etl_cloud_run_spark.sinks import touch_watermark, write_partition_overwrite
+from sm_etl_cloud_run_spark.sinks import touch_watermark
 from sm_etl_cloud_run_spark.sinks.watermark import read_control, write_control
-
-
-def test_partition_overwrite_idempotent(spark, tmp_path):
-    """K3: re-running the same file's batch must not duplicate rows."""
-    path = str(tmp_path / "fact")
-    batch1 = spark.createDataFrame(
-        [("PASP2408.dbc", 1), ("PASP2408.dbc", 2), ("PASP2407.dbc", 3)], "arquivo string, v int"
-    )
-    write_partition_overwrite(batch1, path, ["arquivo"])
-    # re-process one file with corrected content
-    batch2 = spark.createDataFrame([("PASP2408.dbc", 99)], "arquivo string, v int")
-    write_partition_overwrite(batch2, path, ["arquivo"])
-    out = spark.read.parquet(path)
-    rows = sorted((r["arquivo"], r["v"]) for r in out.collect())
-    assert rows == [("PASP2407.dbc", 3), ("PASP2408.dbc", 99)]
-    # idempotency: same batch again → same state
-    write_partition_overwrite(batch2, path, ["arquivo"])
-    assert sorted((r["arquivo"], r["v"]) for r in spark.read.parquet(path).collect()) == rows
 
 
 def test_dedupe_last_write(spark):

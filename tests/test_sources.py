@@ -1,4 +1,4 @@
-"""Source-connector tests: SISAB dialect, FTP LIST, all-string CSV, DBF scaffold."""
+"""Source-connector tests: FTP LIST, all-string CSV, DBF scaffold."""
 
 from __future__ import annotations
 
@@ -6,28 +6,11 @@ import datetime as dt
 
 from sm_etl_cloud_run_spark.sources import (
     parse_ftp_list_lines,
-    parse_sisab_report,
     prefer_partitioned,
     read_csv_allstring,
 )
 from sm_etl_cloud_run_spark.sources.ftp_list import parse_list_lines
 from sm_etl_cloud_run_spark.sources.dbf import read_dbf_files
-
-_REPORT = (
-    "Relatório de produção\nqualquer coisa; outra\n\n\n"
-    "Uf;Ibge;Municipio;Consulta;Visita;Unnamed: 5\n"
-    "SP;0355030;São Paulo;1.234,56;7;\n"
-    "RJ;330455;Rio de Janeiro;;3;\n"
-    "\n\n\nFonte: SISAB"
-)
-
-
-def test_parse_sisab_report(spark):
-    df = parse_sisab_report(spark, _REPORT)
-    assert df.columns == ["Uf", "Ibge", "Municipio", "Consulta", "Visita"]
-    rows = {r["Ibge"]: r for r in df.collect()}
-    assert rows["0355030"]["Consulta"] == "1.234,56"  # leading zero kept, dialect raw
-    assert rows["330455"]["Consulta"] is None  # empty → NULL on value cols
 
 
 def test_parse_ftp_list_lines(spark):

@@ -14,6 +14,9 @@ What stays unreached is reached only from `tests/`, or from nothing,
 and must be listed below with its reason. A new test-only definition
 fails this test, and so does a listed one that gains a production
 caller or is deleted.
+
+A second scan, for want of an installed linter, fails on an imported
+name that its module never uses.
 """
 
 from __future__ import annotations
@@ -25,26 +28,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 PKG = REPO / "sm_etl_cloud_run_spark"
 
-# Per-source pipeline entries: whether each runs through the
-# spec-driven lifecycle or goes is ROADMAP item 3.
-_PIPELINE_ENTRIES = {
-    "pipelines.ALL_FACT_SPECS",
-    "pipelines.base.load_typed",
-    "pipelines.scnes.HABILITACOES_SPEC",
-    "pipelines.scnes.VINCULOS_SPEC",
-    "pipelines.siasus_bpa_i.BPA_I_SPEC",
-    "pipelines.siasus_bpa_i.condicao_saude_mental_bpa_i",
-    "pipelines.siasus_raas.RAAS_PS_SPEC",
-    "pipelines.sihsus_aih_rd.AIH_RD_SPEC",
-    "pipelines.sisab.transform_sisab_producao",
-    "sinks.partitioned.write_partition_overwrite",
-    "sources.sisab.parse_sisab_report",
-    "sources.sisab_client.FormPage",
-    "sources.sisab_client.SISAB_PRODUCAO_URL",
-    "sources.sisab_client.SisabReportRequest",
-    "sources.sisab_client.SisabSession",
-    "sources.sisab_client.Transport",
-}
 # Kept on purpose, each for the reason given.
 _KEPT = {
     # the expression form the numpy SemDeDup kernel is tested against
@@ -55,7 +38,6 @@ _KEPT = {
     "operators.multimodal.resize_images",
     "operators.multimodal.RESIZED_SCHEMA",
 }
-ALLOWED = _PIPELINE_ENTRIES | _KEPT
 
 _WORD = re.compile(r"[A-Za-z_]\w*")
 
@@ -129,5 +111,37 @@ def unreached_public() -> set[str]:
 
 def test_public_surface_has_production_callers():
     unreached = unreached_public()
-    assert sorted(unreached - ALLOWED) == [], "public, but reached only from tests (or nothing)"
-    assert sorted(ALLOWED - unreached) == [], "listed, but now has a production caller or is gone"
+    assert sorted(unreached - _KEPT) == [], "public, but reached only from tests (or nothing)"
+    assert sorted(_KEPT - unreached) == [], "listed, but now has a production caller or is gone"
+
+
+def _unused_imports(path: Path) -> list[str]:
+    """Names `path` imports and never uses. `__future__` imports, lines
+    marked `# noqa` and names listed in `__all__` are exempt."""
+    src = path.read_text()
+    tree = ast.parse(src)
+    lines = src.splitlines()
+    imported: dict[str, int] = {}
+    used: set[str] = set()
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.Import, ast.ImportFrom)):
+            if getattr(n, "module", None) == "__future__" or "# noqa" in lines[n.lineno - 1]:
+                continue
+            for a in n.names:
+                imported.setdefault(a.asname or a.name.split(".")[0], n.lineno)
+        elif isinstance(n, ast.Name):
+            used.add(n.id)
+        elif isinstance(n, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id == "__all__" for t in n.targets
+        ):
+            used |= {c.value for c in ast.walk(n.value) if isinstance(c, ast.Constant)}
+    return [f"{path.relative_to(REPO)}:{line}: {name}"
+            for name, line in sorted(imported.items(), key=lambda kv: kv[1]) if name not in used]
+
+
+def test_no_unused_imports():
+    # package `__init__.py` files import names only to re-export them
+    files = [f for d in ("sm_etl_cloud_run_spark", "tests", "tools", "perfbench")
+             for f in sorted((REPO / d).rglob("*.py")) if f.name != "__init__.py"]
+    files += sorted(REPO.glob("*.py"))
+    assert [u for f in files for u in _unused_imports(f)] == []
