@@ -29,7 +29,7 @@ from .dates import (  # noqa: F401
     now_gmt_minus3,
     to_iso8601,
 )
-from .ids import uuid7_column, deterministic_row_id  # noqa: F401
+from .ids import deterministic_row_id  # noqa: F401
 from .text import (  # noqa: F401
     doc_fingerprint,
     normalized_text,

@@ -1,48 +1,16 @@
 """Row-id generation (SURVEY §2.3 P9).
 
-The reference stamps every row with a time-ordered UUIDv7 hex
-(etl/siasus_procedimentos_ambulatoriais.py:327-329). Spark has no uuid7
-builtin; we provide:
-
-- :func:`uuid7_column` — a real UUIDv7 via a vectorized Pandas UDF
-  (only for production-style pipelines; non-deterministic by design);
-- :func:`deterministic_row_id` — content-derived surrogate (sha2 of the
-  business key), used everywhere correctness is hash-compared, because
-  random ids can't be oracle-verified.
+The reference stamps every row with a random, time-ordered UUIDv7 hex
+(etl/siasus_procedimentos_ambulatoriais.py:327-329). The engine does not
+reproduce that: :func:`deterministic_row_id` derives a 32-hex surrogate
+from the row's content (sha2 of the business key), so a re-run yields
+the same ids and every result can be oracle-checked.
 """
 
 from __future__ import annotations
 
-import os
-import time
-import uuid
-
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
-
-
-def _uuid7_bytes() -> str:
-    # UUIDv7: 48-bit unix-ms timestamp, version/variant bits, random tail.
-    ts_ms = time.time_ns() // 1_000_000
-    rand = int.from_bytes(os.urandom(10), "big")
-    value = (ts_ms & ((1 << 48) - 1)) << 80
-    value |= 0x7 << 76
-    value |= (rand >> 62 & ((1 << 12) - 1)) << 64
-    value |= 0b10 << 62
-    value |= rand & ((1 << 62) - 1)
-    return uuid.UUID(int=value).hex
-
-
-@F.pandas_udf(StringType())
-def _uuid7_udf(s: pd.Series) -> pd.Series:
-    return pd.Series([_uuid7_bytes() for _ in range(len(s))], index=s.index)
-
-
-def uuid7_column() -> Column:
-    """Time-ordered UUIDv7 hex per row (Arrow-batched Pandas UDF)."""
-    return _uuid7_udf(F.lit(1))
 
 
 def deterministic_row_id(*key_cols: Column) -> Column:

@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cleaning, dates
-from ..functions.ids import deterministic_row_id, uuid7_column
+from ..functions.ids import deterministic_row_id
 from ..operators import filters, joins
 from ..operators.projections import normalize_headers, rename_map
 
@@ -87,19 +87,15 @@ def transform_fact(
     periods: DataFrame | None = None,
     geo: DataFrame | None = None,
     ftp_arquivo_nome: str = "",
-    deterministic_ids: bool = False,
 ) -> DataFrame:
     """Stage-1 transform: all-string raw chunk → cleaned, enriched fact.
 
     `periods` must carry (data_inicio date, id); `geo` (id_sus, id).
-    With `deterministic_ids` the row id derives from content (testable);
-    otherwise UUIDv7 like the reference (P9).
+    The row id derives from the row's content (P9), not the reference's
+    random UUIDv7. Pandas-coerce parity (invalid date/number → NULL)
+    needs ANSI off: the session must carry the engine's conventions
+    (`session.get_spark`, `tables.load_tables`).
     """
-    from ..session import apply_session_conventions
-
-    # pandas-coerce parity (invalid date/number → NULL) requires ANSI off
-    # even when the caller owns the session
-    apply_session_conventions(raw.sparkSession)
     df = raw
 
     # F1 — panel membership on the raw ids (OR across the given columns).
@@ -189,13 +185,10 @@ def transform_fact(
             .drop(src)
         )
 
-    # P9 — row id.
-    if deterministic_ids:
-        df = df.withColumn(
-            "id", deterministic_row_id(*[F.col(c).cast("string") for c in sorted(df.columns)])
-        )
-    else:
-        df = df.withColumn("id", uuid7_column())
+    # P9 — content-derived row id.
+    df = df.withColumn(
+        "id", deterministic_row_id(*[F.col(c).cast("string") for c in sorted(df.columns)])
+    )
 
     # J1 — monthly period id (broadcast equi join on truncated month).
     if periods is not None:

@@ -18,10 +18,10 @@ built from its keys and yields a file's tipo.
   (`sinks/watermark.py`), no Spark job — the reference's
   `/ftp_metadados` refresh (etl/datasus_ftp_metadados.py:164-382).
 - **EP1** (`ep1_baixar_lote`): gate-selected files → executor-side
-  download + DBC decode (S1) → `transform_fact` (the full F/P/C/J
-  chain) → bronze CSV (K1), all files concurrently → one
-  `timestamp_etl_gcs` watermark rewrite for the batch (K7) —
-  etl/siasus_procedimentos_ambulatoriais.py:117-464.
+  download of exactly the ledger's file name + DBC decode (S1) →
+  `transform_fact` (the full F/P/C/J chain) → bronze CSV (K1), all
+  files concurrently → one `timestamp_etl_gcs` watermark rewrite for
+  the batch (K7) — etl/siasus_procedimentos_ambulatoriais.py:117-464.
 - **EP2** (`ep2_inserir_lote`): bronze all-string CSV (S6) → typed
   cast (C20) → concurrent staging → per-file transactional JDBC commit:
   delete-conflicts + insert + single commit (K2/K3) →
@@ -47,7 +47,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from ..sinks.jdbc import commit_staged_load, stage_jdbc_load, write_jdbc_append
+from ..sinks.jdbc import commit_staged_load, write_jdbc_append
 from ..sinks.partitioned import write_bronze_csv
 from ..sinks.watermark import LEDGER_SCHEMA, read_control, touch_watermark, write_control
 from ..sources.csv_allstring import read_csv_allstring
@@ -246,8 +246,7 @@ def _ep1_body(spark: SparkSession, tipo: Tipo, arquivo: str) -> None:
     isolated plan and writes an isolated path, so many bodies run
     concurrently on one session."""
     raw = read_datasus_ftp(
-        spark, _cfg("host"), _cfg("directory"),
-        re.compile(re.escape(arquivo)), tipo.spec.raw_columns,
+        spark, _cfg("host"), _cfg("directory"), [arquivo], tipo.spec.raw_columns,
         transport_factory=_cfg("transport_factory"),
     ).fillna("")
     out = transform_fact(
@@ -258,7 +257,6 @@ def _ep1_body(spark: SparkSession, tipo: Tipo, arquivo: str) -> None:
         periods=_cfg("periods"),
         geo=_cfg("geo"),
         ftp_arquivo_nome=arquivo,
-        deterministic_ids=True,
     )
     write_bronze_csv(out, f"{_cfg('bronze_root')}/{arquivo}")
 
@@ -339,7 +337,7 @@ def ep2_inserir_lote(spark: SparkSession, rows: list[dict]) -> None:
         raw = read_csv_allstring(spark, f"{_cfg('bronze_root')}/{arquivo}")
         typed = cast_allstring_typed(raw, spec)
         staging = f"{target}_stg_{i}"
-        stage_jdbc_load(spark, typed, url, staging, column_types=coltypes)
+        write_jdbc_append(typed, url, staging, mode="overwrite", column_types=coltypes)
         return arquivo, staging, typed
 
     with ThreadPoolExecutor(max_workers=min(len(arquivos), 32)) as pool:

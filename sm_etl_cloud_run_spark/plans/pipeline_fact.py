@@ -121,7 +121,6 @@ def pipeline_fact_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         periods=periods,
         geo=geo,
         ftp_arquivo_nome="MINI2408.dbc",
-        deterministic_ids=True,
     )
     return out.select(
         "pedido_id",

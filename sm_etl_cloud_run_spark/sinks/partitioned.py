@@ -13,20 +13,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def write_bronze_csv(df: DataFrame, path: str, *, encoding: str = "UTF-8", coalesce: int | None = None) -> None:
-    """K1: bronze CSV landing (header, explicit encoding).
+def write_bronze_csv(df: DataFrame, path: str) -> None:
+    """K1: bronze CSV landing (header, UTF-8), one file per task.
 
     Booleans serialize pandas-style ('True'/'False', NULL → empty) so the
     bronze bytes match the reference's `df.to_csv` output and the stage-2
     decode (`== 'True'`, load_bd/*:128-131) reads them back faithfully —
     Spark's native CSV writer would emit lowercase 'true'.
-
-    `coalesce` caps output files for small batches; leave None at scale
-    so every task writes its own file.
     """
     bool_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.BooleanType)]
     out = df.withColumns(
         {c: F.when(F.col(c), "True").when(~F.col(c), "False") for c in bool_cols}
     )
-    out = out.coalesce(coalesce) if coalesce else out
-    out.write.mode("overwrite").option("header", True).option("encoding", encoding).csv(path)
+    out.write.mode("overwrite").option("header", True).csv(path)

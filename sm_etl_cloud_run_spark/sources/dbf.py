@@ -1,31 +1,23 @@
-"""DBC/DBF ingestion (SURVEY §2.1 S1) — distributed, dependency-free.
+"""DBC/DBF decoding (SURVEY §2.1 S1) — dependency-free.
 
 The reference FTP-downloads DATASUS `.dbc` files, decompresses to `.dbf`
 (`dbc2dbf`) and iterates records in chunks
 (utilitarios/datasus_ftp.py:142-255), reading date fields as raw strings
 (:41-46) and every value as text.
 
-Spark-native shape: `spark.read.format("binaryFile")` lists the files as
-(path, content) rows — one task per file — and `mapInPandas` parses each
-payload into all-string record batches. The chunked-generator loop of
-the reference disappears into partition parallelism; per-file decode
-cost lands on executors, not the driver.
-
 Both decode stages are implemented here from the public formats, no
 external libraries: PKWARE-DCL decompression in `sources/dbc.py`, and a
 dBase III/IV record reader below (fixed-width fields described by
 32-byte descriptors; values returned as stripped latin-1 strings, dates
-kept raw — parity with the reference's string-typed extraction).
+kept raw — parity with the reference's string-typed extraction). The
+one distributed scan that calls them, one task per file with
+all-string record batches, is `sources/datasus_ftp.read_datasus_ftp`.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Callable, Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
+from collections.abc import Iterator
 
 from .dbc import CorruptDbcError, dbc_to_dbf
 
@@ -111,36 +103,3 @@ def decode_datasus_bytes(content: bytes) -> Iterator[dict]:
         return parse_dbf_bytes(dbc_to_dbf(content))
     return parse_dbf_bytes(content)
 
-
-def read_dbf_files(
-    spark: SparkSession,
-    path_glob: str,
-    columns: list[str],
-    *,
-    decoder: Callable[[bytes], Iterator[dict]] | None = None,
-    batch_rows: int = 50_000,
-) -> DataFrame:
-    """Distributed DBC/DBF scan: one task per file, all-string output schema.
-
-    `decoder(content) -> iterator of row dicts` does the per-file parse
-    (default: the pure-Python DATASUS decoder above). Records are
-    emitted in `batch_rows` pandas batches — the Spark analog of the
-    reference's `passo` chunking, but per-task instead of global.
-    """
-    decode = decoder or decode_datasus_bytes
-    schema = T.StructType([T.StructField(c, T.StringType(), True) for c in columns])
-    binary = spark.read.format("binaryFile").load(path_glob).select("content")
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                rows: list[dict] = []
-                for rec in decode(bytes(content)):
-                    rows.append({c: (None if rec.get(c) is None else str(rec.get(c))) for c in columns})
-                    if len(rows) >= batch_rows:
-                        yield pd.DataFrame(rows, columns=columns, dtype="object")
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=columns, dtype="object")
-
-    return binary.mapInPandas(parse, schema)

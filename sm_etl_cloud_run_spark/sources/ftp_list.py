@@ -1,9 +1,7 @@
-"""FTP LIST metadata scan (SURVEY §2.1 S2/S3).
+"""FTP LIST metadata scan (SURVEY §2.1 S3).
 
 The reference parses `LIST` response lines with a regex into
-(mod-date, hour, size, name) (etl/datasus_ftp_metadados.py:93-126) and
-prefers partitioned shards (`X_1.dbc … X_N.dbc`) over the unpartitioned
-monolith when both exist (utilitarios/datasus_ftp.py:117-126).
+(mod-date, hour, size, name) (etl/datasus_ftp_metadados.py:93-126).
 
 Listing and parsing are driver-side: a LIST response has one line per
 file, ~10⁴ at DATASUS scale, so :func:`parse_list_lines` is the one
@@ -67,22 +65,3 @@ def parse_ftp_list_lines(spark: SparkSession, lines: list[str], *, prefixes: tup
         "nome string, tamanho long, timestamp_modificacao_ftp timestamp",
     )
 
-
-def prefer_partitioned(names: list[str], pattern: str | re.Pattern) -> list[str]:
-    """S2: among files matching `pattern`, if both partitioned
-    (`BASE_1.dbc`) and unpartitioned (`BASE.dbc`) forms exist, keep only
-    the partitioned shards (they supersede the monolith)."""
-    rx = re.compile(pattern) if isinstance(pattern, str) else pattern
-    matched = [n for n in names if rx.fullmatch(n) or rx.match(n)]
-    part_re = re.compile(r"^(?P<base>\w{8})_(\d+)\.dbc$", re.IGNORECASE)
-    partitioned_bases = {m.group("base").upper() for n in matched if (m := part_re.match(n))}
-    out = []
-    for n in matched:
-        stem = n.rsplit(".", 1)[0].upper()
-        if part_re.match(n):
-            out.append(n)
-        elif stem in partitioned_bases:
-            continue  # superseded by shards
-        else:
-            out.append(n)
-    return out

@@ -1,15 +1,15 @@
-"""Offline tests for the DATASUS FTP transport client (S1/S2/S3).
+"""Offline tests for the DATASUS FTP transport client (S1/S3).
 
 A canned fake implements the `ftplib.FTP` subset the client uses, so
-the whole list → prefer-partitioned → download → `.dbc` decode path
-runs end-to-end with zero sockets (reference behavior:
-utilitarios/datasus_ftp.py:77-139 listing, :142-255 download/decode).
+the LIST scan and the exact-name download → `.dbc` decode path run
+end-to-end with zero sockets (reference behavior:
+utilitarios/datasus_ftp.py:142-255 download/decode).
 """
 
 from __future__ import annotations
 
-import re
 import sys
+from ftplib import error_perm
 
 import pytest
 from dbc_fixtures import make_dbc, make_dbf
@@ -43,21 +43,23 @@ class FakeFtpSession:
             raise OSError(f"550 {path}: no such directory")
         self._cwd = path
 
-    def nlst(self) -> list[str]:
-        return sorted(self._tree[self._cwd])
-
     def retrlines(self, cmd: str, callback) -> None:
         assert cmd == "LIST"
         for name, content in sorted(self._tree[self._cwd].items()):
             callback(f"09-03-24  03:45PM      {len(content)} {name}")
 
+    def _content(self, name: str) -> bytes:
+        if name not in self._tree[self._cwd]:
+            raise error_perm(f"550 {name}: No such file or directory")
+        return self._tree[self._cwd][name]
+
     def size(self, name: str) -> int:
-        n = len(self._tree[self._cwd][name])
+        n = len(self._content(name))
         return n + 7 if self._lie else n
 
     def retrbinary(self, cmd: str, callback) -> None:
         assert cmd.startswith("RETR ")
-        content = self._tree[self._cwd][cmd[5:]]
+        content = self._content(cmd[5:])
         for i in range(0, len(content), 64):  # stream in chunks like a socket
             callback(content[i : i + 64])
 
@@ -88,34 +90,12 @@ def _client(tree=None, **kw) -> DatasusFtpClient:
     return DatasusFtpClient("ftp.datasus.gov.br", transport_factory=lambda: FakeFtpSession(tree, **kw))
 
 
-def test_list_files_exact_name():
-    assert _client().list_files(_DIR, "PAAC2408.dbc") == ["PAAC2408.dbc"]
-
-
-def test_list_files_regex_prefers_partitioned_shards():
-    got = _client().list_files(_DIR, re.compile(r"PASP2408.*\.dbc"))
-    assert got == ["PASP2408_1.dbc", "PASP2408_2.dbc"]  # monolith superseded
-
-
-def test_list_files_no_match_raises():
-    with pytest.raises(FileNotFoundError):
-        _client().list_files(_DIR, "PAXX0000.dbc")
-
-
 def test_download_roundtrip_and_size_check():
     tree = _tree()
     content = _client(tree).download(_DIR, "README.txt")
     assert content == b"not a dbc"
     with pytest.raises(CorruptDownloadError):
         _client(tree, lie_about_size=True).download(_DIR, "README.txt")
-    # size check off, or server without SIZE: both succeed
-    assert _client(tree, lie_about_size=True).download(_DIR, "README.txt", verify_size=False) == b"not a dbc"
-
-
-def test_fetch_decodes_dbc_driver_side():
-    got = dict(_client().fetch(_DIR, "PAAC2408.dbc"))
-    assert list(got) == ["PAAC2408.dbc"]
-    assert got["PAAC2408.dbc"][:1] == b"\x03"  # dbf version byte survives in dbc pre-header
 
 
 def test_list_metadata_lines_parse():
@@ -131,12 +111,11 @@ def test_read_datasus_ftp_end_to_end(spark):
         spark,
         "ftp.datasus.gov.br",
         _DIR,
-        re.compile(r"PASP2408.*\.dbc"),
+        ["PASP2408_1.dbc", "PASP2408_2.dbc"],
         ["PA_CODUNI", "PA_QTDAPR"],
         transport_factory=lambda: FakeFtpSession(tree),
     )
     got = sorted((r["PA_CODUNI"], r["PA_QTDAPR"]) for r in df.collect())
-    # shards only — the monolith row 9999999 must NOT appear
     assert got == [("1234567", "3"), ("2077485", "12"), ("7654321", "8")]
     # one task per file with no shuffle to spread the files
     assert df.rdd.getNumPartitions() == 2
@@ -149,7 +128,7 @@ def test_read_datasus_ftp_plain_dbf_payload(spark):
         spark,
         "ftp.datasus.gov.br",
         _DIR,
-        "PAXX2408.dbf",
+        ["PAXX2408.dbf"],
         ["PA_CODUNI", "PA_QTDAPR"],
         transport_factory=lambda: FakeFtpSession(tree),
     )

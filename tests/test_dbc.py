@@ -12,13 +12,11 @@ import struct
 
 import pytest
 from dbc_fixtures import Imploder, implode, make_dbc, make_dbf
+from test_datasus_ftp import FakeFtpSession
 
 from sm_etl_cloud_run_spark.sources import dbc
-from sm_etl_cloud_run_spark.sources.dbf import (
-    decode_datasus_bytes,
-    parse_dbf_bytes,
-    read_dbf_files,
-)
+from sm_etl_cloud_run_spark.sources.datasus_ftp import read_datasus_ftp
+from sm_etl_cloud_run_spark.sources.dbf import decode_datasus_bytes, parse_dbf_bytes
 
 _FIELDS = [("PA_CODUNI", "C", 7), ("PA_QTDAPR", "N", 6), ("PA_MVM", "D", 8)]
 _ROWS = [
@@ -109,11 +107,16 @@ def test_decode_datasus_autodetects_dbf_vs_dbc():
     assert list(decode_datasus_bytes(dbf)) == list(decode_datasus_bytes(make_dbc(dbf)))
 
 
-def test_read_dbf_files_end_to_end_dbc(spark, tmp_path):
+def test_read_dbf_files_end_to_end_dbc(spark):
+    """The executor-side scan decodes a `.dbc` and a plain `.dbf`
+    payload fetched over a fake FTP session into the same rows."""
     dbf = make_dbf(_FIELDS, _ROWS)
-    (tmp_path / "PASP2408.dbc").write_bytes(make_dbc(dbf))
-    (tmp_path / "PASP2409.dbf").write_bytes(dbf)
-    df = read_dbf_files(spark, str(tmp_path), ["PA_CODUNI", "PA_QTDAPR", "PA_MVM"])
+    tree = {"/d": {"PASP2408.dbc": make_dbc(dbf), "PASP2409.dbf": dbf}}
+    df = read_datasus_ftp(
+        spark, "ftp.fake", "/d", ["PASP2408.dbc", "PASP2409.dbf"],
+        ["PA_CODUNI", "PA_QTDAPR", "PA_MVM"],
+        transport_factory=lambda: FakeFtpSession(tree),
+    )
     rows = sorted(
         (r["PA_CODUNI"], r["PA_QTDAPR"], r["PA_MVM"]) for r in df.collect()
     )

@@ -4,7 +4,7 @@ Derby's driver ships inside Spark's own classpath (it backs the Hive
 metastore), so the JDBC sink/source paths that previously could only be
 argument-smoked now execute against a real database: parallel append,
 partition-parallel read, and the staged transactional load's
-delete+insert+watermark single-commit with rollback-on-failure
+delete+insert single commit with rollback-on-failure
 (reference contract: bd_utilitarios.py:85-251,
 load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:205-215).
 """
@@ -13,11 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from sm_etl_cloud_run_spark.sinks.jdbc import (
-    commit_staged_load,
-    stage_jdbc_load,
-    write_jdbc_append,
-)
+from sm_etl_cloud_run_spark.sinks.jdbc import commit_staged_load, write_jdbc_append
 from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
 
 
@@ -36,15 +32,11 @@ def _facts(spark, periodo: str, start: int, n: int):
     )
 
 
-def _staged_load(spark, df, url, target, *, delete_where,
-                 column_types, watermark_sql=None):
+def _staged_load(spark, df, url, target, *, delete_where, column_types):
     """One file's EP2 load: bootstrap the target, stage, commit."""
     write_jdbc_append(df.limit(0), url, target, column_types=column_types)
-    stage_jdbc_load(spark, df, url, f"{target}_stg", column_types=column_types)
-    commit_staged_load(
-        spark, url, target, f"{target}_stg", df.columns,
-        delete_where=delete_where, watermark_sql=watermark_sql,
-    )
+    write_jdbc_append(df, url, f"{target}_stg", mode="overwrite", column_types=column_types)
+    commit_staged_load(spark, url, target, f"{target}_stg", df.columns, delete_where=delete_where)
 
 
 def _read_all(spark, url, table="facts"):
@@ -53,7 +45,7 @@ def _read_all(spark, url, table="facts"):
 
 
 def test_append_and_partitioned_read(spark, derby_url):
-    write_jdbc_append(_facts(spark, "2024.08", 0, 40), derby_url, "facts", num_partitions=4)
+    write_jdbc_append(_facts(spark, "2024.08", 0, 40).repartition(4), derby_url, "facts")
     whole = _read_all(spark, derby_url)
     assert len(whole) == 40 and whole[0] == (0, "2024.08", 0)
     par = read_jdbc_table(
@@ -80,32 +72,18 @@ def test_staged_load_is_idempotent(spark, derby_url):
     assert len(_read_all(spark, derby_url)) == 30
 
 
-def test_staged_load_watermark_same_commit(spark, derby_url):
-    write_jdbc_append(
-        spark.createDataFrame([("facts", "2024.07")], "tabela string, periodo string"),
-        derby_url, "watermarks", column_types="tabela VARCHAR(32), periodo VARCHAR(16)",
-    )
-    _staged_load(
-        spark, _facts(spark, "2024.08", 0, 10), derby_url, "facts",
-        delete_where="\"periodo\" = '2024.08'", column_types=_TYPES,
-        watermark_sql="UPDATE watermarks SET \"periodo\" = '2024.08' WHERE \"tabela\" = 'facts'",
-    )
-    wm = read_jdbc_table(spark, derby_url, "watermarks").collect()
-    assert [(r["tabela"], r["periodo"]) for r in wm] == [("facts", "2024.08")]
-
-
 def test_staged_load_rolls_back_atomically(spark, derby_url):
     _staged_load(
         spark, _facts(spark, "2024.08", 0, 10), derby_url, "facts",
         delete_where="\"periodo\" = '2024.08'", column_types=_TYPES,
     )
     before = _read_all(spark, derby_url)
-    # watermark statement is invalid SQL → the WHOLE transaction (including
-    # the delete and the insert of the new rows) must roll back
-    with pytest.raises(Exception, match="NOSUCHTABLE|Py4JJavaError|does not exist"):
-        _staged_load(
-            spark, _facts(spark, "2024.08", 500, 7), derby_url, "facts",
-            delete_where="\"periodo\" = '2024.08'", column_types=_TYPES,
-            watermark_sql="UPDATE nosuchtable SET x = 1",
-        )
+    # staging lacks `qty`, so the INSERT..SELECT fails after the delete
+    # ran → the WHOLE transaction, delete included, must roll back
+    fresh = _facts(spark, "2024.08", 500, 7)
+    write_jdbc_append(fresh.drop("qty"), derby_url, "facts_stg", mode="overwrite",
+                      column_types=_TYPES)
+    with pytest.raises(Exception, match="qty"):
+        commit_staged_load(spark, derby_url, "facts", "facts_stg", fresh.columns,
+                           delete_where="\"periodo\" = '2024.08'")
     assert _read_all(spark, derby_url) == before

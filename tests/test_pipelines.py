@@ -92,7 +92,6 @@ def _transform(spark):
         periods=periods,
         geo=geo,
         ftp_arquivo_nome="PASP2408.dbc",
-        deterministic_ids=True,
     )
 
 
@@ -133,7 +132,7 @@ def test_pa_two_stage_roundtrip(spark, tmp_path):
     out = _transform(spark)
     bronze = str(tmp_path / "bronze")
     # K1: bronze CSV landing (all values serialized as text)
-    write_bronze_csv(out, bronze, coalesce=1)
+    write_bronze_csv(out, bronze)
 
     typed = cast_allstring_typed(read_csv_allstring(spark, bronze), PA_SPEC)
     assert typed.count() == 2
@@ -153,14 +152,15 @@ def test_pa_two_stage_roundtrip(spark, tmp_path):
     assert rows["999998"]["obito"] is False
 
 
-def test_pa_stage1_from_real_dbc_file(spark, tmp_path):
+def test_pa_stage1_from_real_dbc_file(spark):
     """EP1 parity from the wire format: the same raw chunk packed into a
-    real `.dbc` (PKWARE-compressed dBase) and scanned with
-    `read_dbf_files` yields the exact same transformed fact — including
-    deterministic row ids — as the in-memory path."""
+    real `.dbc` (PKWARE-compressed dBase) and fetched with
+    `read_datasus_ftp` over a fake FTP session yields the exact same
+    transformed fact — including row ids — as the in-memory path."""
     from dbc_fixtures import make_dbc, make_dbf
+    from test_datasus_ftp import FakeFtpSession
 
-    from sm_etl_cloud_run_spark.sources import read_dbf_files
+    from sm_etl_cloud_run_spark.sources.datasus_ftp import read_datasus_ftp
 
     cols = PA_SPEC.raw_columns
     data = [[r[c] or "" for c in cols] for r in _raw_pa(spark).collect()]
@@ -168,10 +168,13 @@ def test_pa_stage1_from_real_dbc_file(spark, tmp_path):
         (c, "C", max(1, *(len(row[i]) for row in data)))
         for i, c in enumerate(cols)
     ]
-    (tmp_path / "PASP2408.dbc").write_bytes(make_dbc(make_dbf(fields, data)))
+    tree = {"/d": {"PASP2408.dbc": make_dbc(make_dbf(fields, data))}}
 
     # DBF strips to None; normalize to '' to match the in-memory fixture
-    raw_dbc = read_dbf_files(spark, str(tmp_path / "PASP2408.dbc"), cols).fillna("")
+    raw_dbc = read_datasus_ftp(
+        spark, "ftp.fake", "/d", ["PASP2408.dbc"], cols,
+        transport_factory=lambda: FakeFtpSession(tree),
+    ).fillna("")
 
     periods, geo = _dims(spark)
     kw = dict(
@@ -181,7 +184,6 @@ def test_pa_stage1_from_real_dbc_file(spark, tmp_path):
         periods=periods,
         geo=geo,
         ftp_arquivo_nome="PASP2408.dbc",
-        deterministic_ids=True,
     )
     audit = ["criacao_data", "atualizacao_data"]  # wall-clock timestamps
     out_mem = transform_fact(_raw_pa(spark), PA_SPEC, **kw).drop(*audit)

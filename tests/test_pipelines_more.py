@@ -57,7 +57,7 @@ def test_bpa_i_flags_and_condition(spark):
         raw, BPA_I_SPEC,
         panel_ids=["355030"], panel_raw_cols=("UFMUN", "MUNPAC"),
         condition=_bpa_i_condition(),
-        ftp_arquivo_nome="BISP2408.dbc", deterministic_ids=True,
+        ftp_arquivo_nome="BISP2408.dbc",
     ).collect()
     assert len(out) == 1
     r = out[0]
@@ -79,7 +79,7 @@ def test_raas_substance_flags_and_interval(spark):
             "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815",
         },
     )
-    out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc", deterministic_ids=True).collect()
+    out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc").collect()
     r = out[0]
     assert r["usuario_abuso_substancias"] is True          # len>0
     assert r["usuario_abuso_substancias_alcool"] is True   # contains A
@@ -98,7 +98,7 @@ def test_raas_empty_substance_is_false(spark):
          "DTNASC": "19900101", "DT_MOTCOB": "20240801", "DT_INICIO": "20240801",
          "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815"},
     )
-    r = transform_fact(raw, RAAS_PS_SPEC, deterministic_ids=True).collect()[0]
+    r = transform_fact(raw, RAAS_PS_SPEC).collect()[0]
     assert r["usuario_abuso_substancias"] is False
     assert r["usuario_abuso_substancias_alcool"] is False
     assert r["permanencia_duracao"] is None
@@ -117,7 +117,7 @@ def test_aih_rd_vintage_harmonization(spark):
     raw = spark.createDataFrame(
         [tuple(base_only[c] for c in cols)], ", ".join(f"`{c}` string" for c in cols)
     )
-    out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc", deterministic_ids=True)
+    out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc")
     r = out.collect()[0]
     assert r["periodo_data_inicio"] == dt.date(2024, 8, 1)       # C12 from ano+mes
     assert "processamento_periodo_ano_inicio" not in out.columns  # sources dropped
@@ -143,7 +143,7 @@ def test_scnes_vinculos_string_surgery(spark):
             "CODUFMUN": "355030",
         },
     )
-    r = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc", deterministic_ids=True).collect()[0]
+    r = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc").collect()[0]
     assert r["estabelecimento_regiao_saude_id_sus"] == "0012"
     assert r["estabelecimento_distrito_sanitario_id_sus"] == "0007"
     assert r["estabelecimento_microrregiao_saude_id_sus"] == "035001"
@@ -161,7 +161,7 @@ def test_scnes_vinculos_invalid_roman_all_zero_path(spark):
          "TERCEIRO": "0", "VINCUL_C": "0", "VINCUL_A": "0", "VINCUL_N": "0",
          "PROF_SUS": "0", "PROFNSUS": "0", "REGISTRO": "1", "CODUFMUN": "355030"},
     )
-    r = transform_fact(raw, VINCULOS_SPEC, deterministic_ids=True).collect()[0]
+    r = transform_fact(raw, VINCULOS_SPEC).collect()[0]
     assert r["estabelecimento_regiao_saude_id_sus"] is None
 
 
@@ -175,7 +175,7 @@ def test_scnes_habilitacoes_dates(spark):
             "REGSAUDE": "IV", "NULEITOS": "12", "CODUFMUN": "355030",
         },
     )
-    r = transform_fact(raw, HABILITACOES_SPEC, deterministic_ids=True).collect()[0]
+    r = transform_fact(raw, HABILITACOES_SPEC).collect()[0]
     assert r["portaria_data"] == dt.date(2023, 3, 15)        # C11 dd/MM/yyyy
     assert r["vigencia_data_inicio"] == dt.date(2024, 1, 1)
     assert r["estabelecimento_regiao_saude_id_sus"] == "0004"  # roman IV → 4 → zfill
@@ -192,9 +192,9 @@ def test_raas_two_stage_roundtrip(spark, tmp_path):
          "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815",
          "QTDATE": "7", "QTDPCN": "2"},
     )
-    out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc", deterministic_ids=True)
+    out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc")
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze, coalesce=1)
+    write_bronze_csv(out, bronze)
     typed = _typed(spark, bronze, RAAS_PS_SPEC)
     r = typed.collect()[0]
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
@@ -222,10 +222,10 @@ def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
     out = transform_fact(
         raw, BPA_I_SPEC,
         condition=_bpa_i_condition(),
-        ftp_arquivo_nome="BISP2408.dbc", deterministic_ids=True,
+        ftp_arquivo_nome="BISP2408.dbc",
     )
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze, coalesce=1)
+    write_bronze_csv(out, bronze)
     typed = _typed(spark, bronze, BPA_I_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
@@ -254,9 +254,9 @@ def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
          "MUNIC_MOV": "355030"},
         default="1",
     )
-    out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc", deterministic_ids=True)
+    out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc")
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze, coalesce=1)
+    write_bronze_csv(out, bronze)
     typed = _typed(spark, bronze, AIH_RD_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
@@ -284,9 +284,9 @@ def test_scnes_vinculos_two_stage_roundtrip(spark, tmp_path):
          "HORAOUTR": "4", "HORAHOSP": "20", "HORA_AMB": "16",
          "CODUFMUN": "355030"},
     )
-    out = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc", deterministic_ids=True)
+    out = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc")
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze, coalesce=1)
+    write_bronze_csv(out, bronze)
     typed = _typed(spark, bronze, VINCULOS_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
@@ -308,9 +308,9 @@ def test_scnes_habilitacoes_two_stage_roundtrip(spark, tmp_path):
          "NIV_DEP": "1", "TERCEIRO": "0", "VINC_SUS": "1",
          "REGSAUDE": "IV", "NULEITOS": "12", "CODUFMUN": "355030"},
     )
-    out = transform_fact(raw, HABILITACOES_SPEC, ftp_arquivo_nome="HBSP2408.dbc", deterministic_ids=True)
+    out = transform_fact(raw, HABILITACOES_SPEC, ftp_arquivo_nome="HBSP2408.dbc")
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze, coalesce=1)
+    write_bronze_csv(out, bronze)
     typed = _typed(spark, bronze, HABILITACOES_SPEC)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]

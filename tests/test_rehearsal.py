@@ -252,18 +252,20 @@ def _tipo_dbc(tipo: str, keep: int) -> bytes:
     return make_dbc(make_dbf([(c, "C", max(1, *(len(r[i]) for r in data))) for i, c in enumerate(cols)], data))
 
 
-def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
-    """All six `.dbc` tipos go through the one lifecycle from one
-    directory: EP3 ledgers a file per tipo, the runner's EP1 and EP2 load
-    each into `<tipo>_fato` with its own spec, every typed column reads
-    back from the warehouse as its spec's type map says, and a BPA-i
-    re-delivery re-pends that file only and replaces its rows."""
-    files = {tipo: f"{tipo}SP2408.dbc" for tipo in rehearsal.TIPOS}
-    keep = {tipo: 2 for tipo in rehearsal.TIPOS}
-    tree = {_DIR: {files[t]: _tipo_dbc(t, keep[t]) for t in files}}
+def _run_jobs(control: str, tipo: str) -> None:
+    """The runner's EP1 then EP2 for every pending file of `tipo`."""
+    for acao, job in (("baixar", "ep1_baixar_lote"), ("inserir", "ep2_inserir_lote")):
+        assert runner.main([
+            "--control", control, "--tipo", tipo, "--acao", acao,
+            "--job", f"sm_etl_cloud_run_spark.pipelines.rehearsal:{job}",
+        ]) == 0
+
+
+def _configure_lifecycle(spark, tmp_path, tree, **kw) -> tuple[str, str]:
+    """Deployment config over `tree` with a Derby warehouse; returns the
+    control path and the JDBC url."""
     control = str(tmp_path / "sm_metadados_ftp")
     derby = f"jdbc:derby:{tmp_path}/wh;create=true"
-    rehearsal.CONFIG.pop("jdbc_table", None)  # each tipo loads <tipo>_fato
     rehearsal.configure(
         host="ftp.fake", directory=_DIR,
         transport_factory=lambda: FakeFtpSession(tree),
@@ -273,15 +275,22 @@ def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
             [(dt.date(2024, 8, 1), "p-2024-08-M")], "data_inicio date, id string"),
         geo=spark.createDataFrame(
             [("355030", "m-sp"), ("330455", "m-rj")], "id_sus string, id string"),
-        jdbc_url=derby, jdbc_column_types="ftp_arquivo_nome VARCHAR(64)",
+        jdbc_url=derby, jdbc_column_types="ftp_arquivo_nome VARCHAR(64)", **kw,
     )
+    return control, derby
 
-    def run(tipo):
-        for acao, job in (("baixar", "ep1_baixar_lote"), ("inserir", "ep2_inserir_lote")):
-            assert runner.main([
-                "--control", control, "--tipo", tipo, "--acao", acao,
-                "--job", f"sm_etl_cloud_run_spark.pipelines.rehearsal:{job}",
-            ]) == 0
+
+def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
+    """All six `.dbc` tipos go through the one lifecycle from one
+    directory: EP3 ledgers a file per tipo, the runner's EP1 and EP2 load
+    each into `<tipo>_fato` with its own spec, every typed column reads
+    back from the warehouse as its spec's type map says, and a BPA-i
+    re-delivery re-pends that file only and replaces its rows."""
+    files = {tipo: f"{tipo}SP2408.dbc" for tipo in rehearsal.TIPOS}
+    keep = {tipo: 2 for tipo in rehearsal.TIPOS}
+    tree = {_DIR: {files[t]: _tipo_dbc(t, keep[t]) for t in files}}
+    rehearsal.CONFIG.pop("jdbc_table", None)  # each tipo loads <tipo>_fato
+    control, derby = _configure_lifecycle(spark, tmp_path, tree)
 
     def loaded(tipo):
         return read_jdbc_table(spark, derby, f"{tipo.lower()}_fato")
@@ -292,7 +301,7 @@ def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
     ctl = rehearsal.refresh_control(spark)
     assert sorted((r["tipo"], r["arquivo"]) for r in ctl) == sorted(files.items())
     for tipo in files:
-        run(tipo)
+        _run_jobs(control, tipo)
     rows = read_control(control)
     assert all(r["timestamp_etl_gcs"] and r["timestamp_load_bd"] for r in rows)
     for tipo, entry in rehearsal.TIPOS.items():
@@ -315,9 +324,39 @@ def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
     for acao in ("baixar", "inserir"):
         pending = gate_pending_runs(read_control(control), acao)
         assert [r["arquivo"] for r in pending] == ([files["BI"]] if acao == "baixar" else [])
-    run("BI")
+    _run_jobs(control, "BI")
     for tipo in files:
         assert per_file(tipo) == {files[tipo]: keep[tipo]}, tipo
+
+
+def test_ep1_fetches_exactly_the_ledger_file(spark, tmp_path):
+    """Look-alike names beside a ledger file (`PASP2408.dbc.bak`,
+    `PASP2408.dbcx`: valid `.dbc` payloads with other rows) never enter
+    the ledger, and EP1 fetches only the row's exact file, so only its
+    rows reach the warehouse."""
+    named = "PASP2408.dbc"
+    tree = {_DIR: {named: _tipo_dbc("PA", 2), f"{named}.bak": _tipo_dbc("PA", 3),
+                   "PASP2408.dbcx": _tipo_dbc("PA", 4)}}
+    control, derby = _configure_lifecycle(spark, tmp_path, tree, jdbc_table="pa_fato")
+    assert [r["arquivo"] for r in rehearsal.refresh_control(spark)] == [named]
+    _run_jobs(control, "PA")
+    loaded = read_jdbc_table(spark, derby, "pa_fato")
+    assert {r[0]: r[1] for r in loaded.groupBy("ftp_arquivo_nome").count().collect()} == {named: 2}
+
+
+def test_ep1_fails_on_a_vanished_file(spark, tmp_path):
+    """A ledger file that has since left the FTP (here renamed to a
+    look-alike) fails EP1's batch, and no row of the batch is
+    watermarked."""
+    tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 2)}}
+    control, _ = _configure_lifecycle(spark, tmp_path, tree, jdbc_table="pa_fato")
+    rehearsal.refresh_control(spark)
+    tree[_DIR]["PASP2408.dbc.bak"] = tree[_DIR].pop("PASP2408.dbc")
+    pending = gate_pending_runs(read_control(control), "baixar", tipo="PA")
+    assert sorted(r["arquivo"] for r in pending) == ["PASP2407.dbc", "PASP2408.dbc"]
+    with pytest.raises(Exception, match="550 PASP2408.dbc: No such file"):
+        rehearsal.ep1_baixar_lote(spark, pending)
+    assert all(r["timestamp_etl_gcs"] is None for r in read_control(control))
 
 
 def test_refresh_control_survives_partial_listing(spark, tmp_path):

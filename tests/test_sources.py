@@ -1,16 +1,11 @@
-"""Source-connector tests: FTP LIST, all-string CSV, DBF scaffold."""
+"""Source-connector tests: FTP LIST, all-string CSV, JDBC, ORC."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from sm_etl_cloud_run_spark.sources import (
-    parse_ftp_list_lines,
-    prefer_partitioned,
-    read_csv_allstring,
-)
+from sm_etl_cloud_run_spark.sources import parse_ftp_list_lines, read_csv_allstring
 from sm_etl_cloud_run_spark.sources.ftp_list import parse_list_lines
-from sm_etl_cloud_run_spark.sources.dbf import read_dbf_files
 
 
 def test_parse_ftp_list_lines(spark):
@@ -45,13 +40,6 @@ def test_parse_list_lines_driver_side():
     assert len(parse_list_lines(lines)) == 4
 
 
-def test_prefer_partitioned():
-    names = ["BISP2408.dbc", "BISP2408_1.dbc", "BISP2408_2.dbc", "PASP2408.dbc"]
-    out = prefer_partitioned(names, r"^(BI|PA)SP2408.*\.dbc$")
-    assert "BISP2408.dbc" not in out
-    assert {"BISP2408_1.dbc", "BISP2408_2.dbc", "PASP2408.dbc"} <= set(out)
-
-
 def test_read_csv_allstring_and_cast(spark, tmp_path):
     p = tmp_path / "data.csv"
     p.write_text("a,b,c\n1,2.5,True\n,0.5,False\n")
@@ -62,20 +50,6 @@ def test_read_csv_allstring_and_cast(spark, tmp_path):
     assert sorted(map(tuple, df.collect()), key=lambda r: r[1]) == [
         (None, "0.5", "False"), ("1", "2.5", "True"),
     ]
-
-
-def test_read_dbf_files_with_fake_decoder(spark, tmp_path):
-    (tmp_path / "x.dbf").write_bytes(b"AB")
-    (tmp_path / "y.dbf").write_bytes(b"CD")
-
-    def decoder(content: bytes):
-        for i in range(2):
-            yield {"COL1": f"{content.decode()}-{i}", "COL2": i}
-
-    df = read_dbf_files(spark, str(tmp_path), ["COL1", "COL2"], decoder=decoder)
-    rows = sorted((r["COL1"], r["COL2"]) for r in df.collect())
-    assert rows == [("AB-0", "0"), ("AB-1", "1"), ("CD-0", "0"), ("CD-1", "1")]
-    assert all(f.dataType.simpleString() == "string" for f in df.schema.fields)
 
 
 def test_read_jdbc_table_argument_contract(spark):

@@ -3,12 +3,14 @@
 A name-reference reachability scan over the AST. The roots are
 `__spark_entry__.py`, `bench.py`, `perfbench/`, `tools/`,
 `runner.main`, every `@register`ed query and the module-level code
-of the package (imports and `__all__` aside). A
-definition is reached when a reached body names it: as a bare name,
-an attribute, an imported name, or, in the root scripts, a word of a
-string (`runner --job module:function`). Names match across modules,
-so the scan can only over-approximate what is reached. Docstrings and
-comments never count.
+of the package (imports and `__all__` aside). The definitions are the
+package's top-level functions, classes and assignments, and the public
+methods and properties of its classes: a method is reached by its own
+name, not by its class's. A definition is reached when a reached body
+names it: as a bare name, an attribute, an imported name, or, in the
+root scripts, a word of a string (`runner --job module:function`).
+Names match across modules, so the scan can only over-approximate what
+is reached. Docstrings and comments never count.
 
 What stays unreached is reached only from `tests/`, or from nothing,
 and must be listed below with its reason. A new test-only definition
@@ -32,8 +34,6 @@ PKG = REPO / "sm_etl_cloud_run_spark"
 _KEPT = {
     # the expression form the numpy SemDeDup kernel is tested against
     "operators.similarity.semantic_dedup",
-    # the executor-side .dbc scan; ROADMAP item 4 decides it with EP1's decode
-    "sources.dbf.read_dbf_files",
     # the mapInPandas resize operator and its schema; ROADMAP item 8
     "operators.multimodal.resize_images",
     "operators.multimodal.RESIZED_SCHEMA",
@@ -42,8 +42,20 @@ _KEPT = {
 _WORD = re.compile(r"[A-Za-z_]\w*")
 
 
+def _docstrings(tree: ast.AST) -> set[int]:
+    """Ids of the docstring constants of every module, class and
+    function in `tree`."""
+    return {
+        id(n.body[0].value) for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and n.body and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant) and isinstance(n.body[0].value.value, str)
+    }
+
+
 def _names(node: ast.AST, *, strings: bool = False) -> set[str]:
     out: set[str] = set()
+    docs = _docstrings(node) if strings else set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             out.add(n.id)
@@ -51,9 +63,16 @@ def _names(node: ast.AST, *, strings: bool = False) -> set[str]:
             out.add(n.attr)
         elif isinstance(n, ast.ImportFrom):
             out.update(a.name for a in n.names)
-        elif strings and isinstance(n, ast.Constant) and isinstance(n.value, str):
+        elif (strings and isinstance(n, ast.Constant) and isinstance(n.value, str)
+              and id(n) not in docs):
             out.update(_WORD.findall(n.value))
     return out
+
+
+def _public_method(node: ast.AST) -> bool:
+    """A public method or property of a class body: reached on its own,
+    by its name, not by the class's."""
+    return isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_")
 
 
 def _scan() -> tuple[dict[str, set[str]], dict[str, set[str]], set[str]]:
@@ -66,7 +85,16 @@ def _scan() -> tuple[dict[str, set[str]], dict[str, set[str]], set[str]]:
         mod = ".".join(f.relative_to(PKG).with_suffix("").parts)
         mod = mod.removesuffix(".__init__").removesuffix("__init__")
         for st in ast.parse(f.read_text()).body:
-            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            if isinstance(st, ast.ClassDef):
+                targets, used = [st.name], set()
+                for part in (*st.bases, *st.keywords, *st.decorator_list, *st.body):
+                    if _public_method(part):
+                        q = f"{mod}.{st.name}.{part.name}"
+                        defs[q] = _names(part)
+                        by_name.setdefault(part.name, set()).add(q)
+                    else:
+                        used |= _names(part)
+            elif isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 targets, used = [st.name], _names(st)
                 if any("register" in _names(d) for d in st.decorator_list):
                     roots.add(st.name)
