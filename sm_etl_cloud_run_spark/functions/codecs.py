@@ -145,8 +145,8 @@ def decode_bmp_batch(payloads) -> np.ndarray:
 def resize_bmp(payload: bytes, w: int, h: int) -> bytes:
     """Nearest-neighbor resize of a 24-bit BMP, re-encoded as BMP.
 
-    The real `resize_fn` for `operators.multimodal.resize_images` —
-    pure numpy index math, no codec libraries.
+    Pure numpy index math, no codec libraries; the resize QA query
+    (`plans/vector.multimodal_resize_qa`) runs it executor-side.
     """
     src = decode_bmp(payload)
     sh, sw, _ = src.shape

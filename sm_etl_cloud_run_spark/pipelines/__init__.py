@@ -3,10 +3,12 @@ reference's `.dbc` fact chains (SIASUS PA, BPA-i and RAAS-PS, SIHSUS
 AIH-RD, SCNES vínculos and habilitações).
 
 ``base`` holds the generic two-stage machinery (the stage-1 transform
-and the stage-2 typed cast); each sibling module contributes a
-:class:`FactSpec`, plus its condition predicate where the source has
-one. ``rehearsal`` wires the watermark-gated lifecycle jobs, EP3 (the
-control-table refresh), EP1 and EP2, from one table keyed by tipo.
+and the stage-2 typed cast, whose types derive from the spec); each
+sibling module contributes a :class:`FactSpec`, the one description of
+its source: raw schema, panel columns, condition, stage-1 rules and
+numeric columns. ``rehearsal`` wires the watermark-gated lifecycle
+jobs, EP3 (the control-table refresh), EP1 and EP2, from one table
+mapping each tipo to its spec.
 """
 
 from .base import FactSpec, spark_type_map, transform_fact  # noqa: F401

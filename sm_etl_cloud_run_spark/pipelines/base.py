@@ -10,7 +10,9 @@ the all-string bronze CSV and forces types
 
 Here the per-source differences are DATA (a :class:`FactSpec`), and the
 chain is ONE Catalyst pipeline — every rule a column expression, fused
-by whole-stage codegen into a single pass over the scan.
+by whole-stage codegen into a single pass over the scan. The spec is
+also the second stage's type map: the rules say which columns become
+dates and booleans, so a spec declares only its numeric columns.
 
 Scale notes: the only joins are broadcast lookups against small dims;
 the panel filter is an `isin` against a parameter-sized id list (hash
@@ -20,7 +22,7 @@ narrow. One 100 TB scan in, one write out, zero fact-side shuffles.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
@@ -31,23 +33,13 @@ from ..functions.ids import deterministic_row_id
 from ..operators import filters, joins
 from ..operators.projections import normalize_headers, rename_map
 
-# pandas dtype (reference TIPOS_* maps) → Spark DDL type
-_PANDAS_TO_SPARK = {
-    "object": "string",
-    "Int64": "long",
-    "int64": "long",
-    "Float64": "double",
-    "float64": "double",
-    "bool": "boolean",
-    "datetime64[ns]": "timestamp",
-}
-
 
 @dataclass(frozen=True)
 class FactSpec:
-    """Declarative description of one DATASUS-style fact source."""
+    """Declarative description of one DATASUS-style fact source: its
+    filters, its stage-1 rules and its numeric columns. Every other
+    stage-2 type follows from the rules (:func:`spark_type_map`)."""
 
-    name: str
     rename: Mapping[str, str]  # raw → canonical (P1); keys define the raw schema
     yyyymm_dates: tuple[str, ...] = ()  # C9 (canonical names)
     yyyymmdd_dates: tuple[str, ...] = ()  # C10
@@ -69,8 +61,9 @@ class FactSpec:
     interval_text_cols: tuple[str, ...] = ()  # C16: int-string day count → 'N days'
     period_date_col: str = "realizacao_periodo_data_inicio"  # J1 lookup key
     geo_key_col: str = "unidade_geografica_id_sus"  # J2 lookup key
-    type_map: Mapping[str, str] = field(default_factory=dict)  # canonical → pandas dtype (stage 2)
-    non_null_cols: tuple[str, ...] = ()  # A4 validation
+    numeric: Mapping[str, str] = field(default_factory=dict)  # C20: canonical → 'long'/'double'
+    panel_raw_cols: tuple[str, ...] = ()  # F1 panel columns; none → no panel filter
+    condition: Callable[[], Column] | None = None  # F2 predicate over raw columns
 
     @property
     def raw_columns(self) -> list[str]:
@@ -82,15 +75,15 @@ def transform_fact(
     spec: FactSpec,
     *,
     panel_ids: Sequence[str] | None = None,
-    panel_raw_cols: Sequence[str] = (),
-    condition: Column | None = None,
     periods: DataFrame | None = None,
     geo: DataFrame | None = None,
     ftp_arquivo_nome: str = "",
 ) -> DataFrame:
     """Stage-1 transform: all-string raw chunk → cleaned, enriched fact.
 
-    `periods` must carry (data_inicio date, id); `geo` (id_sus, id).
+    The spec's panel filter applies when `panel_ids` is given (they are
+    deployment config), its condition always. `periods` must carry
+    (data_inicio date, id); `geo` (id_sus, id).
     The row id derives from the row's content (P9), not the reference's
     random UUIDv7. Pandas-coerce parity (invalid date/number → NULL)
     needs ANSI off: the session must carry the engine's conventions
@@ -98,17 +91,17 @@ def transform_fact(
     """
     df = raw
 
-    # F1 — panel membership on the raw ids (OR across the given columns).
-    if panel_ids is not None and panel_raw_cols:
+    # F1 — panel membership on the raw ids (OR across the spec's columns).
+    if panel_ids is not None and spec.panel_raw_cols:
         ids = list(panel_ids)
-        cond = F.col(panel_raw_cols[0]).isin(ids)
-        for c in panel_raw_cols[1:]:
+        cond = F.col(spec.panel_raw_cols[0]).isin(ids)
+        for c in spec.panel_raw_cols[1:]:
             cond = cond | F.col(c).isin(ids)
         df = df.where(cond)
 
     # F2 — source-specific composite condition over raw columns.
-    if condition is not None:
-        df = df.where(condition)
+    if spec.condition is not None:
+        df = df.where(spec.condition())
 
     # P4 — vintage harmonization: absent optional raw columns appear empty.
     if spec.optional_raw:
@@ -138,9 +131,7 @@ def transform_fact(
     df = df.withColumns({c: cleaning.zfill(F.col(c), w) for c, w in spec.zfill_cols.items()})
 
     # '' → NULL on every remaining string column (reference .replace).
-    date_cols = set(spec.yyyymm_dates) | set(spec.yyyymmdd_dates) | set(spec.ddmmyyyy_dates)
-    if spec.make_date_from:
-        date_cols.add(spec.make_date_from[2])
+    date_cols = {c for c, t in spark_type_map(spec).items() if t == "timestamp"}
     df = df.withColumns(
         {c: cleaning.empty_to_null(F.col(c)) for c in df.columns if c not in date_cols}
     )
@@ -216,8 +207,35 @@ def transform_fact(
     )
 
 
+# columns every fact gains after its rules (P9, J1, J2, P3)
+_ADDED_COLS = ("id", "periodo_id", "unidade_geografica_id",
+               "criacao_data", "atualizacao_data", "ftp_arquivo_nome")
+
+
 def spark_type_map(spec: FactSpec) -> dict[str, str]:
-    return {c: _PANDAS_TO_SPARK[t] for c, t in spec.type_map.items()}
+    """Stage-2 Spark type of every output column, derived from the
+    spec's stage-1 rules: the dates they parse are `timestamp`, the
+    flags they decode `boolean`, the declared numerics their type, and
+    the rest (codes, split parts, ids, provenance) `string`. This is
+    the reference's per-source `TIPOS_*` map (load_bd/*_load_bd.py)
+    without a second copy of each column's type."""
+    stamps = {*spec.yyyymm_dates, *spec.yyyymmdd_dates, *spec.ddmmyyyy_dates,
+              "criacao_data", "atualizacao_data"}
+    flags = [new for letters in spec.contains_flags.values() for new in letters.values()]
+    bools = {*spec.bool01, *spec.flag_true, *spec.nonempty_flags, *flags}
+    dropped = set(spec.split3)
+    made = []
+    if spec.make_date_from:
+        ano, mes, dest = spec.make_date_from
+        dropped |= {ano, mes}
+        stamps.add(dest)
+        made.append(dest)
+    cols = [c for c in spec.rename.values() if c not in dropped]
+    cols += [*made, *flags, *(c for parts in spec.split3.values() for c in parts), *_ADDED_COLS]
+    return {
+        c: "timestamp" if c in stamps else "boolean" if c in bools else spec.numeric.get(c, "string")
+        for c in cols
+    }
 
 
 def cast_allstring_typed(raw: DataFrame, spec: FactSpec) -> DataFrame:

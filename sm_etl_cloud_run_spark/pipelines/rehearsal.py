@@ -8,9 +8,10 @@ test, the real DATASUS FTP plus Postgres in production — the jobs
 themselves don't change.
 
 One table, :data:`TIPOS`, drives all three jobs. It is keyed by tipo,
-the DATASUS filename prefix, and holds each source's `FactSpec`, panel
-columns and condition; the one filename contract (:data:`_NAME`) is
-built from its keys and yields a file's tipo.
+the DATASUS filename prefix, and maps each to its source's `FactSpec`
+(which carries the panel columns and condition); the one filename
+contract (:data:`_NAME`) is built from its keys and yields a file's
+tipo.
 
 - **EP3** (`refresh_control`): FTP LIST scan of every tipo in the
   directory (S3) → filename parse (P8) → 13-month retention per tipo
@@ -37,15 +38,12 @@ config surface.
 
 from __future__ import annotations
 
-import functools
 import os
 import re
-from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..sinks.jdbc import commit_staged_load, write_jdbc_append
 from ..sinks.partitioned import write_bronze_csv
@@ -56,7 +54,7 @@ from ..sources.ftp_list import parse_list_lines
 from .base import FactSpec, cast_allstring_typed, transform_fact
 from .scnes import HABILITACOES_SPEC, VINCULOS_SPEC
 from .siasus_bpa_i import BPA_I_SPEC
-from .siasus_pa import PA_SPEC, condicao_saude_mental
+from .siasus_pa import PA_SPEC
 from .siasus_raas import RAAS_PS_SPEC
 from .sihsus_aih_rd import AIH_RD_SPEC
 
@@ -90,29 +88,17 @@ def _cfg(key: str) -> Any:
 # The per-tipo table
 # ---------------------------------------------------------------------------
 
-@dataclass(frozen=True)
-class Tipo:
-    """What the lifecycle needs to know about one `.dbc` source."""
-
-    spec: FactSpec
-    panel_raw_cols: tuple[str, ...] = ()  # F1 panel columns; none → no panel filter
-    condition: Callable[[], Column] | None = None  # F2 predicate over raw columns
-
-
-# Keyed by the DATASUS filename prefix. RAAS-PS is psychosocial by
-# construction (no panel or condition, siasus_raas.py); SCNES filters on
-# its one municipality column (CODUFMUN) and keeps every row otherwise;
-# no panel column is recorded for RD.
-TIPOS: dict[str, Tipo] = {
-    "PA": Tipo(PA_SPEC, ("PA_UFMUN", "PA_MUNPCN"), condicao_saude_mental),
-    "BI": Tipo(BPA_I_SPEC, ("UFMUN", "MUNPAC"), functools.partial(
-        condicao_saude_mental,
-        tpups="TPUPS", proc="PROC_ID", cid="CIDPRI", cbo="CBOPROF", catend="CATEND",
-    )),
-    "PS": Tipo(RAAS_PS_SPEC),
-    "RD": Tipo(AIH_RD_SPEC),
-    "PF": Tipo(VINCULOS_SPEC, ("CODUFMUN",)),
-    "HB": Tipo(HABILITACOES_SPEC, ("CODUFMUN",)),
+# Keyed by the DATASUS filename prefix. Each spec carries its panel
+# columns and condition: PA and BI filter on both, RAAS-PS on neither
+# (psychosocial by construction, siasus_raas.py), SCNES on its one
+# municipality column (CODUFMUN) only; no panel column is recorded for RD.
+TIPOS: dict[str, FactSpec] = {
+    "PA": PA_SPEC,
+    "BI": BPA_I_SPEC,
+    "PS": RAAS_PS_SPEC,
+    "RD": AIH_RD_SPEC,
+    "PF": VINCULOS_SPEC,
+    "HB": HABILITACOES_SPEC,
 }
 
 # The one filename contract: (tipo)(UF)(yy)(mm), an optional shard
@@ -240,20 +226,18 @@ def _validated_batch(rows: list[dict]) -> tuple[str, list[str]]:
 # EP1 — stage-1 ETL for the pending control rows
 # ---------------------------------------------------------------------------
 
-def _ep1_body(spark: SparkSession, tipo: Tipo, arquivo: str) -> None:
+def _ep1_body(spark: SparkSession, spec: FactSpec, arquivo: str) -> None:
     """EP1 minus the watermark: download + decode + transform one file
     to its bronze directory. Thread-safe — everything here builds an
     isolated plan and writes an isolated path, so many bodies run
     concurrently on one session."""
     raw = read_datasus_ftp(
-        spark, _cfg("host"), _cfg("directory"), [arquivo], tipo.spec.raw_columns,
+        spark, _cfg("host"), _cfg("directory"), [arquivo], spec.raw_columns,
         transport_factory=_cfg("transport_factory"),
     ).fillna("")
     out = transform_fact(
-        raw, tipo.spec,
+        raw, spec,
         panel_ids=_cfg("panel_ids"),
-        panel_raw_cols=tipo.panel_raw_cols,
-        condition=tipo.condition() if tipo.condition else None,
         periods=_cfg("periods"),
         geo=_cfg("geo"),
         ftp_arquivo_nome=arquivo,
@@ -283,10 +267,10 @@ def ep1_baixar_lote(spark: SparkSession, rows: list[dict]) -> None:
     tipo, arquivos = _validated_batch(rows)
     if not arquivos:
         return
-    entry = TIPOS[tipo]
+    spec = TIPOS[tipo]
     with ThreadPoolExecutor(max_workers=min(len(arquivos), 32)) as pool:
         # list() re-raises the first body failure before the watermark
-        list(pool.map(lambda a: _ep1_body(spark, entry, a), arquivos))
+        list(pool.map(lambda a: _ep1_body(spark, spec, a), arquivos))
     touch_watermark(
         _cfg("control_path"), {"tipo": [tipo], "arquivo": arquivos}, "timestamp_etl_gcs",
     )
@@ -325,7 +309,7 @@ def ep2_inserir_lote(spark: SparkSession, rows: list[dict]) -> None:
     tipo, arquivos = _validated_batch(rows)
     if not arquivos:
         return
-    spec = TIPOS[tipo].spec
+    spec = TIPOS[tipo]
     target = CONFIG.get("jdbc_table", f"{tipo.lower()}_fato")
     if not target.lower().startswith(f"{tipo.lower()}_fato"):
         raise ValueError(f"jdbc_table {target!r} is not a {tipo} table; refusing to load into it")

@@ -90,58 +90,7 @@ _ZFILL_SHARED = {
 }
 
 
-def _types_vinculos() -> dict[str, str]:
-    t: dict[str, str] = {v: "object" for v in _RENAME_VINCULOS.values()}
-    t.update(
-        {
-            "estabelecimento_mantido": "bool",
-            "estabelecimento_terceiro": "bool",
-            "contratado": "bool",
-            "autonomo": "bool",
-            "sem_vinculo_definido": "bool",
-            "atendimento_sus": "bool",
-            "atendimento_nao_sus": "bool",
-            "periodo_data_inicio": "datetime64[ns]",
-            "atendimento_carga_outras": "Int64",
-            "atendimento_carga_hospitalar": "Int64",
-            "atendimento_carga_ambulatorial": "Int64",
-            "id": "object",
-            "periodo_id": "object",
-            "unidade_geografica_id": "object",
-            "criacao_data": "datetime64[ns]",
-            "atualizacao_data": "datetime64[ns]",
-            "ftp_arquivo_nome": "object",
-        }
-    )
-    return t
-
-
-def _types_habilitacoes() -> dict[str, str]:
-    t: dict[str, str] = {v: "object" for v in _RENAME_HABILITACOES.values()}
-    t.update(
-        {
-            "estabelecimento_mantido": "bool",
-            "estabelecimento_terceiro": "bool",
-            "atendimento_sus": "bool",
-            "periodo_data_inicio": "datetime64[ns]",
-            "vigencia_data_inicio": "datetime64[ns]",
-            "vigencia_data_fim": "datetime64[ns]",
-            "portaria_data": "datetime64[ns]",
-            "portaria_periodo_data_inicio": "datetime64[ns]",
-            "leitos_quantidade": "Int64",
-            "id": "object",
-            "periodo_id": "object",
-            "unidade_geografica_id": "object",
-            "criacao_data": "datetime64[ns]",
-            "atualizacao_data": "datetime64[ns]",
-            "ftp_arquivo_nome": "object",
-        }
-    )
-    return t
-
-
 VINCULOS_SPEC = FactSpec(
-    name="scnes_vinculos",
     rename=_RENAME_VINCULOS,
     yyyymm_dates=("periodo_data_inicio",),
     roman_cols=("estabelecimento_regiao_saude_id_sus",),
@@ -159,12 +108,13 @@ VINCULOS_SPEC = FactSpec(
     ),
     period_date_col="periodo_data_inicio",
     geo_key_col="estabelecimento_municipio_id_sus",
-    type_map=_types_vinculos(),
-    non_null_cols=("periodo_data_inicio",),
+    # load_bd/scnes_vinculos_load_bd.py:28-77
+    numeric=dict.fromkeys(("atendimento_carga_outras", "atendimento_carga_hospitalar",
+                           "atendimento_carga_ambulatorial"), "long"),
+    panel_raw_cols=("CODUFMUN",),
 )
 
 HABILITACOES_SPEC = FactSpec(
-    name="scnes_habilitacoes",
     rename=_RENAME_HABILITACOES,
     yyyymm_dates=(
         "periodo_data_inicio",
@@ -181,6 +131,6 @@ HABILITACOES_SPEC = FactSpec(
     bool01=("estabelecimento_terceiro", "atendimento_sus"),
     period_date_col="periodo_data_inicio",
     geo_key_col="estabelecimento_municipio_id_sus",
-    type_map=_types_habilitacoes(),
-    non_null_cols=("periodo_data_inicio",),
+    numeric={"leitos_quantidade": "long"},  # load_bd/scnes_habilitacoes_load_bd.py:29-70
+    panel_raw_cols=("CODUFMUN",),
 )

@@ -4,13 +4,15 @@ Schema/behavior re-expressed from the reference
 (etl/siasus_bpa_individualizado.py:36-85 map, :160-260 chain;
 load_bd/siasus_bpa_individualizado_load_bd.py:28-73 types). The
 condition (utilitarios/config_painel_sm.py:69) is
-`siasus_pa.condicao_saude_mental` over the BPA-i raw names; the
-lifecycle's tipo table (`rehearsal.TIPOS["BI"]`) binds them.
+`siasus_pa.condicao_saude_mental` bound to the BPA-i raw names.
 """
 
 from __future__ import annotations
 
+import functools
+
 from .base import FactSpec
+from .siasus_pa import condicao_saude_mental
 
 _RENAME = {
     "CODUNI": "estabelecimento_id_scnes",
@@ -52,34 +54,7 @@ _RENAME = {
 }
 
 
-def _types() -> dict[str, str]:
-    t: dict[str, str] = {v: "object" for v in _RENAME.values()}
-    t.update(
-        {
-            "estabelecimento_mantido": "bool",
-            "atendimento_residencia_ufs_distintas": "bool",
-            "atendimento_residencia_municipios_distintos": "bool",
-            "processamento_periodo_data_inicio": "datetime64[ns]",
-            "realizacao_periodo_data_inicio": "datetime64[ns]",
-            "usuario_nascimento_data": "datetime64[ns]",
-            "usuario_idade": "Int64",
-            "quantidade_apresentada": "Int64",
-            "quantidade_aprovada": "Int64",
-            "valor_apresentado": "Float64",
-            "valor_aprovado": "Float64",
-            "id": "object",
-            "periodo_id": "object",
-            "unidade_geografica_id": "object",
-            "criacao_data": "datetime64[ns]",
-            "atualizacao_data": "datetime64[ns]",
-            "ftp_arquivo_nome": "object",
-        }
-    )
-    return t
-
-
 BPA_I_SPEC = FactSpec(
-    name="siasus_bpa_i",
     rename=_RENAME,
     yyyymm_dates=("realizacao_periodo_data_inicio", "processamento_periodo_data_inicio"),
     yyyymmdd_dates=("usuario_nascimento_data",),
@@ -98,6 +73,14 @@ BPA_I_SPEC = FactSpec(
     },
     period_date_col="realizacao_periodo_data_inicio",
     geo_key_col="unidade_geografica_id_sus",
-    type_map=_types(),
-    non_null_cols=("quantidade_apresentada", "quantidade_aprovada", "realizacao_periodo_data_inicio"),
+    # load_bd/siasus_bpa_individualizado_load_bd.py:28-73
+    numeric={
+        **dict.fromkeys(("usuario_idade", "quantidade_apresentada", "quantidade_aprovada"), "long"),
+        **dict.fromkeys(("valor_apresentado", "valor_aprovado"), "double"),
+    },
+    panel_raw_cols=("UFMUN", "MUNPAC"),
+    condition=functools.partial(
+        condicao_saude_mental,
+        tpups="TPUPS", proc="PROC_ID", cid="CIDPRI", cbo="CBOPROF", catend="CATEND",
+    ),
 )

@@ -104,51 +104,7 @@ def condicao_saude_mental(
     )
 
 
-def _types() -> dict[str, str]:
-    # load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:28-98
-    t: dict[str, str] = {v: "object" for v in _RENAME.values()}
-    t.update({c: "bool" for c in _OUTCOME_FLAGS})
-    t.update(
-        {
-            "estabelecimento_mantido": "bool",
-            "atendimento_residencia_ufs_distintas": "bool",
-            "atendimento_residencia_municipios_distintos": "bool",
-            "processamento_periodo_data_inicio": "datetime64[ns]",
-            "realizacao_periodo_data_inicio": "datetime64[ns]",
-            "usuario_idade": "Int64",
-            "procedimento_idade_minima": "Int64",
-            "procedimento_idade_maxima": "Int64",
-            "quantidade_apresentada": "Int64",
-            "quantidade_aprovada": "Int64",
-            "valor_apresentado": "Float64",
-            "valor_aprovado": "Float64",
-            "procedimento_valor_diferenca_sigtap": "Float64",
-            "procedimento_valor_vpa": "Float64",
-            "procedimento_valor_sigtap": "Float64",
-            "complemento_valor_federal": "Float64",
-            "complemento_valor_local": "Float64",
-            "incremento_valor": "Float64",
-        }
-    )
-    # the split replaces the source column with two derived codes
-    del t["servico_especializado_id_scnes"]
-    t.update(
-        {
-            "servico_id_sigtap": "object",
-            "servico_classificacao_id_sigtap": "object",
-            "id": "object",
-            "periodo_id": "object",
-            "unidade_geografica_id": "object",
-            "criacao_data": "datetime64[ns]",
-            "atualizacao_data": "datetime64[ns]",
-            "ftp_arquivo_nome": "object",
-        }
-    )
-    return t
-
-
 PA_SPEC = FactSpec(
-    name="siasus_pa",
     rename=_RENAME,
     yyyymm_dates=("realizacao_periodo_data_inicio", "processamento_periodo_data_inicio"),
     zeros_to_null=(
@@ -188,10 +144,15 @@ PA_SPEC = FactSpec(
     split3={"servico_especializado_id_scnes": ("servico_id_sigtap", "servico_classificacao_id_sigtap")},
     period_date_col="realizacao_periodo_data_inicio",
     geo_key_col="unidade_geografica_id_sus",
-    type_map=_types(),
-    non_null_cols=(
-        "quantidade_apresentada",
-        "quantidade_aprovada",
-        "realizacao_periodo_data_inicio",
-    ),
+    # load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:28-98
+    numeric={
+        **dict.fromkeys(("usuario_idade", "procedimento_idade_minima", "procedimento_idade_maxima",
+                         "quantidade_apresentada", "quantidade_aprovada"), "long"),
+        **dict.fromkeys(("valor_apresentado", "valor_aprovado", "procedimento_valor_diferenca_sigtap",
+                         "procedimento_valor_vpa", "procedimento_valor_sigtap",
+                         "complemento_valor_federal", "complemento_valor_local",
+                         "incremento_valor"), "double"),
+    },
+    panel_raw_cols=("PA_UFMUN", "PA_MUNPCN"),
+    condition=condicao_saude_mental,
 )

@@ -59,45 +59,7 @@ _RENAME = {
 }
 
 
-def _types() -> dict[str, str]:
-    t: dict[str, str] = {v: "object" for v in _RENAME.values()}
-    t.update(
-        {
-            "estabelecimento_mantido": "bool",
-            "esf_cobertura": "bool",
-            "usuario_situacao_rua": "bool",
-            "usuario_abuso_substancias": "bool",
-            "usuario_abuso_substancias_alcool": "bool",
-            "usuario_abuso_substancias_crack": "bool",
-            "usuario_abuso_substancias_outras": "bool",
-            "processamento_periodo_data_inicio": "datetime64[ns]",
-            "realizacao_periodo_data_inicio": "datetime64[ns]",
-            "usuario_nascimento_data": "datetime64[ns]",
-            "desfecho_data": "datetime64[ns]",
-            "raas_data_inicio": "datetime64[ns]",
-            "raas_data_fim": "datetime64[ns]",
-            "data_inicio": "datetime64[ns]",
-            "data_fim": "datetime64[ns]",
-            "usuario_idade": "Int64",
-            "quantidade_apresentada": "Int64",
-            "quantidade_aprovada": "Int64",
-            "quantidade_atendimentos": "Int64",
-            "quantidade_usuarios": "Int64",
-            # interval column kept as text ('N days') for CSV fidelity
-            "permanencia_duracao": "object",
-            "id": "object",
-            "periodo_id": "object",
-            "unidade_geografica_id": "object",
-            "criacao_data": "datetime64[ns]",
-            "atualizacao_data": "datetime64[ns]",
-            "ftp_arquivo_nome": "object",
-        }
-    )
-    return t
-
-
 RAAS_PS_SPEC = FactSpec(
-    name="siasus_raas_ps",
     rename=_RENAME,
     yyyymm_dates=("realizacao_periodo_data_inicio", "processamento_periodo_data_inicio"),
     yyyymmdd_dates=(
@@ -124,6 +86,8 @@ RAAS_PS_SPEC = FactSpec(
     interval_text_cols=("permanencia_duracao",),
     period_date_col="realizacao_periodo_data_inicio",
     geo_key_col="unidade_geografica_id_sus",
-    type_map=_types(),
-    non_null_cols=("quantidade_apresentada", "quantidade_aprovada", "realizacao_periodo_data_inicio"),
+    # load_bd/siasus_raas_ps_load_bd.py:29-89; the interval column stays
+    # text ('N days', C16) for CSV fidelity
+    numeric=dict.fromkeys(("usuario_idade", "quantidade_apresentada", "quantidade_aprovada",
+                           "quantidade_atendimentos", "quantidade_usuarios"), "long"),
 )

@@ -107,52 +107,7 @@ _RENAME_ADICIONAIS = {
 _RENAME = {**_RENAME_BASE, **_RENAME_ADICIONAIS}
 
 
-def _types() -> dict[str, str]:
-    t: dict[str, str] = {v: "object" for v in _RENAME.values()}
-    del t["processamento_periodo_ano_inicio"]
-    del t["processamento_periodo_mes_inicio"]
-    t.update(
-        {
-            "periodo_data_inicio": "datetime64[ns]",
-            "usuario_nascimento_data": "datetime64[ns]",
-            "aih_data_inicio": "datetime64[ns]",
-            "aih_data_fim": "datetime64[ns]",
-            "autorizacao_gestor_data": "datetime64[ns]",
-            "exame_vdrl": "bool",
-            "obito": "bool",
-            "usuario_homonimo": "bool",
-            "gestacao_risco": "bool",
-            "infeccao_hospitalar": "bool",
-            "usuario_filhos_quantidade": "Int64",
-            # numeric measures (load_bd/sihsus_aih_rd_load_bd.py:41-45,50-52,
-            # 64-65,100-104); VAL_SH/VAL_SP deliberately stay object there
-            "uti_diarias": "int64",
-            "unidade_intermediaria_diarias": "int64",
-            "acompanhante_diarias": "int64",
-            "diarias": "int64",
-            "usuario_idade": "int64",
-            "permanencia_duracao": "int64",
-            "valor_total": "float64",
-            "valor_uti": "float64",
-            "valor_total_dolar": "float64",
-            "valor_servicos_hospitalares_complemento_federal": "float64",
-            "valor_servicos_profissionais_complemento_federal": "float64",
-            "valor_servicos_hospitalares_complemento_local": "float64",
-            "valor_servicos_profissionais_complemento_local": "float64",
-            "valor_unidade_neonatal": "float64",
-            "id": "object",
-            "periodo_id": "object",
-            "unidade_geografica_id": "object",
-            "criacao_data": "datetime64[ns]",
-            "atualizacao_data": "datetime64[ns]",
-            "ftp_arquivo_nome": "object",
-        }
-    )
-    return t
-
-
 AIH_RD_SPEC = FactSpec(
-    name="sihsus_aih_rd",
     rename=_RENAME,
     optional_raw=tuple(_RENAME_ADICIONAIS),  # P4: the vintage-dependent block
     make_date_from=(
@@ -189,9 +144,22 @@ AIH_RD_SPEC = FactSpec(
         "usuario_etnia_id_sus",
         *(f"condicao_secundaria_{i}_tipo_id_sihsus" for i in range(1, 10)),
     ),
-    bool01=("obito", "exame_vdrl", "usuario_homonimo", "gestacao_risco"),
+    # INFEHOSP takes its siblings' '0'/'1' decode: the load types it bool
+    # (load_bd/sihsus_aih_rd_load_bd.py), so it must reach bronze as one
+    bool01=("obito", "exame_vdrl", "usuario_homonimo", "gestacao_risco", "infeccao_hospitalar"),
     period_date_col="periodo_data_inicio",
     geo_key_col="unidade_geografica_id_sus",
-    type_map=_types(),
-    non_null_cols=("periodo_data_inicio",),
+    # load_bd/sihsus_aih_rd_load_bd.py:41-45,50-52,64-65,100-104;
+    # VAL_SH/VAL_SP deliberately stay object there
+    numeric={
+        **dict.fromkeys(("usuario_filhos_quantidade", "uti_diarias", "unidade_intermediaria_diarias",
+                         "acompanhante_diarias", "diarias", "usuario_idade",
+                         "permanencia_duracao"), "long"),
+        **dict.fromkeys(("valor_total", "valor_uti", "valor_total_dolar",
+                         "valor_servicos_hospitalares_complemento_federal",
+                         "valor_servicos_profissionais_complemento_federal",
+                         "valor_servicos_hospitalares_complemento_local",
+                         "valor_servicos_profissionais_complemento_local",
+                         "valor_unidade_neonatal"), "double"),
+    },
 )

@@ -22,7 +22,6 @@ from .registry import register
 _PANEL = [f"{i:06d}" for i in range(10)]  # munis '000000'..'000009'
 
 _MINI_SPEC = FactSpec(
-    name="mini_orders",
     rename={
         "O_KEY": "pedido_id",
         "COMPETEN": "competencia_data_inicio",
@@ -41,6 +40,10 @@ _MINI_SPEC = FactSpec(
     split3={"servico_codigo": ("servico", "classificacao")},
     period_date_col="competencia_data_inicio",
     geo_key_col="muni_id_sus",
+    panel_raw_cols=("MUNI",),
+    condition=lambda: composite_condition(
+        equals=[(F.col("FLAG01"), "1"), (F.col("IDADE"), "999"), (F.col("CODE"), "00000000")],
+    ),
 )
 
 _ORACLE = f"""
@@ -109,15 +112,10 @@ def pipeline_fact_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     geo = raw.select(F.col("MUNI").alias("id_sus")).distinct().withColumn(
         "id", F.concat(F.lit("m-"), F.col("id_sus"))
     )
-    cond = composite_condition(
-        equals=[(F.col("FLAG01"), "1"), (F.col("IDADE"), "999"), (F.col("CODE"), "00000000")],
-    )
     out = transform_fact(
         raw,
         _MINI_SPEC,
         panel_ids=_PANEL,
-        panel_raw_cols=("MUNI",),
-        condition=cond,
         periods=periods,
         geo=geo,
         ftp_arquivo_nome="MINI2408.dbc",

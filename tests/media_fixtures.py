@@ -1,7 +1,7 @@
 """Shared test fixtures for the media codecs and multimodal operators.
 
 A PNG encoder (the engine only decodes PNG), the media row schema, and
-content-derived fake decode/resize kernels, so tests can fabricate
+a content-derived fake decode kernel, so tests can fabricate
 payloads and exercise the mapInPandas plumbing without codec libraries.
 """
 
@@ -73,10 +73,3 @@ def deterministic_fake_decoder(payload: bytes, dim: int = 8) -> list[float]:
     h = hashlib.sha256(payload or b"").digest()
     return [int.from_bytes(h[4 * i : 4 * i + 4], "big") / 2**32 for i in range(dim)]
 
-
-def deterministic_fake_resizer(payload: bytes, w: int, h: int) -> bytes:
-    """Content-derived fake resized payload (w*h bytes from a sha256
-    stream)."""
-    seed = hashlib.sha256((payload or b"") + f"{w}x{h}".encode()).digest()
-    reps = (w * h) // len(seed) + 1
-    return (seed * reps)[: w * h]

@@ -3,7 +3,7 @@
 from __future__ import annotations
 
 import pytest
-from media_fixtures import MEDIA_SCHEMA, deterministic_fake_decoder, deterministic_fake_resizer
+from media_fixtures import MEDIA_SCHEMA, deterministic_fake_decoder
 
 from sm_etl_cloud_run_spark.operators.multimodal import extract_features
 
@@ -53,47 +53,3 @@ def test_extract_features_real_codecs(spark):
     assert rows[2][3] == 1000.0  # duration_ms
     assert rows[2][4] == 5000.0  # rms of a full-scale square wave = amplitude
 
-
-def test_resize_images_fake_resizer(spark):
-    from sm_etl_cloud_run_spark.operators.multimodal import resize_images
-
-    out = resize_images(
-        _media(spark), target=(8, 4), resize_fn=deterministic_fake_resizer
-    ).collect()
-    assert [r["media_id"] for r in out] == [1]          # only image rows reach the kernel
-    r = out[0]
-    assert r["width"] == 8 and r["height"] == 4
-    assert r["n_bytes"] == 32 and len(r["payload"]) == 32
-    # content-derived: same input → same resized bytes
-    again = resize_images(
-        _media(spark), target=(8, 4), resize_fn=deterministic_fake_resizer
-    ).collect()[0]
-    assert bytes(again["payload"]) == bytes(r["payload"])
-
-
-def test_resize_images_default_rejects_unknown_format(spark):
-    from sm_etl_cloud_run_spark.operators.multimodal import resize_images
-
-    with pytest.raises(Exception) as ei:
-        resize_images(_media(spark)).collect()  # payloads are not BMPs
-    assert "BMP" in str(ei.value) or "resize" in str(ei.value)
-
-
-def test_resize_images_real_bmp(spark):
-    import numpy as np
-
-    from sm_etl_cloud_run_spark.functions.codecs import decode_bmp, encode_bmp
-    from sm_etl_cloud_run_spark.operators.multimodal import resize_images
-
-    # 2×2 quadrant image → upscale 4×4 must replicate each quadrant 2×2
-    px = np.array(
-        [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 255, 0]]], np.uint8
-    )
-    media = spark.createDataFrame(
-        [(7, "image", bytearray(encode_bmp(px)))], "media_id long, kind string, payload binary"
-    )
-    out = resize_images(media, target=(4, 4)).collect()[0]
-    resized = decode_bmp(bytes(out["payload"]))
-    assert resized.shape == (4, 4, 3)
-    assert (resized[:2, :2] == [255, 0, 0]).all()
-    assert (resized[2:, 2:] == [255, 255, 0]).all()

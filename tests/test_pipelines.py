@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, condicao_saude_mental, transform_fact
+from sm_etl_cloud_run_spark.pipelines import PA_SPEC, transform_fact
 from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed
 from sm_etl_cloud_run_spark.operators.aggregates import null_counts
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
@@ -87,8 +87,6 @@ def _transform(spark):
         _raw_pa(spark),
         PA_SPEC,
         panel_ids=_PANEL,
-        panel_raw_cols=("PA_UFMUN", "PA_MUNPCN"),
-        condition=condicao_saude_mental(),
         periods=periods,
         geo=geo,
         ftp_arquivo_nome="PASP2408.dbc",
@@ -179,8 +177,6 @@ def test_pa_stage1_from_real_dbc_file(spark):
     periods, geo = _dims(spark)
     kw = dict(
         panel_ids=_PANEL,
-        panel_raw_cols=("PA_UFMUN", "PA_MUNPCN"),
-        condition=condicao_saude_mental(),
         periods=periods,
         geo=geo,
         ftp_arquivo_nome="PASP2408.dbc",

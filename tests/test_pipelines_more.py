@@ -13,18 +13,11 @@ from sm_etl_cloud_run_spark.pipelines import (
     HABILITACOES_SPEC,
     RAAS_PS_SPEC,
     VINCULOS_SPEC,
-    condicao_saude_mental,
     transform_fact,
 )
 from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
 from sm_etl_cloud_run_spark.sources.csv_allstring import read_csv_allstring
-
-
-def _bpa_i_condition():
-    return condicao_saude_mental(
-        tpups="TPUPS", proc="PROC_ID", cid="CIDPRI", cbo="CBOPROF", catend="CATEND",
-    )
 
 
 def _typed(spark, bronze, spec):
@@ -55,8 +48,7 @@ def test_bpa_i_flags_and_condition(spark):
     )
     out = transform_fact(
         raw, BPA_I_SPEC,
-        panel_ids=["355030"], panel_raw_cols=("UFMUN", "MUNPAC"),
-        condition=_bpa_i_condition(),
+        panel_ids=["355030"],
         ftp_arquivo_nome="BISP2408.dbc",
     ).collect()
     assert len(out) == 1
@@ -219,11 +211,7 @@ def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
          "VL_APRES": "123.45", "VL_APROV": "100.0",
          "IDADEPAC": "34", "CNPJMNT": "00000000000000"},
     )
-    out = transform_fact(
-        raw, BPA_I_SPEC,
-        condition=_bpa_i_condition(),
-        ftp_arquivo_nome="BISP2408.dbc",
-    )
+    out = transform_fact(raw, BPA_I_SPEC, ftp_arquivo_nome="BISP2408.dbc")
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze)
     typed = _typed(spark, bronze, BPA_I_SPEC)
@@ -265,6 +253,7 @@ def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
     assert sch["diarias"] == "bigint" and r["diarias"] == 1
     assert r["usuario_filhos_quantidade"] == 3 and sch["usuario_filhos_quantidade"] == "bigint"
     assert r["obito"] is True and r["exame_vdrl"] is False
+    assert r["infeccao_hospitalar"] is True               # INFEHOSP '1' decodes like its siblings
     assert r["usuario_homonimo"] is False                 # NULL → False at stage 2
     assert r["periodo_data_inicio"] == dt.datetime(2024, 8, 1)  # C12 date through bronze
     assert r["condicao_secundaria_1_id_cid10"] == "F20"   # adicionais value kept

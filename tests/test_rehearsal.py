@@ -26,7 +26,7 @@ from dbc_fixtures import make_dbc, make_dbf
 from test_datasus_ftp import FakeFtpSession
 
 from sm_etl_cloud_run_spark import runner
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, rehearsal
+from sm_etl_cloud_run_spark.pipelines import PA_SPEC, rehearsal, spark_type_map
 from sm_etl_cloud_run_spark.sinks import watermark
 from sm_etl_cloud_run_spark.sinks.watermark import read_control, touch_watermark, write_control
 from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
@@ -195,11 +195,6 @@ def test_ep1_ep2_ep3_full_lifecycle(spark, tmp_path):
     )
 
 
-_SPARK_TYPE = {"object": "string", "Int64": "bigint", "int64": "bigint",
-               "Float64": "double", "float64": "double", "bool": "boolean",
-               "datetime64[ns]": "timestamp"}
-
-
 def _minimal_overrides(spec):
     """Valid-string defaults for every date/flag column of a spec so the
     generic round trip works for any source."""
@@ -240,7 +235,7 @@ def _tipo_dbc(tipo: str, keep: int) -> bytes:
     """One `.dbc` of `tipo`: `keep` rows its panel and condition keep
     (CAPS units in São Paulo), plus, for a tipo the reference filters on
     the panel, two rows outside the panel that EP1 drops."""
-    spec = rehearsal.TIPOS[tipo].spec
+    spec = rehearsal.TIPOS[tipo]
     cols = spec.raw_columns
     row = {c: "7" for c in cols}
     row.update(_minimal_overrides(spec))
@@ -284,8 +279,9 @@ def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
     """All six `.dbc` tipos go through the one lifecycle from one
     directory: EP3 ledgers a file per tipo, the runner's EP1 and EP2 load
     each into `<tipo>_fato` with its own spec, every typed column reads
-    back from the warehouse as its spec's type map says, and a BPA-i
-    re-delivery re-pends that file only and replaces its rows."""
+    back from the warehouse with the type `spark_type_map` derives from
+    its spec, and a BPA-i re-delivery re-pends that file only and
+    replaces its rows."""
     files = {tipo: f"{tipo}SP2408.dbc" for tipo in rehearsal.TIPOS}
     keep = {tipo: 2 for tipo in rehearsal.TIPOS}
     tree = {_DIR: {files[t]: _tipo_dbc(t, keep[t]) for t in files}}
@@ -304,13 +300,12 @@ def test_every_tipo_runs_the_lifecycle(spark, tmp_path):
         _run_jobs(control, tipo)
     rows = read_control(control)
     assert all(r["timestamp_etl_gcs"] and r["timestamp_load_bd"] for r in rows)
-    for tipo, entry in rehearsal.TIPOS.items():
-        spec = entry.spec
+    for tipo, spec in rehearsal.TIPOS.items():
         assert per_file(tipo) == {files[tipo]: keep[tipo]}, tipo
         typed = loaded(tipo)
-        sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
-        for canon, pdtype in spec.type_map.items():
-            assert sch.get(canon) == _SPARK_TYPE[pdtype], (tipo, canon)
+        sch = {f.name: f.dataType.typeName() for f in typed.schema.fields}
+        types = spark_type_map(spec)
+        assert {c: sch.get(c) for c in types} == types, tipo
         r = typed.collect()[0]
         for canon in spec.bool01:
             assert r[canon] is True, (tipo, canon)  # '1' → True survives bronze

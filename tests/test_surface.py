@@ -17,7 +17,12 @@ and must be listed below with its reason. A new test-only definition
 fails this test, and so does a listed one that gains a production
 caller or is deleted.
 
-A second scan, for want of an installed linter, fails on an imported
+A second scan does the same for the fields of the package's
+`@dataclass`es: a field that no production code reads as an attribute
+(`spec.rename`) fails unless it is listed with its reason. Field names
+match across classes, so this scan, too, can only miss an unread field.
+
+A third scan, for want of an installed linter, fails on an imported
 name that its module never uses.
 """
 
@@ -34,9 +39,12 @@ PKG = REPO / "sm_etl_cloud_run_spark"
 _KEPT = {
     # the expression form the numpy SemDeDup kernel is tested against
     "operators.similarity.semantic_dedup",
-    # the mapInPandas resize operator and its schema; ROADMAP item 8
-    "operators.multimodal.resize_images",
-    "operators.multimodal.RESIZED_SCHEMA",
+}
+
+# Dataclass fields no production code reads, kept on purpose.
+_KEPT_FIELDS = {
+    # the one-line summary every `@register` call states for its query
+    "plans.registry.QuerySpec.description",
 }
 
 _WORD = re.compile(r"[A-Za-z_]\w*")
@@ -75,16 +83,28 @@ def _public_method(node: ast.AST) -> bool:
     return isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and not node.name.startswith("_")
 
 
+def _package() -> list[tuple[str, ast.Module]]:
+    """(dotted module name relative to the package, parsed module)."""
+    out = []
+    for f in sorted(PKG.rglob("*.py")):
+        mod = ".".join(f.relative_to(PKG).with_suffix("").parts)
+        out.append((mod.removesuffix(".__init__").removesuffix("__init__"), ast.parse(f.read_text())))
+    return out
+
+
+def _scripts() -> list[Path]:
+    return [REPO / "__spark_entry__.py", REPO / "bench.py",
+            *(REPO / "perfbench").rglob("*.py"), *(REPO / "tools").rglob("*.py")]
+
+
 def _scan() -> tuple[dict[str, set[str]], dict[str, set[str]], set[str]]:
     """(defs: qualified name -> names its body uses,
     by_name: bare name -> qualified names, roots: names used by roots)."""
     defs: dict[str, set[str]] = {}
     by_name: dict[str, set[str]] = {}
     roots = {"main"}  # runner.main, the `python -m ...runner` entry
-    for f in sorted(PKG.rglob("*.py")):
-        mod = ".".join(f.relative_to(PKG).with_suffix("").parts)
-        mod = mod.removesuffix(".__init__").removesuffix("__init__")
-        for st in ast.parse(f.read_text()).body:
+    for mod, tree in _package():
+        for st in tree.body:
             if isinstance(st, ast.ClassDef):
                 targets, used = [st.name], set()
                 for part in (*st.bases, *st.keywords, *st.decorator_list, *st.body):
@@ -118,9 +138,7 @@ def _scan() -> tuple[dict[str, set[str]], dict[str, set[str]], set[str]]:
                 q = f"{mod}.{t}" if mod else t
                 defs[q] = used
                 by_name.setdefault(t, set()).add(q)
-    scripts = [REPO / "__spark_entry__.py", REPO / "bench.py",
-               *(REPO / "perfbench").rglob("*.py"), *(REPO / "tools").rglob("*.py")]
-    for f in scripts:
+    for f in _scripts():
         roots |= _names(ast.parse(f.read_text()), strings=True)
     return defs, by_name, roots
 
@@ -141,6 +159,29 @@ def test_public_surface_has_production_callers():
     unreached = unreached_public()
     assert sorted(unreached - _KEPT) == [], "public, but reached only from tests (or nothing)"
     assert sorted(_KEPT - unreached) == [], "listed, but now has a production caller or is gone"
+
+
+def unread_fields() -> set[str]:
+    """Public fields of package `@dataclass`es that no production code
+    reads as an attribute."""
+    pkg = _package()
+    trees = [tree for _, tree in pkg] + [ast.parse(f.read_text()) for f in _scripts()]
+    read = {n.attr for t in trees for n in ast.walk(t)
+            if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)}
+    return {
+        f"{mod}.{st.name}.{part.target.id}"
+        for mod, tree in pkg for st in tree.body
+        if isinstance(st, ast.ClassDef) and any("dataclass" in _names(d) for d in st.decorator_list)
+        for part in st.body
+        if isinstance(part, ast.AnnAssign) and isinstance(part.target, ast.Name)
+        and not part.target.id.startswith("_") and part.target.id not in read
+    }
+
+
+def test_dataclass_fields_are_read():
+    unread = unread_fields()
+    assert sorted(unread - _KEPT_FIELDS) == [], "a dataclass field that production code never reads"
+    assert sorted(_KEPT_FIELDS - unread) == [], "listed, but now read or gone"
 
 
 def _unused_imports(path: Path) -> list[str]:
