@@ -10,9 +10,11 @@ the all-string bronze CSV and forces types
 
 Here the per-source differences are DATA (a :class:`FactSpec`), and the
 chain is ONE Catalyst pipeline — every rule a column expression, fused
-by whole-stage codegen into a single pass over the scan. The spec is
-also the second stage's type map: the rules say which columns become
-dates and booleans, so a spec declares only its numeric columns.
+by whole-stage codegen into a single pass over the scan. The rules are
+composed in Python into one projection, which a batch of files builds
+once (`build_transform`). The spec is also the second stage's type map:
+the rules say which columns become dates and booleans, so a spec
+declares only its numeric columns.
 
 Scale notes: the only joins are broadcast lookups against small dims;
 the panel filter is an `isin` against a parameter-sized id list (hash
@@ -30,8 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cleaning, dates
 from ..functions.ids import deterministic_row_id
-from ..operators import filters, joins
-from ..operators.projections import normalize_headers, rename_map
+from ..operators import joins
 
 
 @dataclass(frozen=True)
@@ -88,123 +89,149 @@ def transform_fact(
     random UUIDv7. Pandas-coerce parity (invalid date/number → NULL)
     needs ANSI off: the session must carry the engine's conventions
     (`session.get_spark`, `tables.load_tables`).
-    """
-    df = raw
 
+    One file's call; a batch of files with the same raw columns builds
+    the rules once with `build_transform` and applies them per file.
+    """
+    apply = build_transform(spec, raw.columns, panel_ids=panel_ids, periods=periods, geo=geo)
+    return apply(raw, ftp_arquivo_nome)
+
+
+def build_transform(
+    spec: FactSpec,
+    raw_columns: Sequence[str],
+    *,
+    panel_ids: Sequence[str] | None = None,
+    periods: DataFrame | None = None,
+    geo: DataFrame | None = None,
+) -> Callable[[DataFrame, str], DataFrame]:
+    """`transform_fact`'s rules for raw frames of `raw_columns`, built
+    once: the returned `apply(raw, ftp_arquivo_nome)` costs one `where`,
+    one `select`, the two broadcast joins and one `withColumns`, where
+    building the rules takes thousands of JVM calls. Each apply re-reads
+    the dims, so a dim row added between files is seen."""
+    where, select, row_id = _stage1(spec, panel_ids, tuple(raw_columns))
+
+    def apply(raw: DataFrame, ftp_arquivo_nome: str) -> DataFrame:
+        df = raw if where is None else raw.where(where)
+        df = df.select(*select).withColumn("id", row_id)
+
+        # J1 — monthly period id (broadcast equi join on truncated month).
+        if periods is not None:
+            df = joins.period_equi_join(
+                df, periods.select("data_inicio", "id"),
+                F.col(spec.period_date_col),
+                attach={"id": "periodo_id"},
+            )
+
+        # J2 — geography id (broadcast hash join).
+        if geo is not None:
+            df = joins.broadcast_lookup(
+                df, geo.select("id_sus", "id"),
+                F.col(spec.geo_key_col) == geo["id_sus"],
+                select={"id": "unidade_geografica_id"},
+            )
+
+        # P3 — audit + provenance columns.
+        return df.withColumns({
+            "criacao_data": dates.now_gmt_minus3(),
+            "atualizacao_data": dates.now_gmt_minus3(),
+            "ftp_arquivo_nome": F.lit(ftp_arquivo_nome),
+        })
+
+    return apply
+
+
+# the length SQL's two-argument `substring(s, pos)` takes: to the end
+_TO_END = 2**31 - 1
+
+
+def _stage1(
+    spec: FactSpec, panel_ids: Sequence[str] | None, raw_columns: tuple[str, ...],
+) -> tuple[Column | None, list[Column], Column]:
+    """The stage-1 rules as Columns over `raw_columns`: the row filter,
+    the projection of every output column, and the row id over that
+    projection. Each rule rewrites the Column of the column it names, in
+    the order of the reference's chain, so the projection computes what
+    one `withColumns` per rule would."""
     # F1 — panel membership on the raw ids (OR across the spec's columns).
+    where = None
     if panel_ids is not None and spec.panel_raw_cols:
-        ids = list(panel_ids)
-        cond = F.col(spec.panel_raw_cols[0]).isin(ids)
+        where = F.col(spec.panel_raw_cols[0]).isin(list(panel_ids))
         for c in spec.panel_raw_cols[1:]:
-            cond = cond | F.col(c).isin(ids)
-        df = df.where(cond)
+            where = where | F.col(c).isin(list(panel_ids))
 
     # F2 — source-specific composite condition over raw columns.
     if spec.condition is not None:
-        df = df.where(spec.condition())
+        where = spec.condition() if where is None else where & spec.condition()
 
     # P4 — vintage harmonization: absent optional raw columns appear empty.
-    if spec.optional_raw:
-        missing = [c for c in spec.optional_raw if c not in df.columns]
-        if missing:
-            df = df.withColumns({c: F.lit("") for c in missing})
+    cols: dict[str, Column] = {c: F.col(f"`{c}`") for c in raw_columns}
+    cols.update({c: F.lit("") for c in spec.optional_raw if c not in cols})
 
     # P2 + P1 — header strip + de-para rename.
-    df = normalize_headers(df, case="upper")
-    df = rename_map(df, {k.upper(): v for k, v in spec.rename.items()})
+    renames = {k.upper(): v for k, v in spec.rename.items()}
+    cols = {renames.get(c.strip().upper(), c.strip().upper()): v for c, v in cols.items()}
+
+    def rule(names, fn) -> None:
+        cols.update({c: fn(cols[c]) for c in names})
 
     # C12 — build a date from split (year, month) columns, drop sources.
     if spec.make_date_from:
         ano, mes, dest = spec.make_date_from
-        df = df.withColumn(dest, dates.make_date_from_year_month(F.col(ano), F.col(mes))).drop(ano, mes)
+        cols[dest] = dates.make_date_from_year_month(cols[ano], cols[mes])
+        del cols[ano], cols[mes]
 
     # C9/C10/C11 — date dialects (invalid → NULL, pandas-coerce parity).
-    df = df.withColumns({c: dates.from_yyyymm(F.col(c)) for c in spec.yyyymm_dates})
-    df = df.withColumns({c: dates.from_yyyymmdd(F.col(c)) for c in spec.yyyymmdd_dates})
-    df = df.withColumns({c: dates.from_ddmmyyyy(F.col(c)) for c in spec.ddmmyyyy_dates})
+    rule(spec.yyyymm_dates, dates.from_yyyymm)
+    rule(spec.yyyymmdd_dates, dates.from_yyyymmdd)
+    rule(spec.ddmmyyyy_dates, dates.from_ddmmyyyy)
 
     # C6/C7/C8 — SCNES-style string surgery. Runs BEFORE null
     # normalization so codes it produces ('ABC' → strip → '' → zfill →
     # '0000') fall through to the all-zeros rule like the reference.
-    df = df.withColumns({c: cleaning.roman_to_int_string(F.col(c)) for c in spec.roman_cols})
-    df = df.withColumns({c: cleaning.strip_non_digits(F.col(c)) for c in spec.strip_nondigit_cols})
-    df = df.withColumns({c: cleaning.zfill(F.col(c), w) for c, w in spec.zfill_cols.items()})
+    rule(spec.roman_cols, cleaning.roman_to_int_string)
+    rule(spec.strip_nondigit_cols, cleaning.strip_non_digits)
+    cols.update({c: cleaning.zfill(cols[c], w) for c, w in spec.zfill_cols.items()})
 
     # '' → NULL on every remaining string column (reference .replace).
     date_cols = {c for c, t in spark_type_map(spec).items() if t == "timestamp"}
-    df = df.withColumns(
-        {c: cleaning.empty_to_null(F.col(c)) for c in df.columns if c not in date_cols}
-    )
+    rule([c for c in cols if c not in date_cols], cleaning.empty_to_null)
 
     # C3/C4/sentinels — code-domain null normalization.
-    df = df.withColumns({c: cleaning.all_zeros_to_null(F.col(c)) for c in spec.zeros_to_null})
-    df = df.withColumns({c: cleaning.all_nines_to_null(F.col(c)) for c in spec.nines_to_null})
-    df = df.withColumns(
-        {c: cleaning.literal_to_null(F.col(c), *vals) for c, vals in spec.sentinels.items()}
-    )
+    rule(spec.zeros_to_null, cleaning.all_zeros_to_null)
+    rule(spec.nines_to_null, cleaning.all_nines_to_null)
+    cols.update({c: cleaning.literal_to_null(cols[c], *vals) for c, vals in spec.sentinels.items()})
 
     # C1/C2/C5 — boolean decodes.
-    df = df.withColumns({c: cleaning.decode_bool_01(F.col(c)) for c in spec.bool01})
+    rule(spec.bool01, cleaning.decode_bool_01)
     # reference semantics here are `elemento == 'M'` with NaN → False
-    df = df.withColumns(
-        {c: F.coalesce(F.col(c) == truthy, F.lit(False)) for c, truthy in spec.flag_true.items()}
-    )
+    cols.update({c: F.coalesce(cols[c] == truthy, F.lit(False)) for c, truthy in spec.flag_true.items()})
     for src, letter_map in spec.contains_flags.items():
-        df = df.withColumns(
-            {new: F.coalesce(F.col(src).contains(letter), F.lit(False)) for letter, new in letter_map.items()}
-        )
+        cols.update({new: F.coalesce(cols[src].contains(letter), F.lit(False))
+                     for letter, new in letter_map.items()})
     # C5 tail: the source flag column itself becomes 'has any letters'
-    df = df.withColumns(
-        {c: F.coalesce(F.length(F.col(c)) > 0, F.lit(False)) for c in spec.nonempty_flags}
-    )
+    rule(spec.nonempty_flags, lambda c: F.coalesce(F.length(c) > 0, F.lit(False)))
 
     # F3 — outcome flags forced NULL when the reason column is NULL.
     if spec.null_flags_when_null:
         guard, targets = spec.null_flags_when_null
-        df = filters.null_when(df, F.col(guard).isNull(), *targets)
+        missing = cols[guard].isNull()
+        rule(targets, lambda c: F.when(missing, None).otherwise(c))
 
     # C16 — day counts → 'N days' interval text.
-    df = df.withColumns(
-        {c: dates.days_to_interval_text(F.col(c)) for c in spec.interval_text_cols}
-    )
+    rule(spec.interval_text_cols, dates.days_to_interval_text)
 
     # P7 — split head-3/tail codes, drop the source.
     for src, (head, tail) in spec.split3.items():
-        df = (
-            df.withColumn(head, F.substring(F.col(src), 1, 3))
-            .withColumn(tail, F.expr(f"substring(`{src}`, 4)"))
-            .drop(src)
-        )
+        code = cols.pop(src)
+        cols[head] = F.substring(code, 1, 3)
+        cols[tail] = F.substring(code, 4, _TO_END)
 
-    # P9 — content-derived row id.
-    df = df.withColumn(
-        "id", deterministic_row_id(*[F.col(c).cast("string") for c in sorted(df.columns)])
-    )
-
-    # J1 — monthly period id (broadcast equi join on truncated month).
-    if periods is not None:
-        df = joins.period_equi_join(
-            df, periods.select("data_inicio", "id"),
-            F.col(spec.period_date_col),
-            attach={"id": "periodo_id"},
-        )
-
-    # J2 — geography id (broadcast hash join).
-    if geo is not None:
-        df = joins.broadcast_lookup(
-            df, geo.select("id_sus", "id"),
-            F.col(spec.geo_key_col) == geo["id_sus"],
-            select={"id": "unidade_geografica_id"},
-        )
-
-    # P3 — audit + provenance columns.
-    return df.withColumns(
-        {
-            "criacao_data": dates.now_gmt_minus3(),
-            "atualizacao_data": dates.now_gmt_minus3(),
-            "ftp_arquivo_nome": F.lit(ftp_arquivo_nome),
-        }
-    )
+    select = [c.alias(name) for name, c in cols.items()]
+    # P9 — content-derived row id, over the projected columns.
+    row_id = deterministic_row_id(*[F.col(c).cast("string") for c in sorted(cols)])
+    return where, select, row_id
 
 
 # columns every fact gains after its rules (P9, J1, J2, P3)

@@ -20,13 +20,14 @@ tipo.
   `/ftp_metadados` refresh (etl/datasus_ftp_metadados.py:164-382).
 - **EP1** (`ep1_baixar_lote`): gate-selected files → executor-side
   download of exactly the ledger's file name + DBC decode (S1) →
-  `transform_fact` (the full F/P/C/J chain) → bronze CSV (K1), all
-  files concurrently → one `timestamp_etl_gcs` watermark rewrite for
-  the batch (K7) — etl/siasus_procedimentos_ambulatoriais.py:117-464.
-- **EP2** (`ep2_inserir_lote`): bronze all-string CSV (S6) → typed
-  cast (C20) → concurrent staging → per-file transactional JDBC commit:
-  delete-conflicts + insert + single commit (K2/K3) →
-  `timestamp_load_bd` watermark per committed file —
+  the stage-1 transform (the full F/P/C/J chain, built once per
+  batch) → bronze CSV (K1), all files concurrently → one
+  `timestamp_etl_gcs` watermark rewrite for the batch (K7) —
+  etl/siasus_procedimentos_ambulatoriais.py:117-464.
+- **EP2** (`ep2_inserir_lote`): the batch's bronze all-string CSV (S6),
+  read once → typed cast (C20) → one staging table → per-file
+  transactional JDBC commit: delete-conflicts + insert + single commit
+  (K2/K3) → `timestamp_load_bd` watermark per committed file —
   load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:146-215.
 
 `runner.py` calls a job once as `job(spark, rows)` with every pending
@@ -38,20 +39,24 @@ config surface.
 
 from __future__ import annotations
 
+import operator
 import os
 import re
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..sinks.jdbc import commit_staged_load, write_jdbc_append
 from ..sinks.partitioned import write_bronze_csv
 from ..sinks.watermark import LEDGER_SCHEMA, read_control, touch_watermark, write_control
-from ..sources.csv_allstring import read_csv_allstring
 from ..sources.datasus_ftp import DatasusFtpClient, read_datasus_ftp
 from ..sources.ftp_list import parse_list_lines
-from .base import FactSpec, cast_allstring_typed, transform_fact
+from .base import FactSpec, build_transform, cast_allstring_typed, spark_type_map
 from .scnes import HABILITACOES_SPEC, VINCULOS_SPEC
 from .siasus_bpa_i import BPA_I_SPEC
 from .siasus_pa import PA_SPEC
@@ -226,23 +231,19 @@ def _validated_batch(rows: list[dict]) -> tuple[str, list[str]]:
 # EP1 — stage-1 ETL for the pending control rows
 # ---------------------------------------------------------------------------
 
-def _ep1_body(spark: SparkSession, spec: FactSpec, arquivo: str) -> None:
-    """EP1 minus the watermark: download + decode + transform one file
-    to its bronze directory. Thread-safe — everything here builds an
-    isolated plan and writes an isolated path, so many bodies run
+def _ep1_body(
+    spark: SparkSession, spec: FactSpec, transform: Callable[[DataFrame, str], DataFrame], arquivo: str,
+) -> None:
+    """EP1 minus the watermark: download + decode one file, apply the
+    batch's stage-1 `transform` and land it in its bronze directory.
+    Thread-safe — each body builds an isolated plan over the shared
+    Columns and writes an isolated path, so many bodies run
     concurrently on one session."""
     raw = read_datasus_ftp(
         spark, _cfg("host"), _cfg("directory"), [arquivo], spec.raw_columns,
         transport_factory=_cfg("transport_factory"),
     ).fillna("")
-    out = transform_fact(
-        raw, spec,
-        panel_ids=_cfg("panel_ids"),
-        periods=_cfg("periods"),
-        geo=_cfg("geo"),
-        ftp_arquivo_nome=arquivo,
-    )
-    write_bronze_csv(out, f"{_cfg('bronze_root')}/{arquivo}")
+    write_bronze_csv(transform(raw, arquivo), f"{_cfg('bronze_root')}/{arquivo}")
 
 
 def ep1_baixar_lote(spark: SparkSession, rows: list[dict]) -> None:
@@ -263,14 +264,21 @@ def ep1_baixar_lote(spark: SparkSession, rows: list[dict]) -> None:
     At cluster scale the same shape holds: a year × 27 UFs is one
     324-body batch = one wave of 324 concurrent single-task jobs, not
     324 sequential chunk loops (the reference's model).
+
+    The stage-1 rules are built once for the batch, before the pool
+    (`build_transform`), and every body applies them to its own file.
     """
     tipo, arquivos = _validated_batch(rows)
     if not arquivos:
         return
     spec = TIPOS[tipo]
+    transform = build_transform(
+        spec, spec.raw_columns,
+        panel_ids=_cfg("panel_ids"), periods=_cfg("periods"), geo=_cfg("geo"),
+    )
     with ThreadPoolExecutor(max_workers=min(len(arquivos), 32)) as pool:
         # list() re-raises the first body failure before the watermark
-        list(pool.map(lambda a: _ep1_body(spark, spec, a), arquivos))
+        list(pool.map(lambda a: _ep1_body(spark, spec, transform, a), arquivos))
     touch_watermark(
         _cfg("control_path"), {"tipo": [tipo], "arquivo": arquivos}, "timestamp_etl_gcs",
     )
@@ -288,23 +296,25 @@ def ep2_inserir_lote(spark: SparkSession, rows: list[dict]) -> None:
     `<tipo>_fato`; an override is named for one tipo by that prefix,
     and a batch of another tipo is refused before anything is staged.
 
-    The expensive half — bronze read, typed cast, and the
-    executor-parallel JDBC transfer — has no cross-file dependency, so
-    each file stages CONCURRENTLY into its OWN staging table
-    (`<target>_stg_<n>`; disjoint tables, so even a single-writer
-    warehouse like embedded Derby only ever sees non-conflicting table
-    locks). The commit sections — delete-conflicts + INSERT..SELECT +
-    commit against the SHARED target — then run strictly SEQUENTIALLY:
-    the target is the single-writer resource, and serialized commits
-    keep the reference's one-transaction-per-file atomicity (K2/K3).
-    Each file's watermark is touched right after its commit, in commit
-    order: that is the recovery state, so a crash mid-batch leaves
-    exactly the uncommitted files pending. Re-runs are idempotent: the
-    delete clears any earlier load of the same file.
+    The expensive half runs once for the whole batch: one read of every
+    file's bronze directory, one typed cast, one executor-parallel JDBC
+    write into one staging table (`<target>_stg`). The read names the
+    columns from the spec (`spark_type_map`) and checks each bronze
+    header against them, so a header that lacks a column or orders them
+    otherwise fails the staging write. The same write counts the
+    boolean bronze values other than 'True', 'False' and empty; the
+    cast would load each of them as False, so any such value fails the
+    batch before the first commit.
 
-    Against a concurrent-writer warehouse (Postgres), the same shape
-    holds and the commit loop is the only serial section — ~ms per
-    file, so wall time converges to max(stage) instead of Σ(file).
+    The commits then run strictly SEQUENTIALLY (an absent target is
+    first created like the staging table), one transaction per file
+    (K2/K3): delete the file's rows from the target, INSERT..SELECT
+    its staged rows, commit, and touch its watermark. That is the
+    recovery state, so a crash mid-batch leaves exactly the uncommitted
+    files pending. Re-runs are idempotent: the delete clears any earlier
+    load of the same file. Against a concurrent-writer warehouse
+    (Postgres), the commit loop is the only serial section, ~ms per
+    file.
     """
     tipo, arquivos = _validated_batch(rows)
     if not arquivos:
@@ -315,29 +325,35 @@ def ep2_inserir_lote(spark: SparkSession, rows: list[dict]) -> None:
         raise ValueError(f"jdbc_table {target!r} is not a {tipo} table; refusing to load into it")
     url = _cfg("jdbc_url")
     coltypes = CONFIG.get("jdbc_column_types")
+    types = spark_type_map(spec)
 
-    def stage(i_arquivo: tuple[int, str]) -> tuple[str, str, DataFrame]:
-        i, arquivo = i_arquivo
-        raw = read_csv_allstring(spark, f"{_cfg('bronze_root')}/{arquivo}")
-        typed = cast_allstring_typed(raw, spec)
-        staging = f"{target}_stg_{i}"
-        write_jdbc_append(typed, url, staging, mode="overwrite", column_types=coltypes)
-        return arquivo, staging, typed
-
-    with ThreadPoolExecutor(max_workers=min(len(arquivos), 32)) as pool:
-        # list() re-raises the first staging failure before any commit
-        staged = list(pool.map(stage, enumerate(arquivos)))
-    # bootstrap the SHARED target once, OUTSIDE the pool — concurrent
-    # CREATE TABLE bootstraps race on every engine
-    write_jdbc_append(staged[0][2].limit(0), url, target, column_types=coltypes)
-    for arquivo, staging, typed in staged:
-        commit_staged_load(
-            spark, url, target, staging, typed.columns,
-            delete_where=f"\"ftp_arquivo_nome\" = '{arquivo}'",
+    raw = (
+        spark.read.schema(T.StructType([T.StructField(c, T.StringType()) for c in types]))
+        .option("header", True)
+        .option("enforceSchema", False)
+        .csv([f"{_cfg('bronze_root')}/{arquivo}" for arquivo in arquivos])
+    )
+    undecoded = reduce(
+        operator.or_,
+        (~F.col(c).isin("True", "False", "") for c, t in types.items() if t == "boolean"),
+        F.lit(False),
+    )
+    flags = Observation()
+    typed = cast_allstring_typed(raw.observe(flags, F.count(F.when(undecoded, 1)).alias("n")), spec)
+    staging = f"{target}_stg"
+    write_jdbc_append(typed, url, staging, mode="overwrite", column_types=coltypes)
+    if n := flags.get["n"]:
+        raise ValueError(
+            f"{n} bronze rows of {arquivos} hold a boolean value other than "
+            "'True', 'False' or empty; refusing to load them as False"
         )
-        touch_watermark(
+    commit_staged_load(
+        spark, url, target, staging, typed.columns,
+        arquivos=arquivos,
+        on_commit=lambda arquivo: touch_watermark(
             _cfg("control_path"), {"tipo": [tipo], "arquivo": [arquivo]}, "timestamp_load_bd",
-        )
+        ),
+    )
 
 
 # perfbench/etl.py names the EP1 job by this name

@@ -83,7 +83,6 @@ def _contract_oracle(oracle: str | None) -> str | None:
 
 @dataclass(frozen=True)
 class QuerySpec:
-    name: str
     fn: QueryFn
     oracle: str | None = None
     bench: bool = False
@@ -103,7 +102,7 @@ def register(
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        _REGISTRY[name] = QuerySpec(name, fn, _contract_oracle(oracle), bench, description)
+        _REGISTRY[name] = QuerySpec(fn, _contract_oracle(oracle), bench, description)
         return fn
 
     return deco

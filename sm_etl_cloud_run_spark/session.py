@@ -93,6 +93,13 @@ def get_spark(app_name: str = "sm_etl_cloud_run_spark", *, cpus: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Static. When on, every Column/functions call walks the Python
+        # stack and makes four extra JVM calls to record its call site
+        # for error messages: 80% of the JVM calls that build
+        # `transform_fact`'s plan (measured: 3,118 → 698 calls, 0.55 →
+        # 0.19 s per PA build). Results are unchanged; only the
+        # DataFrame query context of runtime errors is lost.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in _RUNTIME_CONVENTIONS.items():
         builder = builder.config(k, v)

@@ -13,16 +13,16 @@ savepoint + rollback;
 load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:205-215) — cannot
 span executor-parallel JDBC writes (each partition is its own
 connection). The staged load re-expresses it Spark-first, in two
-phases: `write_jdbc_append(..., mode="overwrite")` writes each file in
-parallel to its own STAGING table (no transactional requirement), then
-`commit_staged_load` runs ONE driver-side transaction: delete-scope →
-INSERT..SELECT from staging → commit, and the staging table is dropped
-afterwards. The heavy bytes move in parallel; only the cheap
-set-shuffling is serialized, and it is atomic. The watermark is not
-part of that transaction: it lives in the driver-side ledger
-(`sinks/watermark.py`), touched after each commit. A batch of files
-stages concurrently into disjoint staging tables and commits one at a
-time (`pipelines/rehearsal.ep2_inserir_lote`).
+phases: `write_jdbc_append(..., mode="overwrite")` writes a whole batch
+of files in parallel to ONE staging table (no transactional
+requirement), then `commit_staged_load` creates an absent target like
+the staging table and runs one driver-side transaction per file: delete the file's rows → INSERT..SELECT the
+file's staged rows → commit, and the staging table is dropped after the
+last commit. The heavy bytes move in parallel; only the cheap
+set-shuffling is serialized, and each file's part of it is atomic. The
+watermark is not part of that transaction: it lives in the driver-side
+ledger (`sinks/watermark.py`), touched by the caller after each commit
+(`pipelines/rehearsal.ep2_inserir_lote`).
 
 Verified live against the embedded Derby database whose driver ships in
 Spark's own classpath (tests/test_jdbc_live.py), including the
@@ -31,8 +31,10 @@ rollback-on-failure path.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_BATCH_SIZE = 10_000  # reference `carregar_dataframe(passo=10000)`
@@ -96,30 +98,49 @@ def commit_staged_load(
     staging: str,
     columns: list[str],
     *,
-    delete_where: str,
+    arquivos: Sequence[str],
+    on_commit: Callable[[str], None],
     user: str | None = None,
     password: str | None = None,
 ) -> None:
-    """Phase 2 of the staged load: ONE driver transaction —
-    delete the reload scope (`delete_where`), INSERT..SELECT from
-    staging, commit or roll both back.
+    """Phase 2 of the staged load. An absent `target` is first created
+    with the staging table's columns, which the JDBC writer gave the
+    DDL a Spark-side bootstrap would (`CREATE TABLE … AS SELECT … WITH
+    NO DATA`, no Spark job). Then, for each file name of `arquivos`, in
+    order, ONE driver transaction: delete the target's rows whose
+    `ftp_arquivo_nome` (the provenance column every fact carries, P3)
+    is that name, INSERT..SELECT the staged rows of that name, commit
+    or roll both back; then `on_commit(arquivo)`, where the caller
+    records the file as loaded.
 
-    The staging table is then dropped in its own statement, so a failed
-    drop never rolls back the committed load. Keeping it would save
+    A failure stops the loop: earlier files stay committed, the failed
+    one is rolled back, and the staging table is kept. After the last
+    commit the staging table is dropped in its own statement, so a
+    failed drop never rolls back a committed load. Keeping it would save
     nothing (the next stage's JDBC overwrite recreates it) and would
     leave stale staged rows behind.
     """
     cols = _qcols(columns)
     with _driver_connection(spark, url, user, password) as conn:
         stmt = conn.createStatement()
-        try:
-            stmt.executeUpdate(f"DELETE FROM {target} WHERE {delete_where}")  # noqa: S608
-            stmt.executeUpdate(
-                f"INSERT INTO {target} ({cols}) SELECT {cols} FROM {staging}"  # noqa: S608
-            )
-            conn.commit()
-        except Exception:
+        try:  # the existence probe Spark's JDBC writer uses
+            stmt.executeQuery(f"SELECT 1 FROM {target} WHERE 1 = 0").close()  # noqa: S608
+        except Py4JJavaError:
             conn.rollback()
-            raise
+            stmt.executeUpdate(f"CREATE TABLE {target} AS SELECT * FROM {staging} WITH NO DATA")  # noqa: S608
+            conn.commit()
+        for arquivo in arquivos:
+            name = arquivo.replace("'", "''")
+            where = f"\"ftp_arquivo_nome\" = '{name}'"
+            try:
+                stmt.executeUpdate(f"DELETE FROM {target} WHERE {where}")  # noqa: S608
+                stmt.executeUpdate(
+                    f"INSERT INTO {target} ({cols}) SELECT {cols} FROM {staging} WHERE {where}"  # noqa: S608
+                )
+                conn.commit()
+            except Exception:
+                conn.rollback()
+                raise
+            on_commit(arquivo)
         stmt.executeUpdate(f"DROP TABLE {staging}")
         conn.commit()

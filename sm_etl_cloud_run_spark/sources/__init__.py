@@ -6,7 +6,6 @@ LIST scan is driver-side (EP3); the fetch and decode of the exact files
 EP3's ledger names run on executors, one task per file (EP1).
 """
 
-from .csv_allstring import read_csv_allstring  # noqa: F401
 from .dbc import dbc_to_dbf, explode  # noqa: F401
 from .dbf import decode_datasus_bytes, parse_dbf_bytes  # noqa: F401
 from .ftp_list import parse_ftp_list_lines  # noqa: F401

@@ -6,11 +6,11 @@ from __future__ import annotations
 
 import datetime as dt
 
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, transform_fact
-from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed
+from sm_etl_cloud_run_spark.functions import cleaning
 from sm_etl_cloud_run_spark.operators.aggregates import null_counts
+from sm_etl_cloud_run_spark.pipelines import PA_SPEC, transform_fact
+from sm_etl_cloud_run_spark.pipelines.base import build_transform, cast_allstring_typed, spark_type_map
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-from sm_etl_cloud_run_spark.sources.csv_allstring import read_csv_allstring
 
 _PANEL = ["355030", "330455"]
 
@@ -132,7 +132,10 @@ def test_pa_two_stage_roundtrip(spark, tmp_path):
     # K1: bronze CSV landing (all values serialized as text)
     write_bronze_csv(out, bronze)
 
-    typed = cast_allstring_typed(read_csv_allstring(spark, bronze), PA_SPEC)
+    # EP2's read: the spec's columns as an all-string schema, header checked
+    schema = ", ".join(f"`{c}` string" for c in spark_type_map(PA_SPEC))
+    raw = spark.read.schema(schema).option("header", True).option("enforceSchema", False).csv(bronze)
+    typed = cast_allstring_typed(raw, PA_SPEC)
     assert typed.count() == 2
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     assert sch["quantidade_apresentada"] == "bigint"
@@ -186,3 +189,33 @@ def test_pa_stage1_from_real_dbc_file(spark):
     out_dbc = transform_fact(raw_dbc, PA_SPEC, **kw).drop(*audit)
     assert out_mem.columns == out_dbc.columns
     assert sorted(map(tuple, out_mem.collect())) == sorted(map(tuple, out_dbc.collect()))
+
+
+def _counting(monkeypatch, module, name):
+    """Wrap `module.name` so each call is counted; returns the counter."""
+    calls = []
+    real = getattr(module, name)
+
+    def counted(*args, **kw):
+        calls.append(args)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(module, name, counted)
+    return calls
+
+
+def test_build_transform_applies_one_build_to_many_files(spark, monkeypatch):
+    """A transform built once lands each file's rows under its own name,
+    as `transform_fact` would, without building a rule Column again."""
+    periods, geo = _dims(spark)
+    raw = _raw_pa(spark)
+    built = _counting(monkeypatch, cleaning, "empty_to_null")
+    apply = build_transform(PA_SPEC, raw.columns, panel_ids=_PANEL, periods=periods, geo=geo)
+    n = len(built)
+    assert n > 0
+    outs = {name: apply(raw, name) for name in ("PASP2407.dbc", "PASP2408.dbc")}
+    assert len(built) == n
+    audit = ["criacao_data", "atualizacao_data"]
+    assert sorted(map(tuple, outs["PASP2408.dbc"].drop(*audit).collect())) == sorted(
+        map(tuple, _transform(spark).drop(*audit).collect()))
+    assert {r[0] for r in outs["PASP2407.dbc"].select("ftp_arquivo_nome").collect()} == {"PASP2407.dbc"}

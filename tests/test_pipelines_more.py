@@ -15,13 +15,16 @@ from sm_etl_cloud_run_spark.pipelines import (
     VINCULOS_SPEC,
     transform_fact,
 )
-from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed
+from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed, spark_type_map
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
-from sm_etl_cloud_run_spark.sources.csv_allstring import read_csv_allstring
 
 
-def _typed(spark, bronze, spec):
-    return cast_allstring_typed(read_csv_allstring(spark, bronze), spec)
+def _typed(spark, bronze, spec, landed):
+    """EP2's read and cast: the spec's columns that were landed, as an
+    all-string schema checked against the bronze header."""
+    schema = ", ".join(f"`{c}` string" for c in spark_type_map(spec) if c in landed)
+    raw = spark.read.schema(schema).option("header", True).option("enforceSchema", False).csv(bronze)
+    return cast_allstring_typed(raw, spec)
 
 
 def _row_df(spark, spec, overrides, default="X"):
@@ -187,7 +190,7 @@ def test_raas_two_stage_roundtrip(spark, tmp_path):
     out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc")
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze)
-    typed = _typed(spark, bronze, RAAS_PS_SPEC)
+    typed = _typed(spark, bronze, RAAS_PS_SPEC, out.columns)
     r = typed.collect()[0]
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     assert sch["quantidade_apresentada"] == "bigint" and r["quantidade_apresentada"] == 3
@@ -214,7 +217,7 @@ def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
     out = transform_fact(raw, BPA_I_SPEC, ftp_arquivo_nome="BISP2408.dbc")
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze)
-    typed = _typed(spark, bronze, BPA_I_SPEC)
+    typed = _typed(spark, bronze, BPA_I_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert sch["quantidade_apresentada"] == "bigint" and r["quantidade_apresentada"] == 5
@@ -245,7 +248,7 @@ def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
     out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc")
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze)
-    typed = _typed(spark, bronze, AIH_RD_SPEC)
+    typed = _typed(spark, bronze, AIH_RD_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert sch["valor_total"] == "double" and r["valor_total"] == 1234.56
@@ -276,7 +279,7 @@ def test_scnes_vinculos_two_stage_roundtrip(spark, tmp_path):
     out = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc")
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze)
-    typed = _typed(spark, bronze, VINCULOS_SPEC)
+    typed = _typed(spark, bronze, VINCULOS_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert r["estabelecimento_regiao_saude_id_sus"] == "0012"      # roman+zfill kept text
@@ -300,7 +303,7 @@ def test_scnes_habilitacoes_two_stage_roundtrip(spark, tmp_path):
     out = transform_fact(raw, HABILITACOES_SPEC, ftp_arquivo_nome="HBSP2408.dbc")
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze)
-    typed = _typed(spark, bronze, HABILITACOES_SPEC)
+    typed = _typed(spark, bronze, HABILITACOES_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
     assert sch["leitos_quantidade"] == "bigint" and r["leitos_quantidade"] == 12

@@ -11,6 +11,7 @@ recorded in ROUND_NOTES.md.
 
 from __future__ import annotations
 
+import csv
 import datetime as dt
 import sys
 import time
@@ -24,9 +25,10 @@ from pyspark.sql import types as T
 
 from dbc_fixtures import make_dbc, make_dbf
 from test_datasus_ftp import FakeFtpSession
+from test_pipelines import _counting
 
 from sm_etl_cloud_run_spark import runner
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, rehearsal, spark_type_map
+from sm_etl_cloud_run_spark.pipelines import PA_SPEC, base, rehearsal, spark_type_map
 from sm_etl_cloud_run_spark.sinks import watermark
 from sm_etl_cloud_run_spark.sinks.watermark import read_control, touch_watermark, write_control
 from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
@@ -352,6 +354,61 @@ def test_ep1_fails_on_a_vanished_file(spark, tmp_path):
     with pytest.raises(Exception, match="550 PASP2408.dbc: No such file"):
         rehearsal.ep1_baixar_lote(spark, pending)
     assert all(r["timestamp_etl_gcs"] is None for r in read_control(control))
+
+
+def test_ep1_batch_builds_the_plan_once(spark, tmp_path, monkeypatch):
+    """An EP1 batch builds the stage-1 Columns once, before its pool,
+    and each file lands its own rows; the next batch builds its own."""
+    tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 3)}}
+    _configure_lifecycle(spark, tmp_path, tree, jdbc_table="pa_fato")
+    builds = _counting(monkeypatch, base, "_stage1")
+    rows = rehearsal.refresh_control(spark)
+    rehearsal.ep1_baixar_lote(spark, rows)
+    assert len(builds) == 1
+    for arquivo, n in (("PASP2407.dbc", 2), ("PASP2408.dbc", 3)):
+        assert spark.read.option("header", True).csv(str(tmp_path / "bronze" / arquivo)).count() == n
+    rehearsal.ep1_baixar_lote(spark, rows[:1])
+    assert len(builds) == 2
+
+
+def _drop_column(header, rows):
+    return header[1:], [r[1:] for r in rows]
+
+
+def _swap_columns(header, rows):
+    order = [1, 0, *range(2, len(header))]
+    return [header[i] for i in order], [[r[i] for i in order] for r in rows]
+
+
+def _undecoded_flag(header, rows):
+    flag = next(c for c, t in spark_type_map(PA_SPEC).items() if t == "boolean")
+    rows[0][header.index(flag)] = "7"
+    return header, rows
+
+
+@pytest.mark.parametrize("tamper,error", [
+    (_drop_column, "header"), (_swap_columns, "header"), (_undecoded_flag, "boolean value"),
+])
+def test_ep2_refuses_bronze_off_the_spec(spark, tmp_path, tamper, error):
+    """A bronze file whose header lacks a spec column or orders the
+    columns otherwise, or whose boolean column holds a value the cast
+    would load as False, fails EP2's batch before the first commit: no
+    warehouse row, no `timestamp_load_bd`, for either file."""
+    tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 2)}}
+    control, derby = _configure_lifecycle(spark, tmp_path, tree, jdbc_table="pa_fato")
+    rehearsal.ep1_baixar_lote(spark, rehearsal.refresh_control(spark))
+    (part,) = (tmp_path / "bronze" / "PASP2408.dbc").glob("part-*.csv")
+    with open(part, newline="") as f:
+        header, *rows = list(csv.reader(f))
+    header, rows = tamper(header, rows)
+    with open(part, "w", newline="") as f:
+        csv.writer(f).writerows([header, *rows])
+    part.with_name(f".{part.name}.crc").unlink()  # the edit is the point
+    with pytest.raises(Exception, match=error):
+        rehearsal.ep2_inserir_lote(spark, read_control(control))
+    assert all(r["timestamp_load_bd"] is None for r in read_control(control))
+    with pytest.raises(Exception, match="'PA_FATO' does not exist"):
+        read_jdbc_table(spark, derby, "pa_fato").count()
 
 
 def test_refresh_control_survives_partial_listing(spark, tmp_path):

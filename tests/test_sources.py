@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from sm_etl_cloud_run_spark.sources import parse_ftp_list_lines, read_csv_allstring
+from sm_etl_cloud_run_spark.sources import parse_ftp_list_lines
 from sm_etl_cloud_run_spark.sources.ftp_list import parse_list_lines
 
 
@@ -43,7 +43,9 @@ def test_parse_list_lines_driver_side():
 def test_read_csv_allstring_and_cast(spark, tmp_path):
     p = tmp_path / "data.csv"
     p.write_text("a,b,c\n1,2.5,True\n,0.5,False\n")
-    df = read_csv_allstring(spark, str(p))
+    # EP2's bronze read: an all-string schema, checked against the header
+    df = (spark.read.schema("a string, b string, c string").option("header", True)
+          .option("enforceSchema", False).csv(str(p)))
     assert df.columns == ["a", "b", "c"]
     assert all(f.dataType.simpleString() == "string" for f in df.schema.fields)
     # nothing is typed at read time; the load stage casts

@@ -19,8 +19,12 @@ caller or is deleted.
 
 A second scan does the same for the fields of the package's
 `@dataclass`es: a field that no production code reads as an attribute
-(`spec.rename`) fails unless it is listed with its reason. Field names
-match across classes, so this scan, too, can only miss an unread field.
+(`spec.rename`) fails unless it is listed with its reason. A read
+counts only through a receiver that is annotated with, or bound to, the
+field's class (`_Receivers`), so a dead field with a common name
+(`name`, `path`) is not hidden by an unrelated `x.name`. Bindings are
+read flow-insensitively and across modules by bare name, so this scan,
+too, can only miss an unread field.
 
 A third scan, for want of an installed linter, fails on an imported
 name that its module never uses.
@@ -161,21 +165,148 @@ def test_public_surface_has_production_callers():
     assert sorted(_KEPT - unreached) == [], "listed, but now has a production caller or is gone"
 
 
+def _annotated(ann: ast.AST | None, classes: set[str]) -> set[str]:
+    """The dataclasses an annotation names, string annotations included."""
+    if ann is None:
+        return set()
+    words = _names(ann) | {w for n in ast.walk(ann) if isinstance(n, ast.Constant)
+                           and isinstance(n.value, str) for w in _WORD.findall(n.value)}
+    return words & classes
+
+
+# builtins whose result holds what their arguments hold
+_PASS = {"enumerate", "zip", "sorted", "reversed", "list", "tuple", "set", "iter", "next", "filter"}
+
+
+class _Receivers:
+    """Which dataclasses an expression may hold, by a flow-insensitive
+    reading of annotations and bindings: a name holds what its
+    annotation names or what is bound to it; a call of a dataclass, or
+    of a function annotated to return one, holds it; a container holds
+    what its elements hold, so indexing it, iterating it or calling its
+    methods holds the same. Module-level names, functions' return
+    annotations and `self.x = ...` attributes match across modules by
+    bare name. An expression form not read here holds nothing, so a
+    gap can only flag a field that is read, never hide one that is
+    not."""
+
+    def __init__(self, trees: list[ast.Module], classes: set[str]):
+        self.classes = classes
+        self.returns: dict[str, set[str]] = {}
+        self.attrs: dict[str, set[str]] = {}
+        self.globals: dict[str, set[str]] = {}
+        for t in trees:
+            for n in ast.walk(t):
+                if isinstance(n, ast.FunctionDef):
+                    self.returns.setdefault(n.name, set()).update(_annotated(n.returns, classes))
+        for _ in range(2):  # a binding may use a name bound later in the file
+            for t in trees:
+                self.bind(t.body, self.globals)
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Assign):
+                        for tgt in n.targets:
+                            if isinstance(tgt, ast.Attribute):
+                                self.attrs.setdefault(tgt.attr, set()).update(self.of(n.value, {}))
+
+    def of(self, e: ast.AST | None, env: dict[str, set[str]]) -> set[str]:
+        if isinstance(e, ast.Name):
+            return env.get(e.id, set()) | self.globals.get(e.id, set())
+        if isinstance(e, ast.Call):
+            f = e.func
+            if isinstance(f, ast.Name) and f.id in _PASS:
+                return set().union(*(self.of(x, env) for x in e.args))
+            if isinstance(f, ast.Name):
+                return ({f.id} & self.classes) | self.returns.get(f.id, set())
+            if isinstance(f, ast.Attribute):
+                return self.returns.get(f.attr, set()) | self.of(f.value, env)
+        if isinstance(e, ast.Attribute):
+            return self.attrs.get(e.attr, set()) | self.globals.get(e.attr, set())
+        if isinstance(e, ast.Subscript):
+            return self.of(e.value, env)
+        if isinstance(e, (ast.Tuple, ast.List, ast.Set)):
+            return set().union(*(self.of(x, env) for x in e.elts))
+        if isinstance(e, (ast.ListComp, ast.GeneratorExp)):
+            inner = dict(env)
+            for g in e.generators:
+                self.bind_target(g.target, self.of(g.iter, inner), inner)
+            return self.of(e.elt, inner)
+        return set()
+
+    def bind_target(self, target: ast.AST, held: set[str], env: dict[str, set[str]]) -> None:
+        for n in ast.walk(target):
+            if isinstance(n, ast.Name):
+                env.setdefault(n.id, set()).update(held)
+
+    def bind(self, body: list[ast.stmt], env: dict[str, set[str]]) -> None:
+        """Bind the names that the statements of one scope assign."""
+        for n in _scope_nodes(body):
+            if isinstance(n, ast.Assign):
+                for tgt in n.targets:
+                    self.bind_target(tgt, self.of(n.value, env), env)
+            elif isinstance(n, ast.AnnAssign):
+                held = _annotated(n.annotation, self.classes) | self.of(n.value, env)
+                self.bind_target(n.target, held, env)
+            elif isinstance(n, (ast.For, ast.comprehension)):
+                self.bind_target(n.target, self.of(n.iter, env), env)
+
+
+def _scope_nodes(body: list[ast.AST]):
+    """Every node of one scope, not descending into nested functions,
+    lambdas or classes (the nodes themselves are yielded)."""
+    todo = list(body)
+    while todo:
+        n = todo.pop()
+        yield n
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)):
+            todo.extend(ast.iter_child_nodes(n))
+
+
+def _field_reads(rec: _Receivers, body: list[ast.AST], env: dict[str, set[str]],
+                 fields: dict[str, set[str]], owner: str | None = None) -> set[str]:
+    """`Class.field` for each field read, in this scope and the scopes
+    nested in it, through a receiver that holds the field's class."""
+    env = {k: set(v) for k, v in env.items()}
+    for _ in range(2):
+        rec.bind(body, env)
+    out = set()
+    for n in _scope_nodes(body):
+        if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load):
+            out |= {f"{c}.{n.attr}" for c in rec.of(n.value, env) if n.attr in fields.get(c, ())}
+        if isinstance(n, ast.ClassDef):
+            out |= _field_reads(rec, n.body, env, fields, owner=n.name)
+        elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            inner = dict(env)
+            args = [*n.args.posonlyargs, *n.args.args, *n.args.kwonlyargs]
+            for i, a in enumerate(args):
+                held = _annotated(a.annotation, rec.classes)
+                if i == 0 and owner and not isinstance(n, ast.Lambda):
+                    held = held | {owner}  # `self`
+                inner[a.arg] = held
+            body_ = n.body if isinstance(n.body, list) else [n.body]
+            out |= _field_reads(rec, [*n.args.defaults, *body_], inner, fields)
+    return out
+
+
 def unread_fields() -> set[str]:
     """Public fields of package `@dataclass`es that no production code
-    reads as an attribute."""
+    reads as an attribute of a receiver that holds the field's class
+    (`spec.rename` with `spec: FactSpec`, or `spec = TIPOS[tipo]` with
+    `TIPOS: dict[str, FactSpec]`)."""
     pkg = _package()
     trees = [tree for _, tree in pkg] + [ast.parse(f.read_text()) for f in _scripts()]
-    read = {n.attr for t in trees for n in ast.walk(t)
-            if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)}
-    return {
-        f"{mod}.{st.name}.{part.target.id}"
-        for mod, tree in pkg for st in tree.body
-        if isinstance(st, ast.ClassDef) and any("dataclass" in _names(d) for d in st.decorator_list)
-        for part in st.body
-        if isinstance(part, ast.AnnAssign) and isinstance(part.target, ast.Name)
-        and not part.target.id.startswith("_") and part.target.id not in read
-    }
+    owner = {}
+    fields: dict[str, set[str]] = {}
+    for mod, tree in pkg:
+        for st in tree.body:
+            if isinstance(st, ast.ClassDef) and any("dataclass" in _names(d) for d in st.decorator_list):
+                names = {p.target.id for p in st.body
+                         if isinstance(p, ast.AnnAssign) and isinstance(p.target, ast.Name)
+                         and not p.target.id.startswith("_")}
+                fields[st.name] = names
+                owner.update({f"{st.name}.{f}": f"{mod}.{st.name}.{f}" for f in names})
+    rec = _Receivers(trees, set(fields))
+    read = set().union(*(_field_reads(rec, t.body, {}, fields) for t in trees))
+    return {q for f, q in owner.items() if f not in read}
 
 
 def test_dataclass_fields_are_read():
