@@ -11,10 +11,10 @@ the all-string bronze CSV and forces types
 Here the per-source differences are DATA (a :class:`FactSpec`), and the
 chain is ONE Catalyst pipeline — every rule a column expression, fused
 by whole-stage codegen into a single pass over the scan. The rules are
-composed in Python into one projection, which a batch of files builds
-once (`build_transform`). The spec is also the second stage's type map:
-the rules say which columns become dates and booleans, so a spec
-declares only its numeric columns.
+composed in Python into one projection, and a batch of files is one
+DataFrame, so a batch builds that projection once. The spec is also
+the second stage's type map: the rules say which columns become dates
+and booleans, so a spec declares only its numeric columns.
 
 Scale notes: the only joins are broadcast lookups against small dims;
 the panel filter is an `isin` against a parameter-sized id list (hash
@@ -78,68 +78,47 @@ def transform_fact(
     panel_ids: Sequence[str] | None = None,
     periods: DataFrame | None = None,
     geo: DataFrame | None = None,
-    ftp_arquivo_nome: str = "",
 ) -> DataFrame:
-    """Stage-1 transform: all-string raw chunk → cleaned, enriched fact.
+    """Stage-1 transform: all-string raw records → cleaned, enriched fact.
 
-    The spec's panel filter applies when `panel_ids` is given (they are
-    deployment config), its condition always. `periods` must carry
+    `raw` also carries each row's source file, `ftp_arquivo_nome`, so
+    one call serves a batch of files; that column passes through as the
+    last one, and the row id does not hash it (P9). The spec's panel
+    filter applies when `panel_ids` is given (they are deployment
+    config), its condition always. `periods` must carry
     (data_inicio date, id); `geo` (id_sus, id).
     The row id derives from the row's content (P9), not the reference's
     random UUIDv7. Pandas-coerce parity (invalid date/number → NULL)
     needs ANSI off: the session must carry the engine's conventions
     (`session.get_spark`, `tables.load_tables`).
-
-    One file's call; a batch of files with the same raw columns builds
-    the rules once with `build_transform` and applies them per file.
     """
-    apply = build_transform(spec, raw.columns, panel_ids=panel_ids, periods=periods, geo=geo)
-    return apply(raw, ftp_arquivo_nome)
+    raw_columns = tuple(c for c in raw.columns if c != "ftp_arquivo_nome")
+    where, select, row_id = _stage1(spec, panel_ids, raw_columns)
+    df = raw if where is None else raw.where(where)
+    df = df.select(*select, "ftp_arquivo_nome").withColumn("id", row_id)
 
+    # J1 — monthly period id (broadcast equi join on truncated month).
+    if periods is not None:
+        df = joins.period_equi_join(
+            df, periods.select("data_inicio", "id"),
+            F.col(spec.period_date_col),
+            attach={"id": "periodo_id"},
+        )
 
-def build_transform(
-    spec: FactSpec,
-    raw_columns: Sequence[str],
-    *,
-    panel_ids: Sequence[str] | None = None,
-    periods: DataFrame | None = None,
-    geo: DataFrame | None = None,
-) -> Callable[[DataFrame, str], DataFrame]:
-    """`transform_fact`'s rules for raw frames of `raw_columns`, built
-    once: the returned `apply(raw, ftp_arquivo_nome)` costs one `where`,
-    one `select`, the two broadcast joins and one `withColumns`, where
-    building the rules takes thousands of JVM calls. Each apply re-reads
-    the dims, so a dim row added between files is seen."""
-    where, select, row_id = _stage1(spec, panel_ids, tuple(raw_columns))
+    # J2 — geography id (broadcast hash join).
+    if geo is not None:
+        df = joins.broadcast_lookup(
+            df, geo.select("id_sus", "id"),
+            F.col(spec.geo_key_col) == geo["id_sus"],
+            select={"id": "unidade_geografica_id"},
+        )
 
-    def apply(raw: DataFrame, ftp_arquivo_nome: str) -> DataFrame:
-        df = raw if where is None else raw.where(where)
-        df = df.select(*select).withColumn("id", row_id)
-
-        # J1 — monthly period id (broadcast equi join on truncated month).
-        if periods is not None:
-            df = joins.period_equi_join(
-                df, periods.select("data_inicio", "id"),
-                F.col(spec.period_date_col),
-                attach={"id": "periodo_id"},
-            )
-
-        # J2 — geography id (broadcast hash join).
-        if geo is not None:
-            df = joins.broadcast_lookup(
-                df, geo.select("id_sus", "id"),
-                F.col(spec.geo_key_col) == geo["id_sus"],
-                select={"id": "unidade_geografica_id"},
-            )
-
-        # P3 — audit + provenance columns.
-        return df.withColumns({
-            "criacao_data": dates.now_gmt_minus3(),
-            "atualizacao_data": dates.now_gmt_minus3(),
-            "ftp_arquivo_nome": F.lit(ftp_arquivo_nome),
-        })
-
-    return apply
+    # P3 — audit columns; the file name stays the last column.
+    df = df.withColumns({
+        "criacao_data": dates.now_gmt_minus3(),
+        "atualizacao_data": dates.now_gmt_minus3(),
+    })
+    return df.select(*(c for c in df.columns if c != "ftp_arquivo_nome"), "ftp_arquivo_nome")
 
 
 # the length SQL's two-argument `substring(s, pos)` takes: to the end

@@ -19,15 +19,17 @@ tipo.
   (`sinks/watermark.py`), no Spark job — the reference's
   `/ftp_metadados` refresh (etl/datasus_ftp_metadados.py:164-382).
 - **EP1** (`ep1_baixar_lote`): gate-selected files → executor-side
-  download of exactly the ledger's file name + DBC decode (S1) →
-  the stage-1 transform (the full F/P/C/J chain, built once per
-  batch) → bronze CSV (K1), all files concurrently → one
-  `timestamp_etl_gcs` watermark rewrite for the batch (K7) —
+  download of exactly the ledger's file names + DBC decode, one task
+  per file, each row tagged with its file (S1) → the stage-1 transform
+  (the full F/P/C/J chain) → one partitioned bronze CSV write (K1),
+  the whole batch one Spark job → one `timestamp_etl_gcs` watermark
+  rewrite for the batch (K7) —
   etl/siasus_procedimentos_ambulatoriais.py:117-464.
 - **EP2** (`ep2_inserir_lote`): the batch's bronze all-string CSV (S6),
-  read once → typed cast (C20) → one staging table → per-file
-  transactional JDBC commit: delete-conflicts + insert + single commit
-  (K2/K3) → `timestamp_load_bd` watermark per committed file —
+  read once, each file's name read back from its directory → typed
+  cast (C20) → one staging table → per-file transactional JDBC commit:
+  delete-conflicts + insert + single commit (K2/K3) →
+  `timestamp_load_bd` watermark per committed file —
   load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:146-215.
 
 `runner.py` calls a job once as `job(spark, rows)` with every pending
@@ -42,21 +44,19 @@ from __future__ import annotations
 import operator
 import os
 import re
-from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sinks.jdbc import commit_staged_load, write_jdbc_append
-from ..sinks.partitioned import write_bronze_csv
+from ..sinks.partitioned import bronze_dir, write_bronze_csv
 from ..sinks.watermark import LEDGER_SCHEMA, read_control, touch_watermark, write_control
 from ..sources.datasus_ftp import DatasusFtpClient, read_datasus_ftp
 from ..sources.ftp_list import parse_list_lines
-from .base import FactSpec, build_transform, cast_allstring_typed, spark_type_map
+from .base import FactSpec, cast_allstring_typed, spark_type_map, transform_fact
 from .scnes import HABILITACOES_SPEC, VINCULOS_SPEC
 from .siasus_bpa_i import BPA_I_SPEC
 from .siasus_pa import PA_SPEC
@@ -231,54 +231,35 @@ def _validated_batch(rows: list[dict]) -> tuple[str, list[str]]:
 # EP1 — stage-1 ETL for the pending control rows
 # ---------------------------------------------------------------------------
 
-def _ep1_body(
-    spark: SparkSession, spec: FactSpec, transform: Callable[[DataFrame, str], DataFrame], arquivo: str,
-) -> None:
-    """EP1 minus the watermark: download + decode one file, apply the
-    batch's stage-1 `transform` and land it in its bronze directory.
-    Thread-safe — each body builds an isolated plan over the shared
-    Columns and writes an isolated path, so many bodies run
-    concurrently on one session."""
-    raw = read_datasus_ftp(
-        spark, _cfg("host"), _cfg("directory"), [arquivo], spec.raw_columns,
-        transport_factory=_cfg("transport_factory"),
-    ).fillna("")
-    write_bronze_csv(transform(raw, arquivo), f"{_cfg('bronze_root')}/{arquivo}")
-
-
 def ep1_baixar_lote(spark: SparkSession, rows: list[dict]) -> None:
     """EP1 for every pending file of one tipo: download + decode +
-    transform each to bronze, then watermark the whole batch.
+    transform the batch to bronze, then watermark the whole batch.
 
-    Each file's pure-Python DBC decode is a single task, so running the
-    files one after another leaves every other core idle (measured:
-    4 shards 88 s, 8 shards 188 s — flat ~4.3k rows/s). The per-file
-    bodies are therefore submitted CONCURRENTLY from a thread pool:
-    Spark schedules concurrent actions on one session and each body's
-    decode task lands on its own core. Every filename is validated
-    before any body runs, and the watermark is touched ONCE, after every
-    body succeeds, in one atomic control rewrite: a crashed batch leaves
-    no file watermarked, and its re-run is idempotent because bronze
-    writes are per-file overwrites.
+    The batch is one Spark job: the decode runs one task per file (the
+    pure-Python DBC decode, measured flat ~4.3k rows/s per task) and
+    tags each row with its file, one `transform_fact` serves the batch,
+    and one partitioned write lands each file in its bronze directory.
+    A year × 27 UFs is one job of 324 tasks over the cluster's cores,
+    where the reference loops file by file on one node.
 
-    At cluster scale the same shape holds: a year × 27 UFs is one
-    324-body batch = one wave of 324 concurrent single-task jobs, not
-    324 sequential chunk loops (the reference's model).
-
-    The stage-1 rules are built once for the batch, before the pool
-    (`build_transform`), and every body applies them to its own file.
+    Every filename is validated before the read, and the watermark is
+    touched ONCE, after the write, in one atomic control rewrite: a
+    crashed batch leaves no file watermarked, and its re-run is
+    idempotent because the write overwrites exactly the batch's
+    bronze directories.
     """
     tipo, arquivos = _validated_batch(rows)
     if not arquivos:
         return
     spec = TIPOS[tipo]
-    transform = build_transform(
-        spec, spec.raw_columns,
-        panel_ids=_cfg("panel_ids"), periods=_cfg("periods"), geo=_cfg("geo"),
+    raw = read_datasus_ftp(
+        spark, _cfg("host"), _cfg("directory"), arquivos, spec.raw_columns,
+        transport_factory=_cfg("transport_factory"),
+    ).fillna("")
+    fact = transform_fact(
+        raw, spec, panel_ids=_cfg("panel_ids"), periods=_cfg("periods"), geo=_cfg("geo"),
     )
-    with ThreadPoolExecutor(max_workers=min(len(arquivos), 32)) as pool:
-        # list() re-raises the first body failure before the watermark
-        list(pool.map(lambda a: _ep1_body(spark, spec, transform, a), arquivos))
+    write_bronze_csv(fact, _cfg("bronze_root"), arquivos)
     touch_watermark(
         _cfg("control_path"), {"tipo": [tipo], "arquivo": arquivos}, "timestamp_etl_gcs",
     )
@@ -297,8 +278,10 @@ def ep2_inserir_lote(spark: SparkSession, rows: list[dict]) -> None:
     and a batch of another tipo is refused before anything is staged.
 
     The expensive half runs once for the whole batch: one read of every
-    file's bronze directory, one typed cast, one executor-parallel JDBC
-    write into one staging table (`<target>_stg`). The read names the
+    file's bronze directory, `<bronze_root>/ftp_arquivo_nome=<arquivo>/`
+    (the file name comes from the path; a missing directory fails the
+    read), one typed cast, one executor-parallel JDBC write into one
+    staging table (`<target>_stg`). The read names the
     columns from the spec (`spark_type_map`) and checks each bronze
     header against them, so a header that lacks a column or orders them
     otherwise fails the staging write. The same write counts the
@@ -327,11 +310,13 @@ def ep2_inserir_lote(spark: SparkSession, rows: list[dict]) -> None:
     coltypes = CONFIG.get("jdbc_column_types")
     types = spark_type_map(spec)
 
+    root = _cfg("bronze_root")
     raw = (
         spark.read.schema(T.StructType([T.StructField(c, T.StringType()) for c in types]))
         .option("header", True)
         .option("enforceSchema", False)
-        .csv([f"{_cfg('bronze_root')}/{arquivo}" for arquivo in arquivos])
+        .option("basePath", root)
+        .csv([bronze_dir(root, arquivo) for arquivo in arquivos])
     )
     undecoded = reduce(
         operator.or_,

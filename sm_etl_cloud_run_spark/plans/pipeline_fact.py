@@ -103,6 +103,7 @@ def pipeline_fact_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderkey") % 43 == 0, "999")
         .otherwise((F.col("o_orderkey") % 120).cast("string"))
         .alias("IDADE"),
+        F.lit("MINI2408.dbc").alias("ftp_arquivo_nome"),
     )
     periods = (
         o.select(F.to_date(F.date_trunc("month", "o_orderdate")).alias("data_inicio"))
@@ -118,7 +119,6 @@ def pipeline_fact_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         panel_ids=_PANEL,
         periods=periods,
         geo=geo,
-        ftp_arquivo_nome="MINI2408.dbc",
     )
     return out.select(
         "pedido_id",

@@ -8,7 +8,7 @@ resolved from a `module:function` path — schedulable by any orchestrator
 (Airflow task, cron, spark-submit).
 
 A job is `job(spark, rows)`, called ONCE with every pending control row,
-so a job can run its per-file bodies concurrently and touch the
+so a job can run the whole batch as one Spark plan and touch the
 watermark table in as few rewrites as its recovery contract allows.
 
 Usage:

@@ -43,6 +43,11 @@ _RUNTIME_CONVENTIONS = {
     # distributed_rank/cumsum family are user-specified counts, which
     # AQE never coalesces, so their partition-id arithmetic is intact.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # One open writer per task: a partitioned write (EP1's bronze) then
+    # plans no per-task Sort, which would hold a whole decoded file before
+    # writing its first row. An EP1 task holds one file; a task that
+    # meets a second partition value falls back to sorting.
+    "spark.sql.maxConcurrentOutputFileWriters": "1",
     # r12 negative result (guide §3.1, §9), recorded so it isn't re-tried
     # blindly: `spark.sql.join.preferSortMergeJoin=false` +
     # `spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=128m`

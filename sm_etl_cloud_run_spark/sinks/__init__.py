@@ -3,7 +3,7 @@
 The reference's warehouse loads are transactional delete-then-insert
 against Postgres; the engine keeps those semantics:
 
-- K1 bronze write            → per-file bronze CSV (`partitioned`)
+- K1 bronze write            → one partitioned bronze CSV write per batch (`partitioned`)
 - K2/K3 delete-then-insert   → staged transactional JDBC load (`jdbc`)
 - K7 watermark update        → driver-side parquet ledger, one-rename swap
 

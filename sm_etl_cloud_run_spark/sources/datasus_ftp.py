@@ -117,12 +117,17 @@ def read_datasus_ftp(
     Task i fetches `names[i]` in its own FTP session (the factory is
     shipped to executors, so it must be picklable — the default ftplib
     factory and any module-level fake both are); a name missing from
-    the server fails its task. Output is the all-string record schema.
+    the server fails its task. Output is the all-string record schema
+    plus `ftp_arquivo_nome`, which task i fills with `names[i]`.
     """
-    schema = T.StructType([T.StructField(c, T.StringType(), True) for c in columns])
+    out_columns = [*columns, "ftp_arquivo_nome"]
+    schema = T.StructType([T.StructField(c, T.StringType(), True) for c in out_columns])
     # task i fetches names[i]: a range with one partition per file needs
     # no shuffle to spread the files over tasks
     files = spark.range(0, len(names), 1, len(names))
+
+    def frame(rows: list[dict], name: str) -> pd.DataFrame:
+        return pd.DataFrame(rows, columns=columns, dtype="object").assign(ftp_arquivo_nome=name)
 
     def fetch_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         client = DatasusFtpClient(host, transport_factory=transport_factory)
@@ -134,9 +139,9 @@ def read_datasus_ftp(
                         {c: (None if rec.get(c) is None else str(rec.get(c))) for c in columns}
                     )
                     if len(rows) >= BATCH_ROWS:
-                        yield pd.DataFrame(rows, columns=columns, dtype="object")
+                        yield frame(rows, names[i])
                         rows = []
                 if rows:
-                    yield pd.DataFrame(rows, columns=columns, dtype="object")
+                    yield frame(rows, names[i])
 
     return files.mapInPandas(fetch_parse, schema)

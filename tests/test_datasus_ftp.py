@@ -115,8 +115,10 @@ def test_read_datasus_ftp_end_to_end(spark):
         ["PA_CODUNI", "PA_QTDAPR"],
         transport_factory=lambda: FakeFtpSession(tree),
     )
-    got = sorted((r["PA_CODUNI"], r["PA_QTDAPR"]) for r in df.collect())
-    assert got == [("1234567", "3"), ("2077485", "12"), ("7654321", "8")]
+    got = sorted(map(tuple, df.collect()))
+    # each row carries the name of the file it came from
+    assert got == [("1234567", "3", "PASP2408_1.dbc"), ("2077485", "12", "PASP2408_1.dbc"),
+                   ("7654321", "8", "PASP2408_2.dbc")]
     # one task per file with no shuffle to spread the files
     assert df.rdd.getNumPartitions() == 2
     assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
@@ -132,4 +134,4 @@ def test_read_datasus_ftp_plain_dbf_payload(spark):
         ["PA_CODUNI", "PA_QTDAPR"],
         transport_factory=lambda: FakeFtpSession(tree),
     )
-    assert [tuple(r) for r in df.collect()] == [("1111111", "5")]
+    assert [tuple(r) for r in df.collect()] == [("1111111", "5", "PAXX2408.dbf")]

@@ -6,10 +6,11 @@ from __future__ import annotations
 
 import datetime as dt
 
-from sm_etl_cloud_run_spark.functions import cleaning
+from pyspark.sql import functions as F
+
 from sm_etl_cloud_run_spark.operators.aggregates import null_counts
 from sm_etl_cloud_run_spark.pipelines import PA_SPEC, transform_fact
-from sm_etl_cloud_run_spark.pipelines.base import build_transform, cast_allstring_typed, spark_type_map
+from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed, spark_type_map
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
 
 _PANEL = ["355030", "330455"]
@@ -68,7 +69,8 @@ def _raw_pa(spark):
     })
 
     rows = [tuple(r[c] for c in cols) for r in (r1, r2, r3, r4)]
-    return spark.createDataFrame(rows, ", ".join(f"`{c}` string" for c in cols))
+    raw = spark.createDataFrame(rows, ", ".join(f"`{c}` string" for c in cols))
+    return raw.withColumn("ftp_arquivo_nome", F.lit("PASP2408.dbc"))
 
 
 def _dims(spark):
@@ -89,7 +91,6 @@ def _transform(spark):
         panel_ids=_PANEL,
         periods=periods,
         geo=geo,
-        ftp_arquivo_nome="PASP2408.dbc",
     )
 
 
@@ -130,7 +131,7 @@ def test_pa_two_stage_roundtrip(spark, tmp_path):
     out = _transform(spark)
     bronze = str(tmp_path / "bronze")
     # K1: bronze CSV landing (all values serialized as text)
-    write_bronze_csv(out, bronze)
+    write_bronze_csv(out, bronze, ["PASP2408.dbc"])
 
     # EP2's read: the spec's columns as an all-string schema, header checked
     schema = ", ".join(f"`{c}` string" for c in spark_type_map(PA_SPEC))
@@ -182,40 +183,9 @@ def test_pa_stage1_from_real_dbc_file(spark):
         panel_ids=_PANEL,
         periods=periods,
         geo=geo,
-        ftp_arquivo_nome="PASP2408.dbc",
     )
     audit = ["criacao_data", "atualizacao_data"]  # wall-clock timestamps
     out_mem = transform_fact(_raw_pa(spark), PA_SPEC, **kw).drop(*audit)
     out_dbc = transform_fact(raw_dbc, PA_SPEC, **kw).drop(*audit)
     assert out_mem.columns == out_dbc.columns
     assert sorted(map(tuple, out_mem.collect())) == sorted(map(tuple, out_dbc.collect()))
-
-
-def _counting(monkeypatch, module, name):
-    """Wrap `module.name` so each call is counted; returns the counter."""
-    calls = []
-    real = getattr(module, name)
-
-    def counted(*args, **kw):
-        calls.append(args)
-        return real(*args, **kw)
-
-    monkeypatch.setattr(module, name, counted)
-    return calls
-
-
-def test_build_transform_applies_one_build_to_many_files(spark, monkeypatch):
-    """A transform built once lands each file's rows under its own name,
-    as `transform_fact` would, without building a rule Column again."""
-    periods, geo = _dims(spark)
-    raw = _raw_pa(spark)
-    built = _counting(monkeypatch, cleaning, "empty_to_null")
-    apply = build_transform(PA_SPEC, raw.columns, panel_ids=_PANEL, periods=periods, geo=geo)
-    n = len(built)
-    assert n > 0
-    outs = {name: apply(raw, name) for name in ("PASP2407.dbc", "PASP2408.dbc")}
-    assert len(built) == n
-    audit = ["criacao_data", "atualizacao_data"]
-    assert sorted(map(tuple, outs["PASP2408.dbc"].drop(*audit).collect())) == sorted(
-        map(tuple, _transform(spark).drop(*audit).collect()))
-    assert {r[0] for r in outs["PASP2407.dbc"].select("ftp_arquivo_nome").collect()} == {"PASP2407.dbc"}

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+from pyspark.sql import functions as F
+
 from sm_etl_cloud_run_spark.pipelines import (
     AIH_RD_SPEC,
     BPA_I_SPEC,
@@ -17,6 +19,10 @@ from sm_etl_cloud_run_spark.pipelines import (
 )
 from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed, spark_type_map
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
+
+
+# the source file every test row comes from
+_ARQUIVO = "XXSP2408.dbc"
 
 
 def _typed(spark, bronze, spec, landed):
@@ -33,7 +39,8 @@ def _row_df(spark, spec, overrides, default="X"):
     row.update(overrides)
     present = [c for c in cols if row.get(c, "__absent__") != "__absent__"]
     data = [tuple(row[c] for c in present)]
-    return spark.createDataFrame(data, ", ".join(f"`{c}` string" for c in present))
+    raw = spark.createDataFrame(data, ", ".join(f"`{c}` string" for c in present))
+    return raw.withColumn("ftp_arquivo_nome", F.lit(_ARQUIVO))
 
 
 def test_bpa_i_flags_and_condition(spark):
@@ -52,7 +59,6 @@ def test_bpa_i_flags_and_condition(spark):
     out = transform_fact(
         raw, BPA_I_SPEC,
         panel_ids=["355030"],
-        ftp_arquivo_nome="BISP2408.dbc",
     ).collect()
     assert len(out) == 1
     r = out[0]
@@ -74,7 +80,7 @@ def test_raas_substance_flags_and_interval(spark):
             "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815",
         },
     )
-    out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc").collect()
+    out = transform_fact(raw, RAAS_PS_SPEC).collect()
     r = out[0]
     assert r["usuario_abuso_substancias"] is True          # len>0
     assert r["usuario_abuso_substancias_alcool"] is True   # contains A
@@ -111,8 +117,8 @@ def test_aih_rd_vintage_harmonization(spark):
     cols = list(base_only)
     raw = spark.createDataFrame(
         [tuple(base_only[c] for c in cols)], ", ".join(f"`{c}` string" for c in cols)
-    )
-    out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc")
+    ).withColumn("ftp_arquivo_nome", F.lit(_ARQUIVO))
+    out = transform_fact(raw, AIH_RD_SPEC)
     r = out.collect()[0]
     assert r["periodo_data_inicio"] == dt.date(2024, 8, 1)       # C12 from ano+mes
     assert "processamento_periodo_ano_inicio" not in out.columns  # sources dropped
@@ -138,7 +144,7 @@ def test_scnes_vinculos_string_surgery(spark):
             "CODUFMUN": "355030",
         },
     )
-    r = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc").collect()[0]
+    r = transform_fact(raw, VINCULOS_SPEC).collect()[0]
     assert r["estabelecimento_regiao_saude_id_sus"] == "0012"
     assert r["estabelecimento_distrito_sanitario_id_sus"] == "0007"
     assert r["estabelecimento_microrregiao_saude_id_sus"] == "035001"
@@ -187,9 +193,9 @@ def test_raas_two_stage_roundtrip(spark, tmp_path):
          "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815",
          "QTDATE": "7", "QTDPCN": "2"},
     )
-    out = transform_fact(raw, RAAS_PS_SPEC, ftp_arquivo_nome="PSSP2408.dbc")
+    out = transform_fact(raw, RAAS_PS_SPEC)
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze)
+    write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, RAAS_PS_SPEC, out.columns)
     r = typed.collect()[0]
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
@@ -214,9 +220,9 @@ def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
          "VL_APRES": "123.45", "VL_APROV": "100.0",
          "IDADEPAC": "34", "CNPJMNT": "00000000000000"},
     )
-    out = transform_fact(raw, BPA_I_SPEC, ftp_arquivo_nome="BISP2408.dbc")
+    out = transform_fact(raw, BPA_I_SPEC)
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze)
+    write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, BPA_I_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
@@ -245,9 +251,9 @@ def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
          "MUNIC_MOV": "355030"},
         default="1",
     )
-    out = transform_fact(raw, AIH_RD_SPEC, ftp_arquivo_nome="RDSP2408.dbc")
+    out = transform_fact(raw, AIH_RD_SPEC)
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze)
+    write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, AIH_RD_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
@@ -276,9 +282,9 @@ def test_scnes_vinculos_two_stage_roundtrip(spark, tmp_path):
          "HORAOUTR": "4", "HORAHOSP": "20", "HORA_AMB": "16",
          "CODUFMUN": "355030"},
     )
-    out = transform_fact(raw, VINCULOS_SPEC, ftp_arquivo_nome="PFSP2408.dbc")
+    out = transform_fact(raw, VINCULOS_SPEC)
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze)
+    write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, VINCULOS_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]
@@ -300,9 +306,9 @@ def test_scnes_habilitacoes_two_stage_roundtrip(spark, tmp_path):
          "NIV_DEP": "1", "TERCEIRO": "0", "VINC_SUS": "1",
          "REGSAUDE": "IV", "NULEITOS": "12", "CODUFMUN": "355030"},
     )
-    out = transform_fact(raw, HABILITACOES_SPEC, ftp_arquivo_nome="HBSP2408.dbc")
+    out = transform_fact(raw, HABILITACOES_SPEC)
     bronze = str(tmp_path / "bronze")
-    write_bronze_csv(out, bronze)
+    write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, HABILITACOES_SPEC, out.columns)
     sch = {f.name: f.dataType.simpleString() for f in typed.schema.fields}
     r = typed.collect()[0]

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import csv
 import datetime as dt
+import itertools
 import sys
 import time
 
@@ -20,15 +21,15 @@ import os
 
 import pytest
 from pyspark import cloudpickle
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbc_fixtures import make_dbc, make_dbf
 from test_datasus_ftp import FakeFtpSession
-from test_pipelines import _counting
 
 from sm_etl_cloud_run_spark import runner
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, base, rehearsal, spark_type_map
+from sm_etl_cloud_run_spark.pipelines import PA_SPEC, rehearsal, spark_type_map
 from sm_etl_cloud_run_spark.sinks import watermark
 from sm_etl_cloud_run_spark.sinks.watermark import read_control, touch_watermark, write_control
 from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
@@ -356,19 +357,144 @@ def test_ep1_fails_on_a_vanished_file(spark, tmp_path):
     assert all(r["timestamp_etl_gcs"] is None for r in read_control(control))
 
 
-def test_ep1_batch_builds_the_plan_once(spark, tmp_path, monkeypatch):
-    """An EP1 batch builds the stage-1 Columns once, before its pool,
-    and each file lands its own rows; the next batch builds its own."""
-    tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 3)}}
+_GROUPS = itertools.count()
+
+
+def _spark_jobs(spark, fn) -> int:
+    """The number of Spark jobs `fn()` starts, counted through a job
+    group on this thread (Spark's own threads, such as a broadcast's,
+    inherit it)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"counted-{next(_GROUPS)}"
+    sc.setJobGroup(group, "counted")
+    try:
+        fn()
+        # a later job in another group: once the status store lists it,
+        # it has seen every job started before it
+        sc.setJobGroup(f"{group}-probe", "probe")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-probe") and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(f"{group}-probe")
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def _bronze(tmp_path, arquivo: str):
+    """EP1's bronze directory of one file."""
+    return tmp_path / "bronze" / f"ftp_arquivo_nome={arquivo}"
+
+
+def test_ep1_batch_is_one_spark_plan(spark, tmp_path):
+    """An EP1 batch of three files starts as many Spark jobs as a batch
+    of one, and each file lands its own rows in its own bronze
+    directory."""
+    keep = {"PASP2406.dbc": 1, "PASP2407.dbc": 2, "PASP2408.dbc": 3}
+    tree = {_DIR: {arquivo: _tipo_dbc("PA", n) for arquivo, n in keep.items()}}
     _configure_lifecycle(spark, tmp_path, tree, jdbc_table="pa_fato")
-    builds = _counting(monkeypatch, base, "_stage1")
     rows = rehearsal.refresh_control(spark)
-    rehearsal.ep1_baixar_lote(spark, rows)
-    assert len(builds) == 1
-    for arquivo, n in (("PASP2407.dbc", 2), ("PASP2408.dbc", 3)):
-        assert spark.read.option("header", True).csv(str(tmp_path / "bronze" / arquivo)).count() == n
-    rehearsal.ep1_baixar_lote(spark, rows[:1])
-    assert len(builds) == 2
+    one = _spark_jobs(spark, lambda: rehearsal.ep1_baixar_lote(spark, rows[:1]))
+    three = _spark_jobs(spark, lambda: rehearsal.ep1_baixar_lote(spark, rows))
+    assert one > 0 and three == one
+    for arquivo, n in keep.items():
+        assert spark.read.option("header", True).csv(str(_bronze(tmp_path, arquivo))).count() == n
+
+
+def _redeliver(spark, tree, files: dict[str, bytes]) -> None:
+    """Re-publish `files` with new bytes and a newer FTP stamp, and
+    refresh the ledger, so exactly those files re-pend."""
+    tree[_DIR].update(files)
+    rehearsal.configure(transport_factory=lambda: _StampedFtp(tree, dict.fromkeys(files, "09-03-99")))
+    rehearsal.refresh_control(spark)
+
+
+def test_redelivered_file_that_keeps_no_row_clears_its_rows(spark, tmp_path):
+    """A PA file re-delivered with bytes whose rows all fall outside the
+    panel: its bronze directory holds only a header, EP2 deletes its old
+    warehouse rows, both watermarks are set, and the other file keeps
+    its rows."""
+    tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 3)}}
+    control, derby = _configure_lifecycle(spark, tmp_path, tree, jdbc_table="pa_fato")
+    rehearsal.refresh_control(spark)
+    _run_jobs(control, "PA")
+    _redeliver(spark, tree, {"PASP2408.dbc": _tipo_dbc("PA", 0)})
+    assert [r["arquivo"] for r in gate_pending_runs(read_control(control), "baixar")] == ["PASP2408.dbc"]
+    _run_jobs(control, "PA")
+
+    (part,) = _bronze(tmp_path, "PASP2408.dbc").glob("part-*.csv")
+    header = [c for c in spark_type_map(PA_SPEC) if c != "ftp_arquivo_nome"]
+    assert part.read_text().splitlines() == [",".join(header)]
+    loaded = read_jdbc_table(spark, derby, "pa_fato")
+    assert {r[0]: r[1] for r in loaded.groupBy("ftp_arquivo_nome").count().collect()} == {"PASP2407.dbc": 2}
+    assert all(r["timestamp_etl_gcs"] and r["timestamp_load_bd"] for r in read_control(control))
+
+
+def _lifecycle_state(spark, tmp_path, derby: str, control: str) -> tuple:
+    """Bronze rows per file directory, warehouse rows and ledger state,
+    without the audit timestamps (the wall clock of the run)."""
+    audit = ["criacao_data", "atualizacao_data"]
+    bronze = tmp_path / "bronze"
+    return (
+        {d.name: sorted(map(tuple, spark.read.option("header", True).csv(str(d)).drop(*audit).collect()))
+         for d in sorted(bronze.iterdir()) if d.is_dir()},
+        sorted(map(tuple, read_jdbc_table(spark, derby, "pa_fato").drop(*audit).collect())),
+        _ledger_state(control),
+    )
+
+
+def _crash_watermark(m) -> None:
+    def crash(*args, **kw):
+        raise OSError("crash before the watermark")
+
+    m.setattr(rehearsal, "touch_watermark", crash)
+
+
+def _crash_zero_row_overwrite(m) -> None:
+    real = DataFrameWriter.csv
+
+    def csv(self, path, *args, **kw):
+        if path.endswith("ftp_arquivo_nome=PASP2408.dbc"):
+            raise OSError("crash in the zero-row overwrite")
+        return real(self, path, *args, **kw)
+
+    m.setattr(DataFrameWriter, "csv", csv)
+
+
+@pytest.mark.parametrize("crash", [_crash_watermark, _crash_zero_row_overwrite])
+def test_ep1_crash_leaves_the_batch_pending(spark, tmp_path, monkeypatch, crash):
+    """EP1 crashes after its bronze write, at the watermark touch or in
+    the overwrite of a file that keeps no row: the whole batch stays
+    pending, and the rerun reaches the bronze, warehouse rows and
+    ledger of a run that never crashed."""
+    redelivered = {"PASP2407.dbc": _tipo_dbc("PA", 4), "PASP2408.dbc": _tipo_dbc("PA", 0)}
+    states = []
+    for run in ("clean", "crashed"):
+        base = tmp_path / run
+        base.mkdir()
+        tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 3)}}
+        control, derby = _configure_lifecycle(spark, base, tree, jdbc_table="pa_fato")
+        rehearsal.refresh_control(spark)
+        _run_jobs(control, "PA")
+        _redeliver(spark, tree, redelivered)
+        pending = gate_pending_runs(read_control(control), "baixar", tipo="PA")
+        assert sorted(r["arquivo"] for r in pending) == sorted(redelivered)
+        if run == "crashed":
+            with monkeypatch.context() as m:
+                crash(m)
+                with pytest.raises(OSError, match="crash"):
+                    rehearsal.ep1_baixar_lote(spark, pending)
+            assert gate_pending_runs(read_control(control), "baixar", tipo="PA") == pending
+        _run_jobs(control, "PA")
+        states.append(_lifecycle_state(spark, base, derby, control))
+    assert states[1] == states[0]
+    bronze, loaded, ledger = states[0]
+    assert sorted(bronze) == ["ftp_arquivo_nome=PASP2407.dbc", "ftp_arquivo_nome=PASP2408.dbc"]
+    assert not bronze["ftp_arquivo_nome=PASP2408.dbc"] and len(loaded) == 4
+    assert all(s[4] and s[5] for s in ledger)
 
 
 def _drop_column(header, rows):
@@ -397,7 +523,7 @@ def test_ep2_refuses_bronze_off_the_spec(spark, tmp_path, tamper, error):
     tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 2)}}
     control, derby = _configure_lifecycle(spark, tmp_path, tree, jdbc_table="pa_fato")
     rehearsal.ep1_baixar_lote(spark, rehearsal.refresh_control(spark))
-    (part,) = (tmp_path / "bronze" / "PASP2408.dbc").glob("part-*.csv")
+    (part,) = _bronze(tmp_path, "PASP2408.dbc").glob("part-*.csv")
     with open(part, newline="") as f:
         header, *rows = list(csv.reader(f))
     header, rows = tamper(header, rows)
@@ -627,13 +753,10 @@ def _configure_listing(control: str, files: dict[str, bytes], tmp_path) -> None:
 def test_control_plane_launches_no_spark_job(spark, tmp_path):
     """EP3, the runner's gate and a watermark touch read and write the
     driver-side ledger only: no Spark job starts."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     control = str(tmp_path / "ctl")
     _configure_listing(control, {"PASP2407.dbc": b"x", "PASP2408.dbc": b"yy"}, tmp_path)
-    # a job group on this thread tags any job the calls below start
-    sc.setJobGroup("control-plane", "control plane only")
-    try:
+
+    def control_plane():
         rehearsal.refresh_control(spark)
         assert runner.main([
             "--control", control, "--tipo", "PA", "--acao", "baixar", "--dry-run",
@@ -641,18 +764,8 @@ def test_control_plane_launches_no_spark_job(spark, tmp_path):
         ]) == 0
         touch_watermark(control, {"tipo": ["PA"], "arquivo": ["PASP2407.dbc"]},
                         "timestamp_etl_gcs")
-        # a later job in another group: once the status store lists it,
-        # it has seen every job started before it
-        sc.setJobGroup("control-plane-probe", "probe")
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup("control-plane-probe") and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup("control-plane-probe")
-    assert tracker.getJobIdsForGroup("control-plane") == []
+
+    assert _spark_jobs(spark, control_plane) == 0
     assert len(gate_pending_runs(read_control(control), "baixar", tipo="PA")) == 1
 
 
