@@ -12,8 +12,8 @@ idempotent watermark-gated warehouse loads), re-expressed Spark-first:
 - chunked-generator extraction becomes partitioned DataFrame scans
   (``sources/``), delete-then-insert loads become staged transactional
   JDBC loads (``sinks/``);
-- watermark gating becomes a control-table predicate driving incremental
-  batch runs (``streaming/incremental.py``);
+- watermark gating becomes a predicate over the driver-side control
+  ledger driving incremental batch runs (``sinks/watermark.py``);
 - plus large-scale pipeline operators the reference lacks: dedup
   (exact / MinHash-LSH / SimHash / n-gram Jaccard), similarity search,
   text analysis, multimodal column plumbing (``operators/``).

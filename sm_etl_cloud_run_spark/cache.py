@@ -33,12 +33,10 @@ from pyspark.storagelevel import StorageLevel
 _TRACKED: list[DataFrame] = []
 
 
-def persist_tracked(
-    df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
-) -> DataFrame:
+def persist_tracked(df: DataFrame) -> DataFrame:
     """Persist `df` (MEMORY_AND_DISK: spill, never OOM) and register it
     for a later :func:`release_tracked` sweep."""
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _TRACKED.append(out)
     return out
 

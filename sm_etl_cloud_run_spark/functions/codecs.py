@@ -160,15 +160,11 @@ def resize_bmp(payload: bytes, w: int, h: int) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-def encode_wav_pcm16(samples: np.ndarray, sample_rate: int, *, channels: int = 1) -> bytes:
-    """int16 sample array (frames, or frames×channels interleaved) →
-    RIFF/WAVE bytes with a 16-byte PCM fmt chunk."""
-    arr = np.asarray(samples, dtype=np.int16).reshape(-1)
-    data = arr.tobytes()
-    block_align = channels * 2
-    fmt = struct.pack(
-        "<HHIIHH", 1, channels, sample_rate, sample_rate * block_align, block_align, 16
-    )
+def encode_wav_pcm16(samples: np.ndarray, sample_rate: int) -> bytes:
+    """Mono int16 sample array → RIFF/WAVE bytes with a 16-byte PCM fmt
+    chunk."""
+    data = np.asarray(samples, dtype=np.int16).reshape(-1).tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     chunks = (
         b"WAVE"
         + b"fmt " + struct.pack("<I", len(fmt)) + fmt

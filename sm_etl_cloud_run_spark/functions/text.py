@@ -15,9 +15,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def tokens(col: Column, sep: str = " ") -> Column:
-    """Whitespace tokenization → array<string>, with EXACT SQL
-    `string_split(trim(col), sep)` semantics — including the edge that
+def tokens(col: Column) -> Column:
+    """Single-space tokenization → array<string>, with EXACT SQL
+    `string_split(trim(col), ' ')` semantics — including the edge that
     empty/whitespace-only text yields `['']` (one empty token), never
     `[]`.
 
@@ -29,7 +29,7 @@ def tokens(col: Column, sep: str = " ") -> Column:
     locks this in). A side benefit: `n_tokens` is always ≥ 1, so
     per-token ratios can never divide by zero on either engine.
     """
-    return F.split(F.trim(col), sep)
+    return F.split(F.trim(col), " ")
 
 
 def token_count(col: Column) -> Column:
@@ -80,13 +80,12 @@ def exploded_shingles(
     docs: DataFrame,
     k: int,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     distinct: bool = False,
     alias: str = "s",
 ) -> DataFrame:
-    """(id, shingle) rows: tokenize in a projection BELOW the explode,
-    then explode the k-word shingles (optionally distinct per doc).
+    """(doc_id, shingle) rows of a (doc_id, text) relation: tokenize in
+    a projection BELOW the explode, then explode the k-word shingles
+    (optionally distinct per doc).
 
     The single shared spelling of the hot shingle-explode shape so every
     call site gets the materialized-token fix (see
@@ -96,5 +95,5 @@ def exploded_shingles(
     if distinct:
         arr = F.array_distinct(arr)
     return docs.select(
-        F.col(id_col), tokens(F.col(text_col)).alias("__toks")
-    ).select(F.col(id_col), F.explode(arr).alias(alias))
+        F.col("doc_id"), tokens(F.col("text")).alias("__toks")
+    ).select(F.col("doc_id"), F.explode(arr).alias(alias))

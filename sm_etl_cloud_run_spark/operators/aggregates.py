@@ -26,11 +26,10 @@ def sorted_set_agg(col: str | Column) -> Column:
     return F.array_sort(F.collect_set(col))
 
 
-def null_counts(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """A4: one row with a null count per column — the validation aggregate
-    the reference asserts on before sinking."""
-    cols = list(columns) if columns else df.columns
+def null_counts(df: DataFrame, columns: Sequence[str]) -> DataFrame:
+    """A4: one row with a null count per listed column — the validation
+    aggregate the reference asserts on before sinking."""
     return df.select(
         F.count(F.lit(1)).alias("n_rows"),
-        *[F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in cols],
+        *[F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in columns],
     )

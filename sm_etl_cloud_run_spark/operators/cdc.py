@@ -28,14 +28,13 @@ def apply_cdc(
     seq_cols: Sequence[str],
     *,
     op_col: str = "op",
-    delete_ops: Sequence[str] = ("D",),
 ) -> DataFrame:
     """Latest-writer-wins snapshot of a change log.
 
     `seq_cols` must be a total order within each key (add a unique
     tiebreaker — e.g. the change id — when the timestamp can tie;
     without one, last-writer is nondeterministic on BOTH engines).
-    Rows whose latest op is in `delete_ops` are dropped.
+    Keys whose latest op is `'D'` (delete) are dropped.
     """
     w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in seq_cols])
     latest = (
@@ -43,4 +42,4 @@ def apply_cdc(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-    return latest.where(~F.col(op_col).isin(*delete_ops))
+    return latest.where(~F.col(op_col).isin("D"))

@@ -69,7 +69,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 8,
     shingle_k: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """MinHash signature per document: `sig_0 … sig_{n-1}` hex columns.
 
@@ -83,13 +82,8 @@ def minhash_signatures(
     per seed — recomputes the shingle array per seed and runs
     interpreted, ~10× slower at bench scale.)
 
-    `hash_fn="xxhash64"` is the production fast path: seeded 64-bit
-    integer hashes, fully codegen'd, no digest strings materialized —
-    the signature columns become `sig_i: bigint`. md5 stays the default
-    because it is the only hash both engines (Spark, DuckDB) compute
-    identically, which the correctness oracle requires. Any uniform
-    hash family yields a valid MinHash, so both paths find the same
-    exact-dups and statistically equivalent near-dups.
+    md5 because it is the only hash both engines (Spark, DuckDB)
+    compute identically, which the correctness oracle requires.
 
     Docs shorter than `shingle_k` words produce no shingles and drop out
     (they can't near-dup match anyway).
@@ -105,15 +99,6 @@ def minhash_signatures(
         F.col(id_col),
         F.explode(word_shingles_from_tokens(F.col("__toks"), shingle_k)).alias("__sh"),
     )
-    if hash_fn == "xxhash64":
-        return exploded.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64(F.lit(i), F.col("__sh"))).alias(f"sig_{i}")
-                for i in range(num_hashes)
-            ]
-        )
-    if hash_fn != "md5":
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
     n_digests = (num_hashes + 3) // 4
     digests = {
         d: F.md5(F.concat(F.lit(f"{d}:"), F.col("__sh"))) for d in range(n_digests)
@@ -260,13 +245,16 @@ def lsh_dedup_groups(
     )
 
 
+# min-label propagation rounds before `lsh_dedup_components` gives up
+_COMPONENT_MAX_ROUNDS = 20
+
+
 def lsh_dedup_components(
     signatures: DataFrame,
     *,
     id_col: str = "doc_id",
     num_hashes: int = 8,
     bands: int = 4,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Full transitive near-dup components over the LSH bucket graph.
 
@@ -292,7 +280,7 @@ def lsh_dedup_components(
         .localCheckpoint(eager=True)  # scanned twice per round
     )
     labels = edges.select(id_col).distinct().withColumn("__label", F.col(id_col))
-    for _ in range(max_iter):
+    for _ in range(_COMPONENT_MAX_ROUNDS):
         bucket_min = (
             edges.join(labels, id_col)
             .groupBy("__bucket")
@@ -318,8 +306,8 @@ def lsh_dedup_components(
             break
     else:
         raise RuntimeError(
-            f"lsh_dedup_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter"
+            f"lsh_dedup_components did not converge in {_COMPONENT_MAX_ROUNDS} rounds "
+            "(a component's diameter exceeds the round cap)"
         )
     return labels.withColumnRenamed("__label", "group_rep")
 
@@ -394,7 +382,7 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     shingle_k: int = 3,
     threshold: float = 0.8,
-    max_df: int | None = None,
+    max_df: int,
 ) -> DataFrame:
     """Asymmetric near-dup detection: shingle CONTAINMENT, not Jaccard.
 
@@ -410,8 +398,8 @@ def ngram_containment_pairs(
 
     Same inverted-index self-join shape and df-cap scale guard as
     `ngram_jaccard_pairs` (a shingle in df docs costs df² join rows;
-    with `max_df`, containment is exact over the informative-shingle
-    universe). At 100 TB: explode → hash-agg cap → bucket self-join →
+    shingles in more than `max_df` docs are dropped, so containment is
+    exact over the informative-shingle universe). At 100 TB: explode → hash-agg cap → bucket self-join →
     pair hash-agg, all map-side-combined; no windows, no Python.
     """
     shingled = df.select(
@@ -422,14 +410,13 @@ def ngram_containment_pairs(
             F.array_distinct(word_shingles_from_tokens(F.col("__toks"), shingle_k))
         ).alias("sh"),
     )
-    if max_df is not None:
-        kept = (
-            shingled.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") <= max_df)
-            .select("sh")
-        )
-        shingled = shingled.join(kept, "sh")
+    kept = (
+        shingled.groupBy("sh")
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .where(F.col("__df") <= max_df)
+        .select("sh")
+    )
+    shingled = shingled.join(kept, "sh")
     sizes = shingled.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
     a = shingled.alias("a")
     b = shingled.alias("b")

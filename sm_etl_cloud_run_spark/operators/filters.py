@@ -98,10 +98,10 @@ def watermark_gate(
     return control.where(F.col(sink_ts).isNull() | (F.col(source_ts) > F.col(sink_ts)))
 
 
-def sliding_month_gate(control: DataFrame, date_col: str, *, months_back_min: int = 5, months_back_max: int = 2) -> DataFrame:
+def sliding_month_gate(control: DataFrame, date_col: str) -> DataFrame:
     """F5: SISAB sliding window — periods between (first-of-month − 5mo)
     and (first-of-month − 2mo) (scripts/verificar_e_executar.py:170-198)."""
     first = F.trunc(F.current_date(), "MM")
-    lo = F.add_months(first, -months_back_min)
-    hi = F.add_months(first, -months_back_max)
+    lo = F.add_months(first, -5)
+    hi = F.add_months(first, -2)
     return control.where((F.col(date_col) >= lo) & (F.col(date_col) <= hi))

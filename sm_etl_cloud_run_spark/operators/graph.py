@@ -16,19 +16,19 @@ from pyspark.sql import functions as F
 
 PR_SCALE = 1_000_000_000_000   # 1e12 micro-pagerank units
 _DAMP_NUM = 85                 # damping 0.85 as an integer percentage
+# min-label propagation rounds before `min_label_components` gives up
+_COMPONENT_MAX_ROUNDS = 20
 
 
 def pagerank_undirected(
     pairs: DataFrame,
     *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
     iterations: int = 2,
 ) -> DataFrame:
     """Integer-exact PageRank over an undirected edge list.
 
-    `pairs` holds each undirected edge once (id_a < id_b by
-    convention); nodes are the edge participants (every node therefore
+    `pairs` holds each undirected edge once, as (id_a, id_b) with
+    id_a < id_b by convention; nodes are the edge participants (every node therefore
     has degree ≥ 1 — no dangling-mass term). Returns
     (id, deg, pr_micro): PageRank mass in 1e12 micro-units after
     `iterations` rounds from the uniform start.
@@ -48,9 +48,9 @@ def pagerank_undirected(
     1-row counter collect, as dedup_lsh_components does).
     """
     edges = pairs.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
-        pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
+        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     # Edge discovery (e.g. an all-pairs or LSH-candidate cosine join) is
     # the expensive stage, and every iteration re-reads the edge list —
@@ -98,29 +98,27 @@ def min_label_components(
     edges: DataFrame,
     *,
     node_col: str = "node",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 20,
 ) -> DataFrame:
     """Connected components over an explicit edge list by min-label
     propagation (Pregel-style fixpoint; the general-graph sibling of
     `dedup.lsh_dedup_components`, which is specialized to the bipartite
     doc↔bucket graph).
 
-    `nodes` seeds every vertex — including isolated ones, which come
+    `edges` holds (src, dst) pairs. `nodes` seeds every vertex — including isolated ones, which come
     back as their own singleton component (an entity-resolution
     requirement: an unmatched record is still an entity). Labels must
     be orderable; the component representative is the minimum label
     reachable. Each round is two keyed shuffles + a 1-row convergence
     read; `localCheckpoint` truncates lineage so plans stay linear.
-    Converges in O(component diameter) rounds.
+    Converges in O(component diameter) rounds, and raises past
+    `_COMPONENT_MAX_ROUNDS`.
 
     Returns (node_col, component_rep).
     """
     sym = (
-        edges.select(F.col(src_col).alias("__a"), F.col(dst_col).alias("__b"))
+        edges.select(F.col("src").alias("__a"), F.col("dst").alias("__b"))
         .unionByName(
-            edges.select(F.col(dst_col).alias("__a"), F.col(src_col).alias("__b"))
+            edges.select(F.col("dst").alias("__a"), F.col("src").alias("__b"))
         )
         .distinct()
         .localCheckpoint(eager=True)  # scanned every round
@@ -128,7 +126,7 @@ def min_label_components(
     labels = nodes.select(F.col(node_col)).distinct().withColumn(
         "__label", F.col(node_col)
     )
-    for _ in range(max_iter):
+    for _ in range(_COMPONENT_MAX_ROUNDS):
         nbr_min = (
             sym.join(labels, sym["__a"] == labels[node_col])
             .groupBy("__b")
@@ -149,8 +147,8 @@ def min_label_components(
             break
     else:
         raise RuntimeError(
-            f"min_label_components did not converge in {max_iter} rounds; "
-            "raise max_iter (component diameter exceeds the bound)"
+            f"min_label_components did not converge in {_COMPONENT_MAX_ROUNDS} "
+            "rounds (a component's diameter exceeds the round cap)"
         )
     return labels.withColumnRenamed("__label", "component_rep")
 
@@ -159,11 +157,9 @@ def bfs_levels(
     edges: DataFrame,
     seed,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_iter: int = 10,
 ) -> DataFrame:
-    """Single-source BFS distances over an undirected edge list —
+    """Single-source BFS distances over an undirected (src, dst) edge list —
     min-distance label propagation (the components operator's metric
     sibling; same Pregel shape: per round two keyed shuffles, a 1-row
     convergence read, localCheckpoint lineage truncation).
@@ -175,9 +171,9 @@ def bfs_levels(
     can't masquerade as a result.
     """
     sym = (
-        edges.select(F.col(src_col).alias("__a"), F.col(dst_col).alias("__b"))
+        edges.select(F.col("src").alias("__a"), F.col("dst").alias("__b"))
         .unionByName(
-            edges.select(F.col(dst_col).alias("__a"), F.col(src_col).alias("__b"))
+            edges.select(F.col("dst").alias("__a"), F.col("src").alias("__b"))
         )
         .distinct()
         .localCheckpoint(eager=True)

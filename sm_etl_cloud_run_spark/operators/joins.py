@@ -35,14 +35,14 @@ def broadcast_lookup(
     on: Column,
     *,
     select: dict[str, str],
-    how: str = "left",
 ) -> DataFrame:
-    """J2/J3: attach `select` (dim_col → output_name) via broadcast equi-join.
+    """J2/J3: attach `select` (dim_col → output_name) via broadcast
+    left equi-join.
 
     Catalyst prunes unreferenced dim columns from the broadcast; the fact
     side keeps its exact column set plus the attached lookups.
     """
-    out = fact.join(F.broadcast(dim), on, how)
+    out = fact.join(F.broadcast(dim), on, "left")
     keep = [fact[c] for c in fact.columns] + [dim[src].alias(dst) for src, dst in select.items()]
     return out.select(*keep)
 
@@ -52,13 +52,11 @@ def range_join(
     periods: DataFrame,
     date_col: Column,
     *,
-    start_col: str = "data_inicio",
-    end_col: str = "data_fim",
     attach: dict[str, str],
-    extra_dim_filter: Column | None = None,
-    dates: DataFrame | None = None,
+    dates: DataFrame,
 ) -> DataFrame:
-    """J1 general form: broadcast interval join date ∈ [start, end].
+    """J1 general form: broadcast interval join
+    date ∈ [data_inicio, data_fim].
 
     `attach` maps period columns to output names. The dim is broadcast;
     intervals stay ARBITRARY (overlap allowed), matching the reference's
@@ -75,12 +73,12 @@ def range_join(
     (same row multiplication), a date matching none is absent from the
     inner map and left-joins to NULL attach.
 
-    `dates` (r13, guide §2.4): optional caller-supplied single-column
-    ``__d`` relation that MUST equal ``fact.select(date_col).distinct()``
-    — for callers that already derive their period dim from the same
-    distinct-date pass, sharing one persisted relation instead of
-    scanning the fact again. Supersets are also safe (extra dates just
-    add unmatched map rows the left join never probes).
+    `dates` (r13, guide §2.4): the caller's single-column ``__d``
+    relation, which MUST equal ``fact.select(date_col).distinct()`` —
+    callers derive their period dim from the same distinct-date pass,
+    so the two share one persisted relation instead of scanning the
+    fact again. Supersets are also safe (extra dates just add unmatched
+    map rows the left join never probes).
     """
     # ADVICE r12: __d / __iv_* are reserved temp names (withColumn would
     # silently overwrite a caller's column), and date_col must be
@@ -91,15 +89,10 @@ def range_join(
         raise ValueError("range_join: fact must not have a __d column")
     if any(c.startswith("__iv_") for c in fact.columns):
         raise ValueError("range_join: fact must not have __iv_* columns")
-    p = periods
-    if extra_dim_filter is not None:
-        p = p.where(extra_dim_filter)
     f = fact.withColumn("__d", date_col)
-    if dates is None:
-        dates = f.select("__d").distinct()
-    cond = (F.col("__d") >= p[start_col]) & (F.col("__d") <= p[end_col])
-    date_map = dates.join(p, cond, "inner").select(
-        "__d", *[p[src].alias(f"__iv_{dst}") for src, dst in attach.items()]
+    cond = (F.col("__d") >= periods["data_inicio"]) & (F.col("__d") <= periods["data_fim"])
+    date_map = dates.join(periods, cond, "inner").select(
+        "__d", *[periods[src].alias(f"__iv_{dst}") for src, dst in attach.items()]
     )
     joined = f.join(F.broadcast(date_map), "__d", "left")
     keep = [f[c] for c in fact.columns] + [
@@ -113,14 +106,13 @@ def period_equi_join(
     periods: DataFrame,
     date_col: Column,
     *,
-    start_col: str = "data_inicio",
     attach: dict[str, str],
 ) -> DataFrame:
     """J1 fast path for calendar-month periods: equi-join on
     `trunc(date, 'MM') == data_inicio` — BroadcastHashJoin instead of a
     nested-loop, the strategy to prefer at 100 TB."""
     fact2 = fact.withColumn("__month", F.trunc(date_col, "MM"))
-    p = periods.withColumn("__month", F.col(start_col))
+    p = periods.withColumn("__month", F.col("data_inicio"))
     keep = [fact2[c] for c in fact.columns] + [p[src].alias(dst) for src, dst in attach.items()]
     return fact2.join(F.broadcast(p), "__month", "left").select(*keep)
 
@@ -130,13 +122,11 @@ def bucketed_range_join(
     periods: DataFrame,
     date_col: Column,
     *,
-    start_col: str = "data_inicio",
-    end_col: str = "data_fim",
     attach: dict[str, str],
 ) -> DataFrame:
-    """J1 scale path for ARBITRARY intervals: explode each interval into
-    the calendar months it covers, equi-join on the fact date's month,
-    then post-filter the exact range.
+    """J1 scale path for ARBITRARY [data_inicio, data_fim] intervals:
+    explode each interval into the calendar months it covers, equi-join
+    on the fact date's month, then post-filter the exact range.
 
     Turns the O(facts × intervals) nested loop into a hash join on month
     buckets + a cheap residual filter — the strategy that survives when
@@ -153,12 +143,12 @@ def bucketed_range_join(
     functions, no second explode pass (the r2 array-filter variant spent
     ~35% more wall time in interpreted HOF eval).
     """
-    iv_cols = list(dict.fromkeys([start_col, end_col, *attach]))
+    iv_cols = list(dict.fromkeys(["data_inicio", "data_fim", *attach]))
     p_expl = periods.select(
         *[F.col(c).alias(f"__iv_{c}") for c in iv_cols],
         F.explode(
             F.sequence(
-                F.trunc(F.col(start_col), "MM"), F.trunc(F.col(end_col), "MM"),
+                F.trunc(F.col("data_inicio"), "MM"), F.trunc(F.col("data_fim"), "MM"),
                 F.expr("INTERVAL 1 MONTH"),
             )
         ).alias("__month"),
@@ -166,8 +156,8 @@ def bucketed_range_join(
     f = fact.withColumn("__month", F.trunc(date_col, "MM")).withColumn("__d", date_col)
     cond = (
         (f["__month"] == p_expl["__month"])
-        & (F.col("__d") >= F.col(f"__iv_{start_col}"))
-        & (F.col("__d") <= F.col(f"__iv_{end_col}"))
+        & (F.col("__d") >= F.col("__iv_data_inicio"))
+        & (F.col("__d") <= F.col("__iv_data_fim"))
     )
     joined = f.join(F.broadcast(p_expl), cond, "left")
     keep = [f[c] for c in fact.columns] + [
@@ -182,9 +172,8 @@ def salted_join(
     key: str,
     *,
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Skew-resistant equi-join: salt the (skewed) left side's key into
+    """Skew-resistant inner equi-join: salt the (skewed) left side's key into
     `salt` sub-keys and replicate the right side across all salts.
 
     AQE's skew-join handles most cases at runtime; explicit salting is
@@ -194,16 +183,14 @@ def salted_join(
     """
     lt = left.withColumn("__salt", (F.rand(seed=42) * salt).cast("int"))
     rt = right.withColumn("__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-    out = lt.join(rt, [key, "__salt"], how)
+    out = lt.join(rt, [key, "__salt"])
     return out.drop("__salt")
 
 
-def with_next_period(periods: DataFrame, *, order_col: str = "data_inicio", partition_cols: tuple[str, ...] = ()) -> DataFrame:
+def with_next_period(periods: DataFrame, *, order_col: str = "data_inicio") -> DataFrame:
     """J4: successor period via `lead` (reference walks `data_fim + 1 day`
     back through the lookup, utilitarios/datas.py:114-128)."""
     w = Window.orderBy(order_col)
-    if partition_cols:
-        w = Window.partitionBy(*partition_cols).orderBy(order_col)
     return periods.withColumn("next_" + order_col, F.lead(order_col).over(w))
 
 

@@ -22,19 +22,20 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 FEATURE_SCHEMA = "media_id long, kind string, feature array<float>, n_bytes long"
+# rows per yielded Arrow batch: media payloads are large
+_BATCH_ROWS = 256
 
 
 def extract_features(
     media: DataFrame,
     *,
     decode_fn: Callable[[bytes], list[float]] | None = None,
-    batch_limit: int = 256,
 ) -> DataFrame:
     """Decode payloads → fixed-width feature vectors via mapInPandas.
 
     `decode_fn=None` uses the real dependency-free codecs
     (`functions.codecs.media_feature_decoder`: BMP + WAV; other formats
-    raise `UnsupportedMediaError`).
+    raise `UnsupportedMediaError`); tests pass a fake decoder.
     """
 
     if decode_fn is None:
@@ -46,8 +47,8 @@ def extract_features(
         for pdf in batches:
             # Bound per-yield batch size: media payloads are large, so
             # re-chunk instead of emitting one huge Arrow batch.
-            for start in range(0, len(pdf), batch_limit):
-                chunk = pdf.iloc[start : start + batch_limit]
+            for start in range(0, len(pdf), _BATCH_ROWS):
+                chunk = pdf.iloc[start : start + _BATCH_ROWS]
                 feats = [decode_fn(bytes(p) if p is not None else b"") for p in chunk["payload"]]
                 yield pd.DataFrame(
                     {

@@ -19,10 +19,9 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 
 
-def normalize_headers(df: DataFrame, *, case: str = "upper") -> DataFrame:
-    """P2: strip whitespace and unify case of column names."""
-    fn = str.upper if case == "upper" else str.lower
-    return df.toDF(*[fn(c.strip()) for c in df.columns])
+def normalize_headers(df: DataFrame) -> DataFrame:
+    """P2: strip whitespace from column names and upper-case them."""
+    return df.toDF(*[c.strip().upper() for c in df.columns])
 
 
 def rename_map(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:

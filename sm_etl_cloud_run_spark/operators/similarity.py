@@ -5,6 +5,9 @@ correctness baseline, plus an LSH-bucketed variant as the scale path —
 at 100 TB you never do all-pairs; you bucket by hyperplane signs and
 search only colliding buckets.
 
+Every operator reads an embeddings relation of (vec_id, embedding);
+the k-NN joins read their queries as (qid, qv).
+
 Determinism for oracle parity: dot products are computed in fixed-point
 (each elementwise product scaled by 1e9, rounded HALF_UP and summed as
 longs), so the result is exact, order-independent, and byte-identical
@@ -41,12 +44,13 @@ def _fixed_point_sq_norm(a: Column) -> Column:
     return _fixed_point_dot(a, a)
 
 
-def cosine_similarity(a: Column, b: Column, *, round_to: int = 6) -> Column:
-    """Cosine from fixed-point dot/norms, rounded for stable comparison."""
+def cosine_similarity(a: Column, b: Column) -> Column:
+    """Cosine from fixed-point dot/norms, rounded to 6 places for stable
+    comparison."""
     dot = _fixed_point_dot(a, b).cast("double")
     na = F.sqrt(_fixed_point_sq_norm(a).cast("double"))
     nb = F.sqrt(_fixed_point_sq_norm(b).cast("double"))
-    return F.round(dot / (na * nb), round_to)
+    return F.round(dot / (na * nb), 6)
 
 
 # ---------------------------------------------------------------------------
@@ -199,8 +203,6 @@ def brute_force_topk(
     embeddings: DataFrame,
     query_vec: list[float],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Exact cosine top-k against a constant query vector.
@@ -210,10 +212,10 @@ def brute_force_topk(
     determinism; NULL embeddings score NULL and sort last.
     """
     scored = embeddings.select(
-        F.col(id_col),
-        _const_cosine_pandas(query_vec)(F.col(vec_col)).alias("cosine"),
+        F.col("vec_id"),
+        _const_cosine_pandas(query_vec)(F.col("embedding")).alias("cosine"),
     )
-    return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
+    return scored.orderBy(F.col("cosine").desc(), F.col("vec_id").asc()).limit(k)
 
 
 def hyperplane_lsh_bucket(vec: Column, hyperplanes: list[list[float]]) -> Column:
@@ -230,8 +232,6 @@ def lsh_topk(
     query_vec: list[float],
     hyperplanes: list[list[float]],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
 ) -> DataFrame:
     """Approximate top-k: score only vectors in the query's LSH bucket.
@@ -239,13 +239,13 @@ def lsh_topk(
     At scale the bucket column is a partition/cluster key, so the scan
     prunes to ~1/2^h of the data; here it is computed on the fly.
     """
-    qvec_col = F.array(*[F.lit(float(v)) for v in query_vec])
-    bucketed = embeddings.withColumn("__bucket", hyperplane_lsh_bucket(F.col(vec_col), hyperplanes))
-    qbucket = hyperplane_lsh_bucket(qvec_col, hyperplanes)
+    qarr = F.array(*[F.lit(float(v)) for v in query_vec])
+    bucketed = embeddings.withColumn("__bucket", hyperplane_lsh_bucket(F.col("embedding"), hyperplanes))
+    qbucket = hyperplane_lsh_bucket(qarr, hyperplanes)
     candidates = bucketed.where(F.col("__bucket") == qbucket)
     return (
-        candidates.select(F.col(id_col), cosine_similarity(F.col(vec_col), qvec_col).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        candidates.select(F.col("vec_id"), cosine_similarity(F.col("embedding"), qarr).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -254,7 +254,6 @@ def ivf_assign(
     embeddings: DataFrame,
     centroids: list[list[float]],
     *,
-    vec_col: str = "embedding",
     cluster_col: str = "ivf_cluster",
 ) -> DataFrame:
     """IVF coarse quantization: attach the nearest-centroid index.
@@ -272,7 +271,7 @@ def ivf_assign(
     pairs = [
         F.struct(
             cosine_similarity(
-                F.col(vec_col), F.array(*[F.lit(float(v)) for v in c])
+                F.col("embedding"), F.array(*[F.lit(float(v)) for v in c])
             ).alias("sim"),
             F.lit(-i).alias("neg_idx"),
         )
@@ -287,7 +286,6 @@ def _ivf_probe(
     query_vec: list[float],
     centroids: list[list[float]],
     *,
-    vec_col: str,
     nprobe: int,
 ) -> DataFrame:
     """Rows of `embeddings` whose nearest centroid (`ivf_assign`) is
@@ -300,7 +298,7 @@ def _ivf_probe(
     C = np.asarray(centroids, dtype=np.float64)
     sims = _np_round6(_np_fp_dot(q, C) / (np.sqrt(_np_fp_dot(q, q)) * np.sqrt(_np_fp_dot(C, C))))
     probe = np.lexsort((np.arange(len(C)), -sims))[:nprobe].tolist()
-    assigned = ivf_assign(embeddings, centroids, vec_col=vec_col)
+    assigned = ivf_assign(embeddings, centroids)
     return assigned.where(F.col("ivf_cluster").isin(probe)).drop("ivf_cluster")
 
 
@@ -309,18 +307,16 @@ def ivf_topk(
     query_vec: list[float],
     centroids: list[list[float]],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
 ) -> DataFrame:
     """IVF search: score only vectors in the `nprobe` centroids nearest
     to the query (approximate; recall grows with nprobe)."""
-    candidates = _ivf_probe(embeddings, query_vec, centroids, vec_col=vec_col, nprobe=nprobe)
+    candidates = _ivf_probe(embeddings, query_vec, centroids, nprobe=nprobe)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
-        candidates.select(F.col(id_col), cosine_similarity(F.col(vec_col), q).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        candidates.select(F.col("vec_id"), cosine_similarity(F.col("embedding"), q).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
         .limit(k)
     )
 
@@ -332,8 +328,6 @@ def ivf_pq_topk(
     code_vecs: list[list[float]],
     *,
     num_subspaces: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     nprobe: int = 2,
     shortlist: int = 20,
@@ -351,10 +345,10 @@ def ivf_pq_topk(
     codes are precomputed columns, so the whole query is a partition-
     pruned scan + codegen lookups + one TakeOrdered.
     """
-    candidates = _ivf_probe(embeddings, query_vec, centroids, vec_col=vec_col, nprobe=nprobe)
+    candidates = _ivf_probe(embeddings, query_vec, centroids, nprobe=nprobe)
     return pq_adc_topk(
         candidates, query_vec, code_vecs,
-        num_subspaces=num_subspaces, id_col=id_col, vec_col=vec_col,
+        num_subspaces=num_subspaces,
         k=k, shortlist=shortlist,
     )
 
@@ -365,8 +359,6 @@ def pq_adc_topk(
     code_vecs: list[list[float]],
     *,
     num_subspaces: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     shortlist: int = 20,
 ) -> DataFrame:
@@ -399,7 +391,7 @@ def pq_adc_topk(
     scored = embeddings
     score_terms = []
     for m in range(num_subspaces):
-        e_sub = F.slice(F.col(vec_col), m * sub + 1, sub)
+        e_sub = F.slice(F.col("embedding"), m * sub + 1, sub)
         # nearest codeword of subspace m: max over (dot, -k) structs
         pairs = [
             F.struct(
@@ -420,18 +412,18 @@ def pq_adc_topk(
     for term in score_terms[1:]:
         pq_score = pq_score + term
     shortlisted = (
-        scored.select(F.col(id_col), F.col(vec_col), pq_score.cast("long").alias("pq_score"))
-        .orderBy(F.col("pq_score").desc(), F.col(id_col).asc())
+        scored.select(F.col("vec_id"), F.col("embedding"), pq_score.cast("long").alias("pq_score"))
+        .orderBy(F.col("pq_score").desc(), F.col("vec_id").asc())
         .limit(shortlist)
     )
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     from pyspark.sql.window import Window
 
     reranked = shortlisted.select(
-        id_col, "pq_score",
-        cosine_similarity(F.col(vec_col), qlit).alias("cosine"),
+        "vec_id", "pq_score",
+        cosine_similarity(F.col("embedding"), qlit).alias("cosine"),
     )
-    w = Window.orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+    w = Window.orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         reranked.withColumn("rn", F.row_number().over(w).cast("long"))
         .where(F.col("rn") <= k)
@@ -443,7 +435,6 @@ def pq_train_codebook(
     code_vecs: list[list[float]],
     *,
     num_subspaces: int = 4,
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """One Lloyd's iteration of per-subspace k-means — the trainer that
     turns `pq_adc_topk`'s stand-in code vectors into a REAL product-
@@ -489,7 +480,7 @@ def pq_train_codebook(
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = _np_stack64(pdf[vec_col])                 # (n, dim)
+            mat = _np_stack64(pdf["embedding"])                 # (n, dim)
             out_m, out_cw, out_pos, out_s, out_n = [], [], [], [], []
             for m in range(n_sub):
                 sv = mat[:, m * sub:(m + 1) * sub]            # (n, sub)
@@ -516,7 +507,7 @@ def pq_train_codebook(
                 "n": pd.array(out_n, dtype="int64"),
             })
 
-    parts = embeddings.select(vec_col).mapInPandas(
+    parts = embeddings.select("embedding").mapInPandas(
         _assign_batches, "m int, cw long, pos int, s long, n long"
     )
     dims = parts.groupBy("m", "cw", "pos").agg(
@@ -536,10 +527,6 @@ def knn_join_topk(
     embeddings: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qv",
     k: int = 5,
 ) -> DataFrame:
     """Exact k-NN JOIN: top-k neighbors for EVERY query row at once —
@@ -564,18 +551,18 @@ def knn_join_topk(
     from pyspark.sql.window import Window
 
     sq = _sq_norm_pandas()
-    e_n = embeddings.withColumn("__sq_e", sq(F.col(vec_col)))
-    q_n = queries.withColumn("__sq_q", sq(F.col(qvec_col)))
+    e_n = embeddings.withColumn("__sq_e", sq(F.col("embedding")))
+    q_n = queries.withColumn("__sq_q", sq(F.col("qv")))
     pairs = e_n.crossJoin(F.broadcast(q_n)).where(
-        F.col(id_col) != F.col(qid_col)
+        F.col("vec_id") != F.col("qid")
     )
     scored = pairs.select(
-        qid_col, id_col,
+        "qid", "vec_id",
         _pair_cosine_pandas()(
-            F.col(vec_col), F.col(qvec_col), F.col("__sq_e"), F.col("__sq_q")
+            F.col("embedding"), F.col("qv"), F.col("__sq_e"), F.col("__sq_q")
         ).alias("cosine"),
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("long"))
         .where(F.col("rn") <= k)
@@ -587,10 +574,6 @@ def knn_join_lsh(
     queries: DataFrame,
     hyperplanes: list[list[float]],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    qid_col: str = "qid",
-    qvec_col: str = "qv",
     k: int = 5,
 ) -> DataFrame:
     """Approximate k-NN JOIN: candidates come from LSH bucket equality,
@@ -610,20 +593,20 @@ def knn_join_lsh(
     from pyspark.sql.window import Window
 
     bsq = _bucket_sq_pandas(hyperplanes)
-    b_emb = embeddings.withColumn("__bs", bsq(F.col(vec_col))).select(
+    b_emb = embeddings.withColumn("__bs", bsq(F.col("embedding"))).select(
         "*", F.col("__bs.bucket").alias("__bucket"), F.col("__bs.sq").alias("__sq_e")
     ).drop("__bs")
-    b_q = queries.withColumn("__bs", bsq(F.col(qvec_col))).select(
+    b_q = queries.withColumn("__bs", bsq(F.col("qv"))).select(
         "*", F.col("__bs.bucket").alias("__bucket"), F.col("__bs.sq").alias("__sq_q")
     ).drop("__bs")
-    cand = b_emb.join(F.broadcast(b_q), "__bucket").where(F.col(id_col) != F.col(qid_col))
+    cand = b_emb.join(F.broadcast(b_q), "__bucket").where(F.col("vec_id") != F.col("qid"))
     scored = cand.select(
-        qid_col, id_col,
+        "qid", "vec_id",
         _pair_cosine_pandas()(
-            F.col(vec_col), F.col(qvec_col), F.col("__sq_e"), F.col("__sq_q")
+            F.col("embedding"), F.col("qv"), F.col("__sq_e"), F.col("__sq_q")
         ).alias("cosine"),
     )
-    w = Window.partitionBy(qid_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("long"))
         .where(F.col("rn") <= k)
@@ -633,8 +616,6 @@ def knn_join_lsh(
 def embedding_cosine_dup_pairs(
     embeddings: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.95,
     hyperplanes: list[list[float]] | None = None,
 ) -> DataFrame:
@@ -646,25 +627,25 @@ def embedding_cosine_dup_pairs(
     a = embeddings.alias("a")
     b = embeddings.alias("b")
     if hyperplanes is not None:
-        bucketed = embeddings.withColumn("__bucket", hyperplane_lsh_bucket(F.col(vec_col), hyperplanes))
+        bucketed = embeddings.withColumn("__bucket", hyperplane_lsh_bucket(F.col("embedding"), hyperplanes))
         a = bucketed.alias("a")
         b = bucketed.alias("b")
-        cond = (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & (F.col("a.__bucket") == F.col("b.__bucket"))
+        cond = (F.col("a.vec_id") < F.col("b.vec_id")) & (F.col("a.__bucket") == F.col("b.__bucket"))
     else:
-        cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+        cond = F.col("a.vec_id") < F.col("b.vec_id")
     # Hoist the squared norms: computed once per VECTOR (n rows), not
     # once per PAIR (n²/2) — cuts the fixed-point arithmetic ~3×.
     norms = embeddings.select(
-        F.col(id_col).alias("__nid"), _fixed_point_sq_norm(F.col(vec_col)).alias("__sq"),
+        F.col("vec_id").alias("__nid"), _fixed_point_sq_norm(F.col("embedding")).alias("__sq"),
     )
     na = norms.select(F.col("__nid").alias("id_a"), F.col("__sq").alias("__sq_a"))
     nb = norms.select(F.col("__nid").alias("id_b"), F.col("__sq").alias("__sq_b"))
-    dot = _fixed_point_dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")).cast("double")
+    dot = _fixed_point_dot(F.col("a.embedding"), F.col("b.embedding")).cast("double")
     pairs = (
         a.join(b, cond)
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             dot.alias("__dot"),
         )
         .join(F.broadcast(na), "id_a")
@@ -685,10 +666,7 @@ def semantic_dedup(
     embeddings: DataFrame,
     centroids: list[list[float]],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    cluster_col: str = "sem_cluster",
+    threshold: float,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication: cluster, then dedup
     within clusters only.
@@ -703,34 +681,34 @@ def semantic_dedup(
     Plan shape: nearest-centroid assignment is one codegen pass
     (centroids are parameter-sized, inlined as literals); the pairwise
     stage is a self-equi-join ON the cluster id — a hash shuffle both
-    sides on `cluster_col`, never a cross join. Squared norms are
+    sides on `sem_cluster`, never a cross join. Squared norms are
     carried on the assigned rows (computed once per vector, not per
     pair). At 100 TB the cluster id is the stored partition key and the
     join is co-located.
     """
     assigned = ivf_assign(
-        embeddings, centroids, vec_col=vec_col, cluster_col=cluster_col
-    ).withColumn("__sq", _fixed_point_sq_norm(F.col(vec_col)))
+        embeddings, centroids, cluster_col="sem_cluster"
+    ).withColumn("__sq", _fixed_point_sq_norm(F.col("embedding")))
     a, b = assigned.alias("a"), assigned.alias("b")
-    cond = (F.col(f"a.{cluster_col}") == F.col(f"b.{cluster_col}")) & (
-        F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    cond = (F.col("a.sem_cluster") == F.col("b.sem_cluster")) & (
+        F.col("a.vec_id") < F.col("b.vec_id")
     )
     cos = F.round(
-        _fixed_point_dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")).cast("double")
+        _fixed_point_dot(F.col("a.embedding"), F.col("b.embedding")).cast("double")
         / (F.sqrt(F.col("a.__sq").cast("double")) * F.sqrt(F.col("b.__sq").cast("double"))),
         6,
     )
     dup_ids = (
         a.join(b, cond)
         .where(cos >= threshold)
-        .select(F.col(f"b.{id_col}").alias(id_col))
+        .select(F.col("b.vec_id").alias("vec_id"))
         .distinct()
     )
     return (
-        assigned.join(dup_ids.withColumn("__dup", F.lit(1)), id_col, "left")
+        assigned.join(dup_ids.withColumn("__dup", F.lit(1)), "vec_id", "left")
         .select(
-            F.col(id_col),
-            F.col(cluster_col).cast("long").alias(cluster_col),
+            F.col("vec_id"),
+            F.col("sem_cluster").cast("long").alias("sem_cluster"),
             F.when(F.col("__dup").isNull(), F.lit(1)).otherwise(F.lit(0)).cast("long").alias("keep"),
         )
     )
@@ -740,10 +718,7 @@ def semantic_dedup_pandas(
     embeddings: DataFrame,
     centroids: list[list[float]],
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    cluster_col: str = "sem_cluster",
+    threshold: float,
 ) -> DataFrame:
     """`semantic_dedup`'s production twin: per-cluster Arrow batches
     scored with vectorized numpy instead of interpreted `zip_with`/
@@ -756,11 +731,11 @@ def semantic_dedup_pandas(
     key. Fixed-point rounding matches `cosine_similarity`, so keep
     decisions are identical to the expression path.
     """
-    assigned = ivf_assign(embeddings, centroids, vec_col=vec_col, cluster_col=cluster_col)
+    assigned = ivf_assign(embeddings, centroids, cluster_col="sem_cluster")
 
     def dedup_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        m = _np_stack64(pdf[vec_col])
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        m = _np_stack64(pdf["embedding"])
         n = len(pdf)
         norms = np.sqrt(_np_fp_dot(m, m))
         keep = np.ones(n, dtype=np.int64)
@@ -772,12 +747,12 @@ def semantic_dedup_pandas(
             keep[i + 1:] &= ~(sims >= threshold)
         return pd.DataFrame(
             {
-                id_col: pdf[id_col],
-                cluster_col: pdf[cluster_col].astype("int64"),
+                "vec_id": pdf["vec_id"],
+                "sem_cluster": pdf["sem_cluster"].astype("int64"),
                 "keep": keep,
             }
         )
 
-    out_schema = f"{id_col} long, {cluster_col} long, keep long"
-    return assigned.groupBy(cluster_col).applyInPandas(dedup_group, out_schema)
+    out_schema = "vec_id long, sem_cluster long, keep long"
+    return assigned.groupBy("sem_cluster").applyInPandas(dedup_group, out_schema)
 

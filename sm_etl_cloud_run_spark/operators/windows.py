@@ -40,17 +40,22 @@ from pyspark.sql.window import Window
 from ..cache import persist_tracked
 
 
+def _range_partitions(df: DataFrame) -> int:
+    """The range-partition count of the ``distributed_*`` family: the
+    session's ``spark.sql.shuffle.partitions``."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
 def topk_per_group(
     df: DataFrame,
     group_cols: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_name: str = "rn",
 ) -> DataFrame:
-    """Top-k rows per group via row_number (deterministic when order_by
-    includes a tiebreaker)."""
+    """Top-k rows per group via row_number, as column `rn`
+    (deterministic when order_by includes a tiebreaker)."""
     w = Window.partitionBy(*group_cols).orderBy(*order_by)
-    return df.withColumn(rank_name, F.row_number().over(w)).where(F.col(rank_name) <= k)
+    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k)
 
 
 def distributed_rank(
@@ -58,7 +63,6 @@ def distributed_rank(
     order_by: Sequence[Column],
     *,
     rank_name: str = "rank",
-    num_partitions: int | None = None,
     total_name: str | None = None,
 ) -> DataFrame:
     """Global ``row_number() OVER (ORDER BY ...)`` without the
@@ -107,12 +111,8 @@ def distributed_rank(
     offsets for free (consumers that gate on rank/total avoid a third
     pass over the input).
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     part = (
-        df.repartitionByRange(num_partitions, *order_by)
+        df.repartitionByRange(_range_partitions(df), *order_by)
         .sortWithinPartitions(*order_by)
         .select(
             "*",
@@ -159,7 +159,6 @@ def distributed_rank_in_groups(
     order_by: Sequence[Column],
     *,
     rank_name: str = "rank",
-    num_partitions: int | None = None,
     total_name: str | None = None,
 ) -> DataFrame:
     """``row_number() OVER (PARTITION BY group ORDER BY ...)`` without
@@ -181,7 +180,7 @@ def distributed_rank_in_groups(
     2. per-``(partition, group)`` counts + first-ids → per-group
        EXCLUSIVE running offsets over partition id. Groups are
        contiguous in the range order, so this offsets relation has at
-       most ``|groups| + num_partitions - 1`` rows — parameter-sized
+       most ``|groups| + partitions - 1`` rows — parameter-sized
        for the low-cardinality groups this operator targets, and its
        window is partitioned by group (never a global sort);
     3. the local row number is ``mid - min(mid)`` within the
@@ -200,13 +199,9 @@ def distributed_rank_in_groups(
     window instead — per-group data is tiny there by pigeonhole, and
     this operator's offsets relation would no longer broadcast.
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     gcols = list(group_cols)
     part = (
-        df.repartitionByRange(num_partitions, *[F.col(g) for g in gcols], *order_by)
+        df.repartitionByRange(_range_partitions(df), *[F.col(g) for g in gcols], *order_by)
         .sortWithinPartitions(*[F.col(g) for g in gcols], *order_by)
         .select(
             "*",
@@ -267,7 +262,6 @@ def distributed_lag(
     value_col: str,
     *,
     lag_name: str = "lag",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``lag(value) OVER (PARTITION BY group ORDER BY ...)`` without a
     single task ever sorting one group's full data — the lag sibling of
@@ -280,7 +274,7 @@ def distributed_lag(
        except each ``(partition, group)``'s FIRST row;
     3. those boundary rows get their predecessor from the
        per-``(partition, group)`` LAST-value relation (parameter-sized:
-       at most ``|groups| + num_partitions - 1`` rows, since groups are
+       at most ``|groups| + partitions - 1`` rows, since groups are
        contiguous in the range order), shifted one partition forward
        per group and broadcast back.
 
@@ -289,13 +283,9 @@ def distributed_lag(
     Same contract as the rank form: ``order_by`` totally orders within
     a group; group cardinality should be far below fact cardinality.
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     gcols = list(group_cols)
     part = df.repartitionByRange(
-        num_partitions, *[F.col(g) for g in gcols], *order_by
+        _range_partitions(df), *[F.col(g) for g in gcols], *order_by
     ).withColumn("__dl_pid", F.spark_partition_id())
     part = persist_tracked(part)
     w_local = Window.partitionBy("__dl_pid", *gcols).orderBy(*order_by)
@@ -335,7 +325,6 @@ def distributed_ntile(
     n: int,
     *,
     tile_name: str = "tile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global ``ntile(n) OVER (ORDER BY ...)`` via :func:`distributed_rank`
     plus the closed-form rank→tile map — same answers as the built-in,
@@ -349,7 +338,7 @@ def distributed_ntile(
     evaluated.
     """
     ranked = distributed_rank(
-        df, order_by, rank_name="__dn_rn", num_partitions=num_partitions,
+        df, order_by, rank_name="__dn_rn",
         total_name="__dn_total",
     )
     return (
@@ -376,10 +365,9 @@ def sessionize(
     user_col: str = "user_id",
     ts_col: str = "ts",
     gap_minutes: int = 30,
-    session_col: str = "session_id",
 ) -> DataFrame:
-    """Assign session ids: a new session starts when the gap from the
-    previous event (per user) exceeds `gap_minutes`.
+    """Assign session ids (`session_id`): a new session starts when the
+    gap from the previous event (per user) exceeds `gap_minutes`.
 
     lag + conditional cumsum — one shuffle on the user key.
 
@@ -401,7 +389,7 @@ def sessionize(
     gap = epoch - F.lag(epoch).over(w)
     is_new = F.when(gap.isNull() | (gap > gap_minutes * 60), 1).otherwise(0)
     return df.withColumn("__new", is_new).withColumn(
-        session_col, F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        "session_id", F.sum("__new").over(w.rowsBetween(Window.unboundedPreceding, 0))
     ).drop("__new")
 
 
@@ -428,7 +416,6 @@ def distributed_cumsum(
     value_col: str,
     *,
     cumsum_name: str = "cumsum",
-    num_partitions: int | None = None,
     total_name: str | None = None,
 ) -> DataFrame:
     """Global running total ``SUM(value) OVER (ORDER BY ...)`` without
@@ -450,11 +437,7 @@ def distributed_cumsum(
     ``order_by`` (include a tiebreaker). With ``total_name``, the grand
     total rides along on the broadcast offsets.
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    part = df.repartitionByRange(num_partitions, *order_by).withColumn(
+    part = df.repartitionByRange(_range_partitions(df), *order_by).withColumn(
         "__dc_pid", F.spark_partition_id()
     )
     part = persist_tracked(part)
@@ -499,7 +482,6 @@ def distributed_ntile_in_groups(
     n: int,
     *,
     tile_name: str = "tile",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``ntile(n) OVER (PARTITION BY group ORDER BY ...)`` without any
     single task sorting one group's full data — the per-group form of
@@ -515,8 +497,7 @@ def distributed_ntile_in_groups(
     below fact cardinality.
     """
     ranked = distributed_rank_in_groups(
-        df, group_cols, order_by, rank_name="__dgn_rn",
-        num_partitions=num_partitions, total_name="__dgn_total",
+        df, group_cols, order_by, rank_name="__dgn_rn", total_name="__dgn_total",
     )
     return (
         ranked
@@ -543,9 +524,7 @@ def distributed_cumsum_in_groups(
     value_col: str,
     *,
     cumsum_name: str = "cumsum",
-    rank_name: str | None = None,
-    num_partitions: int | None = None,
-    total_name: str | None = None,
+    rank_name: str,
 ) -> DataFrame:
     """``SUM(value) OVER (PARTITION BY group ORDER BY ...)`` without any
     single task ever scanning one group's full data — the per-group
@@ -563,9 +542,8 @@ def distributed_cumsum_in_groups(
        EXCLUSIVE running offsets over partition id (the offsets
        relation is parameter-sized: ≤ |groups| + partitions − 1 rows,
        windowed by group — never a global sort), broadcast;
-    3. local running sum (and optional local row_number when
-       ``rank_name`` is requested — sharing the pass instead of paying
-       a second operator) inside each ``(partition, group)`` segment +
+    3. local running sum and local row_number (``rank_name``, sharing
+       the pass instead of paying a second operator) inside each ``(partition, group)`` segment +
        its offsets. The local window is partitioned by the range
        partition id, so its biggest task is one range partition,
        bounded by the partitioner regardless of group skew.
@@ -574,16 +552,11 @@ def distributed_cumsum_in_groups(
     float running total would be partition-order-dependent; a NULL
     would silently desynchronize the rank and sum offsets).
     ``order_by`` must totally order rows WITHIN a group (include a
-    tiebreaker; pin NULLS LAST explicitly for nullable keys). With
-    ``total_name``, each group's grand total rides on the broadcast.
+    tiebreaker; pin NULLS LAST explicitly for nullable keys).
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     gcols = list(group_cols)
     part = df.repartitionByRange(
-        num_partitions, *[F.col(g) for g in gcols], *order_by
+        _range_partitions(df), *[F.col(g) for g in gcols], *order_by
     ).withColumn("__dg_pid", F.spark_partition_id())
     part = persist_tracked(part)
     sums = part.groupBy("__dg_pid", *gcols).agg(
@@ -606,13 +579,6 @@ def distributed_cumsum_in_groups(
     drop_cols = ["__dg_pid", "__dcg_pid2", "__dcg_soff", "__dcg_coff"] + [
         f"__dcg_g{i}" for i in range(len(gcols))
     ]
-    if total_name is not None:
-        w_all = (
-            Window.partitionBy(*gcols)
-            .orderBy("__dg_pid")
-            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-        off_cols.append(F.sum("__dcg_sum").over(w_all).cast("long").alias(total_name))
     offsets = sums.select(*off_cols)
     cond = F.col("__dg_pid") == F.col("__dcg_pid2")
     for i, g in enumerate(gcols):
@@ -622,16 +588,18 @@ def distributed_cumsum_in_groups(
         .orderBy(*order_by)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    out = part.join(F.broadcast(offsets), cond).withColumn(
-        cumsum_name,
-        (F.sum(F.col(value_col)).over(w_local) + F.col("__dcg_soff")).cast("long"),
-    )
-    if rank_name is not None:
-        out = out.withColumn(
+    return (
+        part.join(F.broadcast(offsets), cond)
+        .withColumn(
+            cumsum_name,
+            (F.sum(F.col(value_col)).over(w_local) + F.col("__dcg_soff")).cast("long"),
+        )
+        .withColumn(
             rank_name,
             (F.row_number().over(w_local) + F.col("__dcg_coff")).cast("long"),
         )
-    return out.drop(*drop_cols)
+        .drop(*drop_cols)
+    )
 
 
 def distributed_groupwise_peak(
@@ -641,7 +609,6 @@ def distributed_groupwise_peak(
     value_col: str,
     *,
     peak_name: str = "peak",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """``MAX(SUM(value) OVER (PARTITION BY group ORDER BY ...))`` per
     group — the fused form of ``distributed_cumsum_in_groups`` →
@@ -661,13 +628,9 @@ def distributed_groupwise_peak(
     Same contract as the cumsum: few heavy groups, ``order_by`` totally
     orders within a group, ``value_col`` non-NULL integral.
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
     gcols = list(group_cols)
     part = df.repartitionByRange(
-        num_partitions, *[F.col(g) for g in gcols], *order_by
+        _range_partitions(df), *[F.col(g) for g in gcols], *order_by
     ).withColumn("__dp_pid", F.spark_partition_id())
     w_local = (
         Window.partitionBy("__dp_pid", *gcols)
@@ -685,7 +648,7 @@ def distributed_groupwise_peak(
             F.max("__dp_run").alias("__dp_lmax"),
             F.sum("__dp_v").alias("__dp_tot"),
         )
-    )  # ≤ |groups| + num_partitions − 1 rows (groups contiguous in range order)
+    )  # ≤ |groups| + partitions − 1 rows (groups contiguous in range order)
     w_off = (
         Window.partitionBy(*gcols)
         .orderBy("__dp_pid")
@@ -711,7 +674,6 @@ def distributed_running_max(
     *,
     max_name: str = "running_max",
     exclusive: bool = False,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global running maximum ``MAX(value) OVER (ORDER BY ...)`` without
     the single-partition sort — the prefix-MAX member of the
@@ -744,11 +706,7 @@ def distributed_running_max(
     ``value_col`` (with (key..., value) orderings, tied rows see the
     same prefix max either way, so the result is order-stable).
     """
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    part = df.repartitionByRange(num_partitions, *order_by).withColumn(
+    part = df.repartitionByRange(_range_partitions(df), *order_by).withColumn(
         "__dm_pid", F.spark_partition_id()
     )
     part = persist_tracked(part)

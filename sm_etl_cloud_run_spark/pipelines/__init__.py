@@ -11,9 +11,5 @@ jobs, EP3 (the control-table refresh), EP1 and EP2, from one table
 mapping each tipo to its spec.
 """
 
-from .base import FactSpec, spark_type_map, transform_fact  # noqa: F401
-from .scnes import HABILITACOES_SPEC, VINCULOS_SPEC  # noqa: F401
-from .siasus_bpa_i import BPA_I_SPEC  # noqa: F401
-from .siasus_pa import PA_SPEC, condicao_saude_mental  # noqa: F401
-from .siasus_raas import RAAS_PS_SPEC  # noqa: F401
-from .sihsus_aih_rd import AIH_RD_SPEC  # noqa: F401
+# the spec perfbench's lifecycle workload imports through the package
+from .siasus_pa import PA_SPEC  # noqa: F401

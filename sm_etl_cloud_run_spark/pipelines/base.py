@@ -75,18 +75,18 @@ def transform_fact(
     raw: DataFrame,
     spec: FactSpec,
     *,
-    panel_ids: Sequence[str] | None = None,
-    periods: DataFrame | None = None,
-    geo: DataFrame | None = None,
+    panel_ids: Sequence[str],
+    periods: DataFrame,
+    geo: DataFrame,
 ) -> DataFrame:
     """Stage-1 transform: all-string raw records → cleaned, enriched fact.
 
     `raw` also carries each row's source file, `ftp_arquivo_nome`, so
     one call serves a batch of files; that column passes through as the
     last one, and the row id does not hash it (P9). The spec's panel
-    filter applies when `panel_ids` is given (they are deployment
-    config), its condition always. `periods` must carry
-    (data_inicio date, id); `geo` (id_sus, id).
+    filter keeps the rows whose panel columns hold one of `panel_ids`
+    (deployment config); its condition applies too. `periods` must
+    carry (data_inicio date, id); `geo` (id_sus, id).
     The row id derives from the row's content (P9), not the reference's
     random UUIDv7. Pandas-coerce parity (invalid date/number → NULL)
     needs ANSI off: the session must carry the engine's conventions
@@ -98,20 +98,18 @@ def transform_fact(
     df = df.select(*select, "ftp_arquivo_nome").withColumn("id", row_id)
 
     # J1 — monthly period id (broadcast equi join on truncated month).
-    if periods is not None:
-        df = joins.period_equi_join(
-            df, periods.select("data_inicio", "id"),
-            F.col(spec.period_date_col),
-            attach={"id": "periodo_id"},
-        )
+    df = joins.period_equi_join(
+        df, periods.select("data_inicio", "id"),
+        F.col(spec.period_date_col),
+        attach={"id": "periodo_id"},
+    )
 
     # J2 — geography id (broadcast hash join).
-    if geo is not None:
-        df = joins.broadcast_lookup(
-            df, geo.select("id_sus", "id"),
-            F.col(spec.geo_key_col) == geo["id_sus"],
-            select={"id": "unidade_geografica_id"},
-        )
+    df = joins.broadcast_lookup(
+        df, geo.select("id_sus", "id"),
+        F.col(spec.geo_key_col) == geo["id_sus"],
+        select={"id": "unidade_geografica_id"},
+    )
 
     # P3 — audit columns; the file name stays the last column.
     df = df.withColumns({
@@ -126,7 +124,7 @@ _TO_END = 2**31 - 1
 
 
 def _stage1(
-    spec: FactSpec, panel_ids: Sequence[str] | None, raw_columns: tuple[str, ...],
+    spec: FactSpec, panel_ids: Sequence[str], raw_columns: tuple[str, ...],
 ) -> tuple[Column | None, list[Column], Column]:
     """The stage-1 rules as Columns over `raw_columns`: the row filter,
     the projection of every output column, and the row id over that
@@ -135,7 +133,7 @@ def _stage1(
     one `withColumns` per rule would."""
     # F1 — panel membership on the raw ids (OR across the spec's columns).
     where = None
-    if panel_ids is not None and spec.panel_raw_cols:
+    if spec.panel_raw_cols:
         where = F.col(spec.panel_raw_cols[0]).isin(list(panel_ids))
         for c in spec.panel_raw_cols[1:]:
             where = where | F.col(c).isin(list(panel_ids))

@@ -3235,7 +3235,7 @@ def events_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     asserts they are equal — the associativity property that lets a
     100 TB sessionization run day-by-day against a state table instead
     of re-scanning history (the same contract the watermark-gated
-    incremental runs of streaming/incremental.py rely on).
+    incremental runs of sinks/watermark.gate_pending_runs rely on).
 
     Epochs are truncated to whole seconds on BOTH engines (Spark's
     long cast; floor(epoch()) in the oracle — a bare DuckDB cast
@@ -3685,13 +3685,10 @@ def events_watermark_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return watermark_tradeoff_table(base)
 
 
-def watermark_tradeoff_table(
-    base: DataFrame,
-    delays_us: tuple[tuple[str, int], ...] = _CENSUS_DELAYS_US,
-) -> DataFrame:
+def watermark_tradeoff_table(base: DataFrame) -> DataFrame:
     """Core of `events_watermark_tradeoff` over an (event_id, user_id,
     tsu) relation, so the decision table can be computed on any batch
-    history slice."""
+    history slice, for each delay of `_CENSUS_DELAYS_US`."""
     from ..operators.windows import distributed_running_max
 
     pm = distributed_running_max(
@@ -3709,7 +3706,7 @@ def watermark_tradeoff_table(
         .alias("late_us")
     )
     agg_cols = [F.count(F.lit(1)).cast("long").alias("n_events")]
-    for label, d in delays_us:
+    for label, d in _CENSUS_DELAYS_US:
         agg_cols.append(
             F.sum(F.when(F.col("late_us") > d, 1).otherwise(0))
             .cast("long").alias(f"__drop_{label}")
@@ -3720,7 +3717,7 @@ def watermark_tradeoff_table(
             F.lit(label).alias("delay"),
             F.col(f"__drop_{label}").alias("n_dropped"),
         )
-        for label, _ in delays_us
+        for label, _ in _CENSUS_DELAYS_US
     ])
     drops = one.select(
         "n_events", F.explode(ladder).alias("x")
@@ -3730,7 +3727,7 @@ def watermark_tradeoff_table(
         F.expr("CAST((10000 * x.n_dropped) DIV n_events AS BIGINT)")
         .alias("dropped_bp"),
     )
-    census = state_census(base.select("user_id", "tsu"), delays_us)
+    census = state_census(base.select("user_id", "tsu"), _CENSUS_DELAYS_US)
     return drops.join(census, "delay").select(
         "delay", "n_events", "n_dropped", "dropped_bp",
         "peak_state", "n_intervals", "sum_open_us",
@@ -3950,14 +3947,12 @@ def events_dedup_state_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         t["events"].select(
             F.col("event_id").alias("k"),
             F.unix_micros(F.col("ts")).alias("tsu"),
-        )
+        ),
+        _CENSUS_DELAYS_US,
     )
 
 
-def dedup_state_census(
-    ev: DataFrame,
-    delays_us: tuple[tuple[str, int], ...] = _CENSUS_DELAYS_US,
-) -> DataFrame:
+def dedup_state_census(ev: DataFrame, delays_us: tuple[tuple[str, int], ...]) -> DataFrame:
     """Core of `events_dedup_state_census` over a (k, tsu) relation —
     split out (the :func:`state_census` pattern) so a test can price an
     arbitrary fixture and pin a real `dropDuplicatesWithinWatermark`

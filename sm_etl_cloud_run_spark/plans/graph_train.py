@@ -198,8 +198,7 @@ def knn_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = [[float(x) for x in seeds[i]["embedding"]] for i in (1, 2, 3)]
     distinct = emb.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
     pairs = embedding_cosine_dup_pairs(
-        distinct, id_col="vec_id", vec_col="embedding",
-        threshold=_PR_THRESHOLD, hyperplanes=planes,
+        distinct, threshold=_PR_THRESHOLD, hyperplanes=planes,
     )
     pr = pagerank_undirected(pairs, iterations=2)
     return pr.select(F.col("id").alias("vec_id"), "deg", "pr_micro")
@@ -424,8 +423,7 @@ def knn_graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = [[float(x) for x in seeds[i]["embedding"]] for i in (1, 2, 3)]
     distinct = emb.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
     pairs = embedding_cosine_dup_pairs(
-        distinct, id_col="vec_id", vec_col="embedding",
-        threshold=_PR_THRESHOLD, hyperplanes=planes,
+        distinct, threshold=_PR_THRESHOLD, hyperplanes=planes,
     ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     seed = pairs.agg(F.min("src")).collect()[0][0]
     levels = bfs_levels(pairs, int(seed), max_iter=_BFS_MAX_HOPS)
@@ -505,8 +503,7 @@ def knn_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = [[float(x) for x in seeds[i]["embedding"]] for i in (1, 2, 3)]
     distinct = emb.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
     pairs = embedding_cosine_dup_pairs(
-        distinct, id_col="vec_id", vec_col="embedding",
-        threshold=_PR_THRESHOLD, hyperplanes=planes,
+        distinct, threshold=_PR_THRESHOLD, hyperplanes=planes,
     ).select("id_a", "id_b").localCheckpoint(eager=True)  # scanned 3× + degree
 
     e1 = pairs.alias("e1")
@@ -695,8 +692,7 @@ def knn_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the edge list once, the distributed_rank/simhash precedent; it is
     # |edges|-sized, far below the fact table
     pairs = persist_tracked(embedding_cosine_dup_pairs(
-        distinct, id_col="vec_id", vec_col="embedding",
-        threshold=_PR_THRESHOLD, hyperplanes=planes,
+        distinct, threshold=_PR_THRESHOLD, hyperplanes=planes,
     ).select("id_a", "id_b"))
 
     edges = pairs.union(
@@ -823,8 +819,7 @@ def knn_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes = [[float(x) for x in seeds[i]["embedding"]] for i in (1, 2, 3)]
     distinct = emb.groupBy("embedding").agg(F.min("vec_id").alias("vec_id"))
     pairs = embedding_cosine_dup_pairs(
-        distinct, id_col="vec_id", vec_col="embedding",
-        threshold=_PR_THRESHOLD, hyperplanes=planes,
+        distinct, threshold=_PR_THRESHOLD, hyperplanes=planes,
     )
     edges = persist_tracked(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))

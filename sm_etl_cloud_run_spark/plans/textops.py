@@ -474,9 +474,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_bits_sql(num_bits: int = 32) -> str:
+def _simhash_bits_sql() -> str:
+    """The 32-bit SimHash of each group's token hashes `hv`, as SQL."""
     terms = []
-    for b in range(num_bits):
+    for b in range(32):
         terms.append(
             f"(CASE WHEN SUM(CASE WHEN (hv >> {b}) & 1 = 1 THEN 1 ELSE -1 END) > 0 "
             f"THEN CAST({2**b} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
@@ -1533,7 +1534,6 @@ def dedup_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def minhash_accuracy(
     spark: SparkSession, sf_dir: str, *, sample_rate: float = 1.0,
-    _cache_candidates: bool | None = None,
 ) -> DataFrame:
     """Parameterized form of :func:`dedup_minhash_accuracy`.
 
@@ -1544,8 +1544,7 @@ def minhash_accuracy(
     candidate pairs outnumber the QA budget. 1.0 is exhaustive (the
     registered oracle mode).
 
-    Caching policy (``_cache_candidates=None`` → auto): the candidate
-    relation feeds three branches. Exhaustive mode leaves it uncached —
+    Caching policy: the candidate relation feeds three branches. Exhaustive mode leaves it uncached —
     all three consumers share the identical shuffle and ReusedExchange
     makes a persist strictly worse (interleaved 16x probe: 11.8 s
     reuse vs 34.9 s cached). The sampled filter sits above that
@@ -1568,14 +1567,10 @@ def minhash_accuracy(
             ),
             16, 10,
         ).cast("long")
-        cand = cand.where(h32 < F.lit(int(sample_rate * 4294967296)))
-    # cand feeds THREE branches (the signature re-join plus both ends of
-    # cand_docs); whether to cache it or lean on exchange reuse is
-    # measured, not guessed (interleaved 16x probe, see docstring).
-    if _cache_candidates is None:
-        _cache_candidates = sample_rate < 1.0
-    if _cache_candidates:
-        cand = persist_tracked(cand)
+        # cand feeds THREE branches (the signature re-join plus both
+        # ends of cand_docs); caching only the sampled form is measured,
+        # not guessed (interleaved 16x probe, see docstring).
+        cand = persist_tracked(cand.where(h32 < F.lit(int(sample_rate * 4294967296))))
 
     sa = sigs.select(
         F.col("doc_id").alias("id_a"),

@@ -104,7 +104,7 @@ WHERE round(CAST(dot_s AS DOUBLE) / (sqrt(CAST(na_s AS DOUBLE)) * sqrt(CAST(nb_s
 def embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     return embedding_cosine_dup_pairs(
-        t["embeddings"], id_col="vec_id", vec_col="embedding", threshold=_DUP_THRESHOLD
+        t["embeddings"], threshold=_DUP_THRESHOLD
     )
 
 
@@ -272,8 +272,6 @@ def knn_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.where(F.col("vec_id") != seeds[0]["vec_id"]),
         [float(x) for x in qv],
         [[float(x) for x in p] for p in planes],
-        id_col="vec_id",
-        vec_col="embedding",
         k=_TOPK,
     )
 
@@ -619,7 +617,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids = [[float(x) for x in r["embedding"]] for r in seeds[5:9]]
     return ivf_topk(
         emb.where(F.col("vec_id") != qid), qv, centroids,
-        id_col="vec_id", vec_col="embedding", k=_TOPK, nprobe=2,
+        k=_TOPK, nprobe=2,
     )
 
 
@@ -784,8 +782,7 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t["embeddings"]
     centroids = [[float(x) for x in r["embedding"]] for r in _seed_rows(emb, 21)[5:21]]
     return semantic_dedup_pandas(
-        emb, centroids, id_col="vec_id", vec_col="embedding",
-        threshold=_SEMDEDUP_THRESHOLD, cluster_col="sem_cluster",
+        emb, centroids, threshold=_SEMDEDUP_THRESHOLD,
     )
 
 
@@ -1067,8 +1064,7 @@ def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     rest = emb.where(F.col("vec_id") != qid)
     bf = brute_force_topk(rest, qv, k=_TOPK).select("vec_id")
     approx = ivf_topk(
-        rest, qv, centroids, id_col="vec_id", vec_col="embedding",
-        k=_TOPK, nprobe=2,
+        rest, qv, centroids, k=_TOPK, nprobe=2,
     ).select("vec_id")
     return (
         bf.join(approx, "vec_id")
@@ -2373,8 +2369,7 @@ def knn_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms = []
     for p in _CURVE_NPROBES:
         approx = ivf_topk(
-            rest, qv, centroids, id_col="vec_id", vec_col="embedding",
-            k=_TOPK, nprobe=p,
+            rest, qv, centroids, k=_TOPK, nprobe=p,
         ).select("vec_id")
         arms.append(
             bf.join(approx, "vec_id")

@@ -33,8 +33,7 @@ import sys
 from collections.abc import Callable
 
 from .session import get_spark
-from .sinks.watermark import read_control
-from .streaming.incremental import gate_pending_runs
+from .sinks.watermark import gate_pending_runs, read_control
 
 
 def _resolve(path: str) -> Callable:

@@ -18,8 +18,10 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs every query relies on. Applied both at session
-# build time and defensively per-query (the driver may own the session).
+# Runtime-settable confs every query relies on. Applied at session build
+# time (`getOrCreate` also applies them to a session that already
+# exists) and again by `tables.load_tables`, since the driver may own
+# the session.
 _RUNTIME_CONVENTIONS = {
     # Reference semantics are pandas `errors="coerce"` (invalid → NULL),
     # not ANSI errors; Spark 4 defaults ANSI on, so switch it off.
@@ -72,14 +74,10 @@ def apply_session_conventions(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(app_name: str = "sm_etl_cloud_run_spark", *, cpus: int | None = None) -> SparkSession:
-    """Build (or fetch) the engine's SparkSession.
-
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or all
-    local cores.
-    """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
+def get_spark(app_name: str = "sm_etl_cloud_run_spark") -> SparkSession:
+    """Build (or fetch) the engine's SparkSession, on ``$SPARK_GRAFT_CPUS``
+    local cores (driver contract), or all of them when that is unset."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
     master = f"local[{cpus}]" if cpus else "local[*]"
     shuffle_parts = str(max(cpus, 32) if cpus else 32)
     builder = (
@@ -110,25 +108,27 @@ def get_spark(app_name: str = "sm_etl_cloud_run_spark", *, cpus: int | None = No
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    return apply_session_conventions(spark)
+    return spark
 
 
-def suggest_shuffle_partitions(
-    df,
-    *,
-    target_partition_mb: int = 128,
-    shuffle_ratio: float = 0.5,
-    min_partitions: int = 8,
-    max_partitions: int = 20_000,
-) -> int:
+# `suggest_shuffle_partitions`: the partition size it aims at, the share
+# of input bytes it expects at the first shuffle, and its clamp
+_TARGET_PARTITION_MB = 128
+_SHUFFLE_RATIO = 0.5
+_MIN_PARTITIONS = 8
+_MAX_PARTITIONS = 20_000
+
+
+def suggest_shuffle_partitions(df) -> int:
     """Data-derived `spark.sql.shuffle.partitions` for a job over `df`:
-    estimated shuffle bytes / target partition size, clamped.
+    estimated shuffle bytes / `_TARGET_PARTITION_MB`, clamped to
+    [`_MIN_PARTITIONS`, `_MAX_PARTITIONS`].
 
     Input bytes come from the scan's actual files (`df.inputFiles`,
-    compressed parquet); `shuffle_ratio` approximates how much of the
+    compressed parquet); `_SHUFFLE_RATIO` approximates how much of the
     input survives to the first shuffle AFTER column pruning and
-    predicate pushdown (0.5 is a safe default for analytic projections;
-    pass measured ratios for tuned jobs). With AQE on, this sets
+    predicate pushdown (0.5 is a safe default for analytic
+    projections). With AQE on, this sets
     `initialPartitionNum`-scale headroom and AQE coalesces down — the
     sizing only needs the right order of magnitude, which is exactly
     what a fixed default (200) gets wrong at 100 TB: 500 GB/partition
@@ -137,8 +137,6 @@ def suggest_shuffle_partitions(
     `spark.conf.set("spark.sql.shuffle.partitions", n)` before the
     action.
     """
-    import os
-
     total = 0
     for f in df.inputFiles():
         path = f.removeprefix("file:")
@@ -146,6 +144,6 @@ def suggest_shuffle_partitions(
             total += os.path.getsize(path)
         except OSError:
             continue
-    est_shuffle = total * shuffle_ratio
-    n = int(est_shuffle // (target_partition_mb * 1024 * 1024)) + 1
-    return max(min_partitions, min(n, max_partitions))
+    est_shuffle = total * _SHUFFLE_RATIO
+    n = int(est_shuffle // (_TARGET_PARTITION_MB * 1024 * 1024)) + 1
+    return max(_MIN_PARTITIONS, min(n, _MAX_PARTITIONS))

@@ -45,14 +45,13 @@ def write_jdbc_append(
     url: str,
     table: str,
     *,
-    user: str | None = None,
-    password: str | None = None,
     mode: str = "append",
     column_types: str | None = None,
 ) -> None:
     """K2: write `df` to a JDBC table in `DEFAULT_BATCH_SIZE` row
     batches, one connection per Spark partition. `mode="overwrite"`
-    (re)creates a staging table; `"append"` adds to the target."""
+    (re)creates a staging table; `"append"` adds to the target.
+    Credentials travel in `url`."""
     if not url.startswith("jdbc:"):
         raise ValueError(f"not a JDBC url: {url!r}")
     writer = (
@@ -68,16 +67,14 @@ def write_jdbc_append(
         # default string mapping is TEXT/CLOB, which some engines (Derby)
         # cannot compare or index
         writer = writer.option("createTableColumnTypes", column_types)
-    if user is not None:
-        writer = writer.option("user", user).option("password", password or "")
     writer.mode(mode).save()
 
 
 @contextmanager
-def _driver_connection(spark: SparkSession, url: str, user: str | None, password: str | None):
+def _driver_connection(spark: SparkSession, url: str):
     """One JVM-side java.sql.Connection on the driver, autocommit off."""
     dm = spark._jvm.java.sql.DriverManager  # noqa: SLF001 — public JDBC API via the session JVM
-    conn = dm.getConnection(url, user, password or "") if user is not None else dm.getConnection(url)
+    conn = dm.getConnection(url)
     conn.setAutoCommit(False)
     try:
         yield conn
@@ -100,8 +97,6 @@ def commit_staged_load(
     *,
     arquivos: Sequence[str],
     on_commit: Callable[[str], None],
-    user: str | None = None,
-    password: str | None = None,
 ) -> None:
     """Phase 2 of the staged load. An absent `target` is first created
     with the staging table's columns, which the JDBC writer gave the
@@ -115,13 +110,15 @@ def commit_staged_load(
 
     A failure stops the loop: earlier files stay committed, the failed
     one is rolled back, and the staging table is kept. After the last
-    commit the staging table is dropped in its own statement, so a
-    failed drop never rolls back a committed load. Keeping it would save
+    file's commit, and before its `on_commit`, the staging table is
+    dropped in its own statement, so a failed drop never rolls back a
+    committed load, yet leaves that file unrecorded: the caller's rerun
+    reloads it, which drops the staging table. Keeping it would save
     nothing (the next stage's JDBC overwrite recreates it) and would
-    leave stale staged rows behind.
+    leave stale staged rows behind. `arquivos` is not empty.
     """
     cols = _qcols(columns)
-    with _driver_connection(spark, url, user, password) as conn:
+    with _driver_connection(spark, url) as conn:
         stmt = conn.createStatement()
         try:  # the existence probe Spark's JDBC writer uses
             stmt.executeQuery(f"SELECT 1 FROM {target} WHERE 1 = 0").close()  # noqa: S608
@@ -129,7 +126,7 @@ def commit_staged_load(
             conn.rollback()
             stmt.executeUpdate(f"CREATE TABLE {target} AS SELECT * FROM {staging} WITH NO DATA")  # noqa: S608
             conn.commit()
-        for arquivo in arquivos:
+        for i, arquivo in enumerate(arquivos):
             name = arquivo.replace("'", "''")
             where = f"\"ftp_arquivo_nome\" = '{name}'"
             try:
@@ -141,6 +138,7 @@ def commit_staged_load(
             except Exception:
                 conn.rollback()
                 raise
+            if i == len(arquivos) - 1:
+                stmt.executeUpdate(f"DROP TABLE {staging}")
+                conn.commit()
             on_commit(arquivo)
-        stmt.executeUpdate(f"DROP TABLE {staging}")
-        conn.commit()

@@ -15,6 +15,21 @@ works for ad-hoc inspection.
 A write lands a complete temp file beside the ledger, fsyncs it and
 swaps it in with ONE `os.replace`: a crash at any point leaves either
 the old ledger or the new one, never no ledger.
+
+The gate (SURVEY §2.9 I2/I3, §3) reads the same rows. The reference's
+control flow (scripts/verificar_e_executar.py) runs a stage for a file
+only when its upstream timestamp is newer than its downstream one:
+
+- download stage: `timestamp_etl_gcs IS NULL OR
+  timestamp_modificacao_ftp > timestamp_etl_gcs`   (:36-38)
+- insert stage:   `timestamp_load_bd IS NULL OR
+  timestamp_etl_gcs > timestamp_load_bd`           (:39-41)
+
+Retroactive source updates simply re-trigger the file, and the
+idempotent sinks (partition overwrite, per-file delete + insert) make
+the re-run safe — the reference's late-data story, which survives at
+100 TB because the gate reads only the ledger, in plain Python, with
+no Spark job.
 """
 
 from __future__ import annotations
@@ -42,6 +57,13 @@ LEDGER_SCHEMA = pa.schema([
     ("timestamp_etl_gcs", _TS),
     ("timestamp_load_bd", _TS),
 ])
+
+
+# stage name → (source_ts_col, sink_ts_col)
+STAGE_CONDITIONS: dict[str, tuple[str, str]] = {
+    "baixar": ("timestamp_modificacao_ftp", "timestamp_etl_gcs"),
+    "inserir": ("timestamp_etl_gcs", "timestamp_load_bd"),
+}
 
 
 def read_control(path: str) -> list[dict]:
@@ -116,3 +138,20 @@ def touch_watermark(
     touched = pc.if_else(mask, now, table.column(timestamp_col))
     i = table.schema.get_field_index(timestamp_col)
     _replace(control_path, table.set_column(i, timestamp_col, touched))
+
+
+def _stale(row: dict, stage: str) -> bool:
+    """`stage` has never run for the row, or its upstream is newer.
+    A NULL upstream never compares newer, as in SQL."""
+    source_ts, sink_ts = STAGE_CONDITIONS[stage]
+    source, sink = row[source_ts], row[sink_ts]
+    return sink is None or (source is not None and source > sink)
+
+
+def gate_pending_runs(rows: list[dict], stage: str, **match: object) -> list[dict]:
+    """Ledger rows that need (re-)processing for `stage`, optionally
+    scoped by key columns (tipo/sigla_uf/período)."""
+    return [
+        r for r in rows
+        if _stale(r, stage) and all(r[k] == v for k, v in match.items())
+    ]

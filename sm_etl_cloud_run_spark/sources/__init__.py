@@ -5,7 +5,3 @@ correctness runs — the FTP client takes an injected transport. The
 LIST scan is driver-side (EP3); the fetch and decode of the exact files
 EP3's ledger names run on executors, one task per file (EP1).
 """
-
-from .dbc import dbc_to_dbf, explode  # noqa: F401
-from .dbf import decode_datasus_bytes, parse_dbf_bytes  # noqa: F401
-from .ftp_list import parse_ftp_list_lines  # noqa: F401

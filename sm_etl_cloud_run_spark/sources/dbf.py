@@ -36,8 +36,8 @@ def dbf_field_descriptors(content: bytes) -> list[tuple[str, str, int]]:
     return fields
 
 
-def parse_dbf_bytes(content: bytes, *, encoding: str = "latin-1") -> Iterator[dict]:
-    """Iterate a `.dbf` payload as dicts of stripped strings.
+def parse_dbf_bytes(content: bytes) -> Iterator[dict]:
+    """Iterate a `.dbf` payload as dicts of stripped latin-1 strings.
 
     All-string semantics mirror the reference (dates as raw 'YYYYMMDD'
     text, numerics as text — typing happens later in the plan). Deleted
@@ -56,7 +56,7 @@ def parse_dbf_bytes(content: bytes, *, encoding: str = "latin-1") -> Iterator[di
         row: dict = {}
         pos = 1
         for name, _ftype, flen in fields:
-            val = record[pos:pos + flen].decode(encoding, "replace").strip()
+            val = record[pos:pos + flen].decode("latin-1", "replace").strip()
             row[name] = val if val else None
             pos += flen
         yield row

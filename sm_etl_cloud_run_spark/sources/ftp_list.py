@@ -57,11 +57,11 @@ def parse_list_lines(lines: list[str], prefixes: tuple[str, ...] = ()) -> list[d
     return out
 
 
-def parse_ftp_list_lines(spark: SparkSession, lines: list[str], *, prefixes: tuple[str, ...] = ()) -> DataFrame:
+def parse_ftp_list_lines(spark: SparkSession, lines: list[str]) -> DataFrame:
     """LIST lines → DataFrame(nome, tamanho, timestamp_modificacao_ftp)
-    with the US timestamp parsed (C13) and optional prefix filtering."""
+    with the US timestamp parsed (C13)."""
     return spark.createDataFrame(
-        [tuple(r.values()) for r in parse_list_lines(lines, prefixes)],
+        [tuple(r.values()) for r in parse_list_lines(lines)],
         "nome string, tamanho long, timestamp_modificacao_ftp timestamp",
     )
 

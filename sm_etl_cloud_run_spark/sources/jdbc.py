@@ -2,19 +2,13 @@
 
 The reference reflects Postgres tables lazily and queries them
 per-value (utilitarios/bd_utilitarios.py:33-82); the Spark-native read
-is a partition-parallel JDBC scan. Two shapes matter at scale:
-
-- **dimension read** (`read_jdbc_table` without bounds): one
-  connection, whole table — right for the small dims the engine
-  broadcasts (periodos, ufs, unidades_geograficas).
-- **partitioned fact read** (with `partition_column` + bounds):
-  `num_partitions` concurrent range-scans, each executor pulling one
-  stride — the only way a JDBC source keeps a cluster busy. Catalyst
-  pushes filters/projections into the generated queries.
+is one whole-table JDBC scan — right for the small dims the engine
+broadcasts (periodos, ufs, unidades_geograficas) and for reading a
+loaded table back. Credentials travel in the JDBC url
+(`jdbc:postgresql://host/db?user=...&password=...`).
 
 Verified live against the embedded Derby database whose driver ships in
-Spark's own classpath (tests/test_jdbc_live.py): whole-table and
-partition-parallel reads both execute against a real JDBC endpoint.
+Spark's own classpath (tests/test_jdbc_live.py).
 """
 
 from __future__ import annotations
@@ -23,44 +17,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 def read_jdbc_table(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    *,
-    user: str | None = None,
-    password: str | None = None,
-    partition_column: str | None = None,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-    num_partitions: int = 8,
-    fetch_size: int = 10_000,
+    spark: SparkSession, url: str, table: str, *, num_partitions: int = 1,
 ) -> DataFrame:
-    """S7: read a JDBC table, optionally as parallel range partitions.
-
-    `partition_column` must be numeric/date and roughly uniform for the
-    strides to balance; bounds do NOT filter (rows outside still land in
-    the edge partitions) — they only shape the strides.
-    """
+    """S7: read a whole JDBC table over one connection, 10k rows per
+    fetch. `num_partitions` is accepted and ignored: a whole-table read
+    is one partition, and the benchmark's lifecycle workload
+    (`perfbench/etl.py`) passes it."""
     if not url.startswith("jdbc:"):
         raise ValueError(f"not a JDBC url: {url!r}")
-    bounds = (partition_column, lower_bound, upper_bound)
-    if any(b is not None for b in bounds) and any(b is None for b in bounds):
-        raise ValueError(
-            "partitioned read needs all of partition_column, lower_bound, upper_bound"
-        )
-    reader = (
+    return (
         spark.read.format("jdbc")
         .option("url", url)
         .option("dbtable", table)
-        .option("fetchsize", fetch_size)
+        .option("fetchsize", 10_000)
+        .load()
     )
-    if user is not None:
-        reader = reader.option("user", user).option("password", password or "")
-    if partition_column is not None:
-        reader = (
-            reader.option("partitionColumn", partition_column)
-            .option("lowerBound", lower_bound)
-            .option("upperBound", upper_bound)
-            .option("numPartitions", num_partitions)
-        )
-    return reader.load()

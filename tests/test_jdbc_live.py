@@ -3,7 +3,7 @@
 Derby's driver ships inside Spark's own classpath (it backs the Hive
 metastore), so the JDBC sink/source paths that previously could only be
 argument-smoked now execute against a real database: parallel append,
-partition-parallel read, and the staged transactional load's
+whole-table read, and the staged transactional load's
 delete+insert single commit with rollback-on-failure
 (reference contract: bd_utilitarios.py:85-251,
 load_bd/siasus_procedimentos_ambulatoriais_load_bd.py:205-215).
@@ -45,16 +45,11 @@ def _read_all(spark, url, table="facts"):
     return sorted((r["id"], r["ftp_arquivo_nome"], r["qty"]) for r in rows)
 
 
-def test_append_and_partitioned_read(spark, derby_url):
+def test_append_and_read(spark, derby_url):
     write_jdbc_append(_facts(spark, "PASP2408.dbc", 0, 40).repartition(4), derby_url, "facts")
     whole = _read_all(spark, derby_url)
     assert len(whole) == 40 and whole[0] == (0, "PASP2408.dbc", 0)
-    par = read_jdbc_table(
-        spark, derby_url, "facts",
-        partition_column='"id"', lower_bound=0, upper_bound=40, num_partitions=4,
-    )
-    assert par.rdd.getNumPartitions() == 4
-    assert sorted((r["id"], r["ftp_arquivo_nome"], r["qty"]) for r in par.collect()) == whole
+    assert whole == [(i, "PASP2408.dbc", i * 10) for i in range(40)]
 
 
 def test_staged_load_is_idempotent(spark, derby_url):
@@ -113,7 +108,7 @@ def test_staged_load_commits_each_file_in_turn(spark, derby_url):
 
 
 def _column_types(spark, url, table):
-    with _driver_connection(spark, url, None, None) as conn:
+    with _driver_connection(spark, url) as conn:
         cols = conn.getMetaData().getColumns(None, None, table.upper(), None)
         out = []
         while cols.next():

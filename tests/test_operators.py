@@ -61,6 +61,11 @@ def test_retention_window(spark):
     ]
 
 
+def _dates(fact):
+    """`range_join`'s distinct-date relation for a fact dated by `d`."""
+    return fact.select(F.col("d").alias("__d")).distinct()
+
+
 def test_range_join_attaches_period(spark):
     fact = spark.createDataFrame([(dt.date(2024, 8, 15),), (dt.date(2024, 9, 2),)], "d date")
     periods = spark.createDataFrame(
@@ -71,7 +76,7 @@ def test_range_join_attaches_period(spark):
         "data_inicio date, data_fim date, codigo string",
     )
     out = joins.range_join(
-        fact, periods, F.col("d"), attach={"codigo": "periodo"}
+        fact, periods, F.col("d"), attach={"codigo": "periodo"}, dates=_dates(fact)
     ).orderBy("d").collect()
     assert [r["periodo"] for r in out] == ["2024.M8", "2024.M9"]
 
@@ -85,7 +90,7 @@ def test_range_join_rejects_reserved_d_column(spark):
         "data_inicio date, data_fim date, codigo string",
     )
     with pytest.raises(ValueError, match="__d"):
-        joins.range_join(fact, periods, F.col("d"), attach={"codigo": "periodo"})
+        joins.range_join(fact, periods, F.col("d"), attach={"codigo": "periodo"}, dates=_dates(fact))
 
 
 def test_broadcast_lookup(spark):
@@ -99,7 +104,7 @@ def test_broadcast_lookup(spark):
 
 def test_null_counts_and_validator(spark):
     df = spark.createDataFrame([(1, None), (None, "x")], "a int, b string")
-    row = null_counts(df).collect()[0]
+    row = null_counts(df, df.columns).collect()[0]
     assert row["n_rows"] == 2 and row["nulls_a"] == 1 and row["nulls_b"] == 1
 
 
@@ -144,26 +149,6 @@ def test_lsh_dedup_groups_clusters_clones(spark):
     groups = {r["doc_id"]: r["group_rep"] for r in lsh_dedup_groups(sigs).collect()}
     assert groups[5] == 2 and groups[2] == 2 and groups[9] == 2  # clones → min id
     assert groups[7] == 7  # singleton keeps itself
-
-
-def test_minhash_xxhash64_fast_path(spark):
-    """The production hash family finds the same dup structure: clone
-    signatures equal, LSH pipeline end-to-end agrees with the md5 path
-    on exact-dup pairs, and signature columns are codegen-friendly
-    bigints (no digest strings)."""
-    text = "one two three four five six seven eight nine ten eleven twelve"
-    df = spark.createDataFrame(
-        [(1, text), (2, text), (3, "nothing in common with the others at all whatsoever")],
-        "doc_id int, text string",
-    )
-    sigs = minhash_signatures(df, num_hashes=8, hash_fn="xxhash64")
-    assert all(f.dataType.simpleString() == "bigint"
-               for f in sigs.schema.fields if f.name.startswith("sig_"))
-    by_id = {r["doc_id"]: tuple(r[f"sig_{i}"] for i in range(8)) for r in sigs.collect()}
-    assert by_id[1] == by_id[2] and by_id[1] != by_id[3]
-    pairs = lsh_candidate_pairs(sigs, num_hashes=8, bands=4).collect()
-    assert any(r["id_a"] == 1 and r["id_b"] == 2 and r["est_jaccard"] == 1.0 for r in pairs)
-    assert not any(3 in (r["id_a"], r["id_b"]) for r in pairs)
 
 
 def test_lsh_components_transitive_chain(spark):
@@ -356,7 +341,7 @@ def test_bucketed_range_join_matches_general(spark):
         ],
         "data_inicio date, data_fim date, codigo string",
     )
-    general = joins.range_join(fact, periods, F.col("d"), attach={"codigo": "periodo"})
+    general = joins.range_join(fact, periods, F.col("d"), attach={"codigo": "periodo"}, dates=_dates(fact))
     bucketed = joins.bucketed_range_join(fact, periods, F.col("d"), attach={"codigo": "periodo"})
     assert sorted((r["d"], r["periodo"]) for r in general.collect()) == sorted(
         (r["d"], r["periodo"]) for r in bucketed.collect()
@@ -473,7 +458,7 @@ def test_bucketed_range_join_keeps_unmatched_bucket_collisions(spark):
     # field crashed with AMBIGUOUS_REFERENCE_TO_FIELDS)
     attach = {"codigo": "periodo", "data_inicio": "p_start"}
     nullsafe = lambda t: tuple((v is None, v) for v in t)
-    general = joins.range_join(fact, periods, F.col("d"), attach=attach)
+    general = joins.range_join(fact, periods, F.col("d"), attach=attach, dates=_dates(fact))
     bucketed = joins.bucketed_range_join(fact, periods, F.col("d"), attach=attach)
     expected = sorted(((r["d"], r["periodo"], r["p_start"]) for r in general.collect()), key=nullsafe)
     got = sorted(((r["d"], r["periodo"], r["p_start"]) for r in bucketed.collect()), key=nullsafe)
@@ -572,7 +557,7 @@ def test_apply_cdc_single_shuffle_plan(spark):
     assert plan.count("Exchange") <= 1 and "BatchEvalPython" not in plan
 
 
-def test_distributed_rank_matches_global_row_number(spark):
+def test_distributed_rank_matches_global_row_number(spark, shuffle_partitions):
     """distributed_rank == row_number() OVER (ORDER BY ...) exactly —
     including heavy ties (split across range partitions by the
     tiebreaker) and NULL values (pinned NULLS LAST)."""
@@ -583,7 +568,8 @@ def test_distributed_rank_matches_global_row_number(spark):
     rows = [(i, i % 7 if i % 11 else None) for i in range(3001)]
     df = spark.createDataFrame(rows, "id long, v long")
     order = [F.col("v").desc_nulls_last(), F.col("id").asc()]
-    got = distributed_rank(df, order, rank_name="rn", num_partitions=8)
+    with shuffle_partitions(8):
+        got = distributed_rank(df, order, rank_name="rn")
     exp = df.withColumn("rn", F.row_number().over(Window.orderBy(*order)).cast("long"))
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
@@ -618,7 +604,7 @@ def test_distributed_rank_pins_partition_count_under_cached_plan_aqe(spark):
         part.unpersist()
 
 
-def test_distributed_ntile_matches_global_ntile(spark):
+def test_distributed_ntile_matches_global_ntile(spark, shuffle_partitions):
     """distributed_ntile == ntile(n) for n that divides N, n with a
     remainder, and n > N (the q=0 edge)."""
     from pyspark.sql.window import Window
@@ -630,12 +616,13 @@ def test_distributed_ntile_matches_global_ntile(spark):
     )
     order = [F.col("v").desc(), F.col("id").asc()]
     for n in (10, 7, 4000):
-        got = distributed_ntile(df, order, n, tile_name="t", num_partitions=8)
+        with shuffle_partitions(8):
+            got = distributed_ntile(df, order, n, tile_name="t")
         exp = df.withColumn("t", F.ntile(n).over(Window.orderBy(*order)).cast("long"))
         assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
 
 
-def test_distributed_cumsum_matches_global_running_total(spark):
+def test_distributed_cumsum_matches_global_running_total(spark, shuffle_partitions):
     """distributed_cumsum == SUM(v) OVER (ORDER BY ...) exactly,
     including heavy ties split across range partitions, negative
     values, and the ride-along grand total."""
@@ -647,9 +634,8 @@ def test_distributed_cumsum_matches_global_running_total(spark):
     rows = [(i % 7, i, (i % 5) - 2) for i in range(501)]
     df = spark.createDataFrame(rows, "k long, id long, v long")
     order = [F.col("k").asc(), F.col("id").asc()]
-    got = distributed_cumsum(
-        df, order, "v", cumsum_name="cs", num_partitions=8, total_name="tot"
-    )
+    with shuffle_partitions(8):
+        got = distributed_cumsum(df, order, "v", cumsum_name="cs", total_name="tot")
     w = Window.orderBy(F.col("k").asc(), F.col("id").asc()).rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -687,7 +673,7 @@ def test_tracked_caches_release_after_action(spark):
     _ = release0
 
 
-def test_distributed_rank_in_groups_matches_partitioned_row_number(spark):
+def test_distributed_rank_in_groups_matches_partitioned_row_number(spark, shuffle_partitions):
     """distributed_rank_in_groups == row_number() OVER (PARTITION BY g
     ORDER BY ...) exactly — heavy ties spanning range-partition
     boundaries, NULL group keys (a real window group, unlike an
@@ -709,9 +695,8 @@ def test_distributed_rank_in_groups_matches_partitioned_row_number(spark):
         (F.col("id") % 7).alias("v"),  # heavy ties
     )
     order = [F.col("v").asc_nulls_last(), F.col("id")]
-    got = distributed_rank_in_groups(
-        df, ["g"], order, rank_name="rn", num_partitions=8, total_name="n_g"
-    )
+    with shuffle_partitions(8):
+        got = distributed_rank_in_groups(df, ["g"], order, rank_name="rn", total_name="n_g")
     w = Window.partitionBy("g").orderBy(*order)
     want = df.select(
         "id", "g",
@@ -729,7 +714,7 @@ def test_distributed_rank_in_groups_matches_partitioned_row_number(spark):
     release_tracked()
 
 
-def test_distributed_lag_matches_partitioned_lag(spark):
+def test_distributed_lag_matches_partitioned_lag(spark, shuffle_partitions):
     """distributed_lag == lag(v) OVER (PARTITION BY g ORDER BY ...) —
     boundary rows across range partitions get their predecessor from
     the shifted per-(partition, group) last-value relation; NULL values
@@ -751,9 +736,8 @@ def test_distributed_lag_matches_partitioned_lag(spark):
         .alias("v"),
     )
     order = [F.col("id")]
-    got = distributed_lag(
-        df, ["g"], order, "v", lag_name="pv", num_partitions=8
-    )
+    with shuffle_partitions(8):
+        got = distributed_lag(df, ["g"], order, "v", lag_name="pv")
     w = Window.partitionBy("g").orderBy("id")
     want = df.withColumn("pv", F.lag("v").over(w))
     gm = {r["id"]: r["pv"] for r in got.collect()}
@@ -765,7 +749,7 @@ def test_distributed_lag_matches_partitioned_lag(spark):
     release_tracked()
 
 
-def test_distributed_ntile_in_groups_matches_partitioned_ntile(spark):
+def test_distributed_ntile_in_groups_matches_partitioned_ntile(spark, shuffle_partitions):
     """distributed_ntile_in_groups == ntile(n) OVER (PARTITION BY g
     ORDER BY ...) for dividing / remainder / n > N-per-group cases,
     including NULL group keys and heavy ties, with the plan range-
@@ -789,9 +773,8 @@ def test_distributed_ntile_in_groups_matches_partitioned_ntile(spark):
     )
     order = [F.col("v").desc_nulls_last(), F.col("id").asc()]
     for n in (4, 7, 5000):
-        got = distributed_ntile_in_groups(
-            df, ["g"], order, n, tile_name="t", num_partitions=8
-        )
+        with shuffle_partitions(8):
+            got = distributed_ntile_in_groups(df, ["g"], order, n, tile_name="t")
         w = Window.partitionBy("g").orderBy(*order)
         exp = df.withColumn("t", F.ntile(n).over(w).cast("long"))
         assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
@@ -800,11 +783,11 @@ def test_distributed_ntile_in_groups_matches_partitioned_ntile(spark):
     assert "ntile(" not in plan
 
 
-def test_distributed_cumsum_in_groups_matches_partitioned_running_total(spark):
+def test_distributed_cumsum_in_groups_matches_partitioned_running_total(spark, shuffle_partitions):
     """distributed_cumsum_in_groups == SUM(v)/row_number() OVER
     (PARTITION BY g ORDER BY ...) exactly — heavy ties across range
     boundaries, NULL group keys, negative values, the shared rank
-    output, per-group totals, and the plan shape (range partitioning,
+    output, and the plan shape (range partitioning,
     no single-task per-group sort)."""
     from pyspark.sql.window import Window
 
@@ -822,21 +805,18 @@ def test_distributed_cumsum_in_groups_matches_partitioned_running_total(spark):
         ((F.col("id") % 13) - 6).cast("long").alias("v"),  # negatives too
     )
     order = [F.col("k").asc_nulls_last(), F.col("id")]
-    got = distributed_cumsum_in_groups(
-        df, ["g"], order, "v",
-        cumsum_name="cs", rank_name="rn", num_partitions=8, total_name="t_g",
-    )
+    with shuffle_partitions(8):
+        got = distributed_cumsum_in_groups(df, ["g"], order, "v", cumsum_name="cs", rank_name="rn")
     w = Window.partitionBy("g").orderBy(*order)
     want = df.select(
         "id", "g",
         F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cs"),
         F.row_number().over(w).alias("rn"),
-        F.sum("v").over(Window.partitionBy("g")).alias("t_g"),
     )
-    gm = {(r["id"],): (r["cs"], r["rn"], r["t_g"]) for r in got.collect()}
+    gm = {(r["id"],): (r["cs"], r["rn"]) for r in got.collect()}
     assert len(gm) == n
     for r in want.collect():
-        assert gm[(r["id"],)] == (r["cs"], r["rn"], r["t_g"]), r
+        assert gm[(r["id"],)] == (r["cs"], r["rn"]), r
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "rangepartitioning" in plan.lower().replace(" ", "")
 
@@ -844,7 +824,7 @@ def test_distributed_cumsum_in_groups_matches_partitioned_running_total(spark):
     release_tracked()
 
 
-def test_distributed_running_max_matches_single_window(spark):
+def test_distributed_running_max_matches_single_window(spark, shuffle_partitions):
     """Prefix-max (inclusive and exclusive) == the single-task window,
     on adversarial data: duplicate order keys carry EQUAL values (the
     operator's tie contract), partition boundaries land mid-run."""
@@ -862,10 +842,10 @@ def test_distributed_running_max_matches_single_window(spark):
         rows.append((k, v))
     df = spark.createDataFrame(rows, "k long, v long")
     for exclusive in (False, True):
-        got = distributed_running_max(
-            df, [F.col("k"), F.col("v")], "v",
-            max_name="m", exclusive=exclusive, num_partitions=7,
-        )
+        with shuffle_partitions(7):
+            got = distributed_running_max(
+                df, [F.col("k"), F.col("v")], "v", max_name="m", exclusive=exclusive,
+            )
         lo, hi = Window.unboundedPreceding, (-1 if exclusive else 0)
         w = Window.orderBy("k", "v").rowsBetween(lo, hi)
         want = df.withColumn("m", F.max("v").over(w).cast("long"))
@@ -916,8 +896,9 @@ def test_containment_pairs_catch_subset_jaccard_misses(spark):
         [(1, quote), (2, filler + " " + quote), (3, "totally unrelated text here")],
         "doc_id long, text string",
     )
+    # no shingle is in more than the corpus's three docs
     out = ngram_containment_pairs(
-        docs, text_col="text", id_col="doc_id", shingle_k=3, threshold=0.8
+        docs, text_col="text", id_col="doc_id", shingle_k=3, threshold=0.8, max_df=3,
     ).collect()
     assert [(r["id_a"], r["id_b"]) for r in out] == [(1, 2)]
     r = out[0]

@@ -9,8 +9,8 @@ import datetime as dt
 from pyspark.sql import functions as F
 
 from sm_etl_cloud_run_spark.operators.aggregates import null_counts
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, transform_fact
-from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed, spark_type_map
+from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed, spark_type_map, transform_fact
+from sm_etl_cloud_run_spark.pipelines.siasus_pa import PA_SPEC
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
 
 _PANEL = ["355030", "330455"]

@@ -9,15 +9,11 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from sm_etl_cloud_run_spark.pipelines import (
-    AIH_RD_SPEC,
-    BPA_I_SPEC,
-    HABILITACOES_SPEC,
-    RAAS_PS_SPEC,
-    VINCULOS_SPEC,
-    transform_fact,
-)
-from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed, spark_type_map
+from sm_etl_cloud_run_spark.pipelines.base import cast_allstring_typed, spark_type_map, transform_fact
+from sm_etl_cloud_run_spark.pipelines.scnes import HABILITACOES_SPEC, VINCULOS_SPEC
+from sm_etl_cloud_run_spark.pipelines.siasus_bpa_i import BPA_I_SPEC
+from sm_etl_cloud_run_spark.pipelines.siasus_raas import RAAS_PS_SPEC
+from sm_etl_cloud_run_spark.pipelines.sihsus_aih_rd import AIH_RD_SPEC
 from sm_etl_cloud_run_spark.sinks.partitioned import write_bronze_csv
 
 
@@ -31,6 +27,16 @@ def _typed(spark, bronze, spec, landed):
     schema = ", ".join(f"`{c}` string" for c in spark_type_map(spec) if c in landed)
     raw = spark.read.schema(schema).option("header", True).option("enforceSchema", False).csv(bronze)
     return cast_allstring_typed(raw, spec)
+
+
+def _dims(spark):
+    """`transform_fact`'s dims for the test rows: their municipality's
+    panel and geo rows and their month, August 2024."""
+    return dict(
+        panel_ids=["355030"],
+        periods=spark.createDataFrame([(dt.date(2024, 8, 1), "p-2024-08")], "data_inicio date, id string"),
+        geo=spark.createDataFrame([("355030", "m-sp")], "id_sus string, id string"),
+    )
 
 
 def _row_df(spark, spec, overrides, default="X"):
@@ -56,10 +62,7 @@ def test_bpa_i_flags_and_condition(spark):
             "CNPJMNT": "00000000000000",
         },
     )
-    out = transform_fact(
-        raw, BPA_I_SPEC,
-        panel_ids=["355030"],
-    ).collect()
+    out = transform_fact(raw, BPA_I_SPEC, **_dims(spark)).collect()
     assert len(out) == 1
     r = out[0]
     assert r["usuario_nascimento_data"] == dt.date(1990, 1, 1)  # space-padded C10
@@ -80,7 +83,7 @@ def test_raas_substance_flags_and_interval(spark):
             "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815",
         },
     )
-    out = transform_fact(raw, RAAS_PS_SPEC).collect()
+    out = transform_fact(raw, RAAS_PS_SPEC, **_dims(spark)).collect()
     r = out[0]
     assert r["usuario_abuso_substancias"] is True          # len>0
     assert r["usuario_abuso_substancias_alcool"] is True   # contains A
@@ -99,7 +102,7 @@ def test_raas_empty_substance_is_false(spark):
          "DTNASC": "19900101", "DT_MOTCOB": "20240801", "DT_INICIO": "20240801",
          "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815"},
     )
-    r = transform_fact(raw, RAAS_PS_SPEC).collect()[0]
+    r = transform_fact(raw, RAAS_PS_SPEC, **_dims(spark)).collect()[0]
     assert r["usuario_abuso_substancias"] is False
     assert r["usuario_abuso_substancias_alcool"] is False
     assert r["permanencia_duracao"] is None
@@ -118,7 +121,7 @@ def test_aih_rd_vintage_harmonization(spark):
     raw = spark.createDataFrame(
         [tuple(base_only[c] for c in cols)], ", ".join(f"`{c}` string" for c in cols)
     ).withColumn("ftp_arquivo_nome", F.lit(_ARQUIVO))
-    out = transform_fact(raw, AIH_RD_SPEC)
+    out = transform_fact(raw, AIH_RD_SPEC, **_dims(spark))
     r = out.collect()[0]
     assert r["periodo_data_inicio"] == dt.date(2024, 8, 1)       # C12 from ano+mes
     assert "processamento_periodo_ano_inicio" not in out.columns  # sources dropped
@@ -144,7 +147,7 @@ def test_scnes_vinculos_string_surgery(spark):
             "CODUFMUN": "355030",
         },
     )
-    r = transform_fact(raw, VINCULOS_SPEC).collect()[0]
+    r = transform_fact(raw, VINCULOS_SPEC, **_dims(spark)).collect()[0]
     assert r["estabelecimento_regiao_saude_id_sus"] == "0012"
     assert r["estabelecimento_distrito_sanitario_id_sus"] == "0007"
     assert r["estabelecimento_microrregiao_saude_id_sus"] == "035001"
@@ -162,7 +165,7 @@ def test_scnes_vinculos_invalid_roman_all_zero_path(spark):
          "TERCEIRO": "0", "VINCUL_C": "0", "VINCUL_A": "0", "VINCUL_N": "0",
          "PROF_SUS": "0", "PROFNSUS": "0", "REGISTRO": "1", "CODUFMUN": "355030"},
     )
-    r = transform_fact(raw, VINCULOS_SPEC).collect()[0]
+    r = transform_fact(raw, VINCULOS_SPEC, **_dims(spark)).collect()[0]
     assert r["estabelecimento_regiao_saude_id_sus"] is None
 
 
@@ -176,7 +179,7 @@ def test_scnes_habilitacoes_dates(spark):
             "REGSAUDE": "IV", "NULEITOS": "12", "CODUFMUN": "355030",
         },
     )
-    r = transform_fact(raw, HABILITACOES_SPEC).collect()[0]
+    r = transform_fact(raw, HABILITACOES_SPEC, **_dims(spark)).collect()[0]
     assert r["portaria_data"] == dt.date(2023, 3, 15)        # C11 dd/MM/yyyy
     assert r["vigencia_data_inicio"] == dt.date(2024, 1, 1)
     assert r["estabelecimento_regiao_saude_id_sus"] == "0004"  # roman IV → 4 → zfill
@@ -193,7 +196,7 @@ def test_raas_two_stage_roundtrip(spark, tmp_path):
          "DT_FIM": "20240815", "INICIO": "20240801", "FIM": "20240815",
          "QTDATE": "7", "QTDPCN": "2"},
     )
-    out = transform_fact(raw, RAAS_PS_SPEC)
+    out = transform_fact(raw, RAAS_PS_SPEC, **_dims(spark))
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, RAAS_PS_SPEC, out.columns)
@@ -220,7 +223,7 @@ def test_bpa_i_two_stage_roundtrip(spark, tmp_path):
          "VL_APRES": "123.45", "VL_APROV": "100.0",
          "IDADEPAC": "34", "CNPJMNT": "00000000000000"},
     )
-    out = transform_fact(raw, BPA_I_SPEC)
+    out = transform_fact(raw, BPA_I_SPEC, **_dims(spark))
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, BPA_I_SPEC, out.columns)
@@ -251,7 +254,7 @@ def test_aih_rd_two_stage_roundtrip(spark, tmp_path):
          "MUNIC_MOV": "355030"},
         default="1",
     )
-    out = transform_fact(raw, AIH_RD_SPEC)
+    out = transform_fact(raw, AIH_RD_SPEC, **_dims(spark))
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, AIH_RD_SPEC, out.columns)
@@ -282,7 +285,7 @@ def test_scnes_vinculos_two_stage_roundtrip(spark, tmp_path):
          "HORAOUTR": "4", "HORAHOSP": "20", "HORA_AMB": "16",
          "CODUFMUN": "355030"},
     )
-    out = transform_fact(raw, VINCULOS_SPEC)
+    out = transform_fact(raw, VINCULOS_SPEC, **_dims(spark))
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, VINCULOS_SPEC, out.columns)
@@ -306,7 +309,7 @@ def test_scnes_habilitacoes_two_stage_roundtrip(spark, tmp_path):
          "NIV_DEP": "1", "TERCEIRO": "0", "VINC_SUS": "1",
          "REGSAUDE": "IV", "NULEITOS": "12", "CODUFMUN": "355030"},
     )
-    out = transform_fact(raw, HABILITACOES_SPEC)
+    out = transform_fact(raw, HABILITACOES_SPEC, **_dims(spark))
     bronze = str(tmp_path / "bronze")
     write_bronze_csv(out, bronze, [_ARQUIVO])
     typed = _typed(spark, bronze, HABILITACOES_SPEC, out.columns)

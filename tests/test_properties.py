@@ -143,7 +143,7 @@ def test_cdc_apply_matches_sequential_fold(spark, log_rows):
     ),
     st.integers(min_value=1, max_value=9),
 )
-def test_distributed_running_max_property(spark, pairs, nparts):
+def test_distributed_running_max_property(spark, shuffle_partitions, pairs, nparts):
     """Prefix-max == Python's itertools.accumulate(max) over the sorted
     stream, for ANY generated multiset of (key, value) rows and ANY
     partition count — inclusive and exclusive forms. Values are made a
@@ -169,10 +169,10 @@ def test_distributed_running_max_property(spark, pairs, nparts):
     ))
     exc_want = [None] + inc_want[:-1]
     for exclusive, want in ((False, inc_want), (True, exc_want)):
-        got = distributed_running_max(
-            df, [F.col("k"), F.col("v")], "v",
-            max_name="m", exclusive=exclusive, num_partitions=nparts,
-        ).collect()
+        with shuffle_partitions(nparts):
+            got = distributed_running_max(
+                df, [F.col("k"), F.col("v")], "v", max_name="m", exclusive=exclusive,
+            ).collect()
         # rows tied on (k, v) may swap positions, but the MULTISET of
         # (k, v, prefix-max) triples is order-invariant — compare those
         from collections import Counter

@@ -11,6 +11,7 @@ recorded in ROUND_NOTES.md.
 
 from __future__ import annotations
 
+import contextlib
 import csv
 import datetime as dt
 import itertools
@@ -29,11 +30,18 @@ from dbc_fixtures import make_dbc, make_dbf
 from test_datasus_ftp import FakeFtpSession
 
 from sm_etl_cloud_run_spark import runner
-from sm_etl_cloud_run_spark.pipelines import PA_SPEC, rehearsal, spark_type_map
+from sm_etl_cloud_run_spark.pipelines import rehearsal
+from sm_etl_cloud_run_spark.pipelines.base import spark_type_map
+from sm_etl_cloud_run_spark.pipelines.siasus_pa import PA_SPEC
+from sm_etl_cloud_run_spark.sinks import jdbc as sinks_jdbc
 from sm_etl_cloud_run_spark.sinks import watermark
-from sm_etl_cloud_run_spark.sinks.watermark import read_control, touch_watermark, write_control
+from sm_etl_cloud_run_spark.sinks.watermark import (
+    gate_pending_runs,
+    read_control,
+    touch_watermark,
+    write_control,
+)
 from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
-from sm_etl_cloud_run_spark.streaming.incremental import gate_pending_runs
 
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
@@ -494,6 +502,94 @@ def test_ep1_crash_leaves_the_batch_pending(spark, tmp_path, monkeypatch, crash)
     bronze, loaded, ledger = states[0]
     assert sorted(bronze) == ["ftp_arquivo_nome=PASP2407.dbc", "ftp_arquivo_nome=PASP2408.dbc"]
     assert not bronze["ftp_arquivo_nome=PASP2408.dbc"] and len(loaded) == 4
+    assert all(s[4] and s[5] for s in ledger)
+
+
+def _crash_ep2_before_first_commit(m) -> None:
+    def crash(*args, **kw):
+        raise OSError("crash after staging, before the first commit")
+
+    m.setattr(rehearsal, "commit_staged_load", crash)
+
+
+def _crash_ep2_before_load_watermark(m) -> None:
+    real = rehearsal.touch_watermark
+
+    def touch(control_path, match, timestamp_col):
+        if timestamp_col == "timestamp_load_bd":
+            raise OSError("crash after a commit, before its watermark")
+        return real(control_path, match, timestamp_col)
+
+    m.setattr(rehearsal, "touch_watermark", touch)
+
+
+class _FailingDrop:
+    """A JDBC connection or statement whose `DROP TABLE` raises."""
+
+    def __init__(self, target):
+        self._target = target
+
+    def __getattr__(self, name):
+        return getattr(self._target, name)
+
+    def createStatement(self):  # noqa: N802 — java.sql.Connection's name
+        return _FailingDrop(self._target.createStatement())
+
+    def executeUpdate(self, sql):  # noqa: N802 — java.sql.Statement's name
+        if sql.startswith("DROP TABLE"):
+            raise OSError("crash in the staging-table drop")
+        return self._target.executeUpdate(sql)
+
+
+def _crash_ep2_staging_drop(m) -> None:
+    real = sinks_jdbc._driver_connection
+
+    @contextlib.contextmanager
+    def connection(spark, url):
+        with real(spark, url) as conn:
+            yield _FailingDrop(conn)
+
+    m.setattr(sinks_jdbc, "_driver_connection", connection)
+
+
+@pytest.mark.parametrize("crash,left_pending", [
+    (_crash_ep2_before_first_commit, ["PASP2407.dbc", "PASP2408.dbc"]),
+    (_crash_ep2_before_load_watermark, ["PASP2407.dbc", "PASP2408.dbc"]),
+    (_crash_ep2_staging_drop, ["PASP2408.dbc"]),
+])
+def test_ep2_crash_leaves_uncommitted_files_pending(spark, tmp_path, monkeypatch, crash, left_pending):
+    """EP2 crashes after staging and before the first commit, after a
+    file's commit and before its `timestamp_load_bd` touch, or in the
+    staging-table drop: the files whose load is not recorded stay
+    pending, and the runner's rerun reaches the warehouse rows per file,
+    both watermarks and the ledger of a run that never crashed, with no
+    staging table left. The drop comes before the last file's touch,
+    so a failed drop leaves that file pending and the rerun drops the
+    table."""
+    states = []
+    for run in ("clean", "crashed"):
+        base = tmp_path / run
+        base.mkdir()
+        tree = {_DIR: {"PASP2407.dbc": _tipo_dbc("PA", 2), "PASP2408.dbc": _tipo_dbc("PA", 3)}}
+        control, derby = _configure_lifecycle(spark, base, tree, jdbc_table="pa_fato")
+        rehearsal.ep1_baixar_lote(spark, rehearsal.refresh_control(spark))
+        if run == "crashed":
+            pending = gate_pending_runs(read_control(control), "inserir", tipo="PA")
+            with monkeypatch.context() as m:
+                crash(m)
+                with pytest.raises(OSError, match="crash"):
+                    rehearsal.ep2_inserir_lote(spark, pending)
+            still = gate_pending_runs(read_control(control), "inserir", tipo="PA")
+            assert sorted(r["arquivo"] for r in still) == left_pending
+        _run_jobs(control, "PA")
+        with pytest.raises(Exception, match="'PA_FATO_STG' does not exist"):
+            read_jdbc_table(spark, derby, "pa_fato_stg").count()
+        loaded = read_jdbc_table(spark, derby, "pa_fato")
+        per_file = {r[0]: r[1] for r in loaded.groupBy("ftp_arquivo_nome").count().collect()}
+        states.append((per_file, _lifecycle_state(spark, base, derby, control)))
+    assert states[1] == states[0]
+    per_file, (_, _, ledger) = states[0]
+    assert per_file == {"PASP2407.dbc": 2, "PASP2408.dbc": 3}
     assert all(s[4] and s[5] for s in ledger)
 
 

@@ -110,13 +110,19 @@ def test_sorted_export_uses_range_partitioning(spark, sf_dir, tmp_path):
         assert hi <= lo  # non-overlapping: concatenation is globally sorted
 
 
-def test_suggest_shuffle_partitions_scales_with_input(spark, sf_dir, tmp_path):
+def test_suggest_shuffle_partitions_scales_with_input(spark, sf_dir, tmp_path, monkeypatch):
+    from sm_etl_cloud_run_spark import session
     from sm_etl_cloud_run_spark.session import suggest_shuffle_partitions
 
-    # 64 KB target so even the sf0.001 fixture spans multiple partitions
-    kwargs = dict(target_partition_mb=1, shuffle_ratio=32.0, min_partitions=1)
     small = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    n_small = suggest_shuffle_partitions(small, **kwargs)
+    # huge target → clamped at the floor
+    monkeypatch.setattr(session, "_TARGET_PARTITION_MB", 10_000)
+    assert suggest_shuffle_partitions(small) == 8
+    # 64 KB target so even the sf0.001 fixture spans multiple partitions
+    monkeypatch.setattr(session, "_TARGET_PARTITION_MB", 1)
+    monkeypatch.setattr(session, "_SHUFFLE_RATIO", 32.0)
+    monkeypatch.setattr(session, "_MIN_PARTITIONS", 1)
+    n_small = suggest_shuffle_partitions(small)
     # a bigger on-disk footprint must suggest more partitions
     big_path = str(tmp_path / "big")
     copies = small
@@ -124,11 +130,11 @@ def test_suggest_shuffle_partitions_scales_with_input(spark, sf_dir, tmp_path):
         copies = copies.unionByName(small)
     copies.write.parquet(big_path)
     big = spark.read.parquet(big_path)
-    n_big = suggest_shuffle_partitions(big, **kwargs)
+    n_big = suggest_shuffle_partitions(big)
     assert n_big > n_small >= 1
-    # huge target → clamped at the floor; cap is respected
-    assert suggest_shuffle_partitions(small, target_partition_mb=10_000) == 8
-    assert suggest_shuffle_partitions(big, max_partitions=2, **kwargs) == 2
+    # cap is respected
+    monkeypatch.setattr(session, "_MAX_PARTITIONS", 2)
+    assert suggest_shuffle_partitions(big) == 2
 
 
 def test_fact_rank_plans_are_range_partitioned(spark, sf_dir):

@@ -10,8 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sm_etl_cloud_run_spark.operators.dedup import dedupe_last_write
-from sm_etl_cloud_run_spark.sinks import touch_watermark
-from sm_etl_cloud_run_spark.sinks.watermark import read_control, write_control
+from sm_etl_cloud_run_spark.sinks.watermark import read_control, touch_watermark, write_control
 
 
 def test_dedupe_last_write(spark):

@@ -4,8 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from sm_etl_cloud_run_spark.sources import parse_ftp_list_lines
-from sm_etl_cloud_run_spark.sources.ftp_list import parse_list_lines
+from sm_etl_cloud_run_spark.sources.ftp_list import parse_ftp_list_lines, parse_list_lines
 
 
 def test_parse_ftp_list_lines(spark):
@@ -62,12 +61,7 @@ def test_read_jdbc_table_argument_contract(spark):
     from sm_etl_cloud_run_spark.sources.jdbc import read_jdbc_table
 
     with pytest.raises(ValueError, match="not a JDBC url"):
-        read_jdbc_table(spark, "postgres://x", "t", user="u", password="p")
-    with pytest.raises(ValueError, match="partitioned read needs"):
-        read_jdbc_table(
-            spark, "jdbc:postgresql://h/db", "t", user="u", password="p",
-            partition_column="id",  # bounds missing
-        )
+        read_jdbc_table(spark, "postgres://x?user=u&password=p", "t")
 
 
 def test_orc_roundtrip_with_predicate_pushdown(spark, sf_dir, tmp_path):

@@ -9,8 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from sm_etl_cloud_run_spark.sinks.watermark import read_control, write_control
-from sm_etl_cloud_run_spark.streaming.incremental import gate_pending_runs
+from sm_etl_cloud_run_spark.sinks.watermark import gate_pending_runs, read_control, write_control
 
 
 def _control_rows():

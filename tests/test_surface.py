@@ -28,6 +28,14 @@ too, can only miss an unread field.
 
 A third scan, for want of an installed linter, fails on an imported
 name that its module never uses.
+
+A fourth scan does for parameters what the first does for definitions:
+a defaulted parameter of a package function or method that no
+production call passes, by position or by keyword, fails unless it is
+listed with its reason. Calls match by the callee's bare name (a
+class's name calls its `__init__`), `partial(f, ...)` counts as a call
+of `f`, and a `*args` or `**kw` at a call passes every position or
+every keyword, so this scan, too, can only miss an unset parameter.
 """
 
 from __future__ import annotations
@@ -49,6 +57,17 @@ _KEPT = {
 _KEPT_FIELDS = {
     # the one-line summary every `@register` call states for its query
     "plans.registry.QuerySpec.description",
+}
+
+# Defaulted parameters no production call passes, kept on purpose: each
+# is a deployment setting or a seam a test uses to put in a fake. A
+# parameter that only a frozen caller passes needs no entry, since the
+# scan counts `perfbench/` as production (`read_jdbc_table(num_partitions)`).
+_KEPT_PARAMS = {
+    # seam: tests decode with a fake in place of Pillow/soundfile
+    "operators.multimodal.extract_features.decode_fn",
+    # seam: tests read a fake CORRECTNESS_r*.json history from a temp dir
+    "plans.window_plan.last_green.history_dir",
 }
 
 _WORD = re.compile(r"[A-Za-z_]\w*")
@@ -163,6 +182,58 @@ def test_public_surface_has_production_callers():
     unreached = unreached_public()
     assert sorted(unreached - _KEPT) == [], "public, but reached only from tests (or nothing)"
     assert sorted(_KEPT - unreached) == [], "listed, but now has a production caller or is gone"
+
+
+def _callee(f: ast.AST) -> str | None:
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _production_calls() -> dict[str, list[tuple[float, set[str | None]]]]:
+    """Callee name -> (positional count, keyword names) of each call in
+    production code; `*args` counts as every position and `**kw` as the
+    keyword `None`, which stands for every keyword."""
+    trees = [tree for _, tree in _package()] + [ast.parse(f.read_text()) for f in _scripts()]
+    out: dict[str, list[tuple[float, set[str | None]]]] = {}
+    for n in (n for t in trees for n in ast.walk(t) if isinstance(n, ast.Call)):
+        name, args = _callee(n.func), n.args
+        if name == "partial" and args:
+            name, args = _callee(args[0]), args[1:]
+        if name is not None:
+            npos = float("inf") if any(isinstance(a, ast.Starred) for a in args) else len(args)
+            out.setdefault(name, []).append((npos, {k.arg for k in n.keywords}))
+    return out
+
+
+def unset_params() -> set[str]:
+    """`module.function.param` (or `module.Class.method.param`) for each
+    defaulted parameter of a package function or method that no
+    production call passes."""
+    calls = _production_calls()
+    out = set()
+    for mod, tree in _package():
+        fns = [(st, st.name, f"{mod}.{st.name}", 0) for st in tree.body
+               if isinstance(st, ast.FunctionDef)]
+        for cls in (st for st in tree.body if isinstance(st, ast.ClassDef)):
+            for m in (m for m in cls.body if isinstance(m, ast.FunctionDef)):
+                static = "staticmethod" in {_callee(d) for d in m.decorator_list}
+                fns.append((m, cls.name if m.name == "__init__" else m.name,
+                            f"{mod}.{cls.name}.{m.name}", 0 if static else 1))
+        for fn, name, q, self_ in fns:
+            a = fn.args
+            pos = [*a.posonlyargs, *a.args]
+            params = [(p.arg, i - self_) for i, p in enumerate(pos) if i >= len(pos) - len(a.defaults)]
+            params += [(p.arg, None) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for p, i in params:
+                if not any(None in kws or p in kws or (i is not None and npos > i)
+                           for npos, kws in calls.get(name, ())):
+                    out.add(f"{q}.{p}")
+    return out
+
+
+def test_every_defaulted_parameter_has_a_production_caller():
+    unset = unset_params()
+    assert sorted(unset - _KEPT_PARAMS) == [], "a defaulted parameter that only tests, or nothing, set"
+    assert sorted(_KEPT_PARAMS - unset) == [], "listed, but now passed by production code or gone"
 
 
 def _annotated(ann: ast.AST | None, classes: set[str]) -> set[str]:
